@@ -1,4 +1,5 @@
-"""Loaders for the driver's synthetic testdata tables (TESTDATA.md).
+"""Loaders for the driver's synthetic testdata tables (TESTDATA.md),
+and the one owner of the table-layout facts plan builders size work by.
 
 TPC-H-ish star schema ``region nation customer supplier part orders
 lineitem`` plus an ``events`` stream table and training-data tables
@@ -9,11 +10,23 @@ Scale note: loads are plain ``spark.read.parquet`` — columnar scans with
 predicate pushdown and column pruning; at 100 TB the same call reads a
 partitioned directory tree and Catalyst prunes partitions. Nothing here
 collects to the driver.
+
+Layout facts owned here (every one is read without a Spark job):
+
+- parquet footer facts (``parquet_layout``): row count, row-group
+  count, and a column's (min, max) from row-group statistics;
+- shuffle width (``target_partitions``): the only reader of
+  ``spark.sql.shuffle.partitions`` in the package;
+- the spread decision (``spread_input``): whether a scan's populated
+  splits cover the cluster's cores.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
+from typing import NamedTuple
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,28 +47,97 @@ TESTDATA_TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+class ParquetLayout(NamedTuple):
+    """Footer facts summed over a table's parquet files."""
+
+    rows: int
+    row_groups: int
+    # (min, max) of the probed column; None when no column was asked
+    # for or some row group lacks min/max statistics (exotic writers)
+    column_range: tuple | None
+
+
+def _local_files(path: str) -> list[str]:
+    """The parquet files behind a local path or ``file:`` URI (a
+    directory lists its ``*.parquet`` parts). Any other scheme raises
+    ValueError: footers are only probed on the local filesystem."""
+    url = urlparse(path)
+    if url.scheme not in ("", "file"):
+        raise ValueError(f"not a local path: {path}")
+    local = unquote(url.path) if url.scheme else path
+    if os.path.isdir(local):
+        return [os.path.join(local, f) for f in os.listdir(local) if f.endswith(".parquet")]
+    return [local]
+
+
+def parquet_layout(paths: Iterable[str], column: str | None = None) -> ParquetLayout | None:
+    """Row count, row-group count and, when ``column`` is given, that
+    column's (min, max), from the parquet footers of ``paths`` (files,
+    directories or ``file:`` URIs) — zero Spark jobs.
+
+    Returns None when any footer cannot be read: an I/O error, a
+    corrupt or non-parquet file (pyarrow's ``ArrowInvalid`` is a
+    ValueError), a non-local URI, or a missing column. Every caller
+    then falls back to the decision it makes without footer facts, so
+    building a plan never fails on metadata."""
+    import pyarrow.parquet as pq
+
+    rows = groups = 0
+    stats = []
+    try:
+        for f in [f for p in paths for f in _local_files(p)]:
+            md = pq.read_metadata(f)
+            rows += md.num_rows
+            groups += md.num_row_groups
+            if column is not None:
+                idx = md.schema.names.index(column)
+                stats += [
+                    md.row_group(rg).column(idx).statistics for rg in range(md.num_row_groups)
+                ]
+    except (OSError, ValueError, KeyError):
+        return None
+    column_range = None
+    if stats and all(st is not None and st.has_min_max for st in stats):
+        column_range = (min(st.min for st in stats), max(st.max for st in stats))
+    return ParquetLayout(rows, groups, column_range)
+
+
+def target_partitions(spark: SparkSession, rows: int = 0, rows_per_task: int = 1) -> int:
+    """Shuffle width for ``rows`` rows at ``rows_per_task`` rows per
+    task, never below ``spark.sql.shuffle.partitions`` — the width every
+    un-sized exchange already gets. With no rows: that session width.
+    ``session.get_spark`` rejects a non-integer value of the conf."""
+    return max(int(spark.conf.get("spark.sql.shuffle.partitions")), rows // rows_per_task)
+
+
 def spread_input(df: DataFrame) -> DataFrame:
-    """Widen narrow inputs before CPU-heavy fan-out work (r14 — the
-    extensions/dedup.py ``_spread`` pattern promoted to a shared
-    utility).
+    """Widen narrow inputs before CPU-heavy map-side work (tokenizers,
+    shingle explodes, mapInPandas GEMM kernels).
 
-    A parquet table written as one row group scans as ONE populated
-    partition no matter how many byte-range splits the planner cuts
-    (a row group goes to the split holding its midpoint) — the guide
-    §2.5 unsplittable-input hazard. Every measured SF of this corpus
-    is laid out that way (1 row group per table file), so tokenizers,
-    shingle explodes and mapInPandas GEMM kernels that run map-side on
-    the scan were SERIAL: the sf10 jaccard eventlog shows a 70 s
-    one-task tokenize stage, 40 % of the query.
+    A parquet row group is read by ONE split — the one holding its
+    midpoint — however many byte-range splits the planner cuts, so a
+    table written as one row group scans as one populated partition
+    and the map side runs serially (the unsplittable-input hazard; the
+    sf10 jaccard event log showed a 70 s one-task tokenize stage, 40 %
+    of the query).
 
-    Conditional: a no-op (returns df unchanged, no exchange) when the
-    scan already has >= defaultParallelism partitions — i.e. on any
-    realistically-laid-out large table. Row-wise and post-shuffle
-    consumers are partition-layout-invariant, so results never change;
-    order-sensitive float aggregates downstream are already rounded at
-    their grids per the project convention."""
+    The populated split count is ``min(getNumPartitions(), total row
+    groups)``; the footers are read only when the scan has fewer files
+    than ``defaultParallelism`` (otherwise every core already has a
+    file) and the planner's count alone is used when they cannot be
+    read. Repartitions to ``defaultParallelism`` when that count falls
+    below it, else returns ``df`` unchanged (no exchange). Row-wise and
+    post-shuffle consumers are partition-layout-invariant, so results
+    never change; order-sensitive float aggregates downstream are
+    already rounded at their grids per the project convention."""
     target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
+    populated = df.rdd.getNumPartitions()
+    files = df.inputFiles() if populated >= target else []
+    if 0 < len(files) < target:
+        layout = parquet_layout(files)
+        if layout is not None:
+            populated = min(populated, layout.row_groups)
+    if populated < target:
         return df.repartition(target)
     return df
 

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from emission_project_spark.catalog.tables import spread_input
 from emission_project_spark.functions.text import fingerprint, tokens
 from emission_project_spark.operators.dedup import dedup_subset
 
@@ -55,21 +56,13 @@ BAND_B = (
 MINHASH_MOD = 2147483647
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Widen narrow inputs before CPU-heavy fan-out work — now the
-    shared ``catalog.tables.spread_input`` (r14); this alias keeps the
-    dedup family's call sites stable."""
-    from emission_project_spark.catalog.tables import spread_input
-
-    return spread_input(df)
-
-
 def exact_duplicates(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Groups of exact (whitespace/punct-insensitive) duplicates:
     one row per fingerprint with the canonical (min) doc id and count.
 
-    No ``_spread`` here: one fingerprint per doc is too cheap to repay
-    a repartition shuffle — unlike the shingle-explosion operators."""
+    No ``spread_input`` here: one fingerprint per doc is too cheap to
+    repay a repartition shuffle — unlike the shingle-explosion
+    operators."""
     return (
         docs.select(F.col(id_col), fingerprint(text_col).alias("fingerprint"))
         .groupBy("fingerprint")
@@ -99,7 +92,7 @@ def shingles(
 ) -> DataFrame:
     """Distinct word k-shingles per document: (doc_id, shingle)."""
     return (
-        _spread(docs)
+        spread_input(docs)
         .select(
             F.col(id_col).alias("doc_id"), F.explode(_shingle_array(text_col, k)).alias("shingle")
         )
@@ -381,7 +374,7 @@ def minhash_band_signatures(
     distinct pass is needed. Equivalent to r=1 rows/band:
     P[band match] = exact Jaccard.
     """
-    exploded = _spread(docs).select(
+    exploded = spread_input(docs).select(
         F.col(id_col).alias("doc_id"), F.explode(_shingle_array(text_col, k)).alias("shingle")
     )
     base = F.conv(F.substring(F.md5("shingle"), 1, 7), 16, 10).cast("bigint")
@@ -441,7 +434,7 @@ def simhash64(
     — 32× less aggregation input), then one expression reassembles the
     fingerprint. Token multiplicity intentionally weights votes.
     """
-    toks = _spread(docs).select(
+    toks = spread_input(docs).select(
         F.col(id_col).alias("doc_id"),
         F.explode(tokens(F.lower(F.col(text_col)))).alias("tok"),
     )
@@ -492,7 +485,7 @@ def winnow_fingerprints(
     array_min over slices, array_distinct per doc, explode. The
     previous shape (posexplode → hash-partition(doc_id) window MIN →
     global distinct) exchanged AND sorted one ~28-byte row per CHAR of
-    corpus twice; this shape exchanges nothing (``_spread`` only
+    corpus twice; this shape exchanges nothing (``spread_input`` only
     repartitions the narrow doc rows for core balance). The
     argmin-with-rightmost-tie-break is one integer MIN:
     ``gram_hash·2^20 + (2^20-1-pos)`` packs (hash asc, pos desc) into
@@ -508,7 +501,7 @@ def winnow_fingerprints(
     # The exclusion is observable — winnow_oversized_report counts the
     # affected docs for the same corpus; chunk multi-MB documents
     # upstream (~1M chars, k+w-2 overlap) if they must be fingerprinted.
-    base = _spread(docs.filter((n_grams >= 1) & (n_grams < (1 << _POS_BITS)))).select(
+    base = spread_input(docs.filter((n_grams >= 1) & (n_grams < (1 << _POS_BITS)))).select(
         F.col(id_col).alias("doc_id"),
         F.col(text_col).alias("_text"),
         n_grams.alias("_n"),

@@ -81,9 +81,10 @@ def assign_clusters_blas(vecs: DataFrame, centroids: DataFrame) -> DataFrame:
 
     Float association differs from the expression fold at the ulp
     level, so this is NOT the path behind the SQL-oracle-checked rows
-    (they default to ``assign_clusters``); assignments agree exactly on
-    the test corpora (tests/test_extensions.py) and the method exists
-    for the regime the oracle can't reach — large k at corpus scale.
+    (the Lloyd operators use ``assign_clusters``); assignments agree
+    exactly on the test corpora (tests/test_extensions.py) and the
+    method exists for the regime the oracle can't reach — large k at
+    corpus scale, called directly.
     """
     import numpy as np
     import pandas as pd
@@ -138,8 +139,9 @@ def assign_clusters_blas(vecs: DataFrame, centroids: DataFrame) -> DataFrame:
                 }
             )
 
-    # r14: spread — the batch GEMMs are map-side on the scan (single-
-    # row-group hazard, catalog.tables.spread_input); no-op when wide
+    # spread: the batch GEMMs are map-side on the scan, which holds one
+    # populated partition per row group (catalog.tables.spread_input);
+    # no-op when wide
     from emission_project_spark.catalog.tables import spread_input
 
     return spread_input(vecs).mapInPandas(
@@ -188,7 +190,6 @@ def lloyd_centroids(
     k: int = 8,
     iterations: int = 2,
     train_frac: float | None = None,
-    assign_method: str = "expr",
 ) -> DataFrame:
     """The centroid set ``(cid, ce)`` the final Lloyd assignment uses:
     seeded from the vectors with the ``k`` smallest ids, then
@@ -219,7 +220,6 @@ def lloyd_centroids(
             )
         else:
             vecs = sample
-    assign = assign_clusters_blas if assign_method == "blas" else assign_clusters
     # seed = the k smallest ids (matching the documented contract even
     # when ids are sparse or non-zero-based; a filter(id < k) would
     # silently under-seed such inputs)
@@ -229,7 +229,7 @@ def lloyd_centroids(
         .select(F.col("vec_id").alias("cid"), F.col("e").alias("ce"))
     )
     for _ in range(iterations - 1):
-        centroids = recompute_centroids(assign(vecs, centroids))
+        centroids = recompute_centroids(assign_clusters(vecs, centroids))
     # The trained quantizer fans into MULTIPLE plan subtrees in every
     # caller (corpus assignment + query-cell ranking in ivf_topk_kmeans;
     # left/right branches of the blocked pair union in

@@ -169,7 +169,6 @@ def ivf_topk_kmeans(
     iterations: int = 2,
     n_probe: int = 1,
     train_frac: float | None = None,
-    assign_method: str = "expr",
 ) -> DataFrame:
     """IVF top-k with a k-means coarse quantizer — the production
     variant of ``ivf_topk`` (whose docstring promises exactly this
@@ -193,16 +192,14 @@ def ivf_topk_kmeans(
     from emission_project_spark.extensions.kmeans import (
         _sq_dist,
         assign_clusters,
-        assign_clusters_blas,
         lloyd_centroids,
     )
 
     vecs = vectors.select(
         F.col("vec_id"), F.col("embedding").cast("array<double>").alias("e")
     )
-    centroids = lloyd_centroids(vecs, n_centroids, iterations, train_frac, assign_method)
-    assign = assign_clusters_blas if assign_method == "blas" else assign_clusters
-    assigned = assign(vecs, centroids).select("vec_id", "e", "cluster_id")
+    centroids = lloyd_centroids(vecs, n_centroids, iterations, train_frac)
+    assigned = assign_clusters(vecs, centroids).select("vec_id", "e", "cluster_id")
 
     q = query.select(
         F.col("vec_id").alias("query_id"),
@@ -374,7 +371,6 @@ def semantic_neardup_pairs(
     iterations: int = 2,
     n_blocks: int = 4,
     train_frac: float | None = None,
-    assign_method: str = "expr",
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication: k-means-cluster the
     embedding space (deterministic Lloyd quantizer), then search for
@@ -394,18 +390,13 @@ def semantic_neardup_pairs(
     sample (kmeans.training_sample — the 100 TB configuration; default
     full-corpus training is the oracle-checked path).
     """
-    from emission_project_spark.extensions.kmeans import (
-        assign_clusters,
-        assign_clusters_blas,
-        lloyd_centroids,
-    )
+    from emission_project_spark.extensions.kmeans import assign_clusters, lloyd_centroids
 
     vecs = vectors.select(
         F.col("vec_id"), F.col("embedding").cast("array<double>").alias("e")
     )
-    assign = assign_clusters_blas if assign_method == "blas" else assign_clusters
-    assigned = assign(
-        vecs, lloyd_centroids(vecs, n_clusters, iterations, train_frac, assign_method)
+    assigned = assign_clusters(
+        vecs, lloyd_centroids(vecs, n_clusters, iterations, train_frac)
     ).select(
         "vec_id",
         F.col("e").alias("embedding"),

@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from emission_project_spark.catalog.tables import target_partitions
+
 __all__ = [
     "cell_minrank",
     "global_row_number",
@@ -215,7 +217,7 @@ def global_row_number(
 ) -> DataFrame:
     """Exact ``row_number() OVER (ORDER BY order_cols)`` for a UNIQUE
     composite key, with NO distribution assumptions on the key — the
-    r14 companion to :func:`row_position` for orderings
+    companion to :func:`row_position` for orderings
     ``width_bucket`` cannot bucket evenly (string tie-breaks, or a
     numeric lead column so skewed that one bucket holds the relation:
     a document-frequency rank where most of the vocabulary is hapax
@@ -241,10 +243,7 @@ def global_row_number(
 
     NULL ordering follows Spark sort semantics (NULLS FIRST for ASC,
     LAST for DESC) — the same order the global window would produce."""
-    sp = df.sparkSession
-    n_parts = num_partitions or int(
-        sp.conf.get("spark.sql.shuffle.partitions")
-    )
+    n_parts = num_partitions or target_partitions(df.sparkSession)
     ranged = (
         df.repartitionByRange(n_parts, *order_cols)
         .sortWithinPartitions(*order_cols)

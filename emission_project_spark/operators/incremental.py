@@ -19,13 +19,6 @@ from pyspark.sql import DataFrame
 from emission_project_spark.operators.joins import anti_join
 
 
-def is_empty(df: DataFrame) -> bool:
-    """Emptiness probe (reference S5: ``SELECT COUNT(pk) FROM t`` at
-    ``emission-dag.py:77-78`` etc.). ``isEmpty`` scans at most one
-    partition — cheaper than ``count()`` on a big table."""
-    return df.isEmpty()
-
-
 def incremental_insert(
     existing: DataFrame,
     batch: DataFrame,

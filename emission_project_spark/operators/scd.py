@@ -61,6 +61,9 @@ def scd2_apply(
     new current truth for those keys). Returns the full new dimension:
 
     - history rows (``is_current`` false): passed through untouched;
+    - rows with a NULL ``is_current``: treated as history — passed
+      through untouched and never matched against the batch (an update
+      whose key has only such rows opens a version like a new key);
     - current rows whose key is absent from the batch, or present with
       identical attributes (null-safe): passed through untouched;
     - current rows whose attributes changed: emitted closed

@@ -25,7 +25,12 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from emission_project_spark.catalog.tables import load_table
+from emission_project_spark.catalog.tables import (
+    load_table,
+    parquet_layout,
+    spread_input,
+    target_partitions,
+)
 from emission_project_spark.functions.text import tokens
 from emission_project_spark.functions.vectors import cosine_similarity
 from emission_project_spark.plans.registry import register
@@ -37,62 +42,6 @@ from emission_project_spark.plans.registry import register
 # against the oracle at small SF — the branch otherwise only executes
 # at sf10+).
 TRIANGLE_REPART_EDGE_THRESHOLD = 20_000_000
-
-
-def _parquet_column_range(sf_dir: str, table: str, column: str):
-    """(min, max) of a column from parquet FOOTER statistics — zero
-    Spark jobs (ADVICE r10: the eager min/max probe cost triangle and
-    pagerank one column scan per invocation each). Returns None when
-    any row group lacks min/max stats (exotic writers) — callers fall
-    back to the Spark aggregate."""
-    import pyarrow.parquet as pq
-
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    try:
-        files = (
-            [
-                os.path.join(path, f)
-                for f in os.listdir(path)
-                if f.endswith(".parquet")
-            ]
-            if os.path.isdir(path)
-            else [path]
-        )
-        lo = hi = None
-        for f in files:
-            md = pq.ParquetFile(f).metadata
-            names = [md.schema.column(i).name for i in range(md.num_columns)]
-            idx = names.index(column)
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx).statistics
-                if st is None or not st.has_min_max:
-                    return None
-                lo = st.min if lo is None else min(lo, st.min)
-                hi = st.max if hi is None else max(hi, st.max)
-        return (lo, hi) if lo is not None else None
-    except (OSError, KeyError, ValueError):
-        return None
-
-
-def _parquet_row_count(sf_dir: str, table: str):
-    """Total row count from parquet footers — zero Spark jobs (the
-    _parquet_column_range pattern); None on any surprise."""
-    import pyarrow.parquet as pq
-
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    try:
-        files = (
-            [
-                os.path.join(path, f)
-                for f in os.listdir(path)
-                if f.endswith(".parquet")
-            ]
-            if os.path.isdir(path)
-            else [path]
-        )
-        return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-    except OSError:
-        return None
 
 
 def _copurchase_baskets(
@@ -108,9 +57,12 @@ def _copurchase_baskets(
     bytes through every shuffle of the build. Ids beyond int32 (true
     100 TB part domains) fall back to long automatically."""
     li = load_table(spark, sf_dir, "lineitem")
+    layout = parquet_layout(
+        [os.path.join(sf_dir, "lineitem.parquet")], "l_partkey" if int_ids else None
+    )
     key = F.col("l_partkey")
     if int_ids:
-        rng = _parquet_column_range(sf_dir, "lineitem", "l_partkey")
+        rng = layout and layout.column_range
         if rng is None:
             row = li.agg(
                 F.min("l_partkey").alias("lo"), F.max("l_partkey").alias("hi")
@@ -119,24 +71,20 @@ def _copurchase_baskets(
         if rng[0] is not None and rng[0] >= -(2**31) and rng[1] < 2**31:
             key = key.cast("int")
     sel = li.select("l_orderkey", key.alias("l_partkey"))
-    # r14 (verdict task #2): the basket collect_set is an
-    # ObjectHashAggregate that ALWAYS runs its sort-based fallback in
-    # anger (fallback threshold = 128 keys; raising it OOMs — the map
-    # is untracked JVM memory, experiment in plans/r14/ab/), so its
-    # spill is bounded by per-task input volume. Size the aggregate's
-    # partitions from the parquet footer row count (~1.5M lines/task)
-    # instead of the session constant: collect_set has NO map-side
-    # reduction to lose (per-order set elements are disjoint), the
-    # keyed repartition IS the aggregate's exchange, and the count
-    # scales with the data, not the local core count. sf10 eventlog:
-    # the 64-task basket stage carried 18.3 GB memory-spill at the
-    # session default.
-    n_rows = _parquet_row_count(sf_dir, "lineitem")
-    default_p = int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
-    if n_rows and n_rows // 1_500_000 > default_p:
-        sel = sel.repartition(n_rows // 1_500_000, "l_orderkey")
+    # The basket collect_set is an ObjectHashAggregate that always runs
+    # its sort-based fallback in anger (fallback threshold = 128 keys;
+    # raising it OOMs — the map is untracked JVM memory), so its spill
+    # is bounded by per-task input volume: ~1.5M lineitem rows per task,
+    # sized from the footer row count. collect_set has no map-side
+    # reduction to lose (per-order set elements are disjoint), the keyed
+    # repartition IS the aggregate's exchange, and the count scales with
+    # the data, not the local core count (sf10 event log: the 64-task
+    # basket stage carried 18.3 GB memory spill at the session default).
+    # At or below the session width the aggregate keeps its own
+    # AQE-coalescible exchange.
+    n_tasks = layout.rows // 1_500_000 if layout else 0
+    if n_tasks > target_partitions(spark):
+        sel = sel.repartition(n_tasks, "l_orderkey")
     return (
         sel.groupBy("l_orderkey")
         .agg(F.sort_array(F.collect_set("l_partkey")).alias("parts"))
@@ -157,8 +105,7 @@ def _pairs_from_baskets(
     map-side partial aggregation dedups only WITHIN a partition, and
     co-purchase pairs from different orders almost never collide in
     one map partition, so the explicit keyed repartition loses ~no
-    reduction while bounding the final aggregate's per-task state
-    (r14, verdict task #2)."""
+    reduction while bounding the final aggregate's per-task state."""
     n = F.size("parts")
     pair_structs = F.flatten(
         F.transform(
@@ -272,10 +219,7 @@ def graph_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         or 0
     )
     pair_parts = (
-        max(
-            int(spark.conf.get("spark.sql.shuffle.partitions")),
-            n_edges // 1_500_000,
-        )
+        target_partitions(spark, n_edges, 1_500_000)
         if n_edges > TRIANGLE_REPART_EDGE_THRESHOLD
         else None
     )
@@ -318,21 +262,15 @@ def graph_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 72M rows / 20 s at sf0.1 vs ~3 s for this shape); the per-edge
     # intersect is O(|N⁺(u)|+|N⁺(v)|) JVM array work. Degree
     # orientation still bounds every array at O(√m) under skew.
-    # r14 (verdict task #2): size the adjacency collect_list's
-    # partitions edge-proportionally too (same sort-based-fallback
-    # spill mechanism as the basket build — see _copurchase_baskets;
-    # the keyed repartition IS the aggregate's exchange, and
-    # collect_list has no map-side reduction to lose). Below the
-    # threshold the session default stands.
+    # Above the edge threshold the adjacency collect_list's partitions
+    # are sized edge-proportionally too (same sort-based-fallback spill
+    # mechanism as the basket build — see _copurchase_baskets; the
+    # keyed repartition IS the aggregate's exchange, and collect_list
+    # has no map-side reduction to lose). Below it the session default
+    # stands.
     adj_src = oriented
     if n_edges > TRIANGLE_REPART_EDGE_THRESHOLD:
-        adj_src = oriented.repartition(
-            max(
-                int(spark.conf.get("spark.sql.shuffle.partitions")),
-                n_edges // 1_500_000,
-            ),
-            "src",
-        )
+        adj_src = oriented.repartition(target_partitions(spark, n_edges, 1_500_000), "src")
     adj = (
         adj_src.groupBy("src")
         .agg(F.sort_array(F.collect_list("dst")).alias("ns"))
@@ -373,10 +311,7 @@ def graph_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so a closure-free graph still reports 0 triangles (the oracle's
     # COUNT(*) = 0), not NULL.
     if n_edges > TRIANGLE_REPART_EDGE_THRESHOLD:
-        parts = max(
-            int(spark.conf.get("spark.sql.shuffle.partitions")),
-            n_edges // 250_000,
-        )
+        parts = target_partitions(spark, n_edges, 250_000)
         closed = (
             edges_uv.repartition(parts, "v")
             .join(adj_v.repartition(parts, "v"), "v")
@@ -592,16 +527,14 @@ def _shingles5(docs: DataFrame) -> DataFrame:
     """Distinct 5-gram word shingles per document (Spark twin of
     _SHINGLE5_SQL).
 
-    r14: ``_spread`` before the tokenizer — the documents table scans
-    as ONE populated partition (single parquet row group at every
-    measured SF, and an unsplittable-input hazard at any scale, guide
-    §2.5), so the regex tokenize + 5-gram explode ran on one core: the
-    sf10 eventlog showed a 70 s 1-task stage, 40 % of the query's
-    wall. The conditional repartition is a ~56 MB shuffle at sf10 and
-    a no-op on inputs that already scan wide."""
-    from emission_project_spark.extensions.dedup import _spread
-
-    toked = _spread(docs).select(
+    The input is spread (``spread_input``) before the tokenizer: a
+    documents table that scans as fewer populated partitions than
+    cores (one parquet row group at every measured SF) would otherwise
+    run the regex tokenize + 5-gram explode on one core — the sf10
+    event log showed a 70 s 1-task stage, 40 % of the query's wall.
+    The conditional repartition is a ~56 MB shuffle at sf10 and a
+    no-op on inputs that already scan wide."""
+    toked = spread_input(docs).select(
         "doc_id", tokens(F.lower(F.col("text"))).alias("t")
     ).filter(F.size("t") >= 5)
     sh = toked.select(

@@ -30,7 +30,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from emission_project_spark.catalog.tables import load_table
+from emission_project_spark.catalog.tables import load_table, spread_input
 from emission_project_spark.plans.registry import register
 
 _TOKS_SQL = "regexp_extract_all(lower(text), '\\w+')"
@@ -178,15 +178,12 @@ def text_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the parquet and re-runs the regex tokenizer (the executed plan
     # showed 5 scans / 0 reused exchanges; the KN query's one-pass
     # discipline applied here), spillable at corpus scale.
-    # r14: _spread BEFORE the tokenizer — documents scans as one
-    # populated partition (single parquet row group; the guide §2.5
-    # unsplittable-input hazard), so the checkpoint materialization
-    # tokenized the whole corpus on one core and every downstream
-    # map side inherited the 1-partition layout. Conditional
-    # repartition: no-op on inputs that already scan wide.
-    from emission_project_spark.extensions.dedup import _spread
-
-    d = _spread(docs).select(
+    # Spread BEFORE the tokenizer: a documents scan with fewer populated
+    # partitions than cores (one parquet row group; the
+    # unsplittable-input hazard) would tokenize the whole corpus into
+    # the checkpoint on one core, and every downstream map side would
+    # inherit that layout. No-op on inputs that already scan wide.
+    d = spread_input(docs).select(
         "doc_id", tokens(F.lower(F.col("text"))).alias("toks")
     ).localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
     t = d.select("doc_id", F.explode("toks").alias("term"))

@@ -17,10 +17,12 @@ one you would also set on a 1000-executor cluster:
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# the cores this process may run on; SPARK_GRAFT_CPUS overrides
+DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
 
 
 def get_spark(
@@ -59,13 +61,18 @@ def get_spark(
     # thresholds) over these local[N] defaults — and how
     # tools/benchdiff.py --ab-run runs config A/Bs through its
     # existing --env-old/--env-new plumbing.
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    env_conf = os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")
-    for kv in env_conf.split(";"):
+    conf = dict(extra_conf or {})
+    for kv in os.environ.get("SPARK_GRAFT_EXTRA_CONF", "").split(";"):
         if "=" in kv:
             k, v = kv.split("=", 1)
-            builder = builder.config(k.strip(), v)
+            conf[k.strip()] = v
+    # Checked here, before the session exists: a non-integer value
+    # starts a session on which reading the conf back does not return.
+    parts = conf.get("spark.sql.shuffle.partitions")
+    if parts is not None and not re.fullmatch(r"[+-]?[0-9]+", str(parts).strip()):
+        raise ValueError(f"spark.sql.shuffle.partitions must be an integer, got {parts!r}")
+    for k, v in conf.items():
+        builder = builder.config(k, v)
     return builder.getOrCreate()
 
 

@@ -254,12 +254,15 @@ def test_pagerank_output_schema_width_independent(spark, graph_dir):
 
 
 def test_basket_rowcount_repartition_branch_parity(spark, graph_dir, monkeypatch):
-    """r14: force the footer-row-count-derived basket repartition (the
+    """Force the footer-row-count-derived basket repartition (the
     branch that sizes the collect_set aggregate's exchange at scale)
     at toy scale and hold the full triangle census to the oracle."""
     from emission_project_spark.plans import affinity_ops
 
+    layout = affinity_ops.parquet_layout
     monkeypatch.setattr(
-        affinity_ops, "_parquet_row_count", lambda sf_dir, table: 10**9
+        affinity_ops,
+        "parquet_layout",
+        lambda paths, column=None: layout(paths, column)._replace(rows=10**9),
     )
     _triangle_parity(spark, graph_dir)

@@ -185,6 +185,32 @@ class TestScd2:
         assert k1.filter(F.col("is_current")).select("seg").first().seg == "A3"
         assert d2.filter((F.col("k") == 9) & F.col("is_current")).count() == 1
 
+    def test_null_is_current_rows_pass_through_as_history(self, spark):
+        from emission_project_spark.operators.scd import scd2_apply
+
+        dim = spark.createDataFrame(
+            [(1, "A", 10.0, None), (2, "B", 20.0, None), (2, "B1", 21.0, True)],
+            "k bigint, seg string, bal double, is_current boolean",
+        ).selectExpr(
+            "k", "seg", "bal", "timestamp'2024-01-01' AS valid_from",
+            "CAST(NULL AS timestamp) AS valid_to", "is_current",
+        )
+        out = scd2_apply(
+            dim, self._upd(spark, [(1, "A2", 10.0), (2, "B2", 22.0)]),
+            "k", ["seg", "bal"], "2024-06-01",
+        )
+        got = sorted(
+            (r.k, r.seg, r.valid_to and str(r.valid_to)[:10], r.is_current)
+            for r in out.collect()
+        )
+        assert got == [
+            (1, "A", None, None),            # untouched, not closed
+            (1, "A2", None, True),           # opened like a brand-new key
+            (2, "B", None, None),            # untouched
+            (2, "B1", "2024-06-01", False),  # the current version is closed
+            (2, "B2", None, True),
+        ]
+
     def test_as_of_slices_versions(self, spark):
         from emission_project_spark.operators.scd import scd2_apply, scd2_as_of
 
