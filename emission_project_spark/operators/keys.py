@@ -31,12 +31,16 @@ def add_surrogate_key(
     df: DataFrame,
     name: str,
     order_by: Sequence[str],
-    start: int = 1,
+    start: int | Column = 1,
     position_first: bool = True,
 ) -> DataFrame:
-    """Dense ascending id in sort order (exact SERIAL semantics)."""
+    """Dense ascending id in sort order (exact SERIAL semantics).
+
+    ``start`` may be a Column, e.g. a scalar subquery over the stored
+    table's max id, so the offset is computed inside the plan rather
+    than by a driver-side probe."""
     w = Window.orderBy(*[F.col(c).asc_nulls_last() for c in order_by])
-    out = df.withColumn(name, (F.row_number().over(w) + F.lit(start - 1)).cast("long"))
+    out = df.withColumn(name, (F.row_number().over(w) + (start - 1)).cast("long"))
     if position_first:
         out = out.select(name, *[c for c in df.columns])
     return out

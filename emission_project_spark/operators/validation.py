@@ -71,55 +71,6 @@ def validate_fks(child: DataFrame, fks: list[FkSpec]) -> dict[str, int]:
     return {r.fk_name: int(r.violations) for r in fk_violation_counts(child, fks).collect()}
 
 
-def fk_violation_observation(child: DataFrame, fks: list[FkSpec]):
-    """FK orphan counters that RIDE an existing action instead of
-    running as their own job (round 11, r10 verdict task #5): attach
-    the same broadcast key-set joins as :func:`fk_violation_counts`,
-    register one ``df.observe`` counter per FK, and hand back the
-    instrumented frame projected to ``child``'s original columns.
-
-    Run ANY action on the returned frame (typically the batch's own
-    append/write) and ``observation.get`` yields ``{fk_name: count}``
-    computed by the SAME tasks that executed the action — the
-    validation pass disappears as a separate job, which matters when
-    the child is the fact batch a 100 TB pipeline was already paying
-    66-83% of its wall on (the measured fact-assembly share). The
-    joins stay in the executed plan because the metrics reference
-    their ``__hit_i`` columns; the projection back to the original
-    columns keeps the write schema untouched.
-    """
-    from pyspark.sql import Observation
-
-    if not fks:
-        raise ValueError("fk_violation_observation needs at least one FK spec")
-    out_cols = list(child.columns)
-    probe = child
-    metrics = []
-    for i, (name, child_col, parent, parent_col) in enumerate(fks):
-        keys = (
-            parent.select(F.col(parent_col).alias(f"__pk_{i}"))
-            .where(F.col(f"__pk_{i}").isNotNull())
-            .distinct()
-            .withColumn(f"__hit_{i}", F.lit(1))
-        )
-        probe = probe.join(
-            F.broadcast(keys), on=probe[child_col] == keys[f"__pk_{i}"], how="left"
-        )
-        metrics.append(
-            F.coalesce(
-                F.sum(
-                    F.when(
-                        F.col(child_col).isNotNull() & F.col(f"__hit_{i}").isNull(),
-                        F.lit(1),
-                    ).otherwise(F.lit(0))
-                ),
-                F.lit(0),
-            ).alias(name)
-        )
-    obs = Observation("fk_validation")
-    return probe.observe(obs, *metrics).select(*out_cols), obs
-
-
 def profile_columns(
     df: DataFrame, cols: list[str] | None = None, exact: bool = True
 ) -> DataFrame:

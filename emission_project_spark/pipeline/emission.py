@@ -53,6 +53,38 @@ class RunStats:
     stage_seconds: dict[str, float] = field(default_factory=dict)
 
 
+@contextmanager
+def _stage(stats: RunStats, name: str):
+    """Record the wall-clock of the enclosed block as
+    ``stats.stage_seconds[name]`` (only when it completes)."""
+    t0 = time.perf_counter()
+    yield
+    stats.stage_seconds[name] = round(time.perf_counter() - t0, 3)
+
+
+@contextmanager
+def _insert_step(rows: DataFrame, table: str, stats: RunStats):
+    """The one insert step of every table: persist the insert set,
+    count it, yield ``(rows, n)`` for the caller to append when
+    ``n > 0``, then unpersist and record ``stats.inserted[table]``.
+
+    The count and the append (plus, for the fact, the FK check) are
+    separate actions; the persist makes the feed scan → dedup →
+    anti-join → key chain run once instead of per action. For the
+    fact that chain is the dominant stage, and its FK check reads
+    the cached batch in 1.4 s vs 3.9 s as a recompute at the x100
+    feed. MEMORY_AND_DISK: a huge batch spills instead of OOMing.
+    An empty feed needs no guard: it yields an empty insert set and
+    ``n == 0`` skips the append."""
+    rows = rows.persist()
+    try:
+        n = rows.count()
+        yield rows, n
+    finally:
+        rows.unpersist()
+    stats.inserted[table] = n
+
+
 class EmissionPipeline:
     def __init__(self, spark: SparkSession, warehouse: Warehouse):
         self.spark = spark
@@ -68,10 +100,6 @@ class EmissionPipeline:
 
     # --- helpers ---
 
-    def _next_id(self, dim: DataFrame, id_col: str) -> int:
-        row = dim.agg(F.max(id_col).alias("m")).first()
-        return int(row.m) + 1 if row.m is not None else 1
-
     def _load_dim(
         self,
         batch: DataFrame,
@@ -84,30 +112,19 @@ class EmissionPipeline:
     ) -> DataFrame:
         """Incremental dimension load: dedup batch → anti-join vs
         warehouse → SERIAL-style ids in sorted order → append.
-        Returns the refreshed dimension."""
-        t0 = time.perf_counter()
-        current = self.wh.read(table, schema)
-        fresh = dedup_subset(batch, natural_key)
-        new_rows = incremental_insert(current, fresh, natural_key)
-        new_rows = add_surrogate_key(
-            new_rows, id_col, order_by=order_by, start=self._next_id(current, id_col)
-        )
-        # persist the (batch-sized) insert set: the count guard and the
-        # append are two actions — without it the feed scan + dedup +
-        # anti-join + rank chain executes twice per dimension (r10
-        # verdict task #5; MEMORY_AND_DISK, so a huge batch spills
-        # instead of OOMing)
-        new_rows = new_rows.persist()
-        try:
-            n = new_rows.count()
-            if n:
-                self.wh.append(
-                    new_rows.select(*[f.name for f in schema.fields]), table
-                )
-        finally:
-            new_rows.unpersist()
-        stats.inserted[table] = n
-        stats.stage_seconds[f"dim_{table}"] = round(time.perf_counter() - t0, 3)
+        Returns the refreshed dimension.
+
+        The id offset is a scalar subquery over the stored max id, so
+        keying needs no driver round trip; when the anti-join comes out
+        empty AQE drops the subquery and a no-op tick pays nothing."""
+        with _stage(stats, f"dim_{table}"):
+            current = self.wh.read(table, schema)
+            new_rows = incremental_insert(current, dedup_subset(batch, natural_key), natural_key)
+            start = current.select(F.coalesce(F.max(id_col), F.lit(0)) + 1).scalar()
+            new_rows = add_surrogate_key(new_rows, id_col, order_by=order_by, start=start)
+            with _insert_step(new_rows, table, stats) as (rows, n):
+                if n:
+                    self.wh.append(rows.select(*schema.names), table)
         return self.wh.read(table, schema)
 
     # --- the run ---
@@ -116,29 +133,27 @@ class EmissionPipeline:
         """One scheduled run. ``incoming_root`` contains the three feed
         dirs (``drivers_incoming_data`` etc. per README.md:58)."""
         stats = RunStats()
-        t0 = time.perf_counter()
-        self.init_warehouse()
-        stats.stage_seconds["init"] = round(time.perf_counter() - t0, 3)
+        with _stage(stats, "init"):
+            self.init_warehouse()
 
-        t0 = time.perf_counter()
-        drivers_raw, f1 = read_feed(
-            self.spark, os.path.join(incoming_root, "drivers_incoming_data"), S.DRIVERS_FEED
-        )
-        vehicles_raw, f2 = read_feed(
-            self.spark,
-            os.path.join(incoming_root, "vehicle_fuel_consumptions_incoming_data"),
-            S.VEHICLES_FEED_RAW,
-            rename=S.VEHICLES_RENAME,
-        )
-        logbook, f3 = read_feed(
-            self.spark, os.path.join(incoming_root, "drivers_logbook_incoming_data"), S.LOGBOOK_FEED
-        )
-        # The logbook feed fans out to FIVE consumers (country batch ×2
-        # legs, city batch ×2 legs, fact assembly) each ending in its
-        # own action — persist the CSV parse once instead of re-reading
-        # the feed per consumer (r10 verdict task #5)
-        logbook = logbook.persist()
-        stats.stage_seconds["extract"] = round(time.perf_counter() - t0, 3)
+        with _stage(stats, "extract"):
+            drivers_raw, f1 = read_feed(
+                self.spark, os.path.join(incoming_root, "drivers_incoming_data"), S.DRIVERS_FEED
+            )
+            vehicles_raw, f2 = read_feed(
+                self.spark,
+                os.path.join(incoming_root, "vehicle_fuel_consumptions_incoming_data"),
+                S.VEHICLES_FEED_RAW,
+                rename=S.VEHICLES_RENAME,
+            )
+            logbook, f3 = read_feed(
+                self.spark, os.path.join(incoming_root, "drivers_logbook_incoming_data"), S.LOGBOOK_FEED
+            )
+            # The logbook feed fans out to FIVE consumers (country batch
+            # ×2 legs, city batch ×2 legs, fact assembly), each ending in
+            # its own action: persist the CSV parse once instead of
+            # re-reading the feed per consumer
+            logbook = logbook.persist()
 
         # every logbook consumer (the four dim loads AND the fact
         # assembly) runs under one try/finally: a failure in any dim
@@ -206,18 +221,16 @@ class EmissionPipeline:
                 stats=stats,
             )
 
-            t0 = time.perf_counter()
-            self._load_fact(logbook, drivers, cars, country, city, stats)
+            with _stage(stats, "fact"):
+                self._load_fact(logbook, drivers, cars, country, city, stats)
         finally:
             logbook.unpersist()
-        stats.stage_seconds["fact"] = round(time.perf_counter() - t0, 3)
 
         if archive_root:
             # crash-safe ordering: archive only after all writes landed
-            t0 = time.perf_counter()
-            for files, sub in ((f1, "drivers_used_data"), (f2, "vehicle_fuel_consumptions_used_data"), (f3, "drivers_logbook_used_data")):
-                stats.archived += archive_consumed(files, os.path.join(archive_root, sub))
-            stats.stage_seconds["archive"] = round(time.perf_counter() - t0, 3)
+            with _stage(stats, "archive"):
+                for files, sub in ((f1, "drivers_used_data"), (f2, "vehicle_fuel_consumptions_used_data"), (f3, "drivers_logbook_used_data")):
+                    stats.archived += archive_consumed(files, os.path.join(archive_root, sub))
         return stats
 
     def _load_fact(
@@ -229,9 +242,6 @@ class EmissionPipeline:
         city: DataFrame,
         stats: RunStats,
     ) -> None:
-        if logbook.isEmpty():
-            stats.inserted["car_driver_log"] = 0
-            return
         dates = self.wh.read("date", S.DATE_DIM)
 
         # J6: attach car_id + co2 over the 6-col null-safe attribute FK
@@ -286,23 +296,16 @@ class EmissionPipeline:
         # the 7-id natural key (null-safe: orphan ids are null)
         fact = dedup_subset(fact, S.FACT_NK, tiebreaker=["distance_km", "total_emission"])
         current = self.wh.read("car_driver_log", S.FACT_CAR_DRIVER_LOG)
-        # persist the insert batch: the count guard, the FK counters,
-        # and the append previously each re-executed the WHOLE fact
-        # assembly (the 66-83%-of-wall stage) — now it materializes once
-        new_rows = incremental_insert(current, fact, S.FACT_NK).persist()
-        try:
-            n = new_rows.count()
+        new_rows = incremental_insert(current, fact, S.FACT_NK)
+        with _insert_step(new_rows, "car_driver_log", stats) as (rows, n):
             if n:
                 # FK enforcement (SURVEY §1.3: the reference's DDL
-                # constraints become an anti-join orphan check),
-                # validated from the CACHED batch — 1.4 s at x100 vs
-                # 3.9 s as a recompute. (An observe-counter ride on the
-                # append action was built and MEASURED WORSE: +55 s at
-                # x100 — the metric joins de-optimized the write stage —
-                # and reverted; `fk_violation_observation` remains for
-                # callers whose action isn't a partitioned write.)
+                # constraints become an anti-join orphan check) on the
+                # cached batch. Riding observe counters on the append
+                # instead measured +55 s at x100: the metric joins
+                # de-optimize the partitioned write stage.
                 stats.fk_violations = validate_fks(
-                    new_rows,
+                    rows,
                     [
                         ("fact.car_id->cars", "car_id", cars, "car_id"),
                         ("fact.driver_id->drivers", "driver_id", drivers, "driver_id"),
@@ -318,36 +321,35 @@ class EmissionPipeline:
                 # partitions instead of scanning the whole 100 TB fact;
                 # the append co-locates date_id before the write (the
                 # small-files fix measured 134 → 14 s in Warehouse.append).
-                self.wh.append(new_rows, "car_driver_log", partition_by=["date_id"])
-        finally:
-            new_rows.unpersist()
-        stats.inserted["car_driver_log"] = n
+                self.wh.append(rows, "car_driver_log", partition_by=["date_id"])
 
     # --- consumption surface (README.md:3 roll-ups, A2) ---
 
     def fact_df(self) -> DataFrame:
         return self.wh.read("car_driver_log", S.FACT_CAR_DRIVER_LOG)
 
+    def _rollups(self, base: DataFrame) -> dict[str, DataFrame]:
+        """The three roll-ups over ``base`` (a fact projection holding
+        ``car_id``, ``driver_id`` and ``total_emission``). Lazy: the
+        contract read of ``cars`` launches no job."""
+        cars = self.wh.read("cars", S.CARS_DIM).select("car_id", "brand")
+        total = F.sum("total_emission").alias("total_emission")
+        return {
+            "emission_by_brand": (
+                base.join(F.broadcast(cars), "car_id", "left").groupBy("brand").agg(total)
+            ),
+            "emission_by_car": base.groupBy("car_id").agg(total),
+            "emission_by_driver": base.groupBy("driver_id").agg(total),
+        }
+
     def emission_by_brand(self) -> DataFrame:
-        cars = self.wh.read("cars", S.CARS_DIM)
-        return (
-            self.fact_df()
-            .join(F.broadcast(cars.select("car_id", "brand")), "car_id", "left")
-            .groupBy("brand")
-            .agg(F.sum("total_emission").alias("total_emission"))
-        )
+        return self._rollups(self.fact_df())["emission_by_brand"]
 
     def emission_by_car(self) -> DataFrame:
-        return (
-            self.fact_df().groupBy("car_id").agg(F.sum("total_emission").alias("total_emission"))
-        )
+        return self._rollups(self.fact_df())["emission_by_car"]
 
     def emission_by_driver(self) -> DataFrame:
-        return (
-            self.fact_df()
-            .groupBy("driver_id")
-            .agg(F.sum("total_emission").alias("total_emission"))
-        )
+        return self._rollups(self.fact_df())["emission_by_driver"]
 
     @contextmanager
     def rollup_views(self):
@@ -355,39 +357,20 @@ class EmissionPipeline:
 
         The individual methods above are each the right plan alone, but
         a consumer running all three per schedule (the reference's
-        reporting cadence) scans the partitioned fact three times —
-        measured 6.2 s vs 2.9 s at the ×100 feed (round 12 A/B; the
-        grouping-sets single-pass variant measured 3.1 s and lost to
-        the cache on expansion overhead). Here the 3-column projection
-        persists once (MEMORY_AND_DISK — a fact outgrowing executor
-        memory spills instead of OOMing) and the three groupBys read
-        the cache; the context manager owns the unpersist.
+        reporting cadence) would scan the partitioned fact three times:
+        6.2 s vs 2.9 s for the cached single scan at the x100 feed (a
+        grouping-sets single pass measured 3.1 s, losing to the cache on
+        expansion overhead). Here the 3-column projection persists once
+        (MEMORY_AND_DISK: a fact outgrowing executor memory spills
+        instead of OOMing) and the three groupBys read the cache; the
+        context manager owns the unpersist.
 
             with pipe.rollup_views() as views:
                 for name, df in views.items():
                     df.write...
         """
-        base = self.fact_df().select(
-            "car_id", "driver_id", "total_emission"
-        ).persist()
+        base = self.fact_df().select("car_id", "driver_id", "total_emission").persist()
         try:
-            cars = self.wh.read("cars", S.CARS_DIM)
-            yield {
-                "emission_by_brand": (
-                    base.join(
-                        F.broadcast(cars.select("car_id", "brand")),
-                        "car_id",
-                        "left",
-                    )
-                    .groupBy("brand")
-                    .agg(F.sum("total_emission").alias("total_emission"))
-                ),
-                "emission_by_car": base.groupBy("car_id").agg(
-                    F.sum("total_emission").alias("total_emission")
-                ),
-                "emission_by_driver": base.groupBy("driver_id").agg(
-                    F.sum("total_emission").alias("total_emission")
-                ),
-            }
+            yield self._rollups(base)
         finally:
             base.unpersist()

@@ -42,19 +42,16 @@ class Warehouse:
         """Table scan; absent table → empty schema-contract DataFrame
         (the reference's empty-DF fallback, emission-dag.py:45).
 
-        With a schema contract, the scan is normalized to it: partitioned
-        tables read back with partition columns last and their types
-        inferred from directory names (e.g. int for a date_id key), so
-        reorder + cast to keep the contract stable either way."""
+        With a schema contract the scan reads BY the contract: no
+        schema-inference job, column types come from the contract (a
+        partition column too), and a contract column missing from the
+        files reads as NULL, as in ``read_merged_schema``. The select
+        restores contract order, since partition columns read back
+        last."""
         if self.exists(table):
-            df = self.spark.read.parquet(self.path(table))
-            if schema is not None:
-                from pyspark.sql import functions as F
-
-                df = df.select(
-                    *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
-                )
-            return df
+            if schema is None:
+                return self.spark.read.parquet(self.path(table))
+            return self.spark.read.schema(schema).parquet(self.path(table)).select(*schema.names)
         if schema is None:
             raise FileNotFoundError(f"table {table} absent and no schema contract given")
         return self.spark.createDataFrame([], schema)
@@ -160,8 +157,6 @@ class Warehouse:
             if sort_by:
                 df = df.sortWithinPartitions(*(partition_by + sort_by))
         elif sort_by:
-            from pyspark.sql import functions as F
-
             df = df.repartitionByRange(
                 n_files, *[F.col(c) for c in sort_by]
             ).sortWithinPartitions(*sort_by)
@@ -221,8 +216,6 @@ class Warehouse:
         table intact. On a transactional format this is DELETE WHERE
         EXISTS; pure parquet pays one table rewrite, which is why
         deletion requests batch daily, not per-request."""
-        from pyspark.sql import functions as F
-
         from emission_project_spark.operators.joins import anti_join
 
         current = self.read(table)

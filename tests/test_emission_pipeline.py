@@ -146,24 +146,43 @@ def test_incremental_second_run(pipeline):
     _batch1(incoming)
     pipe.run(incoming, archive)
 
-    # batch 2: one already-loaded row (skip), one new; other feeds absent
+    # batch 2: one already-loaded row (skip), one new row over known
+    # dims, and one new row bringing a new driver and a new city in a
+    # known country; the vehicles feed is absent
+    _write(
+        f"{incoming}/drivers_incoming_data/drivers2.csv",
+        ["name,first_name,city", "Doe,John,Helsinki", "Young,Zoe,Munich"],
+    )
     _write(
         f"{incoming}/drivers_logbook_incoming_data/logbook2.csv",
         [
             LOGBOOK_HEADER,
             "bmw,m1,2.0,4,X,A8,Smith,Anna,Paris,USA,Paris,France,50.5,2014-11-20",
             "audi,a1,1.6,4,Z,A6,Doe,John,Berlin,Germany,Paris,USA,20.0,2015-01-09",
+            "audi,a1,1.6,4,Z,A6,Young,Zoe,Munich,Germany,Berlin,Germany,30.0,2015-01-09",
         ],
     )
     stats = pipe.run(incoming, archive)
     assert stats.inserted == {
-        "drivers": 0,
+        "drivers": 1,
         "cars": 0,
         "country": 0,
-        "city": 0,
-        "car_driver_log": 1,
+        "city": 1,
+        "car_driver_log": 2,
     }
-    assert pipe.fact_df().count() == 4
+    assert pipe.fact_df().count() == 5
+
+    # the new ids continue from the stored maximum (keyed in-plan)
+    drivers = {(r.name, r.first_name): r.driver_id for r in pipe.wh.read("drivers").collect()}
+    assert drivers == {("Doe", "John"): 1, ("Smith", "Anna"): 2, ("Young", "Zoe"): 3}
+    city = {r.city_name: r.city_id for r in pipe.wh.read("city").collect() if r.city_name != "Paris"}
+    assert city == {"Berlin": 1, "Munich": 4}
+
+    # and the fact row joins to them
+    (row,) = pipe.fact_df().filter(F.col("driver_id") == 3).collect()
+    assert row.start_city_id == 4 and row.target_city_id == 1
+    assert row.total_emission == pytest.approx(30.0 * 150)
+    assert all(v == 0 for v in stats.fk_violations.values())
 
 
 def test_empty_run_is_noop(pipeline):

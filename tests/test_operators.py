@@ -66,9 +66,21 @@ def test_surrogate_keys_dense_and_distributed_agree(spark):
 
 
 def test_surrogate_key_start_offset(spark):
+    """``start`` is an int or a Column, e.g. a scalar subquery over the
+    stored max id (an empty store then starts at 1)."""
     df = spark.createDataFrame([("b",), ("a",)], "name string")
-    out = add_surrogate_key(df, "id", order_by=["name"], start=100)
-    assert [(r.id, r.name) for r in out.orderBy("id").collect()] == [(100, "a"), (101, "b")]
+    stored = spark.createDataFrame([(7,), (99,)], "id bigint")
+    empty = spark.createDataFrame([], "id bigint")
+    starts = [(100, 100)] + [
+        (store.select(F.coalesce(F.max("id"), F.lit(0)) + 1).scalar(), first)
+        for store, first in ((stored, 100), (empty, 1))
+    ]
+    for start, first in starts:
+        out = add_surrogate_key(df, "id", order_by=["name"], start=start)
+        assert [(r.id, r.name) for r in out.orderBy("id").collect()] == [
+            (first, "a"),
+            (first + 1, "b"),
+        ]
 
 
 def test_date_id_expr(spark):
@@ -221,34 +233,6 @@ def test_fk_violation_counts(spark):
         ],
     )
     assert got == {"fk_a": 1, "fk_b": 4}
-
-
-def test_fk_violation_observation_rides_action(spark):
-    """The observe-based twin: counters computed by the SAME action the
-    caller runs (here a noop write), schema projected back to the
-    child's columns. (Built for r10 verdict task #5; the pipeline's
-    partitioned fact write measured WORSE with the ride and uses the
-    cached validate_fks instead — the operator remains for actions
-    without a partitioned-write de-optimization.)"""
-    from emission_project_spark.operators.validation import (
-        fk_violation_observation,
-    )
-
-    child = spark.createDataFrame(
-        [(1, 10), (2, 10), (3, 99), (4, None), (5, 20)],
-        "id int, dim_id int",
-    )
-    parent = spark.createDataFrame([(10, "a"), (20, "b")], "pk int, name string")
-    inst, obs = fk_violation_observation(
-        child,
-        [
-            ("fk_a", "dim_id", parent, "pk"),
-            ("fk_b", "id", parent, "pk"),  # every id orphaned vs pk
-        ],
-    )
-    assert inst.columns == child.columns  # write schema untouched
-    inst.write.format("noop").mode("overwrite").save()
-    assert {k: int(v) for k, v in obs.get.items()} == {"fk_a": 1, "fk_b": 5}
 
 
 def test_jsonl_corpus_roundtrip_and_quarantine(spark, tmp_path):
@@ -467,6 +451,56 @@ def test_warehouse_append_migrates_legacy_flat_layout(spark, tmp_path):
     assert out.count() == 150
     assert out.filter("date_id = 3").count() == 50
     assert out.filter("date_id = 1").count() == 33  # legacy rows intact
+
+
+def test_warehouse_contract_read_launches_no_job(spark, tmp_path):
+    """``read(table, schema)`` reads by the contract: no schema-inference
+    job for a flat or a date_id-partitioned table, columns back in
+    contract order with contract types (the partition column reads back
+    last from the files), and a contract column absent from the files
+    reads as NULL."""
+    import uuid
+
+    from pyspark.sql.types import (
+        DoubleType,
+        IntegerType,
+        LongType,
+        StringType,
+        StructField,
+        StructType,
+    )
+
+    from emission_project_spark.sources.warehouse import Warehouse
+
+    schema = StructType(
+        [
+            StructField("id", LongType()),
+            StructField("date_id", IntegerType()),
+            StructField("v", DoubleType()),
+        ]
+    )
+    rows = [(1, 20140307, 1.5), (2, 20150110, 2.5), (3, 20150110, None)]
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    wh.append(spark.createDataFrame(rows, schema), "flat")
+    wh.append(spark.createDataFrame(rows, schema), "part", partition_by=["date_id"])
+    wider = StructType([*schema.fields, StructField("note", StringType())])
+
+    sc = spark.sparkContext
+    group = f"contract-read-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "contract read")
+    try:
+        reads = [wh.read(t, s) for t in ("flat", "part") for s in (schema, wider)]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+    for df, contract in zip(reads, [schema, wider] * 2):
+        assert [(f.name, f.dataType) for f in df.schema] == [
+            (f.name, f.dataType) for f in contract
+        ]
+        got = sorted(tuple(r) for r in df.collect())
+        pad = (None,) * (len(contract) - len(schema))
+        assert got == [r + pad for r in rows]
 
 
 def test_warehouse_snapshot_versioning(spark, tmp_path):
