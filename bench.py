@@ -10,6 +10,10 @@ reported: single-shot numbers on a busy local JVM wobble ±15% round
 over round with no code change (observed r1→r2), which drowns the
 signal a per-query regression check needs. ``value`` is the sum of
 medians; ``runs`` records the repeat count.
+
+Which queries each section times (the headline, the ``rN_extras``
+blocks, the sf1 decade and the opt-in sf10 decade) is read from one
+table, ``MANIFEST``.
 """
 
 from __future__ import annotations
@@ -19,359 +23,194 @@ import os
 import statistics
 import sys
 import time
+from typing import NamedTuple
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-HEADLINE = [
-    "rollup_pricing_summary",
-    "derived_measure",
-    "role_playing_nation_join",
-    "group_rollup_brand",
-    "dedup_subset_deterministic",
-    "window_running_total",
-    "events_tumbling_hourly",
-    "incremental_insert_orders",
-    "dedup_exact_documents",
-    "dedup_minhash_lsh",
-    "similarity_bruteforce_topk",
-    "text_quality_score",
-    "dedup_cluster_components",
-    "curation_stratified_sample",
-    "curation_tfidf_top_terms",
-    "embedding_kmeans_lloyd",
-    "events_sliding_30m15m",
-    "sql_gateway_rollup",
-    # round-2 capstones (appended — the original 18 stay comparable
-    # round-over-round; per-query timings are the graded signal)
-    "dedup_semantic_pairs",
-    "similarity_ivf_kmeans_topk",
-    "dedup_incremental_exact",
-    "text_repetition_metrics",
-    "curation_token_budget",
-    "fk_orphan_check",
-]
 
-# Representative round-5 additions, timed at sf0.1 into a separate
-# "r5_extras" block: visible per-round cost without perturbing the
-# HEADLINE set's round-over-round comparability.
-R5_EXTRA = [
-    "curation_chunk_overlap",
-    "dedup_levenshtein_block",
-    "text_unigram_logprob",
-    "text_bm25_search",
-    "scd2_point_in_time",
-    "cdc_apply_customers",
-    "dedup_chunk_level_profile",
-    "similarity_hard_negatives",
-    # session-3 additions: heaviest of the decorrelation patterns and
-    # the vector/census ops
-    "join_q21_lone_late_supplier",
-    "join_q9_product_profit",
-    "embedding_quantize_error",
-    "events_anomaly_mad",
-    "profile_orders_columns",
-    "basket_part_pairs_lift",
-    "text_zipf_slope",
-    "similarity_knn_classify",
-    # session-4 additions: graph iteration, the bigram LM (the only
-    # op whose join key cardinality is corpus-sized²), DSIR, and the
-    # widest-join TPC-H shape of the new batch
-    "graph_pagerank_parts",
-    "text_bigram_perplexity",
-    "curation_dsir_weights",
-    "join_q8_market_share",
-    "text_ngram_novelty",
-]
+class Row(NamedTuple):
+    """One timed query. ``block`` is the sf0.1 record block that times
+    it ("queries" is the headline, "rN_extras" an extras block, None
+    not timed at sf0.1); ``sf1`` re-runs it in the sf1 decade; a
+    ``band`` (lo, hi) seconds puts it in the opt-in sf10 decade with
+    that expected single-run envelope."""
 
-# Round-6 additions, timed into their own "r6_extras" block.
-R6_EXTRA = [
-    "similarity_ivfpq_topk",
-    "similarity_ivfpq_rerank_topk",
-    "embedding_covariance_block",
-    "dedup_substring_spans",
-    "text_quality_linear_classifier",
-    "stats_winsorized_doc_lengths",
-    "embedding_norm_outliers",
-    "dedup_canonical_survivors",
-    # corpus-governance additions (late round 6):
-    "dedup_shingle_containment",
-    "privacy_k_anonymity_customers",
-    "stats_chi2_segment_priority",
-    "curation_epoch_schedule",
-    "layout_zorder_skipping",
-    "privacy_l_diversity_customers",
-    "stats_ks_two_sample",
-    "stats_mannwhitney_u",
-    "stats_psi_value_drift",
-    "similarity_centroid_confusion",
-    "stream_psi_drift_batch",
-    "sketch_f2_selfjoin_events",
-    "text_langid_confusion",
-    "curation_dsir_ess",
-    "dedup_lsh_quality",
-    # session-5 additions: governance cap, time-series pair, calibration
-    "curation_domain_cap",
-    "events_hourly_acf",
-    "events_cusum_changepoint",
-    "stats_classifier_calibration",
-]
+    block: str | None
+    sf1: bool = False
+    band: tuple[float, float] | None = None
 
-# Round-7 additions: affinity/structure + cohort-stats families.
-R7_EXTRA = [
-    "graph_triangle_stats",
-    "graph_adamic_adar_top",
-    "graph_kcore_peel",
-    "dedup_jaccard_prefix_join",
-    "text_pmi_collocations",
-    "text_vocab_oov_rate",
-    "events_attribution_last_touch",
-    "stats_benford_first_digit",
-    "similarity_range_search",
-    "stats_gini_concentration",
-    "stats_mutual_info_priority_segment",
-    "events_rfm_segments",
-    "events_kaplan_meier",
-    "stats_poisson_bootstrap_ci",
-    "events_path_topk",
-    "similarity_mmr_rerank",
-    "stats_cramers_v_priority_segment",
-    "text_rake_keywords",
-    "text_hash_feature_buckets",
-]
 
-# Round-8 additions: retrieval-eval + agreement/concentration families.
-R8_EXTRA = [
-    "similarity_recall_at_k",
-    "similarity_ndcg_at_k",
-    "embedding_pca_project",
-    "stats_roc_auc",
-    "stats_spearman_corr",
-    "stats_cohens_kappa",
-    "stats_jensen_shannon",
-    "stats_lorenz_deciles",
-    "stats_theil_index",
-    "events_interarrival_burstiness",
-    "text_heaps_law",
-    "multimodal_phash_pairs",
-    "stream_attribution_batch",
-    "stats_permutation_pvalue",
-    "events_mann_kendall_trend",
-    "embedding_centroid_distances",
-    "text_source_diversity",
-    "text_kneser_ney_bigrams",
-    "embedding_hubness_stats",
-    "privacy_t_closeness_customers",
-    "stats_brown_forsythe",
-    "events_dau_mau_stickiness",
-    "graph_neighbor_jaccard_top",
-    "events_bot_score",
-    "stats_cliffs_delta",
-    "events_conversion_delay_percentiles",
-]
-
-# Round-9 additions: the scale-path twins.
-R9_EXTRA = [
-    "embedding_hubness_ivf",
-    "events_dau_mau_hll",
-]
-
-# The heaviest operators, re-run at the 10x dataset for the scale
-# proof (near-linear = caps/blocking hold an order of magnitude up).
-SF1_HEAVY = [
-    "dedup_minhash_lsh",
-    "dedup_semantic_pairs",
-    "dedup_cluster_components",
-    "similarity_ivf_kmeans_topk",
-    "embedding_kmeans_lloyd",
-    "text_winnow_fingerprints",
-    "role_playing_nation_join",
-    # round-5 addition (appended — earlier entries stay comparable):
-    # the corpus-LM logprob's double token-stream pass is worth
-    # proving, not assuming. dedup_levenshtein_block is deliberately
-    # NOT here: the scale corpus's per-shard token renaming preserves
-    # most characters, so every cross-shard copy pair is a TRUE
-    # char-level near-dup — the corpus forms k-copy cliques with k²/2
-    # genuine pairs, and the detector's wall-time then measures that
-    # clique structure, not operator scaling (the constant-dup-rate
-    # invariant holds only for token-set detectors). Its scale story
-    # is the max_block cap + the multi-pass affix blocking, exercised
-    # by its own tests.
-    "text_unigram_logprob",
-    # session-4 heavies: the iterative graph op (5 synchronous rounds
-    # — per-round cost must stay edge-linear) and the bigram LM (its
-    # join key cardinality grows with the corpus, the newest candidate
-    # for super-linear drift).
-    "graph_pagerank_parts",
-    "text_bigram_perplexity",
-    # round-6-late additions: both ride the capped inverted index —
-    # containment's pair mass is bounded by max_doc_freq exactly like
-    # jaccard's, and the LSH quality readout runs the band join AND
-    # the exact pipeline (its wall-time is the sum of both, the most
-    # shuffle-heavy single query in the registry).
-    "dedup_shingle_containment",
-    "dedup_lsh_quality",
-    # round-7 additions: the three steepest new scalers — triangle
-    # census (wedge mass grows with graph density), the prefix-filtered
-    # exact Jaccard join (candidate mass rides the rare-shingle df
-    # distribution), and the Poisson bootstrap (rows × 200 replicates
-    # by construction, the deliberate linear-blowup control).
-    "graph_triangle_stats",
-    "dedup_jaccard_prefix_join",
-    "stats_poisson_bootstrap_ci",
-    # round-8 additions: the three new shapes with a scaling question —
-    # the global-rank Spearman (its window is the serial bottleneck the
-    # docstring's binned variant exists for; the decade measures how
-    # fast that wall approaches), the pHash banding join (candidate
-    # mass rides the band-value collision distribution), and the Heaps
-    # curve (token-level first-occurrence aggregate over the exploded
-    # stream).
-    "stats_spearman_corr",
-    "multimodal_phash_pairs",
-    "text_heaps_law",
-    # round-9 additions: the rewritten permutation test (×13 chunk fold
-    # — expected ~linear) and the IVF full-corpus hubness (flat-IVF
-    # n^1.5 law: √n centroids × √n-sized cells; the decade ratio
-    # documents that curve rather than asserting it).
-    "stats_permutation_pvalue",
-    "embedding_hubness_ivf",
-]
-
-# Second decade (100x rows), opt-in via BENCH_SF10=1: the steepest
-# scalers only, single run — the dataset is ~1.5 GB and generation plus
-# runs add ~5 min, so the per-round default bench stays bounded.
-SF10_HEAVY = [
-    "dedup_minhash_lsh",
-    "dedup_semantic_pairs",
-    "dedup_cluster_components",
-    "similarity_ivf_kmeans_topk",
-    # round-6 additions: the two steepest sf1 scalers — the iterative
-    # graph rank and the bigram LM whose count-cutoff (r6) is supposed
-    # to keep its corpus-sized join flat; a second decade proves it.
-    "graph_pagerank_parts",
-    "text_bigram_perplexity",
-    # round-9 addition: the flat-IVF hubness twin — its n^1.5 law is a
-    # CLAIM about the √n-centroid geometry; the second decade is where
-    # a hidden quadratic would show (cells 10× larger at 100× rows).
-    "embedding_hubness_ivf",
-    # round-9 additions #2: the round's two rewrite families, each
-    # represented by its heaviest member, measured at 100× so the
-    # rewrites' scale claims are timestamped data, not prose —
-    # the functions/ranks.py bucketed prefix-sum (would the ≤67-row
-    # global prefix + per-bucket windows stay flat when every bucket
-    # is 100× larger?) and the Arrow partial-sum bootstrap kernel
-    # (65M hashlib md5s across the executors, constant state/task).
-    "stats_spearman_corr",
-    "stats_poisson_bootstrap_ci",
-    # round-10 additions (r9 verdict task #5): the two 16-second sf1
-    # heavies whose plateaus were adjudicated as synthetic-vocabulary /
-    # density saturation in r5/r8 — a claim only a second decade can
-    # falsify (the hubness_ivf n^1.5 claim was settled exactly this
-    # way in r9).
-    "dedup_jaccard_prefix_join",
-    "graph_triangle_stats",
-    # round-11 additions (r10 verdict task #4): the remaining sf1
-    # heavies with no measured second decade — the triangle OOM proved
-    # payload-attaching plans surface their sizing bugs exactly one
-    # decade after the session default stops fitting, so every
-    # multi-second sf1 plan gets its sf10 row.
-    "dedup_lsh_quality",
-    "dedup_shingle_containment",
-    "multimodal_phash_pairs",
-]
-
-# Expected single-run bands for sf10 queries with ADJUDICATED envelopes
-# (r11 verdict task #5): a future window that lands inside its band
-# self-adjudicates instead of re-litigating an episodic mode.
+# The whole timing plan, one row per query. Row order is run order in
+# every section; the headline rows keep their order because records are
+# diffed by query name and the first 18 stay comparable with every
+# earlier record. Entries may be added, never renamed or removed.
 #
-# BREACH ADJUDICATION RULE (round 13, r12 verdict task #3 — pre-
-# committed so band maintenance can't ratchet): a band may be WIDENED
-# only after BOTH of the following are on record for the breaching
-# query, in the round's COMPARE/SCALING notes:
-#   1. one eventlog-diff A/B (the dedup_semantic_pairs protocol, now
-#      turnkey: `python tools/eventlog_run.py` per arm, or
-#      `tools/benchdiff.py --ab-run` for interleaved fresh-JVM pairs,
-#      >=3 samples/side) showing structurally identical plans — same
-#      stage/task/shuffle/spill shape — so the delta is per-task speed,
-#      not the plan;
-#   2. the same record's mem_fault_gbps + per-section steal readings,
-#      with the system-time share of the slow arm noted (the
-#      fault-service mode reads as sys-time, SCALING.md round 12).
-# If the plans DIFFER or sys-time share is low on a quiet window, the
-# breach is treated as a real regression and bisected — the band does
-# NOT move. Records carry `band_breach_protocol` so a future reader
-# sees the rule next to the breach it gates.
+# sf1 re-runs the heaviest operators at 10x rows (near-linear = the
+# caps and blocking hold an order of magnitude up). dedup_levenshtein_block
+# stays out: the scale corpus's per-shard token renaming keeps most
+# characters, so its cross-shard copies are true char-level near-dups
+# forming k-copy cliques, and the decade would time the clique
+# structure, not the operator.
 #
-# Sources:
-# graph_triangle_stats — the r10 interleaved A/B envelope (188-254);
-# dedup_semantic_pairs — the round-12 chunked-GEMM kernel measured
-# 77.1-78.0 s across 3 fresh JVMs in a window whose OLD kernel read
-# 102-337 s (host fault-service mode, SCALING.md r12); band leaves
-# headroom for the residual fresh-buffer fault exposure.
-SF10_EXPECTED_BANDS = {
-    # r10 A/B envelope was 188-254; round 12 added same-window samples
-    # 274.0 / 210.1 / 272.3 on byte-identical code (1.8% section steal)
-    # — ±15% single-run wobble straddles the old max, so the band is
-    # widened to the measured reality rather than re-litigated per run.
-    # r14 floor 185->155: the task-#2 A/B's fast window read 158.165 s
-    # on byte-identical-to-r13 OLD code (plans/r14/ab/
-    # triangle_agg_partitions_sf10.log) — window speed, not a plan
-    # change; ceiling stands.
-    "graph_triangle_stats": (155.0, 285.0),
-    "dedup_semantic_pairs": (55.0, 110.0),
-    # The rest of the heavy set, from every sealed BENCH_SF10_r* value
-    # taken on CURRENT plan code (older-code rounds excluded where a
-    # rewrite landed since), padded ~10-15% past the measured envelope.
-    # A breach points first at mem_fault_gbps / section steal in the
-    # same record, then at the plan.
-    # r14 REBASED BANDS (code change, not adjudication — the plan under
-    # the old bands no longer exists): dedup_jaccard_prefix_join after
-    # spread_input + ranks.global_row_number measured 53.1-66.5 s
-    # (interleaved 3/side vs 8690c80, disjoint, x3.40 median —
-    # plans/r14/ab/spread_input_sf10.log); text_bigram_perplexity after
-    # spread_input 23.1-31.6 s (x2.54, disjoint, same log);
-    # embedding_hubness_ivf after spread_input 12.4-13.5 s (x1.28,
-    # disjoint) — its upper edge keeps degraded-window headroom (the
-    # r12/r13 fault-mode flips hit this query hardest).
-    "dedup_jaccard_prefix_join": (45.0, 85.0),
-    "graph_pagerank_parts": (85.0, 125.0),          # 95.9-108.8, r9-r12
-    "embedding_hubness_ivf": (10.0, 24.0),
-    "dedup_minhash_lsh": (22.0, 40.0),              # 24.5-36.2, r5-r12
-    "similarity_ivf_kmeans_topk": (28.0, 45.0),     # 32.2-38.9, r8-r12
-    "text_bigram_perplexity": (19.0, 42.0),         # r14 rebase, see above
-    "dedup_cluster_components": (40.0, 75.0),       # 45.1-70.3, r5-r12
-    "stats_spearman_corr": (14.0, 22.0),            # 16.5-19.2, r9-r12
-    "stats_poisson_bootstrap_ci": (11.0, 18.0),     # 12.8-15.6, r9-r12
-    "dedup_lsh_quality": (75.0, 105.0),             # 86.8-91.0, r11-r12
-    "dedup_shingle_containment": (32.0, 50.0),      # 37.3-44.7, r11-r12
-    "multimodal_phash_pairs": (22.0, 30.0),         # 25.3-25.9, r11-r12
+# sf10 bands pad the envelope measured on the current plan code (the
+# trailing comments, seconds at local[32]) by about 10-15 %; a record
+# self-reports `band_breaches`. BREACH RULE (pre-committed so band
+# maintenance cannot ratchet): a band may be WIDENED only after both
+# are on record for the breaching query:
+#   1. an eventlog-diff A/B (`tools/eventlog_run.py` per arm, or
+#      `tools/benchdiff.py --ab-run`, >=3 samples/side) showing
+#      structurally identical plans -- same stage/task/shuffle/spill
+#      shape -- so the delta is per-task speed, not the plan;
+#   2. the same record's mem_fault_gbps and per-section steal readings,
+#      with the slow arm's system-time share noted (the host's
+#      fault-service mode reads as sys-time, SCALING.md).
+# If the plans differ, or the sys-time share is low in a quiet window,
+# the breach is a real regression and is bisected; the band does not
+# move. A code change that replaces a plan rebases its band.
+MANIFEST: dict[str, Row] = {
+    "rollup_pricing_summary": Row("queries"),
+    "derived_measure": Row("queries"),
+    "role_playing_nation_join": Row("queries", sf1=True),
+    "group_rollup_brand": Row("queries"),
+    "dedup_subset_deterministic": Row("queries"),
+    "window_running_total": Row("queries"),
+    "events_tumbling_hourly": Row("queries"),
+    "incremental_insert_orders": Row("queries"),
+    "dedup_exact_documents": Row("queries"),
+    "dedup_minhash_lsh": Row("queries", sf1=True, band=(22.0, 40.0)),  # 24.5-36.2 s measured
+    "similarity_bruteforce_topk": Row("queries"),
+    "text_quality_score": Row("queries"),
+    "dedup_cluster_components": Row("queries", sf1=True, band=(40.0, 75.0)),  # 45.1-70.3
+    "curation_stratified_sample": Row("queries"),
+    "curation_tfidf_top_terms": Row("queries"),
+    "embedding_kmeans_lloyd": Row("queries", sf1=True),
+    "events_sliding_30m15m": Row("queries"),
+    "sql_gateway_rollup": Row("queries"),
+    "dedup_semantic_pairs": Row("queries", sf1=True, band=(55.0, 110.0)),  # chunked-GEMM kernel 77.1-78.0
+    "similarity_ivf_kmeans_topk": Row("queries", sf1=True, band=(28.0, 45.0)),  # 32.2-38.9
+    "dedup_incremental_exact": Row("queries"),
+    "text_repetition_metrics": Row("queries"),
+    "curation_token_budget": Row("queries"),
+    "fk_orphan_check": Row("queries"),
+    "curation_chunk_overlap": Row("r5_extras"),
+    "dedup_levenshtein_block": Row("r5_extras"),
+    "text_unigram_logprob": Row("r5_extras", sf1=True),
+    "text_bm25_search": Row("r5_extras"),
+    "scd2_point_in_time": Row("r5_extras"),
+    "cdc_apply_customers": Row("r5_extras"),
+    "dedup_chunk_level_profile": Row("r5_extras"),
+    "similarity_hard_negatives": Row("r5_extras"),
+    "join_q21_lone_late_supplier": Row("r5_extras"),
+    "join_q9_product_profit": Row("r5_extras"),
+    "embedding_quantize_error": Row("r5_extras"),
+    "events_anomaly_mad": Row("r5_extras"),
+    "profile_orders_columns": Row("r5_extras"),
+    "basket_part_pairs_lift": Row("r5_extras"),
+    "text_zipf_slope": Row("r5_extras"),
+    "similarity_knn_classify": Row("r5_extras"),
+    "graph_pagerank_parts": Row("r5_extras", sf1=True, band=(85.0, 125.0)),  # 95.9-108.8
+    "text_bigram_perplexity": Row("r5_extras", sf1=True, band=(19.0, 42.0)),  # 23.1-31.6 after spread_input
+    "curation_dsir_weights": Row("r5_extras"),
+    "join_q8_market_share": Row("r5_extras"),
+    "text_ngram_novelty": Row("r5_extras"),
+    "similarity_ivfpq_topk": Row("r6_extras"),
+    "similarity_ivfpq_rerank_topk": Row("r6_extras"),
+    "embedding_covariance_block": Row("r6_extras"),
+    "dedup_substring_spans": Row("r6_extras"),
+    "text_quality_linear_classifier": Row("r6_extras"),
+    "stats_winsorized_doc_lengths": Row("r6_extras"),
+    "embedding_norm_outliers": Row("r6_extras"),
+    "dedup_canonical_survivors": Row("r6_extras"),
+    "dedup_shingle_containment": Row("r6_extras", sf1=True, band=(32.0, 50.0)),  # 37.3-44.7
+    "privacy_k_anonymity_customers": Row("r6_extras"),
+    "stats_chi2_segment_priority": Row("r6_extras"),
+    "curation_epoch_schedule": Row("r6_extras"),
+    "layout_zorder_skipping": Row("r6_extras"),
+    "privacy_l_diversity_customers": Row("r6_extras"),
+    "stats_ks_two_sample": Row("r6_extras"),
+    "stats_mannwhitney_u": Row("r6_extras"),
+    "stats_psi_value_drift": Row("r6_extras"),
+    "similarity_centroid_confusion": Row("r6_extras"),
+    "stream_psi_drift_batch": Row("r6_extras"),
+    "sketch_f2_selfjoin_events": Row("r6_extras"),
+    "text_langid_confusion": Row("r6_extras"),
+    "curation_dsir_ess": Row("r6_extras"),
+    "dedup_lsh_quality": Row("r6_extras", sf1=True, band=(75.0, 105.0)),  # 86.8-91.0
+    "curation_domain_cap": Row("r6_extras"),
+    "events_hourly_acf": Row("r6_extras"),
+    "events_cusum_changepoint": Row("r6_extras"),
+    "stats_classifier_calibration": Row("r6_extras"),
+    "graph_triangle_stats": Row("r7_extras", sf1=True, band=(155.0, 285.0)),  # interleaved A/B 158-274
+    "graph_adamic_adar_top": Row("r7_extras"),
+    "graph_kcore_peel": Row("r7_extras"),
+    "dedup_jaccard_prefix_join": Row("r7_extras", sf1=True, band=(45.0, 85.0)),  # 53.1-66.5
+    "text_pmi_collocations": Row("r7_extras"),
+    "text_vocab_oov_rate": Row("r7_extras"),
+    "events_attribution_last_touch": Row("r7_extras"),
+    "stats_benford_first_digit": Row("r7_extras"),
+    "similarity_range_search": Row("r7_extras"),
+    "stats_gini_concentration": Row("r7_extras"),
+    "stats_mutual_info_priority_segment": Row("r7_extras"),
+    "events_rfm_segments": Row("r7_extras"),
+    "events_kaplan_meier": Row("r7_extras"),
+    "stats_poisson_bootstrap_ci": Row("r7_extras", sf1=True, band=(11.0, 18.0)),  # 12.8-15.6
+    "events_path_topk": Row("r7_extras"),
+    "similarity_mmr_rerank": Row("r7_extras"),
+    "stats_cramers_v_priority_segment": Row("r7_extras"),
+    "text_rake_keywords": Row("r7_extras"),
+    "text_hash_feature_buckets": Row("r7_extras"),
+    "similarity_recall_at_k": Row("r8_extras"),
+    "similarity_ndcg_at_k": Row("r8_extras"),
+    "embedding_pca_project": Row("r8_extras"),
+    "stats_roc_auc": Row("r8_extras"),
+    "stats_spearman_corr": Row("r8_extras", sf1=True, band=(14.0, 22.0)),  # 16.5-19.2
+    "stats_cohens_kappa": Row("r8_extras"),
+    "stats_jensen_shannon": Row("r8_extras"),
+    "stats_lorenz_deciles": Row("r8_extras"),
+    "stats_theil_index": Row("r8_extras"),
+    "events_interarrival_burstiness": Row("r8_extras"),
+    "text_heaps_law": Row("r8_extras", sf1=True),
+    "multimodal_phash_pairs": Row("r8_extras", sf1=True, band=(22.0, 30.0)),  # 25.3-25.9
+    "stream_attribution_batch": Row("r8_extras"),
+    "stats_permutation_pvalue": Row("r8_extras", sf1=True),
+    "events_mann_kendall_trend": Row("r8_extras"),
+    "embedding_centroid_distances": Row("r8_extras"),
+    "text_source_diversity": Row("r8_extras"),
+    "text_kneser_ney_bigrams": Row("r8_extras"),
+    "embedding_hubness_stats": Row("r8_extras"),
+    "privacy_t_closeness_customers": Row("r8_extras"),
+    "stats_brown_forsythe": Row("r8_extras"),
+    "events_dau_mau_stickiness": Row("r8_extras"),
+    "graph_neighbor_jaccard_top": Row("r8_extras"),
+    "events_bot_score": Row("r8_extras"),
+    "stats_cliffs_delta": Row("r8_extras"),
+    "events_conversion_delay_percentiles": Row("r8_extras"),
+    "embedding_hubness_ivf": Row("r9_extras", sf1=True, band=(10.0, 24.0)),  # 12.4-13.5
+    "events_dau_mau_hll": Row("r9_extras"),
+    "text_winnow_fingerprints": Row(None, sf1=True),
 }
 
 
-def _cal_loop() -> None:
-    """LEGACY calibration loop (numpy 512² matmul) — kept verbatim so
-    `cpu_calibration_s` stays unit-comparable with every committed
-    bench record back to r4. KNOWN DEFECT (found in round 8): numpy's
-    OpenBLAS threads this matmul across ALL cores, so (a) the
-    "single-thread" number actually measures ambient whole-machine
-    availability, and (b) 32 forked workers oversubscribe 32×32 BLAS
-    threads and report ~7× the solo time ON AN IDLE HOST — the r6/r7
-    "contention index ≈ 7" was this artifact, not co-tenant theft
-    (measured: pinning OPENBLAS_NUM_THREADS=1 gives mt/single = 1.06
-    on the same box minutes later). The *_py_s probes below are the
-    trustworthy replacements; this stays for record continuity only."""
-    import numpy as np
+def _block(block: str | None) -> list[str]:
+    return [name for name, row in MANIFEST.items() if row.block == block]
 
-    a = np.ones((512, 512))
-    for _ in range(20):
-        a = a @ a % 7 + 1.0
+
+HEADLINE = _block("queries")
+EXTRA_BLOCKS = {
+    b: _block(b)
+    for b in dict.fromkeys(row.block for row in MANIFEST.values())
+    if b not in (None, "queries")
+}
+SF1 = [name for name, row in MANIFEST.items() if row.sf1]
+SF10_BANDS = {name: row.band for name, row in MANIFEST.items() if row.band}
 
 
 def _cal_loop_py() -> None:
     """Pure-Python single-thread probe: GIL-bound by construction, no
     BLAS, no hidden threading — one core, period. Forked twins of this
-    loop are genuinely independent interpreters, so mt/single from the
-    _py pair is a real core-availability index (1.0x idle; inflates
-    only when cores are actually stolen)."""
+    loop are genuinely independent interpreters, so the mt/single ratio
+    of the two probes below is a real core-availability index (1.0x
+    idle; inflates only when cores are actually stolen)."""
     acc = 0
     for i in range(2_000_000):
         acc = (acc * 1103515245 + i) % 2147483647
@@ -383,7 +222,7 @@ def cpu_calibration_py() -> float:
     GIL-bound loop sometimes gets turbo, sometimes not), which made the
     contention index mt/single read anywhere in 0.87-1.5 on a host with
     /proc/stat steal at 0.02% — denominator noise, not theft. The mt
-    probe already medians across its 32 workers; median the single
+    probe already medians across its workers; median the single
     probe too so the index compares like with like."""
     samples = []
     for _ in range(3):
@@ -444,48 +283,24 @@ def steal_pct_since(snap: tuple[int, int] | None) -> float | None:
     return round(100.0 * (now[0] - snap[0]) / (now[1] - snap[1]), 3)
 
 
-def _cal_worker(q) -> None:
-    t0 = time.perf_counter()
-    _cal_loop()
-    q.put(time.perf_counter() - t0)
-
-
 def _cal_worker_py(q) -> None:
     t0 = time.perf_counter()
     _cal_loop_py()
     q.put(time.perf_counter() - t0)
 
 
-def cpu_calibration_mt(n_workers: int = 32) -> float:
-    """All-cores twin of the single-thread calibration: n_workers
-    forked processes run the identical loop concurrently and each
-    reports its OWN loop time; the median is returned (fork/start
-    overhead excluded). On an idle host every worker gets a core and
-    the median ≈ the single-thread number; under co-tenant CORE THEFT
-    workers time-slice and the median inflates with the stolen share —
-    while the single-thread probe stays normal (the round-6 contention
-    mode that put every 32-thread query +25% at a clean calibration,
-    SCALING.md). mt/single is the contention index benchdiff uses to
-    refuse normalizing what the single-thread number cannot see."""
-    import multiprocessing as mp
-
-    ctx = mp.get_context("fork")
-    q = ctx.Queue()
-    procs = [ctx.Process(target=_cal_worker, args=(q,)) for _ in range(n_workers)]
-    for p in procs:
-        p.start()
-    times = sorted(q.get() for _ in procs)
-    for p in procs:
-        p.join()
-    return round(times[len(times) // 2], 4)
-
-
-def cpu_calibration_py_mt(n_workers: int = 32) -> float:
-    """Pure-Python all-cores probe (see _cal_loop_py): the TRUSTWORTHY
-    contention index is cpu_calibration_py_mt_s / cpu_calibration_py_s
-    — ≈1.0 idle, inflates only under real core theft. The legacy numpy
-    pair stays in the record for continuity but its mt/single ratio is
-    a BLAS-oversubscription artifact (≈7 on an idle 32-core host)."""
+def cpu_calibration_py_mt(n_workers: int = len(os.sched_getaffinity(0))) -> float:
+    """All-cores twin of cpu_calibration_py: n_workers forked processes
+    (default one per core this process may run on, the rule
+    session.DEFAULT_CPUS follows) run the same GIL-bound loop at once
+    and each reports its OWN loop time; the median is returned (fork
+    and start overhead excluded). On an idle host every worker gets a
+    core and the median matches the single-loop number; under
+    co-tenant core theft workers time-slice and the median inflates
+    with the stolen share while the single probe stays normal.
+    cpu_calibration_py_mt_s / cpu_calibration_py_s is the contention
+    index benchdiff reads. More workers than cores would measure the
+    oversubscription instead: 32 workers on 4 cores read 10.48."""
     import multiprocessing as mp
 
     ctx = mp.get_context("fork")
@@ -580,19 +395,6 @@ def main() -> None:
             samples.append(time.perf_counter() - t0)
         return round(min(samples) if n_runs < 3 else statistics.median(samples), 3)
 
-    def cpu_calibration() -> float:
-        """Fixed CPU-bound microbenchmark (single-thread 512² matmul
-        loop): a machine-speed yardstick recorded alongside the query
-        times. This host is a shared VM with measured episodic 2×
-        noisy-neighbor slowdowns (idle load > 3 with zero local
-        processes); dividing query times by this number makes rounds
-        comparable when the absolute wall-times are not. Blind spot:
-        core theft that leaves single-thread speed intact —
-        cpu_calibration_mt (recorded next to this) sees that mode."""
-        t0 = time.perf_counter()
-        _cal_loop()
-        return round(time.perf_counter() - t0, 4)
-
     timings: dict[str, float] = {}
     for name in HEADLINE:
         timings[name] = timed(name, sf_dir, runs)
@@ -621,44 +423,16 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": sf,
-        "cpu_calibration_s": cpu_calibration(),
-        "cpu_calibration_mt_s": cpu_calibration_mt(),
         "cpu_calibration_py_s": cpu_calibration_py(),
         "cpu_calibration_py_mt_s": cpu_calibration_py_mt(),
         "mem_fault_gbps": mem_fault_calibration(),
         "runs": runs,
     }
 
-    extras = {name: timed(name, sf_dir, runs) for name in R5_EXTRA if name in qs}
-    if extras:
-        out["r5_extras"] = {
-            "queries": extras,
-            "value": round(sum(extras.values()), 3),
-        }
-    extras6 = {name: timed(name, sf_dir, runs) for name in R6_EXTRA if name in qs}
-    if extras6:
-        out["r6_extras"] = {
-            "queries": extras6,
-            "value": round(sum(extras6.values()), 3),
-        }
-    extras7 = {name: timed(name, sf_dir, runs) for name in R7_EXTRA if name in qs}
-    if extras7:
-        out["r7_extras"] = {
-            "queries": extras7,
-            "value": round(sum(extras7.values()), 3),
-        }
-    extras8 = {name: timed(name, sf_dir, runs) for name in R8_EXTRA if name in qs}
-    if extras8:
-        out["r8_extras"] = {
-            "queries": extras8,
-            "value": round(sum(extras8.values()), 3),
-        }
-    extras9 = {name: timed(name, sf_dir, runs) for name in R9_EXTRA if name in qs}
-    if extras9:
-        out["r9_extras"] = {
-            "queries": extras9,
-            "value": round(sum(extras9.values()), 3),
-        }
+    for block, names in EXTRA_BLOCKS.items():
+        extras = {name: timed(name, sf_dir, runs) for name in names if name in qs}
+        if extras:
+            out[block] = {"queries": extras, "value": round(sum(extras.values()), 3)}
     mark_section("extras")
 
     # Scale proof: if the deterministic 10x dataset exists (generated by
@@ -688,10 +462,10 @@ def main() -> None:
         # scaling ratio of two single-shot numbers would compound the
         # ±15% wobble on both ends
         sf1_runs = int(os.environ.get("BENCH_SF1_RUNS", "2"))
-        for name in SF1_HEAVY:
+        for name in SF1:
             if name not in base:
                 base[name] = timed(name, sf_dir, sf1_runs)
-        sf1_timings = {name: timed(name, sf1_dir, sf1_runs) for name in SF1_HEAVY}
+        sf1_timings = {name: timed(name, sf1_dir, sf1_runs) for name in SF1}
         out["sf1"] = {
             "queries": sf1_timings,
             "value": round(sum(sf1_timings.values()), 3),
@@ -701,12 +475,11 @@ def main() -> None:
             # per-block yardstick: cross-round normalization needs the
             # machine-speed number at BOTH ends of a scaling ratio, not
             # just at headline time (noise is episodic on this host)
-            "cpu_calibration_s": cpu_calibration(),
             "cpu_calibration_py_s": cpu_calibration_py(),
             "mem_fault_gbps": mem_fault_calibration(),
             "scaling_vs_sf0.1": {
                 name: round(sf1_timings[name] / base[name], 2)
-                for name in SF1_HEAVY
+                for name in SF1
                 if base.get(name, 0) > 0
             },
         }
@@ -789,7 +562,7 @@ def main() -> None:
             )
         # sf0.1 baselines for the scaling ratios come from THIS session
         # (pre-warmed caches, comparable conditions)…
-        for name in SF10_HEAVY:
+        for name in SF10_BANDS:
             if name not in base:
                 base[name] = timed(name, sf_dir, 2)
         # …but the decade itself runs ONE SUBPROCESS PER QUERY: round
@@ -804,7 +577,7 @@ def main() -> None:
         spark.stop()
         timings: dict[str, float] = {}
         errors: dict[str, str] = {}
-        for name in SF10_HEAVY:
+        for name in SF10_BANDS:
             env = dict(os.environ)
             env["BENCH_SF10_CHILD"] = json.dumps(
                 {"sf10_dir": sf10_dir, "query": name}
@@ -841,11 +614,11 @@ def main() -> None:
             },
         }
         out["sf10"]["expected_bands"] = {
-            k: list(v) for k, v in SF10_EXPECTED_BANDS.items()
+            k: list(v) for k, v in SF10_BANDS.items()
         }
         breaches = {
             k: timings[k]
-            for k, (lo, hi) in SF10_EXPECTED_BANDS.items()
+            for k, (lo, hi) in SF10_BANDS.items()
             if k in timings and not (lo <= timings[k] <= hi)
         }
         if breaches:
@@ -853,8 +626,8 @@ def main() -> None:
             out["sf10"]["band_breach_protocol"] = (
                 "band moves only after an eventlog-diff A/B (>=3/side, "
                 "plans structurally identical) AND mem_fault_gbps/steal/"
-                "sys-time adjudication are recorded — see bench.py "
-                "SF10_EXPECTED_BANDS rule (r12 verdict task #3)"
+                "sys-time adjudication are recorded — see the breach "
+                "rule above bench.py MANIFEST"
             )
         if errors:
             out["sf10"]["errors"] = errors

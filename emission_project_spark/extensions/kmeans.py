@@ -236,8 +236,13 @@ def lloyd_centroids(
     # semantic_neardup_pairs) — without a checkpoint each subtree
     # re-runs the whole Lloyd chain (per-iteration full-table assign +
     # recompute). Truncate lineage once: the table is k rows of k·dim
-    # doubles, so materializing it is free; eager=False keeps plan
-    # construction action-free (tools/plancheck stays compile-only).
+    # doubles, so materializing it is free. eager=False defers only the
+    # checkpoint's own job: under AQE (the session default) the call
+    # still runs the subtree's shuffle stages, so building a plan that
+    # reaches this line launches jobs (and tools/plancheck runs them):
+    # in a traced perfbench query_headline pass, embedding_kmeans_lloyd,
+    # similarity_ivf_kmeans_topk and dedup_semantic_pairs each launch 4
+    # build-time jobs beyond their table loads.
     return centroids.localCheckpoint(eager=False)
 
 

@@ -4,62 +4,35 @@ long after the commit that introduced it."""
 
 from __future__ import annotations
 
+import os
+
 import bench
 import __spark_entry__ as entrymod
 
 
 def test_bench_lists_resolve():
+    """Every manifest row, and so every derived list (HEADLINE, each
+    rN_extras block, the sf1 and sf10 decades), names a registered
+    query, and every row is timed somewhere."""
     registered = set(entrymod.queries())
-    for lst in (
-        bench.HEADLINE,
-        bench.R5_EXTRA,
-        bench.R6_EXTRA,
-        bench.R7_EXTRA,
-        bench.R8_EXTRA,
-        bench.SF1_HEAVY,
-        bench.SF10_HEAVY,
-    ):
-        unknown = [n for n in lst if n not in registered]
-        assert unknown == [], unknown
-
-
-def test_bench_lists_disjoint_headline_extra():
-    # HEADLINE is the round-over-round comparable — extras must not
-    # double-time its members under a different block
-    blocks = {
-        "HEADLINE": bench.HEADLINE,
-        "R5": bench.R5_EXTRA,
-        "R6": bench.R6_EXTRA,
-        "R7": bench.R7_EXTRA,
-        "R8": bench.R8_EXTRA,
-    }
-    names = list(blocks)
-    for i, a in enumerate(names):
-        for b in names[i + 1 :]:
-            overlap = set(blocks[a]) & set(blocks[b])
-            assert not overlap, (a, b, overlap)
-
-
-def test_mt_calibration_probe_runs_and_bounds():
-    # the all-cores twin must complete quickly and can never beat a
-    # single worker's loop (it RUNS 32 of them; equality only on an
-    # impossibly ideal fork)
-    import time
-
-    t0 = time.perf_counter()
-    single = bench.cpu_calibration_mt(n_workers=1)
-    mt = bench.cpu_calibration_mt(n_workers=4)
-    assert 0 < single < 30 and 0 < mt < 60
-    assert time.perf_counter() - t0 < 90
+    unknown = [n for n in bench.MANIFEST if n not in registered]
+    assert unknown == [], unknown
+    for name, row in bench.MANIFEST.items():
+        assert row.block is not None or row.sf1 or row.band, name
+    derived = (
+        bench.HEADLINE
+        + [n for names in bench.EXTRA_BLOCKS.values() for n in names]
+        + bench.SF1
+        + list(bench.SF10_BANDS)
+    )
+    assert set(derived) == set(bench.MANIFEST)
 
 
 def test_py_calibration_probe_is_gil_bound():
     """The pure-python probe pair must exist and a 2-worker fork run
     must land within 2x of a single worker on any non-saturated host —
-    the property the BLAS-threaded legacy probe lacks (it reads ~7x on
-    an idle 32-core box, the round-8 finding)."""
-    import bench
-
+    the property a BLAS-threaded probe lacks (a numpy matmul probe read
+    ~7x on an idle 32-core box)."""
     single = bench.cpu_calibration_py()
     mt = bench.cpu_calibration_py_mt(n_workers=2)
     assert 0 < single < 10 and 0 < mt < 20
@@ -95,16 +68,34 @@ def test_py_calibration_is_median_of_three():
 
 
 def test_sf10_expected_bands_reference_heavy_queries():
-    """Every expected band must name a query actually measured in the
-    sf10 block (a rename would silently orphan its band), with lo < hi
-    and the registry resolving the name."""
-    import __spark_entry__ as entrymod
-
+    """Every sf10 band names a registered query (a rename would
+    silently orphan its band) and is a real envelope, 0 < lo < hi."""
     qs = entrymod.queries()
-    for name, (lo, hi) in bench.SF10_EXPECTED_BANDS.items():
-        assert name in bench.SF10_HEAVY, name
+    for name, (lo, hi) in bench.SF10_BANDS.items():
         assert name in qs, name
         assert 0 < lo < hi, name
+
+
+def test_py_mt_probe_default_workers_follow_host_cores(monkeypatch):
+    """The all-cores probe forks one worker per core this process may
+    run on (session.DEFAULT_CPUS's rule): more workers than cores
+    measure oversubscription, not co-tenant theft."""
+    import multiprocessing as mp
+
+    started = []
+    ctx = mp.get_context("fork")
+
+    class CountingContext:
+        def Queue(self):
+            return ctx.Queue()
+
+        def Process(self, *args, **kwargs):
+            started.append(1)
+            return ctx.Process(*args, **kwargs)
+
+    monkeypatch.setattr(mp, "get_context", lambda method: CountingContext())
+    assert bench.cpu_calibration_py_mt() > 0
+    assert len(started) == len(os.sched_getaffinity(0))
 
 
 def test_mem_fault_probe_returns_plausible_bandwidth():

@@ -387,6 +387,28 @@ def test_warehouse_compact_range_clustered(spark, tmp_path):
         assert hi < lo  # disjoint: file-level stats prune
     assert wh.read("t").count() == 20000
 
+    # with partition_by the sort clusters within each partition value:
+    # compaction's own layout must reach the files without a second
+    # shuffle, so every file under each p= directory is sorted by id
+    for i in range(4):
+        batch = (
+            spark.range(i * 5000, (i + 1) * 5000)
+            .withColumn("p", (F.col("id") % 3).cast("int"))
+            .withColumn("v", F.md5(F.col("id").cast("string")))
+            .repartition(4, F.col("v"))
+        )
+        wh.append(batch, "tp", partition_by=["p"])
+    wh.compact("tp", target_file_mb=0.05, partition_by=["p"], sort_by=["id"])
+    parts = sorted(_glob.glob(str(tmp_path / "wh" / "tp" / "p=*")))
+    assert [p.rsplit("/", 1)[1] for p in parts] == ["p=0", "p=1", "p=2"]
+    for part in parts:
+        files = _glob.glob(part + "/*.parquet")
+        assert files
+        for f in files:
+            ids = _pq.read_table(f, columns=["id"]).column("id").to_pylist()
+            assert ids == sorted(ids), f
+    assert wh.read("tp").count() == 20000
+
 
 def test_asof_join_forward_direction(spark):
     from emission_project_spark.operators.asof import asof_join

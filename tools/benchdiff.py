@@ -21,6 +21,13 @@ dominated by machine state, not code. Calibration history:
 
     python tools/benchdiff.py OLD.json NEW.json [--changed a,b,c]
     python tools/benchdiff.py --ab OLD_SAMPLES NEW_SAMPLES [--label q]
+    python tools/benchdiff.py --ab-run QUERY --sf-dir DIR [--old-ref REF]
+        [--env-old K=V,..] [--env-new K=V,..] [--n N]
+
+--ab-run is the one interleaved fresh-JVM A/B runner: it times QUERY in
+alternating old/new child processes and prints each sample's wall time
+and minor page faults, then the --ab verdict and per-side fault medians
+(see ab_run).
 
 --ab formalizes the interleaved-A/B discipline that retracted the r10
 pagerank/bigram speedup claims: given two sample sets of the SAME
@@ -37,7 +44,7 @@ BENCH_SF10_r10b.json:sf10.pagerank_ab_samples.old_code.
 For each query present in both records it prints raw and normalized
 ratios and flags normalized regressions beyond the documented ±15%
 local-JVM wobble band. The EXIT CODE, however, is driven by the HEAVY
-SET only (bench.py::SF1_HEAVY plus the sf1 block): SCALING.md's
+SET only (bench.py MANIFEST's sf1 rows plus the sf1 block): SCALING.md's
 round-8 conclusion is that the round-over-round signal lives there —
 sub-second light queries flap inside JVM-state noise while the heavies
 integrate enough work to mean something. The py-probe ratio is still
@@ -48,20 +55,27 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import statistics
+import subprocess
 import sys
+import tempfile
+import threading
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import EXTRA_BLOCKS, SF1  # noqa: E402
 
 WOBBLE = 0.15   # documented local-JVM noise band
 HARD = 0.30     # normalized regression that fails the exit code
 
-# Contention index (cpu_calibration_mt_s / cpu_calibration_s) above
-# which single-thread normalization is KNOWN unreliable: co-tenant
-# core theft slows every 32-thread stage while the single-thread probe
-# stays normal (SCALING.md round-6 session 2 — a uniform +25% at a
-# clean calibration). Measured quiet-host index ≈ 1.3-2.0 (fork
-# overhead included); the contended episode would have shown >>3.
+# Contention index (cpu_calibration_py_mt_s / cpu_calibration_py_s)
+# above which single-thread normalization is KNOWN unreliable:
+# co-tenant core theft slows every all-core stage while the
+# single-thread probe stays normal (SCALING.md round-6 session 2 — a
+# uniform +25% at a clean calibration). The mt probe runs one worker
+# per core, so a quiet host reads about 1.1; the contended episode
+# would have shown >>3.
 CONTENDED = 2.5
 # /proc/stat steal share above which a record is refused for
 # normalized comparisons (round 9): steal is hypervisor-counted,
@@ -161,11 +175,46 @@ def ab_verdict(old: list[float], new: list[float], label: str = "") -> int:
     return 1
 
 
+def wait4_sample(
+    argv: list[str], cwd: str, env: dict[str, str] | None = None
+) -> tuple[int, str, str, int]:
+    """Run one child to exit and reap it with ``os.wait4``; returns
+    (exit status, stdout, stderr, minor page faults).
+
+    The fault count is wait4's rusage: the child plus every descendant
+    it waited for. A tools/time_query.py child waits for its py4j JVM,
+    so the count covers driver and JVM: derived_measure at sf0.01 reads
+    about 195k on a 4-core host, against about 38k for the Python
+    driver alone — a sample near the driver-only figure means the JVM
+    escaped reaping and is void. Minor faults are the causal metric for
+    allocation-shape changes, which wall time on this host hides in
+    fault-service noise. A child still running after 30 minutes is
+    killed."""
+    with tempfile.TemporaryFile("w+") as err:
+        p = subprocess.Popen(
+            argv, cwd=cwd, env=env, stdout=subprocess.PIPE, stderr=err,
+            text=True,
+        )
+        timer = threading.Timer(1800, p.kill)
+        timer.start()
+        try:
+            out = p.stdout.read()
+            _, status, ru = os.wait4(p.pid, 0)
+        finally:
+            timer.cancel()
+            p.stdout.close()
+        p.returncode = os.waitstatus_to_exitcode(status)
+        err.seek(0)
+        return p.returncode, out, err.read(), ru.ru_minflt
+
+
 def ab_run(args: list[str]) -> int:
     """One-command interleaved fresh-JVM A/B (r11 verdict task #7).
 
     Alternates old/new children (tools/time_query.py, one JVM each) and
-    feeds the samples to ab_verdict. The OLD side is either a clean
+    feeds the samples to ab_verdict; each child's minor page faults
+    (see wait4_sample) are printed per sample and as a per-side median
+    and range after the wall verdict. The OLD side is either a clean
     `git archive` export of --old-ref (code A/B — never a dirty
     worktree copy) or the same tree under --env-old overrides (env A/B,
     e.g. the r11 BLAS-pin experiment: --env-old '' --env-new
@@ -177,10 +226,6 @@ def ab_run(args: list[str]) -> int:
             [--old-ref REF | --env-old K=V[,K=V]] [--env-new K=V[,..]]
             [--n N]            # samples per side, default 3
     """
-    import shutil
-    import subprocess
-    import tempfile
-
     def opt(flag: str, default: str | None = None) -> str | None:
         if flag in args:
             i = args.index(flag)
@@ -203,7 +248,12 @@ def ab_run(args: list[str]) -> int:
         return 2
     query = args[0]
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    child = os.path.join("tools", "time_query.py")
+    # The child script always comes from the CURRENT repo (older refs
+    # may lack it); cwd selects which engine it imports — time_query.py
+    # does sys.path.insert(0, os.getcwd()), so the old arm runs the
+    # export's code with the repo's harness.
+    argv = [sys.executable, os.path.join(repo, "tools", "time_query.py"),
+            sf_dir, query]
 
     def parse_env(spec: str) -> dict[str, str]:
         return dict(kv.split("=", 1) for kv in spec.split(",") if kv)
@@ -225,41 +275,38 @@ def ab_run(args: list[str]) -> int:
             old_cwd = tmp
             print(f"old = git archive {old_ref} -> {tmp}")
         samples: dict[str, list[float]] = {"old": [], "new": []}
+        minflt: dict[str, list[int]] = {"old": [], "new": []}
         arms = [
             ("old", old_cwd, parse_env(env_old)),
             ("new", repo, parse_env(env_new)),
         ]
         for round_i in range(n):
             for side, cwd, env_over in arms:
-                env = dict(os.environ)
-                env.update(env_over)
-                # The child script always comes from the CURRENT repo
-                # (it's new-in-r12 and absent from older refs); cwd
-                # selects which engine it imports — time_query.py does
-                # sys.path.insert(0, os.getcwd()), so the old arm runs
-                # the export's code with the repo's harness (r12 advice).
-                r = subprocess.run(
-                    [sys.executable, os.path.join(repo, child), sf_dir, query],
-                    cwd=cwd, env=env, capture_output=True, text=True,
-                    timeout=1800,
+                status, out, err, flt = wait4_sample(
+                    argv, cwd, {**os.environ, **env_over}
                 )
                 got = None
-                for line in reversed(r.stdout.splitlines()):
+                for line in reversed(out.splitlines()):
                     if line.strip().startswith("{"):
                         # py4j/log4j noise can emit '{'-prefixed non-JSON
-                        # lines — keep scanning earlier lines (r12 advice)
+                        # lines — keep scanning earlier lines
                         try:
                             got = json.loads(line)
                         except json.JSONDecodeError:
                             continue
                         break
-                if not got:
-                    print(f"{side} child failed rc={r.returncode}: "
-                          f"{r.stderr[-300:]}")
+                if status != 0 or not got:
+                    print(f"{side} child failed rc={status}: {err[-300:]}")
                     return 2
                 samples[side].append(got["seconds"])
-                print(f"[{round_i + 1}/{n}] {side}: {got['seconds']:.3f}s")
-        return ab_verdict(samples["old"], samples["new"], label=query)
+                minflt[side].append(flt)
+                print(f"[{round_i + 1}/{n}] {side}: {got['seconds']:.3f}s"
+                      f"  minflt={flt}")
+        rc = ab_verdict(samples["old"], samples["new"], label=query)
+        for side, flts in minflt.items():
+            print(f"{query}: {side} minflt median "
+                  f"{statistics.median(flts):.0f} [{min(flts)}..{max(flts)}]")
+        return rc
     finally:
         if tmp:
             shutil.rmtree(tmp, ignore_errors=True)
@@ -295,13 +342,7 @@ def main() -> int:
 
     def all_queries(rec: dict) -> dict[str, float]:
         out = dict(rec.get("queries", {}))
-        for block in (
-            "r5_extras",
-            "r6_extras",
-            "r7_extras",
-            "r8_extras",
-            "r9_extras",
-        ):
+        for block in EXTRA_BLOCKS:
             out.update(rec.get(block, {}).get("queries", {}))
         return out
 
@@ -392,13 +433,11 @@ def main() -> int:
     )
 
     # --- heavy-set readout: the part of the diff that carries signal.
-    from bench import SF1_HEAVY
-
     def norm_ratio(name: str) -> float:
         r = qb[name] / qa[name]
         return r / scale if scale else r
 
-    heavy_common = [n for n in SF1_HEAVY if n in qa and n in qb and qa[n] > 0]
+    heavy_common = [n for n in SF1 if n in qa and n in qb and qa[n] > 0]
     heavy_hard: list[str] = []
     if heavy_common:
         ratios = {n: norm_ratio(n) for n in heavy_common}

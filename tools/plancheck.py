@@ -1,7 +1,14 @@
 """Physical-plan audit over every registered query.
 
-Compiles each query (no execution) at the given sf_dir and inspects the
-Catalyst physical plan for 100 TB red flags:
+Builds each query at the given sf_dir without running its final action,
+and inspects the Catalyst physical plan for 100 TB red flags. Building is
+not execution-free: each ``spark.read.parquet`` infers its schema with a
+job, and under AQE (the session default) a lazy
+``localCheckpoint(eager=False)`` runs its subtree's shuffle stages at
+the call, so queries that checkpoint while building (e.g.
+``embedding_kmeans_lloyd``) run part of their work here.
+
+Flags:
 
 - ``CartesianProduct`` / ``BroadcastNestedLoopJoin`` on non-trivial
   inputs (a deliberate 1-row scalar cross join is allowed and
