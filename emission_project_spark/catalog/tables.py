@@ -186,12 +186,6 @@ def load_tables(spark: SparkSession, sf_dir: str | None = None) -> dict[str, Dat
     return {name: load_table(spark, sf_dir, name) for name in TESTDATA_TABLES}
 
 
-def register_temp_views(spark: SparkSession, sf_dir: str | None = None) -> None:
-    """Register all tables as temp views for ``spark.sql`` use."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
-
-
 def load_table_with_provenance(spark, sf_dir: str, name: str):
     """Table scan plus lineage columns from the parquet reader's
     ``_metadata`` struct: source file path, size, and the split's byte

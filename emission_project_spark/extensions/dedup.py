@@ -142,7 +142,7 @@ def ngram_jaccard_pairs(
     corpus and cap, how many shingles/postings/docs the cap touches —
     run it when tuning ``max_doc_freq`` for a new corpus.
     """
-    sh = shingles(docs, text_col, id_col, k).cache()
+    sh = shingles(docs, text_col, id_col, k).localCheckpoint(eager=False)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
     buckets = sh.groupBy("shingle").agg(F.collect_list("doc_id").alias("ids"))
     if max_doc_freq:
@@ -245,7 +245,7 @@ def containment_pairs(
     is the contained (smaller-set) side, ties broken by smaller id, so
     the row reads "src is contained in dst to degree ``containment``".
     """
-    sh = shingles(docs, text_col, id_col, k).cache()
+    sh = shingles(docs, text_col, id_col, k).localCheckpoint(eager=False)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
     buckets = sh.groupBy("shingle").agg(F.collect_list("doc_id").alias("ids"))
     if max_doc_freq:

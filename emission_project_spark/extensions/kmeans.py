@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from emission_project_spark.functions.vectors import row_matrix
+
 GRID = 6  # decimal rounding grid for recomputed centroids
 
 
@@ -91,7 +93,7 @@ def assign_clusters_blas(vecs: DataFrame, centroids: DataFrame) -> DataFrame:
 
     rows = centroids.orderBy("cid").collect()
     cids = np.array([r["cid"] for r in rows], dtype=np.int64)
-    cmat = np.array([r["ce"] for r in rows], dtype=np.float64)
+    cmat = row_matrix(r["ce"] for r in rows)
     cnorm = (cmat * cmat).sum(axis=1)
 
     def compute(batches):
@@ -108,7 +110,6 @@ def assign_clusters_blas(vecs: DataFrame, centroids: DataFrame) -> DataFrame:
         k = len(cids)
         dot = np.empty((0, k))
         d2b = np.empty((0, k))
-        xbuf = np.empty((0, 0))
         for pdf in batches:
             n = len(pdf)
             if not n:
@@ -116,12 +117,7 @@ def assign_clusters_blas(vecs: DataFrame, centroids: DataFrame) -> DataFrame:
             if n > dot.shape[0]:
                 dot = np.empty((n, k))
                 d2b = np.empty((n, k))
-            rows = pdf["e"].tolist()
-            if n > xbuf.shape[0]:
-                xbuf = np.empty((n, len(rows[0])))
-            # r14: Arrow ingest through the hoisted buffer too — the
-            # last fresh (n, d) allocation this kernel made per batch
-            x = np.stack(rows, out=xbuf[:n])
+            x = row_matrix(pdf["e"])
             db, sb = dot[:n], d2b[:n]
             np.dot(x, cmat.T, out=db)
             db *= 2.0  # exact ×2: bit-identical to 2.0 * (x @ cmat.T)

@@ -37,6 +37,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from emission_project_spark.functions.vectors import row_matrix
+
 
 @dataclass(frozen=True)
 class PCAModel:
@@ -52,7 +54,7 @@ def _moment_cells(col: str, dim: int):
         for pdf in batches:
             if not len(pdf):
                 continue
-            m = np.stack(pdf[col].to_numpy()).astype(np.float64)
+            m = row_matrix(pdf[col])
             if m.shape[1] != dim:
                 raise ValueError(
                     f"embedding dim {m.shape[1]} != declared dim {dim}"
@@ -140,7 +142,7 @@ def project_pca(
         for pdf in batches:
             if not len(pdf):
                 continue
-            m = np.stack(pdf[col].to_numpy()).astype(np.float64)
+            m = row_matrix(pdf[col])
             proj = (m - mean) @ comps
             pdf = pdf.copy()
             pdf[out_col] = list(proj)

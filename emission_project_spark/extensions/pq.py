@@ -38,6 +38,8 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from emission_project_spark.functions.vectors import row_matrix
+
 
 @dataclass(frozen=True)
 class PQModel:
@@ -127,18 +129,11 @@ def pq_encode(
         # two, bit-identical to the old (−2·x)·Cᵀ fold (pinned by a
         # ragged-batch test).
         d2 = np.empty((0, ksub))
-        xbuf = np.empty((0, 0))
         for pdf in batches:
             if not len(pdf):
                 continue
-            rows = pdf[vec_col].to_numpy()
-            n = len(rows)
-            if n > xbuf.shape[0]:
-                xbuf = np.empty((n, len(rows[0])))
-            # r14: stack straight into the hoisted float64 buffer —
-            # the old stack(f32)+astype(f64) pair allocated two fresh
-            # (n, dim) matrices per batch; widening is exact either way
-            x = np.stack(rows, out=xbuf[:n])
+            x = row_matrix(pdf[vec_col])
+            n = len(x)
             if n > d2.shape[0]:
                 d2 = np.empty((n, ksub))
             db = d2[:n]
@@ -298,7 +293,7 @@ def fit_ivfpq(
     )
     centroids = lloyd_centroids(
         vecs, k=n_cells, iterations=iterations, train_frac=train_frac
-    ).cache()
+    )
     rows = centroids.collect()
     # Mirror fit_pq's under-fill guard: Lloyd can drop an empty cell
     # during recompute, and an np.empty row silently poisons every

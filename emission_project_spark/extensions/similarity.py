@@ -274,6 +274,8 @@ def _blocked_cosine_pairs(
     import numpy as np
     import pandas as pd
 
+    from emission_project_spark.functions.vectors import normalize_rows, row_matrix
+
     nb = F.lit(n_blocks)
     blocked = src.withColumn("_blk", F.pmod(F.hash("vec_id"), nb))
     base = group_cols + ["vec_id", "embedding"]
@@ -302,10 +304,9 @@ def _blocked_cosine_pairs(
             ids = part["vec_id"].to_numpy(dtype=np.int64)
             if not len(ids):  # a block-pair whose partner block is empty
                 return ids, np.zeros((0, 1))
-            mat = np.array(list(part["embedding"]), dtype=np.float64)
-            n = np.linalg.norm(mat, axis=1)
-            n[n == 0] = np.inf  # zero vectors match nothing
-            return ids, mat / n[:, None]
+            mat = row_matrix(part["embedding"])
+            normalize_rows(mat)  # zero vectors match nothing
+            return ids, mat
 
         l_ids, l_mat = norm_mat(pdf[pdf["_side"] == "L"])
         if i == j:

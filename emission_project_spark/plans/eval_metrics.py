@@ -16,8 +16,9 @@ House determinism rules apply throughout: every ranking carries a full
 (metric, id) tie-break; scores are round(6)-ed BEFORE ranks are taken;
 order-sensitive float sums either fold over exact-integer aggregates
 (decimal/HUGEINT) or are round(6)-ed where ulp noise is provably below
-the grid; no per-row Python UDFs (the one Arrow `mapInPandas` here is
-the pHash decode, which is the multimodal kit's existing surface).
+the grid; no per-row Python UDFs. The Arrow kernels here are the pHash
+decode (the multimodal kit's existing surface) and the two hubness
+kernels, which score whole batches or cells per BLAS call.
 
 Reference provenance: the reference pipeline (emission-dag.py) has no
 eval surface at all — these extend the engine along the LLM-pipeline
@@ -27,13 +28,20 @@ axis the build brief names first-class.
 from __future__ import annotations
 
 import math
+import sys
 
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from emission_project_spark.catalog.tables import load_table
 from emission_project_spark.functions.text import LANG_MARKERS
-from emission_project_spark.functions.vectors import dot, l2_norm
+from emission_project_spark.functions.vectors import (
+    dot,
+    l2_norm,
+    normalize_rows,
+    row_matrix,
+)
 from emission_project_spark.plans.registry import register
 
 # the strong (support >= 2) co-purchase pair CTE shared with the
@@ -55,16 +63,18 @@ assert "HAVING count(*) >= 2" in _AFFINITY_PAIRS_STRONG_SQL, (
 _K = 10
 _N_QUERIES = 20
 _TRUNC_DIM = 16
-# hubness cell_topk GEMM chunk rows (module-level so the chunk-tail
-# buffer-reuse path is pinnable by a small-chunk invariance test; the
-# production value only engages above 2048 rows per cell ≈ sf10)
+# cell_topk GEMM chunk rows (module-level so a small-chunk invariance
+# test can pin the chunk-tail buffer reuse; the production value only
+# engages above 2048 rows per cell ≈ sf10)
 _CELL_CHUNK = 2048
-# hubness sharded-assignment: max centroid slices per mapInPandas pass
-# (closure ceiling ≈ 64 × cap × dim × 8 B); above it the fold chains
-# additional corpus passes instead of raising (round 13, r12 verdict
-# task #7). Module-level so a tiny-group test can pin the multi-pass
-# path against the flat argmax.
+# _ivf_assign: max centroid slices per mapInPandas pass (closure
+# ceiling ≈ 64 × cap × dim × 8 B); above it the fold chains further
+# corpus passes. Module-level so a tiny-group test can pin the
+# multi-pass path against the oracle.
 _SHARD_GROUP = 64
+# cell_topk runs on Python workers, which need not have this package on
+# their path; by value, it also carries the _CELL_CHUNK set at plan build
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 # full-precision scored CTE shared by the eval queries (the
 # similarity_bruteforce_topk oracle shape: zero-norm guard to NULL,
@@ -1631,13 +1641,80 @@ def text_kneser_ney_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sample (hubness is a distributional property — the sample skew IS
 # the estimate, and the readout's cost is then SF-invariant by
 # construction); the full-corpus variant is the same degree layer
-# over the IVF kNN source. Perf note (measured): vectors are
-# normalized ONCE map-side and pairs scored by dot alone — the naive
-# per-pair cosine recomputes both L2 norms 2·n² times and measured
-# 121 s at sf0.1 before this rewrite. In-degree counts are integers
-# and the skewness folds from exact integer moment sums (mean
-# in-degree is exactly k by construction).
+# over the IVF kNN source. Both find neighbors with ONE kernel,
+# cell_topk: the sample is a single cell. Perf note (measured): vectors
+# are normalized once per cell and pairs scored by dot alone — the
+# naive per-pair cosine recomputes both L2 norms 2·n² times and
+# measured 121 s at sf0.1. In-degree counts are integers and the
+# skewness folds from exact integer moment sums (mean in-degree is
+# exactly k by construction).
 _HUB_SAMPLE = 500
+
+
+def cell_topk(pdf):
+    """Exact 5-NN of every (vec_id, embedding) row among the rows of its
+    group — the one neighbor kernel of both hubness queries, run by
+    ``groupBy(cell).applyInPandas``.
+
+    The order is the oracles': cosine ``s`` round(6)-ed, ``(s DESC NULLS
+    LAST, dst ASC)``, self excluded (not demoted). A zero-norm row or
+    column scores NULL in the oracle; here it is forced to -inf, so it
+    ranks last but stays eligible. Columns are sorted by vec_id, so a
+    STABLE argsort on -s IS that order (argpartition's unstable ties
+    would change which round(6)-tied neighbor is kept). The score
+    matrix is built ``_CELL_CHUNK`` rows at a time through one reused
+    buffer, so no task holds more than ``_CELL_CHUNK`` × |cell| scores.
+    Dots are float64 BLAS vs the engines' sequential folds: ≤1e-13
+    summation-order divergence under the round(6) grid."""
+    import numpy as np
+    import pandas as pd
+
+    k_nn, chunk = 5, _CELL_CHUNK
+    pdf = pdf.sort_values("vec_id", kind="mergesort")  # columns = dst ASC
+    ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+    m = len(ids)
+    if m < 2:
+        return pd.DataFrame({"src": ids[:0], "dst": ids[:0]})
+    mat = row_matrix(pdf["embedding"])
+    zero = np.isinf(normalize_rows(mat))
+    srcs, dsts = [], []
+    buf = np.empty((min(chunk, m), m))
+    for lo in range(0, m, chunk):
+        hi = min(lo + chunk, m)
+        s = buf[: hi - lo]
+        np.dot(mat[lo:hi], mat.T, out=s)
+        np.round(s, 6, out=s)
+        s[zero[lo:hi], :] = -np.inf
+        s[:, zero] = -np.inf
+        np.negative(s, out=s)  # s is dead after: ASC argsort of -s
+        order = np.argsort(s, axis=1, kind="stable")[:, : k_nn + 1]
+        for i in range(hi - lo):
+            src = ids[lo + i]
+            kept = [ids[j] for j in order[i] if ids[j] != src][:k_nn]
+            srcs.extend([src] * len(kept))
+            dsts.extend(kept)
+    return pd.DataFrame(
+        {"src": np.array(srcs, dtype=np.int64),
+         "dst": np.array(dsts, dtype=np.int64)}
+    )
+
+
+def _cell_knn_hubness(vecs: DataFrame, cells: DataFrame) -> DataFrame:
+    """Hubness readout of ``vecs`` (vec_id) from the 5-NN graph found
+    inside each ``cid`` group of ``cells`` (vec_id, embedding, cid).
+    In-degree folds over ALL of ``vecs``: the left join keeps
+    never-neighbored vectors at 0 (dropping them inflates the skew)."""
+    knn = cells.groupBy("cid").applyInPandas(
+        cell_topk, schema="src long, dst long"
+    )
+    indeg = (
+        vecs.select("vec_id")
+        .join(knn, knn["dst"] == F.col("vec_id"), "left")
+        .groupBy("vec_id")
+        .agg(F.count("src").cast("long").alias("d"))
+        .localCheckpoint(eager=False)  # vector-sized; moments + histogram
+    )
+    return _degree_hubness_readout(indeg)
 
 
 @register(
@@ -1693,102 +1770,14 @@ _HUB_SAMPLE = 500
     """,
 )
 def embedding_hubness_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Round-10 execution rewrite (same oracle, same semantics): the r8
-    # build scored the 500×500 sample pairs as a crossJoin of per-pair
-    # JVM HOF dots — the last dense-batch site still on interpreted
-    # expression folds (SCALING.md round-9 rule: such plans plateau
-    # ~1µs/eval in every shape; kernels measured 10-100× on this exact
-    # diagnosis — hubness_ivf went 878 → 18 s). Now the established
-    # kernel pattern: the normalized sample matrix rides in a
-    # mapInPandas closure (≤_HUB_SAMPLE×dim — a bounded driver collect
-    # of the SAME class as the k-row centroid collects) and each Arrow
-    # batch scores V@Sᵀ in one float64 BLAS call. The stable argsort on
-    # -s over dst-ASC-ordered columns IS the oracle's (s DESC NULLS
-    # LAST, dst ASC): zero-norm rows/cols are forced to -inf, so an
-    # all-NULL source row degrades to dst-ascending exactly like the
-    # SQL window. Dots are BLAS vs the engines' sequential folds:
-    # ≤1e-13 summation-order divergence under the round(6) grid.
-    import numpy as np
-    import pandas as pd
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    ).filter(F.col("vec_id") < _HUB_SAMPLE)
-    sample_rows = sorted(emb.collect(), key=lambda r: r["vec_id"])
-    if not sample_rows:
-        # empty corpus → empty readout (the oracle's 0-row result)
-        indeg = emb.select("vec_id", F.lit(0).cast("long").alias("d"))
-        return _degree_hubness_readout(indeg)
-    sids = np.array([r["vec_id"] for r in sample_rows], dtype=np.int64)
-    smat = np.array([r["embedding"] for r in sample_rows], dtype=np.float64)
-    snorm = np.linalg.norm(smat, axis=1)
-    zero_dst = snorm == 0
-    snorm[zero_dst] = np.inf  # zero-norm dst column → scores -inf (NULL)
-    smat = smat / snorm[:, None]
-    k_nn = 5
-
-    def sample_topk(batches):
-        # Reused-buffer discipline (round 13, similarity.py:328
-        # pattern): normalize v in place (it is freshly built per batch
-        # and dead after the GEMM) and run the GEMM + round through one
-        # hoisted (n, |sample|) buffer instead of three fresh matrices
-        # per batch — fresh-anon first-touch is the slow path on this
-        # host (SCALING.md round 12). Op order unchanged → bit-identical.
-        # r14 (verdict task #4): the two residual per-batch (n, ·)
-        # allocations go too — the Arrow INGEST stacks into a hoisted
-        # (n, dim) buffer (float32→float64 widening is exact either
-        # way), and the argsort temp -s becomes an in-place negation
-        # (stable ASC argsort of -s ≡ the old argsort(-s) bitwise; s is
-        # dead after). The argsort INDEX matrix itself stays: numpy has
-        # no out= for argsort, and argpartition's unstable tie handling
-        # would change which of the round(6)-tied neighbors is kept.
-        sbuf = np.empty((0, len(sids)))
-        vbuf = np.empty((0, 0))
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            emb_rows = list(pdf["embedding"])
-            n = len(emb_rows)
-            if n > vbuf.shape[0]:
-                vbuf = np.empty((n, len(emb_rows[0])))
-            v = np.stack(emb_rows, out=vbuf[:n])
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            nrm = np.linalg.norm(v, axis=1)
-            zsrc = nrm == 0
-            nrm[zsrc] = np.inf
-            if n > sbuf.shape[0]:
-                sbuf = np.empty((n, len(sids)))
-            s = sbuf[:n]
-            np.divide(v, nrm[:, None], out=v)
-            np.dot(v, smat.T, out=s)
-            np.round(s, 6, out=s)
-            # NULL-score parity: a zero-norm src scores NULL everywhere
-            # (→ all ties, dst ASC); a zero-norm dst scores NULL for
-            # every src (→ ordered last, still eligible)
-            s[zsrc, :] = -np.inf
-            s[:, zero_dst] = -np.inf
-            np.negative(s, out=s)
-            order = np.argsort(s, axis=1, kind="stable")[:, : k_nn + 1]
-            srcs: list[int] = []
-            dsts: list[int] = []
-            for i in range(len(ids)):
-                kept = [sids[j] for j in order[i] if sids[j] != ids[i]][:k_nn]
-                srcs.extend([ids[i]] * len(kept))
-                dsts.extend(kept)
-            yield pd.DataFrame(
-                {"src": np.array(srcs, dtype=np.int64),
-                 "dst": np.array(dsts, dtype=np.int64)}
-            )
-
-    knn = emb.mapInPandas(sample_topk, schema="src long, dst long")
-    indeg = (
-        emb.select("vec_id")
-        .join(knn, knn["dst"] == F.col("vec_id"), "left")
-        .groupBy("vec_id")
-        .agg(F.count("src").cast("long").alias("d"))
-        .localCheckpoint(eager=False)  # vector-sized; moments + histogram
+    sample = (
+        load_table(spark, sf_dir, "embeddings")
+        .select("vec_id", "embedding")
+        .filter(F.col("vec_id") < _HUB_SAMPLE)
     )
-    return _degree_hubness_readout(indeg)
+    # the sample is ONE cell: cell_topk's in-cell all-pairs 5-NN is the
+    # oracle's sample self-join
+    return _cell_knn_hubness(sample, sample.withColumn("cid", F.lit(0)))
 
 
 def _degree_hubness_readout(indeg: DataFrame) -> DataFrame:
@@ -1830,20 +1819,16 @@ def _degree_hubness_readout(indeg: DataFrame) -> DataFrame:
     )
 
 
-# --- full-corpus hubness over the IVF kNN source — the registered
-# scale path the sampled estimator's docstring promised (r8 verdict
-# task #4): every vector's 5-NN is searched within its IVF cell only,
-# with √n centroids (the flat-IVF optimum: assignment n·√n + in-cell
-# scoring n·√n ≈ n^1.5 total, vs the sample-free n² graph; above
-# max_centroids the assignment argmax SHARDS across closures — see
-# _ivf_assign_sharded, exact by construction, pinned against the flat
-# path at forced caps — and the cell-bucketed self-join below is
-# already the shape that scales out: candidates co-locate by
-# centroid_id, no broadcast of a corpus-sized query set anywhere). In-degree then folds over ALL vectors (left
-# join keeps never-neighbored vectors at 0 — dropping them inflates
-# the skew), same exact-integer moment tail as the sampled query.
-# Cell-boundary effects make this an APPROXIMATE kNN graph by design:
-# that is the documented IVF recall trade, not a defect.
+# --- full-corpus hubness over the IVF kNN source: every vector's 5-NN
+# is searched within its IVF cell only, with √n centroids (the flat-IVF
+# optimum: assignment n·√n + in-cell scoring n·√n ≈ n^1.5 total, vs the
+# sample-free n² graph). Above max_centroids the assignment argmax runs
+# over several centroid slices (_ivf_assign, exact by construction),
+# and the cell-bucketed kNN is already the shape that scales out:
+# candidates co-locate by cell, no broadcast of a corpus-sized query
+# set anywhere. Cell-boundary effects make this an APPROXIMATE kNN
+# graph by design: that is the documented IVF recall trade, not a
+# defect.
 @register(
     "embedding_hubness_ivf",
     oracle="""
@@ -1916,338 +1901,116 @@ def _degree_hubness_readout(indeg: DataFrame) -> DataFrame:
 def embedding_hubness_ivf(
     spark: SparkSession, sf_dir: str, max_centroids: int = 8192
 ) -> DataFrame:
-    # Round-9 execution rewrite (same oracle, same semantics): the
-    # first build scored both phases with per-pair JVM HOF dots —
-    # n·√n assignment + n·√n in-cell ≈ 1e9 interpreted 64-dim folds
-    # at sf10, 878 s measured, ~all of it expression interpretation
-    # (the sf10 block's own profile). Both phases are dense dot
-    # batches — the blocked-BLAS case (_blocked_cosine_pairs
-    # precedent) — so they now run as Arrow kernels:
-    #   A. assignment: centroid matrix in the closure (≤√n rows,
-    #      guarded by max_centroids with the MMR limit+raise
-    #      pattern), one mapInPandas V@Cᵀ per batch; ties → lowest
-    #      cid via first-argmax over cid-ordered columns; a
-    #      zero-norm VECTOR scores 0 everywhere → first cid (the
-    #      oracle's all-NULL → NULLS LAST → min cid), a zero-norm
-    #      CENTROID column is forced to -inf (the oracle's NULL
-    #      column, never chosen while any real score exists).
-    #   B. in-cell 5-NN: groupBy(centroid) applyInPandas — cells
-    #      co-locate by key, M@Mᵀ row-chunked so no task ever holds
-    #      more than chunk×|cell| scores; columns sorted by dst so a
-    #      STABLE argsort on -s IS the oracle's (s DESC, dst ASC);
-    #      self excluded (not demoted), zero-norm dsts rank last but
-    #      remain eligible — exactly the NULL-score ordering.
-    # Dots are float64 BLAS vs the engines' sequential folds: ≤1e-13
-    # summation-order divergence under the round(6) grid — the
-    # established dedup_semantic_pairs/boundary-corpus convention.
-    import numpy as np
-    import pandas as pd
-
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    # r14: the n·√n assignment GEMM runs map-side on the scan, and the
-    # embeddings table is one parquet row group at every measured SF —
-    # ONE populated partition, so the whole corpus×centroid GEMM ran on
-    # one Python worker (guide §2.5 unsplittable input). spread_input
-    # is a no-op on wide scans; centroid collects/count stay on the
-    # raw relation (no shuffle for driver-side probes).
+    # Both phases are dense dot batches, so both run as Arrow kernels
+    # (per-pair JVM HOF dots measured 878 s at sf10, ~all of it
+    # expression interpretation): the assignment GEMM V@Cᵀ in
+    # _ivf_assign, then cell_topk per cell.
     from emission_project_spark.catalog.tables import spread_input
 
-    emb_sp = spread_input(emb)
-    n_total = emb.count()
-    if n_total == 0:
-        # empty corpus → empty readout (the oracle's 0-row result); the
-        # centroid-matrix build below would crash on a 0-d norm
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    nc = int(math.ceil(math.sqrt(emb.count())))
+    cents = sorted(
+        emb.filter(F.col("vec_id") < nc).collect(), key=lambda r: r["vec_id"]
+    )
+    if not cents:
+        # an empty corpus, or sparse ids leaving no vec_id < nc: the
+        # oracle's centroid CTE is empty → every in-degree is 0
         return _degree_hubness_readout(
             emb.select("vec_id", F.lit(0).cast("long").alias("d"))
         )
-    nc = int(math.ceil(math.sqrt(n_total)))
-    # Recursive coarse layer (round 10, r9 verdict task #3): above
-    # max_centroids the centroid matrix no longer fits one closure, so
-    # the assignment argmax is SHARDED across closures instead — each
-    # shard holds ≤max_centroids centroid rows, scores the corpus
-    # against its slice, and a vec_id-keyed max(struct(s, -cid)) fold
-    # reduces the per-shard winners to the EXACT flat argmax (ties →
-    # min cid, identical to the oracle's rn=1 ORDER BY s DESC, cid).
-    # Recursion changes WHERE the argmax is computed, never its value,
-    # so the oracle replays the same flat √n IVF. Read amplification:
-    # one corpus scan per ≤_SHARD_GROUP (64) slices — beyond that the
-    # fold chains further narrow passes (ceil(n_shards/64) scans, each
-    # with a ≤64 × cap × dim × 8 B closure ≈ 3.2 GB at dim 768), so the
-    # former >64-shard ValueError (≈275G vectors) is now a working
-    # path instead of a guard (round 13, r12 verdict task #7).
-    n_shards = -(-nc // max_centroids)
-    if n_shards == 1:
-        cent_rows = sorted(
-            emb.filter(F.col("vec_id") < nc).collect(),
-            key=lambda r: r["vec_id"],
-        )
-        if not cent_rows:
-            # sparse ids can leave no vec_id < ceil(sqrt(n)): the
-            # oracle's centroid CTE is empty → every in-degree is 0
-            return _degree_hubness_readout(
-                emb.select("vec_id", F.lit(0).cast("long").alias("d"))
-            )
-        cmat = np.array([r["embedding"] for r in cent_rows], dtype=np.float64)
-        cnorm = np.linalg.norm(cmat, axis=1)
-        zero_cent = cnorm == 0
-        cnorm[zero_cent] = np.inf  # zero-norm centroid column → scores -inf
-        cmat = cmat / cnorm[:, None]
-
-        def assign(batches):
-            # reused-buffer discipline (round 13): in-place normalize +
-            # one hoisted (n, nc) score buffer, same op order →
-            # bit-identical (SCALING.md round 12 fresh-anon-page mode).
-            # r14 (verdict task #4): the Arrow ingest now stacks into a
-            # hoisted (n, dim) buffer too — the last per-batch (n, ·)
-            # allocation in this kernel (float32→float64 widening is
-            # exact in both forms).
-            sbuf = np.empty((0, cmat.shape[0]))
-            vbuf = np.empty((0, 0))
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                emb_rows = list(pdf["embedding"])
-                n = len(emb_rows)
-                if n > vbuf.shape[0]:
-                    vbuf = np.empty((n, len(emb_rows[0])))
-                v = np.stack(emb_rows, out=vbuf[:n])
-                nrm = np.linalg.norm(v, axis=1)
-                zsrc = nrm == 0
-                nrm[zsrc] = np.inf  # zero-norm vector row → scores 0
-                if n > sbuf.shape[0]:
-                    sbuf = np.empty((n, cmat.shape[0]))
-                s = sbuf[:n]
-                np.divide(v, nrm[:, None], out=v)
-                np.dot(v, cmat.T, out=s)
-                np.round(s, 6, out=s)
-                s[:, zero_cent] = -np.inf
-                cid = s.argmax(axis=1).astype(np.int64)  # first max = min cid
-                # a zero-norm VECTOR scores NULL against EVERY centroid
-                # in the oracle (its ne is NULL) → NULLS LAST → rn=1 by
-                # cid → the GLOBAL min cid, zero-norm centroids
-                # included — not the first non-zero-norm column the
-                # -inf masking above would pick
-                cid[zsrc] = 0
-                yield pd.DataFrame(
-                    {
-                        "vec_id": pdf["vec_id"].to_numpy(dtype=np.int64),
-                        "cid": cid,
-                        "embedding": pdf["embedding"],
-                    }
-                )
-
-        assigned = emb_sp.mapInPandas(
-            assign, schema="vec_id long, cid long, embedding array<float>"
-        )
-    else:
-        assigned = _ivf_assign_sharded(emb, nc, max_centroids)
-
-    k_nn, chunk = 5, _CELL_CHUNK
-
-    def cell_topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("vec_id", kind="mergesort")  # columns = dst ASC
-        ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-        m = len(ids)
-        if m < 2:
-            return pd.DataFrame({"src": ids[:0], "dst": ids[:0]})
-        # per-cell ingest stays a fresh (m, dim) matrix: applyInPandas
-        # calls this once per GROUP (no batch loop to hoist across) and
-        # mat must outlive the whole chunk loop as the GEMM's right
-        # operand — unlike the mapInPandas kernels there is no dead
-        # buffer to reuse (r14 audit, verdict task #4)
-        mat = np.array(list(pdf["embedding"]), dtype=np.float64)
-        nrm = np.linalg.norm(mat, axis=1)
-        nrm[nrm == 0] = np.inf
-        np.divide(mat, nrm[:, None], out=mat)  # fresh per call — in place
-        srcs, dsts = [], []
-        # reused-buffer discipline (round 13): one (chunk, m) buffer
-        # absorbs every chunk of this cell instead of two fresh
-        # matrices per chunk; op order unchanged → bit-identical
-        # (SCALING.md round 12 fresh-anon-page mode)
-        buf = np.empty((min(chunk, m), m))
-        for lo in range(0, m, chunk):
-            hi = min(lo + chunk, m)
-            s = buf[: hi - lo]
-            np.dot(mat[lo:hi], mat.T, out=s)
-            np.round(s, 6, out=s)
-            # zero-norm rows/cols: their dots are 0.0 here but NULL in
-            # the oracle (ordered last, still eligible) — force -inf
-            zsrc = np.isinf(nrm[lo:hi])
-            zdst = np.isinf(nrm)
-            s[zsrc, :] = -np.inf
-            s[:, zdst] = -np.inf
-            # r14: in-place negation + ASC stable argsort ≡ the old
-            # argsort(-s) bitwise, minus one fresh (chunk, m) temp per
-            # chunk (s is dead after; verdict task #4)
-            np.negative(s, out=s)
-            order = np.argsort(s, axis=1, kind="stable")[:, : k_nn + 1]
-            for i in range(hi - lo):
-                src = ids[lo + i]
-                kept = [ids[j] for j in order[i] if ids[j] != src][:k_nn]
-                srcs.extend([src] * len(kept))
-                dsts.extend(kept)
-        return pd.DataFrame(
-            {"src": np.array(srcs, dtype=np.int64),
-             "dst": np.array(dsts, dtype=np.int64)}
-        )
-
-    knn = assigned.groupBy("cid").applyInPandas(
-        cell_topk, schema="src long, dst long"
-    )
-    indeg = (
-        emb.select("vec_id")
-        .join(knn, knn["dst"] == F.col("vec_id"), "left")
-        .groupBy("vec_id")
-        .agg(F.count("src").cast("long").alias("d"))
-        .localCheckpoint(eager=False)  # vector-sized; moments + histogram
-    )
-    return _degree_hubness_readout(indeg)
+    # the assignment runs map-side on the scan, and the embeddings table
+    # is one parquet row group at every measured SF: spread it so the
+    # GEMM runs wide (×1.28 at sf10, OPTIMIZATION_r14.md §G). The count
+    # and the centroid collect stay on the raw relation (no exchange
+    # for a driver-side probe).
+    assigned = _ivf_assign(spread_input(emb), cents, max_centroids)
+    return _cell_knn_hubness(emb, assigned)
 
 
-def _ivf_assign_sharded(emb: DataFrame, nc: int, cap: int) -> DataFrame:
-    """Exact flat-IVF assignment when the centroid relation exceeds one
-    closure matrix: shard the centroids into ≤``cap``-row slices (by
-    vec_id range — ids are unique, so each collect is ≤cap rows), then
-    run ONE ``mapInPandas`` over the corpus that loops the slice
-    matrices INSIDE the closure, folding a running (best_s, best_cid)
-    per batch row — highest score, ties to the LOWEST cid, bit-identical
-    to the flat argmax / the oracle's ``rn=1 ORDER BY s DESC NULLS
-    LAST, cid``. Round-11 rewrite (r10 verdict task #3): the first cut
-    gave each slice its own ``mapInPandas`` pass + a vec_id-keyed
-    ``max(struct(s, -cid))`` reduce — n_shards column-pruned corpus
-    scans, one fold shuffle, and one reattach join, all of which this
-    shape deletes: one scan, zero extra exchanges, and the embedding
-    column rides through the kernel exactly as in the flat path.
+def _ivf_assign(emb: DataFrame, cents: list, cap: int) -> DataFrame:
+    """Assign every (vec_id, embedding) row of ``emb`` to the cell
+    ``cid`` of its most cosine-similar centroid — the one IVF assignment
+    kernel. ``cents`` are the oracle's centroid rows (``vec_id < nc``)
+    sorted by vec_id; they are cut by position into slices of ≤``cap``
+    rows, and one ``mapInPandas`` pass scores each corpus batch against
+    every slice, folding a running (best_s, best_cid): highest round(6)
+    score, ties to the LOWEST cid — the oracle's ``rn=1 ORDER BY s DESC
+    NULLS LAST, cid``. Slicing changes closure memory, never a value.
 
-    NULL-score parity: a zero-norm vector scores -inf in every slice →
-    assigned the GLOBAL min centroid id (zero-norm centroids included);
-    a zero-norm centroid column is -inf, never chosen while any real
-    score exists anywhere. -inf ties across slices fall to the lowest
-    cid via the fold's tie rule (NumPy ``-inf == -inf`` is True).
+    NULL-score parity: a zero-norm centroid column scores -inf, never
+    chosen while any real score exists; a vector whose every score is
+    NULL in the oracle (itself zero-norm, or every centroid zero-norm)
+    goes to the GLOBAL min centroid id, zero-norm centroids included.
 
-    Closure memory = min(n_shards, _SHARD_GROUP) × cap × dim × 8 B per
-    pass (at dim 768 / cap 8192 that is ≤3.2 GB); above _SHARD_GROUP
-    (64) slices the fold CHAINS further narrow ``mapInPandas`` passes —
-    ceil(n_shards/64) corpus scans, no shuffle between passes — so the
-    path that used to raise at ≈275G vectors now degrades linearly in
-    scan count instead (round 13, r12 verdict task #7). The fold is
-    associative over the id-ordered slice sequence, so pass grouping
-    never changes a value (pinned by the tiny-_SHARD_GROUP test)."""
+    Closure memory is ≤ _SHARD_GROUP × cap × dim × 8 B per pass (3.2 GB
+    at dim 768 / cap 8192); beyond _SHARD_GROUP slices the fold chains
+    further passes (one corpus scan each, no shuffle between them),
+    carrying the running best as ``_bs``/``_bc`` columns."""
     import numpy as np
     import pandas as pd
 
-    shards: list[tuple] = []  # (ids, normalized matrix, zero-norm mask)
-    for lo in range(0, nc, cap):
-        hi = min(lo + cap, nc)
-        rows = sorted(
-            emb.filter(
-                (F.col("vec_id") >= lo) & (F.col("vec_id") < hi)
-            ).collect(),
-            key=lambda r: r["vec_id"],
-        )
-        if not rows:
-            continue
-        ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
-        cmat = np.array([r["embedding"] for r in rows], dtype=np.float64)
-        cnorm = np.linalg.norm(cmat, axis=1)
-        zero_cent = cnorm == 0
-        cnorm[zero_cent] = np.inf
-        shards.append((ids, cmat / cnorm[:, None], zero_cent))
-    if not shards:
-        # sparse ids left no centroid in [0, nc): empty assignment
-        return emb.select(
-            "vec_id", F.lit(0).cast("long").alias("cid"), "embedding"
-        ).limit(0)
-    gmin = int(shards[0][0][0])  # global min centroid id (slices id-ordered)
+    ids = np.array([r["vec_id"] for r in cents], dtype=np.int64)
+    cmat = row_matrix(r["embedding"] for r in cents)
+    zero = np.isinf(normalize_rows(cmat))
+    slices = [
+        (ids[lo : lo + cap], cmat[lo : lo + cap], zero[lo : lo + cap])
+        for lo in range(0, len(ids), cap)
+    ]
+    gmin = int(ids[0])
 
     def make_pass(group: list[tuple], first: bool, final: bool):
-        """One corpus pass folding ≤_SHARD_GROUP slices into the running
-        (best_s, best_cid). The fold is left-associative over the same
-        id-ordered slice sequence whatever the grouping, and scores are
-        already on the round(6) grid, so chaining passes computes the
-        EXACT single-pass result — grouping changes closure memory and
-        scan count, never a value."""
-
         def assign(batches):
-            # reused-buffer discipline (round 13): in-place normalize +
-            # one hoisted score buffer per shard WIDTH (all shards share
-            # the cap width except the tail, so ≤2 buffers live), same
-            # op order → bit-identical (SCALING.md round 12
-            # fresh-anon-page mode)
+            # one reused score buffer per slice WIDTH (every slice but
+            # the last is cap wide, so ≤2 live); op order is fixed, so
+            # batch geometry never changes a score
             bufs: dict[int, np.ndarray] = {}
-            vbuf = np.empty((0, 0))
             for pdf in batches:
                 if not len(pdf):
                     continue
-                emb_rows = list(pdf["embedding"])
-                if len(emb_rows) > vbuf.shape[0]:
-                    vbuf = np.empty((len(emb_rows), len(emb_rows[0])))
-                # r14: hoisted Arrow-ingest buffer (verdict task #4) —
-                # float32→float64 widening is exact in both forms
-                v = np.stack(emb_rows, out=vbuf[: len(emb_rows)])
-                nrm = np.linalg.norm(v, axis=1)
-                zsrc = nrm == 0
-                nrm[zsrc] = np.inf
-                np.divide(v, nrm[:, None], out=v)
-                vn = v
+                v = row_matrix(pdf["embedding"])
+                zsrc = np.isinf(normalize_rows(v))
+                n = len(v)
                 if first:
-                    best_s = np.full(len(vn), -np.inf)
-                    best_cid = np.full(
-                        len(vn), np.iinfo(np.int64).max, np.int64
-                    )
+                    best_s = np.full(n, -np.inf)
+                    best_cid = np.full(n, np.iinfo(np.int64).max, np.int64)
                 else:
                     best_s = pdf["_bs"].to_numpy(dtype=np.float64).copy()
                     best_cid = pdf["_bc"].to_numpy(dtype=np.int64).copy()
-                for ids, cmat, zc in group:
-                    w = cmat.shape[0]
+                for cids, cm, zc in group:
+                    w = cm.shape[0]
                     b = bufs.get(w)
-                    if b is None or b.shape[0] < len(vn):
-                        b = np.empty((len(vn), w))
-                        bufs[w] = b
-                    s = b[: len(vn)]
-                    np.dot(vn, cmat.T, out=s)
+                    if b is None or b.shape[0] < n:
+                        b = bufs[w] = np.empty((n, w))
+                    s = b[:n]
+                    np.dot(v, cm.T, out=s)
                     np.round(s, 6, out=s)
                     s[:, zc] = -np.inf
                     bi = s.argmax(axis=1)  # first max = slice-min cid
-                    bs = s[np.arange(len(bi)), bi]
-                    bc = ids[bi]
+                    bs = s[np.arange(n), bi]
+                    bc = cids[bi]
                     upd = (bs > best_s) | ((bs == best_s) & (bc < best_cid))
                     best_s[upd] = bs[upd]
                     best_cid[upd] = bc[upd]
+                out = {"vec_id": pdf["vec_id"].to_numpy(dtype=np.int64)}
                 if final:
-                    # all-NULL score row → global min cid
-                    best_cid[zsrc] = gmin
-                    yield pd.DataFrame(
-                        {
-                            "vec_id": pdf["vec_id"].to_numpy(dtype=np.int64),
-                            "cid": best_cid,
-                            "embedding": pdf["embedding"],
-                        }
-                    )
+                    best_cid[zsrc] = gmin  # all-NULL score row
+                    out.update(cid=best_cid, embedding=pdf["embedding"])
                 else:
-                    yield pd.DataFrame(
-                        {
-                            "vec_id": pdf["vec_id"].to_numpy(dtype=np.int64),
-                            "embedding": pdf["embedding"],
-                            "_bs": best_s,
-                            "_bc": best_cid,
-                        }
-                    )
+                    out.update(embedding=pdf["embedding"], _bs=best_s, _bc=best_cid)
+                yield pd.DataFrame(out)
 
         return assign
 
-    # r14: the chained corpus passes are map-side GEMMs — spread the
-    # scan once so they run wide (centroid-slice collects above stay
-    # on the raw relation: no exchange for driver-side probes)
-    from emission_project_spark.catalog.tables import spread_input
-
-    out = spread_input(emb)
-    n_groups = -(-len(shards) // _SHARD_GROUP)
+    out = emb
+    n_groups = -(-len(slices) // _SHARD_GROUP)
     for g in range(n_groups):
-        group = shards[g * _SHARD_GROUP : (g + 1) * _SHARD_GROUP]
         final = g == n_groups - 1
         out = out.mapInPandas(
-            make_pass(group, first=(g == 0), final=final),
+            make_pass(
+                slices[g * _SHARD_GROUP : (g + 1) * _SHARD_GROUP],
+                first=g == 0,
+                final=final,
+            ),
             schema=(
                 "vec_id long, cid long, embedding array<float>"
                 if final
@@ -2255,6 +2018,7 @@ def _ivf_assign_sharded(emb: DataFrame, nc: int, cap: int) -> DataFrame:
             ),
         )
     return out
+
 
 
 # --- t-closeness (Li et al. 2007) — the third gate of the privacy

@@ -139,8 +139,8 @@ def test_pq_encode_ragged_batches_identical(spark):
 
 
 def test_hubness_stats_ragged_batches_identical(spark, tmp_path_factory):
-    """embedding_hubness_stats' sample_topk (reused (n, |S|) score
-    buffer + in-place normalize) must be batch-geometry invariant."""
+    """embedding_hubness_stats runs cell_topk over its sample as one
+    cell; the readout must not depend on the Arrow batch geometry."""
     import __spark_entry__ as entrymod
 
     q = entrymod.queries()["embedding_hubness_stats"]
@@ -179,47 +179,30 @@ def test_hubness_ivf_chunk_and_batch_invariant(spark):
     assert ragged == base
 
 
-def test_hubness_ivf_sharded_ragged_batches(spark):
-    """The sharded assignment path (per-width reused buffers) must match
-    the flat path under ragged Arrow batches — a stale per-width buffer
-    row would flip an argmax."""
-    import __spark_entry__ as entrymod
-    from emission_project_spark.plans.eval_metrics import embedding_hubness_ivf
-
-    flat = sorted(map(tuple, embedding_hubness_ivf(spark, _SF).collect()))
+def test_hubness_ivf_sharded_ragged_batches(
+    spark, negative_id_corpus, assert_hubness_ivf_oracle
+):
+    """The sliced assignment (per-width reused score buffers) must match
+    the oracle at every cap under ragged Arrow batches: a stale
+    per-width buffer row would flip an argmax."""
     with _arrow_batches(spark, 7):
-        sharded = sorted(
-            map(
-                tuple,
-                embedding_hubness_ivf(spark, _SF, max_centroids=3).collect(),
-            )
-        )
-    assert sharded == flat
+        for corpus in (_SF, negative_id_corpus):
+            assert_hubness_ivf_oracle(corpus)
 
 
-def test_hubness_ivf_multipass_sharding_matches_flat(spark):
-    """Round 13 (r12 verdict task #7): above _SHARD_GROUP slices the
-    sharded assignment chains multiple corpus passes instead of
-    raising. A tiny group size forces several passes (running best
-    carried through Arrow as _bs/_bc columns); the readout must equal
-    the flat single-closure path exactly."""
-    import __spark_entry__ as entrymod  # noqa: F401 — registry load
+def test_hubness_ivf_multipass_matches_oracle(
+    spark, negative_id_corpus, assert_hubness_ivf_oracle
+):
+    """Above _SHARD_GROUP slices the assignment chains several corpus
+    passes, carrying the running best through Arrow as _bs/_bc columns.
+    A group size of 2 forces up to 12 passes at cap 1; every cap must
+    still give the oracle's readout."""
     from emission_project_spark.plans import eval_metrics as em
 
-    flat = sorted(
-        map(tuple, em.embedding_hubness_ivf(spark, _SF).collect())
-    )
     old = em._SHARD_GROUP
     try:
-        em._SHARD_GROUP = 2  # cap=3 → ~9 slices → ~5 chained passes
-        multi = sorted(
-            map(
-                tuple,
-                em.embedding_hubness_ivf(
-                    spark, _SF, max_centroids=3
-                ).collect(),
-            )
-        )
+        em._SHARD_GROUP = 2
+        for corpus in (_SF, negative_id_corpus):
+            assert_hubness_ivf_oracle(corpus)
     finally:
         em._SHARD_GROUP = old
-    assert multi == flat

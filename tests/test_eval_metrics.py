@@ -513,31 +513,20 @@ def _hub_corpus(n, zero_ids=()):
     return vecs
 
 
-def test_hubness_ivf_sharded_assignment_matches_flat(spark, tmp_path_factory):
-    """Planted >cap recursion test (r9 verdict task #3): forcing
-    max_centroids below ceil(sqrt(n)) exercises the sharded coarse
-    layer, whose cross-shard max(struct(s, -cid)) fold must reproduce
-    the flat argmax bit-for-bit — recursion changes WHERE the argmax
-    runs, never its value. Centroid 0 is ZERO-NORM and vec 20 is a
-    zero-norm non-centroid, the exact oracle tie-break divergence the
-    round-9 advice flagged: an all-NULL score row must land on the
-    GLOBAL min cid (zero-norm centroids included)."""
-    from emission_project_spark.plans.eval_metrics import (
-        embedding_hubness_ivf,
-    )
-
+def test_hubness_ivf_every_cap_matches_oracle(
+    spark, tmp_path_factory, negative_id_corpus, assert_hubness_ivf_oracle
+):
+    """Forcing max_centroids below the centroid count cuts the centroids
+    into several slices, whose running (score, cid) fold must give the
+    oracle's readout at every cap. Zero-norm corpus: centroid 0 and
+    non-centroid vec 20 are zero-norm, so an all-NULL score row must
+    land on the GLOBAL min cid (zero-norm centroids included). Negative-id
+    corpus: the oracle's centroids include the ids below 0, which slices
+    cut by id range from 0 used to drop."""
     d = str(tmp_path_factory.mktemp("hub_ivf_shard"))
     _write_embeddings(d, _hub_corpus(36, zero_ids={0, 20}))  # nc = 6
-    flat = sorted(map(tuple, embedding_hubness_ivf(spark, d).collect()))
-    for cap in (2, 1):  # 3 shards / 6 shards
-        sharded = sorted(
-            map(
-                tuple,
-                embedding_hubness_ivf(spark, d, max_centroids=cap).collect(),
-            )
-        )
-        assert sharded == flat, f"cap={cap} diverged from flat argmax"
-    assert sum(r[1] for r in flat) == 36  # every vector in the histogram
+    for corpus in (d, negative_id_corpus):
+        assert_hubness_ivf_oracle(corpus)
 
 
 def test_hubness_ivf_zero_norm_oracle_parity(spark, tmp_path_factory):

@@ -66,6 +66,23 @@ def test_max_doc_freq_drops_stop_shingles(spark):
     assert ngram_jaccard_pairs(docs, threshold=0.1, max_doc_freq=2).count() == 0
 
 
+def test_shingle_queries_leave_no_cached_plan(spark, sf_dir):
+    """dedup_ngram_jaccard and dedup_shingle_containment pin no plan in
+    the session's CacheManager: a ``.cache()`` stays registered after
+    the query's frame is gone, holding memory for every later query."""
+    import gc
+
+    import __spark_entry__ as entrymod
+
+    spark.catalog.clearCache()
+    for name in ("dedup_ngram_jaccard", "dedup_shingle_containment"):
+        df = entrymod.queries()[name](spark, sf_dir)
+        assert df.collect()
+        del df
+    gc.collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_simhash_identical_docs_equal_similar_docs_close(spark):
     docs = _docs(
         spark,

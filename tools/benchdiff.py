@@ -211,7 +211,8 @@ def wait4_sample(
 def ab_run(args: list[str]) -> int:
     """One-command interleaved fresh-JVM A/B (r11 verdict task #7).
 
-    Alternates old/new children (tools/time_query.py, one JVM each) and
+    Alternates old/new children (tools/time_query.py, one JVM each;
+    old runs first in even rounds, new in odd ones) and
     feeds the samples to ab_verdict; each child's minor page faults
     (see wait4_sample) are printed per sample and as a per-side median
     and range after the wall verdict. The OLD side is either a clean
@@ -281,7 +282,10 @@ def ab_run(args: list[str]) -> int:
             ("new", repo, parse_env(env_new)),
         ]
         for round_i in range(n):
-            for side, cwd, env_over in arms:
+            # old first in even rounds, new first in odd ones, so drift
+            # within a round does not always land on the same arm
+            order = arms if round_i % 2 == 0 else arms[::-1]
+            for side, cwd, env_over in order:
                 status, out, err, flt = wait4_sample(
                     argv, cwd, {**os.environ, **env_over}
                 )
