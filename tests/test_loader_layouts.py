@@ -58,6 +58,17 @@ def test_events_ts_layouts_identical(spark, tmp_path, ts_type):
     assert dict(df.dtypes)["ts"] == "timestamp"
     got = [r["ts"] for r in df.select("ts").orderBy("event_id").collect()]
     assert got == _TS
+    # a vanilla session never saw session.py's nanos-as-long conf:
+    # load_table must set it before it reads the schema
+    nanos = "spark.sql.legacy.parquet.nanosAsLong"
+    old = spark.conf.get(nanos)
+    spark.conf.unset(nanos)
+    try:
+        vanilla = load_table(spark, sf_dir, "events")
+        assert dict(vanilla.dtypes)["ts"] == "timestamp"
+        assert [r["ts"] for r in vanilla.select("ts").orderBy("event_id").collect()] == _TS
+    finally:
+        spark.conf.set(nanos, old)
     # unix_micros must resolve — this is the call that broke in round 3
     from pyspark.sql import functions as F
 

@@ -604,23 +604,6 @@ def test_warehouse_file_stats_census(spark, tmp_path):
     assert st["min_bytes"] <= st["avg_bytes"] <= st["max_bytes"]
 
 
-def test_load_table_with_provenance(spark):
-    from emission_project_spark.catalog.tables import load_table_with_provenance
-
-    df = load_table_with_provenance(spark, "/root/testdata/sf0.001", "nation")
-    rows = df.collect()
-    assert len(rows) == 25
-    assert all(r["_src_file"].endswith(".parquet") for r in rows)
-    assert all(r["_src_file_size"] > 0 for r in rows)
-    # byte-range lineage: the split region is well-formed and inside the file
-    assert all(r["_src_block_start"] >= 0 for r in rows)
-    assert all(
-        0 < r["_src_block_length"]
-        and r["_src_block_start"] + r["_src_block_length"] <= r["_src_file_size"]
-        for r in rows
-    )
-
-
 def test_v2_parquet_aggregate_pushdown(spark):
     """Opt-in V2 session: a filterless count answers from footer stats
     (PushedAggregation in the plan) and matches the V1 answer; the NTZ

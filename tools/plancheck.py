@@ -1,12 +1,15 @@
 """Physical-plan audit over every registered query.
 
 Builds each query at the given sf_dir without running its final action,
-and inspects the Catalyst physical plan for 100 TB red flags. Building is
-not execution-free: each ``spark.read.parquet`` infers its schema with a
-job, and under AQE (the session default) a lazy
-``localCheckpoint(eager=False)`` runs its subtree's shuffle stages at
-the call, so queries that checkpoint while building (e.g.
-``embedding_kmeans_lloyd``) run part of their work here.
+and inspects the Catalyst physical plan for 100 TB red flags. Table
+loads launch no job (``load_table`` reads each schema from the parquet
+footer), but building is not execution-free: under AQE (the session
+default) a ``localCheckpoint`` — lazy ``eager=False`` included — runs
+its subtree's shuffle stages at the call, so queries that checkpoint
+while building (e.g. ``embedding_kmeans_lloyd``) run part of their work
+here, as do builds that collect a driver-side value or write warehouse
+files. Each build runs in its own job group, and ``build_jobs=`` counts
+the jobs it launched.
 
 Flags:
 
@@ -17,8 +20,8 @@ Flags:
   more than their operator semantics require;
 - parquet scans with no pushed filters in queries that filter.
 
-Prints one line per query: shuffles, joins by strategy, flags. Exits
-nonzero if a disallowed cartesian appears. Usage:
+Prints one line per query: build jobs, shuffles, joins by strategy,
+flags. Exits nonzero if a disallowed cartesian appears. Usage:
 
     python tools/plancheck.py [sf_dir] [query ...]
 """
@@ -198,10 +201,15 @@ def main() -> None:
         "formatted"
     )
 
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
     failures: list[str] = []
     for name, fn in sorted(entrymod.queries().items()):
         if only and name not in only:
             continue
+        group = f"plancheck-{name}"
+        sc.setJobGroup(group, name)
         try:
             df = fn(spark, sf_dir)
             plan = df._jdf.queryExecution().explainString(explain_mode)
@@ -209,6 +217,9 @@ def main() -> None:
             failures.append(f"{name}: failed to plan: {exc}")
             print(f"✗ {name}: PLAN ERROR {exc}")
             continue
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        build_jobs = len(tracker.getJobIdsForGroup(group))
 
         shuffles = len(re.findall(r"\bExchange\b", plan))
         joins: dict[str, int] = {}
@@ -242,7 +253,10 @@ def main() -> None:
         join_str = ",".join(f"{k}×{v}" for k, v in joins.items()) or "-"
         flag_str = " ".join(flags)
         mark = "✗" if "CARTESIAN" in flags else "✓"
-        print(f"{mark} {name}: shuffles={shuffles} joins={join_str} {flag_str}")
+        print(
+            f"{mark} {name}: build_jobs={build_jobs} shuffles={shuffles} "
+            f"joins={join_str} {flag_str}"
+        )
 
     spark.stop()
     if failures:
