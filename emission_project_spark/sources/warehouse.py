@@ -24,10 +24,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from emission_project_spark.catalog.tables import target_partitions
 
-def _colocated(
-    df: DataFrame, partition_by: list[str] | None, n: int | None = None
-) -> DataFrame:
+
+def _colocated(df: DataFrame, partition_by: list[str] | None) -> DataFrame:
     """Co-locate each partition value in one task before a
     dynamic-partition write: without it every write task holds a slice
     of EVERY partition value and emits one file per (task × value) —
@@ -35,13 +35,21 @@ def _colocated(
     664 files / 14 s repartitioned. The batch-sized shuffle is the
     standard price of a sane file count; a deployment whose
     per-partition volume outgrows one task adds a salt column to the
-    repartition, not more write tasks. ``n`` fixes the task count
-    (compaction sizes it from bytes); unpartitioned frames pass
+    repartition, not more write tasks.
+
+    A dynamic-partition write costs per file, not per byte, so its
+    width is the session width (``target_partitions``) and AQE may not
+    coalesce it: a repartition with a fixed count is never coalesced,
+    so every core writes its share of the values, while a byte-sized
+    one shrinks a small batch to one task that writes every value's
+    file in turn. The hash still sends each value to exactly one task,
+    so each value still gets one file. Unpartitioned frames pass
     through."""
     if not partition_by:
         return df
-    cols = [F.col(c) for c in partition_by]
-    return df.repartition(n, *cols) if n else df.repartition(*cols)
+    return df.repartition(
+        target_partitions(df.sparkSession), *[F.col(c) for c in partition_by]
+    )
 
 
 def _write(df: DataFrame, path: str, mode: str, partition_by: list[str] | None) -> None:
@@ -155,10 +163,12 @@ class Warehouse:
         ``partition_by`` the sort clusters within each partition value
         instead (partition pruning already handles the first key).
 
-        Repartition count is sized from the table's on-disk bytes, the
-        rewrite goes through the atomic swap (readers never see a
-        half-compacted table), and partitioning is preserved when
-        ``partition_by`` is given. Returns the file count after."""
+        Without ``partition_by`` the file count is sized from the
+        table's on-disk bytes; with it, each partition value is
+        rewritten as one file by ``_colocated``. The rewrite goes
+        through the atomic swap (readers never see a half-compacted
+        table), and partitioning is preserved when ``partition_by`` is
+        given. Returns the file count after."""
         path = self.path(table)
         total = 0
         for root, _dirs, files in os.walk(path):
@@ -166,7 +176,7 @@ class Warehouse:
         n_files = max(1, round(total / (target_file_mb * 1024 * 1024)))
         df = self.read(table, schema)
         if partition_by:
-            df = _colocated(df, partition_by, n_files)
+            df = _colocated(df, partition_by)
             if sort_by:
                 df = df.sortWithinPartitions(*(partition_by + sort_by))
         elif sort_by:
@@ -176,7 +186,8 @@ class Warehouse:
         else:
             df = df.repartition(n_files)
         # the layout above is final: a second co-location shuffle would
-        # scatter the sort and drop the byte-sized task count
+        # scatter the sort (and, unpartitioned, drop the byte-sized
+        # task count)
         self._swap_in(df, table, partition_by)
         count = 0
         for _root, _dirs, files in os.walk(path):

@@ -12,8 +12,9 @@ decisions with `--analyze` instead of guessing from wall-clock.
 
     python tools/eventlog_run.py --analyze LOG_FILE [LOG_FILE ...]
         per-run roll-up: wall, task count/time/GC, shuffle bytes,
-        spill, top stages by task time, AQE re-plans — one JSON line
-        per log, aligned for eyeball diffing.
+        spill, AQE re-plans, and the top stages by task time, each with
+        its task count and wall (submission to completion) — one JSON
+        line per log, aligned for eyeball diffing.
 """
 
 from __future__ import annotations
@@ -74,8 +75,11 @@ def analyze(path: str) -> dict:
         "py_sent_mb": 0.0,   # data sent to Python workers
         "py_ret_mb": 0.0,    # data returned from Python workers
         "py_run_s": 0.0,     # time to run Python workers
-        "stages": {},  # stage id -> task seconds
+        # stage id -> {"tasks", "task_s", "wall_s"}: summed task time
+        # alone cannot tell one long serial task from many short ones
+        "stages": {},
     }
+    spans: dict[str, tuple[int, int]] = {}  # stage id -> (submitted, completed) ms
     t_start = t_end = None
     with open(path) as fh:
         for line in fh:
@@ -90,6 +94,13 @@ def analyze(path: str) -> dict:
                 t_end = ev.get("Timestamp")
             elif kind.endswith("AdaptiveExecutionUpdate"):
                 out["aqe_updates"] += 1
+            elif kind == "SparkListenerStageCompleted":
+                si = ev.get("Stage Info") or {}
+                sub, done = si.get("Submission Time"), si.get("Completion Time")
+                if sub is not None and done is not None:
+                    sid = str(si.get("Stage ID"))
+                    lo, hi = spans.get(sid, (sub, done))
+                    spans[sid] = (min(lo, sub), max(hi, done))
             elif kind == "SparkListenerTaskEnd":
                 m = ev.get("Task Metrics") or {}
                 info = ev.get("Task Info") or {}
@@ -122,17 +133,28 @@ def analyze(path: str) -> dict:
                         out["py_ret_mb"] += u / 1e6
                     elif name == "time to run Python workers":
                         out["py_run_s"] += u / 1e3
-                sid = str(ev.get("Stage ID"))
-                out["stages"][sid] = out["stages"].get(sid, 0.0) + dur
+                st = out["stages"].setdefault(
+                    str(ev.get("Stage ID")), {"tasks": 0, "task_s": 0.0}
+                )
+                st["tasks"] += 1
+                st["task_s"] += dur
     if t_start and t_end:
         out["wall_s"] = round((t_end - t_start) / 1e3, 1)
     for k in ("task_time_s", "gc_s", "cpu_s", "shuffle_read_mb",
               "shuffle_write_mb", "mem_spill_mb", "disk_spill_mb",
               "max_task_s", "py_sent_mb", "py_ret_mb", "py_run_s"):
         out[k] = round(out[k], 1)
-    # keep only the 6 heaviest stages, rounded
-    top = sorted(out["stages"].items(), key=lambda kv: -kv[1])[:6]
-    out["stages"] = {k: round(v, 1) for k, v in top}
+    # keep only the 6 heaviest stages by task time, rounded
+    top = sorted(out["stages"].items(), key=lambda kv: -kv[1]["task_s"])[:6]
+    out["stages"] = {
+        sid: {
+            "tasks": st["tasks"],
+            "task_s": round(st["task_s"], 1),
+            "wall_s": round((spans[sid][1] - spans[sid][0]) / 1e3, 1)
+            if sid in spans else None,
+        }
+        for sid, st in top
+    }
     return out
 
 
