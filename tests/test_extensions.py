@@ -337,13 +337,12 @@ def test_training_sample_guards(spark):
     assert cents.count() == 4  # seeded from the full corpus
 
 
-def test_blas_assignment_matches_expression_path_sf1(spark):
+def test_blas_assignment_matches_expression_path_sf1(spark, tmp_path):
     """The declared large-k path must agree with the expression path on
     the 20k-embedding sf1 shard, not just the sf0.01 corpora — ulp-level
-    argmin flips get 10x the chances to appear here."""
-    import os
-
-    import pytest
+    argmin flips get 10x the chances to appear here. The shard is built
+    here with tools/gen_scale.py's defaults (10 shards, seed 20260813),
+    the same bytes that script writes to .scale/sf1."""
     from pyspark.sql import functions as F
     from emission_project_spark.catalog.tables import load_table
     from emission_project_spark.extensions.kmeans import (
@@ -352,10 +351,10 @@ def test_blas_assignment_matches_expression_path_sf1(spark):
         assign_clusters_blas,
         lloyd_centroids,
     )
+    from tools.gen_scale import scale_embeddings
 
-    sf1 = "/root/repo/.scale/sf1"
-    if not os.path.isdir(sf1):
-        pytest.skip("sf1 scale dataset not generated (run bench.py once)")
+    sf1 = str(tmp_path)
+    scale_embeddings("/root/testdata/sf0.1", sf1, 10, 20260813)
     emb = load_table(spark, sf1, "embeddings")
     vecs = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
     cents = lloyd_centroids(vecs, 20, 2)
