@@ -1,1 +1,1 @@
-from emission_project_spark.catalog.tables import TESTDATA_TABLES, load_table, load_tables  # noqa: F401
+from emission_project_spark.catalog.tables import TESTDATA_TABLES, load_table  # noqa: F401

@@ -64,9 +64,6 @@ TESTDATA_TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 class ParquetLayout(NamedTuple):
     """Footer facts summed over a table's parquet files."""
 
@@ -337,10 +334,3 @@ def _normalize_ntz(df: DataFrame, dtypes: dict[str, str]) -> DataFrame:
         if t == "timestamp_ntz":
             df = df.withColumn(c, F.col(c).cast("timestamp"))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str | None = None) -> dict[str, DataFrame]:
-    """Load every testdata table as a dict of DataFrames."""
-    sf_dir = sf_dir or DEFAULT_SF_DIR
-    return {name: load_table(spark, sf_dir, name) for name in TESTDATA_TABLES}
-

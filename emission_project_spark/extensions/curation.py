@@ -159,7 +159,8 @@ def length_percentiles(
 
     Exact ``percentile`` is a sort-based aggregate — correct but
     memory-bound per group; it is the oracle-checkable form. At 100 TB
-    use :func:`length_percentiles_approx` (mergeable t-digest sketch).
+    ``percentile_approx`` (a mergeable sketch, one pass, fixed memory
+    per group) is the drop-in replacement.
     """
     aggs = [
         F.count(F.lit(1)).alias("n_docs"),
@@ -170,23 +171,6 @@ def length_percentiles(
             F.round(F.expr(f"percentile({value_col}, {p})"), 6).alias(
                 f"p{int(p * 100)}"
             )
-        )
-    return df.groupBy(*strata).agg(*aggs)
-
-
-def length_percentiles_approx(
-    df: DataFrame,
-    strata: Sequence[str],
-    value_col: str,
-    percentiles: Sequence[float] = (0.25, 0.5, 0.75, 0.95),
-    accuracy: int = 10000,
-) -> DataFrame:
-    """Sketch-based percentiles: single pass, fixed memory per group,
-    mergeable partials — the 100 TB path (no global sort)."""
-    aggs = [F.count(F.lit(1)).alias("n_docs")]
-    for p in percentiles:
-        aggs.append(
-            F.percentile_approx(value_col, p, accuracy).alias(f"p{int(p * 100)}")
         )
     return df.groupBy(*strata).agg(*aggs)
 

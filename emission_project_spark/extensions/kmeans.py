@@ -25,8 +25,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from emission_project_spark.functions.vectors import row_matrix
-
 GRID = 6  # decimal rounding grid for recomputed centroids
 
 
@@ -64,84 +62,6 @@ def assign_clusters(vecs: DataFrame, centroids: DataFrame) -> DataFrame:
     )
     return best.select(
         "vec_id", "e", F.col("_best.cid").alias("cluster_id"), F.col("_best.d2").alias("d2")
-    )
-
-
-def assign_clusters_blas(vecs: DataFrame, centroids: DataFrame) -> DataFrame:
-    """Large-k assignment: one NumPy/BLAS matmul per Arrow batch.
-
-    The expression path (``assign_clusters``) evaluates a zip_with +
-    fold per (vector, centroid) pair — fine at k≈8, but at k=80 over
-    200k vectors that is 16M interpreted 64-element folds and it
-    dominates the Lloyd round (measured 385 s at the 100× dataset).
-    Here the k centroids are collected to the driver (k·dim doubles —
-    bounded and tiny; the same eager step Spark MLlib's KMeans takes)
-    and shipped in the task closure; each Arrow batch computes
-    ``‖x‖² + ‖c‖² − 2·X·Cᵀ`` as one matmul and takes the row argmin
-    (centroids sorted by cid, so argmin's first-match rule reproduces
-    the (d2, cid) tie-break).
-
-    Float association differs from the expression fold at the ulp
-    level, so this is NOT the path behind the SQL-oracle-checked rows
-    (the Lloyd operators use ``assign_clusters``); assignments agree
-    exactly on the test corpora (tests/test_extensions.py) and the
-    method exists for the regime the oracle can't reach — large k at
-    corpus scale, called directly.
-    """
-    import numpy as np
-    import pandas as pd
-
-    rows = centroids.orderBy("cid").collect()
-    cids = np.array([r["cid"] for r in rows], dtype=np.int64)
-    cmat = row_matrix(r["ce"] for r in rows)
-    cnorm = (cmat * cmat).sum(axis=1)
-
-    def compute(batches):
-        # Reused-buffer discipline (round 13, the similarity.py:328
-        # pattern): the old expression faulted three fresh (n, k)
-        # float64 matrices per Arrow batch (GEMM output, broadcast sum,
-        # final d2) plus an (n, d) square temp — on this host
-        # first-touch of fresh anonymous pages runs up to 150× slower
-        # than resident rewrite (SCALING.md round 12), so allocation
-        # churn, not FLOPs, set the kernel's speed between windows. Two
-        # hoisted buffers grown to the largest batch absorb every
-        # batch; every op keeps its original operand order so outputs
-        # are bit-identical (pinned by a ragged-batch test).
-        k = len(cids)
-        dot = np.empty((0, k))
-        d2b = np.empty((0, k))
-        for pdf in batches:
-            n = len(pdf)
-            if not n:
-                continue
-            if n > dot.shape[0]:
-                dot = np.empty((n, k))
-                d2b = np.empty((n, k))
-            x = row_matrix(pdf["e"])
-            db, sb = dot[:n], d2b[:n]
-            np.dot(x, cmat.T, out=db)
-            db *= 2.0  # exact ×2: bit-identical to 2.0 * (x @ cmat.T)
-            np.multiply(x, x, out=x)  # x is dead after the GEMM
-            np.add(x.sum(axis=1)[:, None], cnorm[None, :], out=sb)
-            np.subtract(sb, db, out=sb)
-            np.maximum(sb, 0.0, out=sb)
-            idx = sb.argmin(axis=1)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "e": pdf["e"],
-                    "cluster_id": cids[idx],
-                    "d2": sb[np.arange(len(idx)), idx],
-                }
-            )
-
-    # spread: the batch GEMMs are map-side on the scan, which holds one
-    # populated partition per row group (catalog.tables.spread_input);
-    # no-op when wide
-    from emission_project_spark.catalog.tables import spread_input
-
-    return spread_input(vecs).mapInPandas(
-        compute, schema="vec_id bigint, e array<double>, cluster_id bigint, d2 double"
     )
 
 

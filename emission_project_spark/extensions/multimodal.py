@@ -1,4 +1,4 @@
-"""Multimodal columns: image/audio/video as opaque binary + metadata.
+"""Multimodal columns: image/video as opaque binary + metadata.
 
 The Spark-side plumbing is real — typed schema, Arrow-batched
 ``mapInPandas`` feature extraction, partition-size control — and
@@ -24,10 +24,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-MEDIA_META_SCHEMA = (
-    "doc_id bigint, media_type string, n_bytes bigint, content_md5 string"
-)
-
 FEATURE_SCHEMA = (
     "doc_id bigint, media_type string, width int, height int, n_frames int, ok boolean"
 )
@@ -41,16 +37,6 @@ def attach_payload(docs: DataFrame, text_col: str = "text") -> DataFrame:
         "doc_id",
         F.lit("image/fake").alias("media_type"),
         F.encode(F.col(text_col), "UTF-8").alias("payload"),
-    )
-
-
-def payload_meta(media: DataFrame) -> DataFrame:
-    """Typed metadata without decoding — pure JVM expressions."""
-    return media.select(
-        "doc_id",
-        "media_type",
-        F.octet_length("payload").cast("long").alias("n_bytes"),
-        F.md5("payload").alias("content_md5"),
     )
 
 
@@ -330,99 +316,4 @@ def phash_candidate_pairs(
         small.select(F.explode(pair_structs).alias("p"))
         .select("p.doc_a", "p.doc_b", "p.hamming")
         .distinct()
-    )
-
-
-def phash_neardup_pairs(
-    hashes: DataFrame,
-    bands: int = 4,
-    max_hamming: int = 3,
-    max_bucket: int = 256,
-) -> DataFrame:
-    """(doc_a, doc_b, hamming) for pairs within ``max_hamming`` bits.
-
-    Pigeonhole-complete when ``max_hamming < bands`` (a closer pair
-    must share one exact 16-bit band). The candidate relation comes
-    from ``phash_candidate_pairs``; this layer is just the threshold.
-    """
-    if max_hamming >= bands:
-        raise ValueError(
-            f"recall guarantee needs max_hamming < bands "
-            f"({max_hamming} >= {bands})"
-        )
-    return phash_candidate_pairs(
-        hashes, bands=bands, max_bucket=max_bucket
-    ).filter(F.col("hamming") <= max_hamming)
-
-
-# ---------------------------------------------------------------------------
-# Audio: frame-energy segmentation (the VAD/silence-trim primitive).
-# Same stub discipline as the image path: the PCM "decode" is a
-# deterministic byte->int8-sample stand-in here, and the Spark-side
-# shape - Arrow batches in, bounded per-row output (segments, not
-# samples) - is the real design. A 100 TB audio corpus never ships
-# samples through a shuffle: each payload collapses to its segment
-# list inside the scan task.
-
-
-def pcm_fake(payload: bytes) -> "list[int]":
-    """Deterministic stand-in decoder: payload bytes as int8 samples."""
-    return [b - 256 if b >= 128 else b for b in payload]
-
-
-def audio_energy_segments(
-    media: DataFrame,
-    decoder: Callable[[bytes], "list[int]"] = pcm_fake,
-    frame: int = 256,
-    threshold: float = 1000.0,
-) -> DataFrame:
-    """(doc_id, seg_start, seg_end, n_frames, mean_energy) per active
-    segment: frames of ``frame`` samples score mean-square energy;
-    consecutive frames above ``threshold`` merge into one segment.
-    Frame indices, not samples, leave the task."""
-    _pickle_by_value()
-
-    def segs(samples: "list[int]") -> "list[tuple[int, int, int, float]]":
-        out = []
-        cur = None  # [start, end, sum_energy]
-        nf = len(samples) // frame
-        for i in range(nf):
-            chunk = samples[i * frame : (i + 1) * frame]
-            e = sum(v * v for v in chunk) / frame
-            if e >= threshold:
-                if cur is None:
-                    cur = [i, i, e]
-                else:
-                    cur[1] = i
-                    cur[2] += e
-            elif cur is not None:
-                out.append((cur[0], cur[1], cur[1] - cur[0] + 1, cur[2]))
-                cur = None
-        if cur is not None:
-            out.append((cur[0], cur[1], cur[1] - cur[0] + 1, cur[2]))
-        return out
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                for s, e, n, tot in segs(decoder(bytes(payload))):
-                    rows.append(
-                        (int(doc_id), s, e, n, round(tot / n, 4))
-                    )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "doc_id", "seg_start", "seg_end",
-                        "n_frames", "mean_energy",
-                    ],
-                )
-
-    return media.select("doc_id", "payload").mapInPandas(
-        gen,
-        schema=(
-            "doc_id bigint, seg_start int, seg_end int, "
-            "n_frames int, mean_energy double"
-        ),
     )

@@ -77,17 +77,6 @@ def count_min_estimate(
     )
 
 
-def count_min_merge(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Merge two sketches built with the same (depth, width): cell-wise
-    addition — the property that lets disjoint corpus shards sketch
-    independently and combine."""
-    return (
-        a.unionByName(b)
-        .groupBy("depth", "bucket")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-
-
 # --- Bloom filter (Bloom '70), sparse representation -----------------
 # The membership companion to the count-min sketch: the filter is the
 # DISTINCT (row, bit) table of the keys' hash positions (≤ depth·width
@@ -142,30 +131,3 @@ def bloom_contains(
         .groupBy(key_col)
         .agg((F.sum(hit) == depth).alias("possibly_present"))
     )
-
-
-def count_min_inner_product(a: DataFrame, b: DataFrame) -> DataFrame:
-    """AMS-style inner-product estimate from two count-min sketches
-    built with the same hash family: per depth row, the dot product of
-    the two counter vectors; the estimate is the MIN over rows
-    (Cormode & Muthukrishnan '05 §4.2). For frequency vectors f, g
-    this estimates Σ_k f(k)·g(k) — the JOIN SIZE of the two keyed
-    relations — and with a = b it is the second frequency moment F2
-    (self-join size), the canonical key-skew statistic. Provably ≥ the
-    true value (hash collisions only ever add mass).
-
-    Scale shape: both operands are ≤ depth·width cell rows, so the
-    join and both aggregates are sketch-sized — the ability to price a
-    join (or measure skew) WITHOUT executing it is the point at 100 TB:
-    shards sketch independently, merge cell-wise, and the planner reads
-    one number. Returns one row: ``estimate``."""
-    per_row = (
-        a.select("depth", "bucket", F.col("cnt").alias("_ca"))
-        .join(
-            b.select("depth", "bucket", F.col("cnt").alias("_cb")),
-            ["depth", "bucket"],
-        )
-        .groupBy("depth")
-        .agg(F.sum(F.col("_ca") * F.col("_cb")).alias("_ip"))
-    )
-    return per_row.agg(F.min("_ip").alias("estimate"))

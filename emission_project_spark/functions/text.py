@@ -90,14 +90,6 @@ def fingerprint(c: Column | str) -> Column:
 # array-HOF/JVM expressions over one tokenization.
 
 
-def distinct_token_ratio(c: Column | str) -> Column:
-    """distinct tokens / tokens — collapses toward 0 on loops of the
-    same words (the most common crawl-spam shape)."""
-    toks = tokens(F.lower(_c(c)))
-    n = F.size(toks)
-    return F.when(n > 0, F.size(F.array_distinct(toks)) / n).otherwise(F.lit(0.0))
-
-
 def duplicate_line_fraction(c: Column | str) -> Column:
     """Fraction of lines that are exact repeats of an earlier line —
     boilerplate/navigation detection for crawled pages."""

@@ -90,12 +90,3 @@ def contract_violations(df: DataFrame, contract: TableContract) -> DataFrame:
     return agg.selectExpr(
         f"stack({len(names)}, {pairs}) as (check_name, violations)"
     )
-
-
-def validate_contract(df: DataFrame, contract: TableContract) -> dict[str, int]:
-    """Eager convenience wrapper: ``{check_name: violations}`` (one
-    collect of len(checks) rows)."""
-    return {
-        r.check_name: int(r.violations)
-        for r in contract_violations(df, contract).collect()
-    }

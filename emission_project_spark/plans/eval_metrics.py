@@ -256,9 +256,8 @@ def similarity_ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- projection onto a FIXED 2-component loading matrix — the
-# oracle-checkable half of the PCA surface (the eigendecomposition
-# itself lives in extensions/pca.py, numpy-exact pytest-pinned; a
-# trained component matrix is deployed as literals exactly like this).
+# oracle-checkable half of the PCA surface (a trained component matrix
+# is deployed as literals exactly like this).
 # Loadings are multiples of 1/8 so every literal is binary-exact in
 # both engines; the dot is the house sequential fold. Map-side only:
 # zero shuffles at any scale.
@@ -1075,13 +1074,11 @@ def multimodal_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- batch twin of streaming/stateful.py::last_touch_attribution —
-# the sixth streaming/batch pairing on the driver ledger (alongside
-# user totals, dedup, interval join, sessionize, PSI). The streaming
-# operator's per-purchase emissions, grouped by channel, equal exactly
-# this aggregate over ordered bounded input
-# (tests/test_streaming.py pins the micro-batch path against it); the
-# plan is the same one window pass as events_attribution_last_touch.
+# --- last-touch attribution per channel: a streaming operator that
+# keeps each user's latest touch as state and credits every purchase
+# to it emits per-purchase rows whose per-channel aggregate over
+# ordered bounded input is exactly this; the plan is the same one
+# window pass as events_attribution_last_touch.
 @register(
     "stream_attribution_batch",
     oracle="""

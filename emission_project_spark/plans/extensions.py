@@ -306,7 +306,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- Batch twin of the streaming near-dup filter (streaming/dedup.py
-# minhash_keyed → dedup_stream): the per-ROW band-0 minhash bucket —
+# minhash_keyed → dropDuplicates on the bucket): the per-ROW band-0
+# minhash bucket —
 # a narrow expression with no explode/shuffle, which is what makes it
 # legal upstream of a stateful streaming dedup — grouped to the
 # deterministic survivor (min doc id; streaming first-arrival order is
@@ -942,8 +943,8 @@ def embedding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- Per-dimension moments of the embedding corpus: the first stage
-# of distributed PCA (extensions/pca.py — whose eigendecomposition has
-# no SQL form and is pytest-pinned against numpy instead). posexplode
+# of PCA (the eigendecomposition that follows has no SQL form).
+# posexplode
 # keeps the whole pass in JVM built-ins: one explode (d rows per
 # vector, streamed — never materialized per-row in Python) and one
 # hash aggregate on the 64-value dim key. var_pop on both engines is
@@ -975,16 +976,12 @@ def embedding_dim_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- Cross-moment (covariance) block of the leading 8 dimensions:
-# the SQL-expressible heart of distributed PCA's stage 1 — per-pair
-# E[x_i·x_j] − E[x_i]·E[x_j] — oracle-checked where the full d×d BLAS
-# moment pass (extensions/pca.py, map-side dgemm → one 4,161-group JVM
-# aggregate) has no SQL form and is pytest-pinned against numpy. The
-# block is FIXED at 8×8 (upper triangle, 36 cells): the d²-per-row
-# explode this plan uses is the verification form, bounded at 36 cells
-# per vector regardless of corpus size, and the map-side partial
-# aggregate collapses it to 36 groups before the exchange — the BLAS
-# path remains the production form for full-width d. test_pca.py
-# bridges the two: fit_pca's covariance sub-block equals these rows.
+# the SQL-expressible heart of PCA's stage 1 — per-pair
+# E[x_i·x_j] − E[x_i]·E[x_j], oracle-checked. The block is FIXED at
+# 8×8 (upper triangle, 36 cells): the d²-per-row explode is bounded at
+# 36 cells per vector regardless of corpus size, and the map-side
+# partial aggregate collapses it to 36 groups before the exchange.
+# tests/test_pca.py pins these rows against the numpy covariance.
 @register(
     "embedding_covariance_block",
     oracle="""
@@ -1746,13 +1743,9 @@ def curation_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- Batch twin of the stateful streaming operator
-# (streaming/stateful.py:27 running_user_totals): the whole-history
-# per-user (count, sum) that applyInPandasWithState maintains
-# incrementally is, over a bounded input, exactly this grouped
-# aggregate — registering it gives the stateful surface an
-# oracle-checked correctness row (tests/test_streaming.py proves the
-# micro-batch path converges to the same totals).
+# --- Whole-history per-user (count, sum): what a stateful stream
+# keeping per-user running totals converges to over a bounded input is
+# exactly this grouped aggregate.
 @register(
     "stream_user_totals_batch",
     oracle="""
@@ -1772,12 +1765,11 @@ def stream_user_totals_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- Batch twin of the watermark-bounded streaming dedup
-# (streaming/dedup.py dedup_stream_within_watermark): over a bounded
-# input whose re-deliveries land inside the horizon, the streaming
-# operator emits the first-arriving row per key — i.e. earliest event
-# time wins (tiebreak pinned to event_id for oracle stability).
-# tests/test_streaming.py::test_streaming_dedup_within_watermark proves
-# the streaming path; this row proves the SEMANTICS against SQL.
+# (``dropDuplicatesWithinWatermark``): over a bounded input whose
+# re-deliveries land inside the horizon, the streaming dedup emits the
+# first-arriving row per key — i.e. earliest event time wins (tiebreak
+# pinned to event_id for oracle stability). This row proves the
+# SEMANTICS against SQL.
 @register(
     "stream_dedup_watermark_batch",
     oracle="""
@@ -3177,14 +3169,11 @@ def curation_train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-# --- Batch twin of the stateful streaming top-k (streaming/stateful.py
-# topk_per_key): over a bounded input the maintained O(k)-per-key heap
-# converges to exactly the rank query below (value desc, event_id asc
-# total order — tie-deterministic). tests/test_streaming.py::
-# test_streaming_stateful_topk proves the cross-micro-batch path
-# (early-batch values survive displacement attempts); this row pins the
-# semantics against SQL. The batch plan itself is the WindowGroupLimit
-# shape: partial top-k runs map-side before the shuffle.
+# --- Top-k values per user: over a bounded input a streaming
+# O(k)-per-key heap converges to exactly the rank query below (value
+# desc, event_id asc total order — tie-deterministic). The batch plan
+# is the WindowGroupLimit shape: partial top-k runs map-side before
+# the shuffle.
 @register(
     "stream_topk_values_batch",
     oracle="""
@@ -3594,9 +3583,10 @@ def stream_psi_drift_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # themselves (Cormode & Muthukrishnan '05 §4.2) next to the exact
 # value and the >= bound check. F2 is the canonical key-skew number a
 # planner wants BEFORE paying for a join: shards sketch independently
-# (count_min_merge), and pricing the self-join reads depth*width cells
-# instead of shuffling the fact table. The md5 hash family makes every
-# cell — and therefore the estimate — exactly reproducible in SQL.
+# (cell-wise sums merge them), and pricing the self-join reads
+# depth*width cells instead of shuffling the fact table. The md5 hash
+# family makes every cell — and therefore the estimate — exactly
+# reproducible in SQL.
 @register(
     "sketch_f2_selfjoin_events",
     oracle="""
@@ -3633,8 +3623,7 @@ def sketch_f2_selfjoin_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (1024) is too narrow once n^2 dwarfs F2, so the F2 sketch runs
     # wide (8192 cells/row is still a KB-scale broadcast). Self-join
     # special case: sum(cnt^2) per depth row directly — one sketch
-    # build, no self-join (count_min_inner_product is the two-relation
-    # general form and computes the identical quantity for a = b).
+    # build, no self-join.
     sk = count_min_build(terms, width=8192)
     est = (
         sk.groupBy("depth")

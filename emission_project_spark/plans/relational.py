@@ -534,9 +534,9 @@ def window_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- Streaming batch-equivalent: tumbling-window aggregation over the
-# events stream (streaming/ has the readStream twin; this is the
-# deterministic batch semantics the oracle can check).
+# --- Tumbling-window aggregation over the events: the deterministic
+# batch semantics of a watermarked streaming window, which the oracle
+# can check.
 @register(
     "events_tumbling_hourly",
     oracle="""
@@ -740,8 +740,9 @@ def dim_fk_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("s_suppkey", "s_name", "nation_name")
 
 
-# --- Session windows over the events stream (streaming/file_stream.py
-# twin; batch semantics oracle-checked via gaps-and-islands SQL).
+# --- Session windows over the events (streaming/stateful.py
+# session_window_totals on a batch frame; oracle-checked via
+# gaps-and-islands SQL).
 # Session break rule: new session only when the gap STRICTLY exceeds
 # 30 min — session_window merges an event landing exactly at the open
 # session's end (max_ts + gap), i.e. the boundary is closed (pinned by
@@ -773,17 +774,10 @@ def dim_fk_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from emission_project_spark.streaming.file_stream import session_windows
+    from emission_project_spark.streaming.stateful import session_window_totals
 
     e = load_table(spark, sf_dir, "events")
-    out = session_windows(e, gap="30 minutes", watermark=None)
-    return out.select(
-        "user_id",
-        "session_start",
-        "session_end",
-        "n_events",
-        F.round("total_value", 4).alias("total_value"),
-    )
+    return session_window_totals(e, key="user_id", ts_col="ts", gap="30 minutes")
 
 
 # --- As-of join (operators/asof.py): each click gets the most recent

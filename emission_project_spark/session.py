@@ -83,24 +83,3 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def v2_parquet_conf() -> dict[str, str]:
-    """Opt-in DataSource-V2 parquet read path with aggregate pushdown.
-
-    ``get_spark(extra_conf=v2_parquet_conf())`` makes filterless
-    COUNT / MIN / MAX probes answer from parquet FOOTER STATISTICS
-    instead of scanning data (``PushedAggregation`` in the plan) — at
-    100 TB the reference's count-guard probe (SURVEY §2.1 S5) becomes
-    a metadata-only operation. Opt-in rather than default: the engine's
-    oracle surface is verified on the battle-tested V1 reader, and the
-    pushdown only helps the probe-shaped queries; correctness +
-    pushed-plan shape under V2 are pinned by
-    tests/test_operators.py::test_v2_parquet_aggregate_pushdown.
-    """
-    return {
-        "spark.sql.parquet.aggregatePushdown": "true",
-        # keep every non-parquet source on V1; removing 'parquet' from
-        # the default list is what activates the V2 scan
-        "spark.sql.sources.useV1SourceList": "avro,csv,json,kafka,orc,text",
-    }

@@ -9,9 +9,9 @@ Spark-first notes:
 - explicit ``StructType`` on the scan — no inference pass, no drift
 - the reference archives BEFORE the load, so a mid-run crash loses the
   batch (SURVEY §4.5); we expose ``archive_consumed`` for the caller to
-  invoke AFTER its write commits — crash-safe ordering. The streaming
-  twin (streaming/file_stream.py) gets the same guarantee from
-  ``cleanSource='archive'`` + checkpointing.
+  invoke AFTER its write commits — crash-safe ordering. This module is
+  the only file-drop ingest path: the product is the scheduled batch
+  tick, so there is no streaming file source beside it.
 - at 100 TB a "feed" is a directory of many files; everything here is
   glob-based, not single-file.
 """

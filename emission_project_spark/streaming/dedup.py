@@ -1,21 +1,15 @@
-"""Streaming deduplication — the streaming twin of the batch dedup
-surface (extensions/dedup.py).
+"""Dual-mode dedup and join operators: each runs on a streaming frame
+and on a batch frame, and a registered query runs its batch form.
 
-A corpus ingest stream re-delivers documents (at-least-once sources,
-crawler re-fetches); the engine must emit each identity exactly once
-without ever holding the full history. Two regimes:
+- ``dedup_batch_earliest``: the batch form of Spark's
+  ``dropDuplicatesWithinWatermark`` (earliest row per key wins).
+- ``minhash_keyed``: a near-duplicate bucket as a narrow per-row
+  expression, so it may sit upstream of a stateful ``dropDuplicates``.
+- ``interval_join_streams``: the watermarked stream-stream range join,
+  with bounded state on both sides.
 
-- ``dedup_stream``: exact streaming dedup on a key via
-  ``dropDuplicates`` — state grows with distinct keys (bounded by the
-  keyspace; the right choice for id-keyed feeds).
-- ``dedup_stream_within_watermark``: ``dropDuplicatesWithinWatermark``
-  — state is bounded by the watermark horizon, the 100 TB answer when
-  the keyspace is unbounded but re-deliveries arrive within a known
-  lateness (re-fetches cluster in hours, not months). Spark evicts
-  per-key state once the watermark passes it.
-
-Both are engine-maintained state in the state store (RocksDB-backed on
-a cluster), partitioned by key — never driver-resident.
+On a stream the state lives in the state store (RocksDB-backed on a
+cluster), partitioned by key, never on the driver.
 """
 
 from __future__ import annotations
@@ -26,36 +20,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def dedup_stream(stream: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """Exact streaming dedup: first arrival per key wins, forever.
-    State = one entry per distinct key."""
-    return stream.dropDuplicates(list(keys))
-
-
-def dedup_stream_within_watermark(
-    stream: DataFrame,
-    keys: Sequence[str],
-    ts_col: str,
-    lateness: str = "10 minutes",
-) -> DataFrame:
-    """Streaming dedup with bounded state: duplicates are suppressed
-    only while their key is within the watermark horizon; state for
-    keys older than ``lateness`` is evicted. Use when re-deliveries
-    have bounded skew and the keyspace is unbounded."""
-    return stream.withWatermark(ts_col, lateness).dropDuplicatesWithinWatermark(
-        list(keys)
-    )
-
-
 def dedup_batch_earliest(
     df: DataFrame,
     keys: Sequence[str],
     ts_col: str,
     tiebreak_col: str,
 ) -> DataFrame:
-    """The BATCH TWIN of :func:`dedup_stream_within_watermark`: over a
+    """The batch form of ``dropDuplicatesWithinWatermark``: over a
     bounded input whose re-deliveries all arrive inside the lateness
-    horizon, the streaming operator emits exactly the first-arriving row
+    horizon, the streaming dedup emits exactly the first-arriving row
     per key — which, projected onto batch, is "earliest ``ts_col`` wins,
     ties broken by ``tiebreak_col``" (streaming first-arrival order is
     event time here; the explicit tiebreak pins what arrival order
@@ -76,14 +49,6 @@ def dedup_batch_earliest(
     )
 
 
-def content_keyed(stream: DataFrame, text_col: str = "text") -> DataFrame:
-    """Add the canonical content fingerprint as a dedup key (the
-    streaming analog of exact_duplicates' md5 identity)."""
-    from emission_project_spark.functions.text import fingerprint
-
-    return stream.withColumn("fingerprint", fingerprint(F.col(text_col)))
-
-
 def minhash_keyed(
     stream: DataFrame,
     text_col: str = "text",
@@ -94,8 +59,9 @@ def minhash_keyed(
     """Add a NEAR-dup bucket as a dedup key: the per-row minhash band
     signature (extensions/dedup.py ``minhash_bucket``) — near-identical
     texts agree on the band min and collapse to one key, so
-    ``dedup_stream(minhash_keyed(s), ["bucket"])`` (or the
-    within-watermark variant) is a streaming near-duplicate filter.
+    ``minhash_keyed(s).dropDuplicates(["bucket"])`` (or
+    ``dropDuplicatesWithinWatermark``) is a streaming near-duplicate
+    filter.
 
     The signature is a pure narrow expression — no explode, no
     aggregation — which is what makes it legal upstream of the stateful

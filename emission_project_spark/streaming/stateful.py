@@ -1,57 +1,17 @@
-"""Custom stateful streaming operators (``applyInPandasWithState``).
+"""Dual-mode windowed aggregates: one function serves a streaming frame
+and a batch frame.
 
-The reference has no stateful stream processing (its "Near Real-Time"
-is a daily batch tick, ``emission-dag.py:26``); this is the
-north-star extension surface: arbitrary per-key state maintained by
-the engine across micro-batches, with Arrow-batched pandas logic.
-
-Scale design: state lives in the state store (RocksDB-backed on a real
-cluster — ``spark.sql.streaming.stateStore.providerClass``), keyed and
-partitioned by the grouping key, so state size scales horizontally
-with executors, never through the driver. Watermark + timeout bound
-state growth for abandoned keys.
+On a streaming frame each operator attaches a watermark and the engine
+keeps per-key window state in the state store (RocksDB-backed on a
+cluster, partitioned by the grouping key, never on the driver); a window
+finalizes once the watermark passes its end, so state stays bounded. On
+a batch frame the identical expression compiles to a plain aggregation,
+which is what the registered queries run and the DuckDB oracle checks.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-RUNNING_TOTALS_SCHEMA = "user_id bigint, n_events bigint, total_value double"
-_STATE_SCHEMA = "n bigint, total double"
-
-
-def running_user_totals(events: DataFrame) -> DataFrame:
-    """Per-user running (count, sum) maintained across micro-batches.
-
-    Emits one updated row per user per micro-batch — the streaming
-    equivalent of an ever-growing ``groupBy(user).agg(count, sum)``
-    that a plain watermarked aggregation can't express (no window:
-    totals are over the whole stream's history).
-    """
-
-    def update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        n, total = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        state.update((n, total))
-        yield pd.DataFrame(
-            [[key[0], n, total]], columns=["user_id", "n_events", "total_value"]
-        )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=RUNNING_TOTALS_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
 
 
 def windowed_distinct_users(
@@ -113,14 +73,10 @@ def session_window_totals(
     state store, merging across micro-batches and finalizing a session
     once the watermark passes its end — bounded state (open sessions
     only), the 100 TB/day pattern. On a batch frame the identical
-    expression compiles to a plain aggregation, which is what the
-    oracle-checked twin (plans/extensions.py stream_sessionize_batch)
-    verifies the semantics against.
-
-    The lag-based batch sessionizer (events_sessionize,
-    plans/relational.py) assigns ordinal session ids with analytic
-    windows; this operator is the windowed-aggregate formulation the
-    streaming engine can run incrementally.
+    expression compiles to a plain aggregation, which the
+    registered queries ``events_sessionize`` (plans/relational.py) and
+    ``stream_sessionize_batch`` (plans/extensions.py) run, and their
+    gaps-and-islands oracles check the semantics against.
     """
     from pyspark.sql import functions as F
 
@@ -140,336 +96,4 @@ def session_window_totals(
             "n_events",
             "total_value",
         )
-    )
-
-
-TOPK_SCHEMA = "user_id bigint, rank int, event_id bigint, value double"
-_TOPK_STATE_SCHEMA = "values array<double>, ids array<bigint>"
-
-
-def topk_per_key(events: DataFrame, k: int = 3) -> DataFrame:
-    """Per-key top-k maintained across micro-batches: each key's state
-    is the current k best (value, event_id) pairs — a bounded heap, so
-    state is O(k) per key FOREVER, no matter how many events stream by
-    (contrast a windowed rank, which buffers a window's worth).
-    Ordering is total (value desc, then event_id asc) so the result is
-    deterministic under ties and replay.
-
-    Emits each key's refreshed top-k every micro-batch that touches
-    the key (update mode — the "trending items per user" dashboard
-    feed). The oracle-checked batch twin
-    (plans/extensions.py stream_topk_values_batch) pins the semantics:
-    over a bounded input the maintained top-k is exactly the
-    row_number() <= k rank query.
-    """
-
-    def update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            vals, ids = state.get
-            best = list(zip(vals, ids))
-        else:
-            best = []
-        for pdf in pdfs:
-            best.extend(zip(pdf["value"].tolist(), pdf["event_id"].tolist()))
-        # total order: value desc, event_id asc — ties deterministic
-        best.sort(key=lambda p: (-p[0], p[1]))
-        best = best[:k]
-        state.update(([v for v, _ in best], [i for _, i in best]))
-        yield pd.DataFrame(
-            [
-                [key[0], rank + 1, int(i), float(v)]
-                for rank, (v, i) in enumerate(best)
-            ],
-            columns=["user_id", "rank", "event_id", "value"],
-        )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=TOPK_SCHEMA,
-        stateStructType=_TOPK_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-INACTIVITY_SCHEMA = "user_id bigint, last_ts timestamp, n_events bigint, expired boolean"
-_INACT_STATE_SCHEMA = "last_us bigint, n bigint"
-
-
-def inactivity_monitor(
-    events: DataFrame,
-    gap_seconds: int = 1800,
-    lateness: str = "10 minutes",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Event-time inactivity detection: a user's state expires — and an
-    ``expired=true`` row emits — once the WATERMARK passes their last
-    event + ``gap_seconds``. The streaming primitive behind session-
-    expiry notifications, cart-abandonment triggers, and liveness
-    alerts: the "nothing happened" signal that no window aggregation
-    can produce, because it fires on the ABSENCE of data.
-
-    Mechanics (``GroupStateTimeout.EventTimeTimeout``): each update
-    sets the state's timeout timestamp to ``last_ts + gap``; when the
-    watermark (driven by OTHER keys' events) crosses it, the engine
-    invokes the function with ``state.hasTimedOut`` and no rows — emit
-    the expiry row, drop the state. State is O(1) per live key and
-    self-cleaning: expired keys leave the store, the 100 TB/day
-    requirement a NoTimeout design can't meet.
-    """
-
-    def update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            last_us, n = state.get
-            state.remove()
-            yield pd.DataFrame(
-                [[key[0], pd.Timestamp(last_us, unit="us"), n, True]],
-                columns=["user_id", "last_ts", "n_events", "expired"],
-            )
-            return
-        last_us, n = state.get if state.exists else (0, 0)
-        for pdf in pdfs:
-            n += len(pdf)
-            batch_max = int(pd.to_datetime(pdf[ts_col]).astype("int64").max() // 1000)
-            last_us = max(last_us, batch_max)
-        state.update((last_us, n))
-        state.setTimeoutTimestamp(last_us // 1000 + gap_seconds * 1000)
-        yield pd.DataFrame(
-            [[key[0], pd.Timestamp(last_us, unit="us"), n, False]],
-            columns=["user_id", "last_ts", "n_events", "expired"],
-        )
-
-    return (
-        events.withWatermark(ts_col, lateness)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType=INACTIVITY_SCHEMA,
-            stateStructType=_INACT_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-ATTRIBUTION_SCHEMA = "user_id bigint, purchase_id bigint, channel string, value double"
-_ATTR_STATE_SCHEMA = "last_us bigint, last_id bigint, last_type string"
-
-_TOUCH_TYPES = ("click", "view", "signup")
-
-
-def last_touch_attribution(events: DataFrame, ts_col: str = "ts") -> DataFrame:
-    """Streaming last-touch attribution: every purchase is credited to
-    the user's most recent PRECEDING touch event (click/view/signup),
-    'direct' if none — emitted the moment the purchase flows by, not
-    at end-of-day. This is the streaming twin of the oracle-checked
-    ``events_attribution_last_touch`` batch query: over a bounded
-    input, grouping this operator's per-purchase emissions by channel
-    reproduces that query's aggregate exactly (pinned in
-    tests/test_streaming.py).
-
-    State per user is O(1) FOREVER — just the latest touch's
-    (timestamp, event_id, type) triple — which is what makes the
-    operator run at clickstream scale: a window-function restatement
-    needs the user's whole history in the frame, this needs 24 bytes.
-    Within a micro-batch rows are processed in (ts, event_id) order
-    and ACROSS batches the state carries the last touch, so a
-    purchase in batch N+1 credits a touch from batch N; ties on
-    timestamp resolve to the higher event_id, matching the batch
-    twin's window ordering.
-
-    ORDERING CONTRACT (the scope of the batch-parity claim): parity
-    with ``events_attribution_last_touch`` holds only when events
-    arrive across micro-batches in event-time order per user — the
-    at-scale shape when the source is a per-user-keyed, time-ordered
-    log (e.g. a Kafka topic keyed by user_id). A purchase that lands
-    in a LATER batch than a touch with a LATER timestamp is credited
-    against the state as of its arrival batch, and a late-arriving
-    touch cannot retro-credit an already-emitted purchase: emission
-    is immediate (``NoTimeout``) and append-mode output is
-    immutable. Callers with out-of-order sources must buffer per-user
-    rows behind a watermark upstream (``with_watermark`` + a
-    sort-within-batch stage) before this operator; the operator
-    itself deliberately does not buffer, because unbounded
-    reorder-tolerance would reintroduce the O(history) state this
-    design exists to avoid.
-    """
-
-    def update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        last_us, last_id, last_type = (
-            state.get if state.exists else (-1, -1, None)
-        )
-        out: list[list] = []
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        rows["_us"] = pd.to_datetime(rows[ts_col]).astype("int64") // 1000
-        rows = rows.sort_values(["_us", "event_id"], kind="mergesort")
-        for _, r in rows.iterrows():
-            et = r["event_type"]
-            if et == "purchase":
-                channel = last_type if last_type is not None else "direct"
-                out.append([key[0], int(r["event_id"]), channel, float(r["value"])])
-            elif et in _TOUCH_TYPES:
-                us, eid = int(r["_us"]), int(r["event_id"])
-                # same-timestamp touches: higher event_id wins (the
-                # batch twin orders by (ts, event_id) too)
-                if (us, eid) > (last_us, last_id):
-                    last_us, last_id, last_type = us, eid, et
-        state.update((last_us, last_id, last_type))
-        if out:
-            yield pd.DataFrame(
-                out, columns=["user_id", "purchase_id", "channel", "value"]
-            )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=ATTRIBUTION_SCHEMA,
-        stateStructType=_ATTR_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-RATE_LIMIT_SCHEMA = (
-    "user_id bigint, event_id bigint, accepted boolean, tokens_after double"
-)
-_RATE_STATE_SCHEMA = "tokens double, last_us bigint"
-
-
-def rate_limit_token_bucket(
-    events: DataFrame,
-    capacity: float = 3.0,
-    refill_per_sec: float = 1.0,
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Per-user token-bucket rate limiter: every event is emitted with
-    an ``accepted`` verdict; a user starts with a full bucket, each
-    accepted event spends one token, and tokens refill continuously at
-    ``refill_per_sec`` up to ``capacity`` — the standard ingestion
-    guard against scrapers/bots ahead of an expensive enrichment
-    stage, expressed as a stream transform rather than an edge proxy.
-
-    State per user is O(1) FOREVER: (tokens, last-event-µs) — 16
-    bytes, which is why it runs at clickstream scale. The refill
-    recurrence tokens' = min(cap, tokens + Δt·rate) is inherently
-    sequential per user (not window-expressible in SQL — no oracle
-    form; the pytest pins replay the recurrence by hand). Same
-    ORDERING CONTRACT as last_touch_attribution: rows are processed
-    in (ts, event_id) order within a batch and the verdicts match the
-    single-pass replay only for event-time-ordered arrival across
-    batches.
-    """
-
-    def update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        tokens, last_us = state.get if state.exists else (capacity, -1)
-        out: list[list] = []
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        rows["_us"] = pd.to_datetime(rows[ts_col]).astype("int64") // 1000
-        rows = rows.sort_values(["_us", "event_id"], kind="mergesort")
-        for _, r in rows.iterrows():
-            us = int(r["_us"])
-            if last_us >= 0 and us > last_us:
-                tokens = min(
-                    capacity, tokens + (us - last_us) / 1e6 * refill_per_sec
-                )
-            last_us = max(last_us, us)
-            accepted = tokens >= 1.0
-            if accepted:
-                tokens -= 1.0
-            out.append([key[0], int(r["event_id"]), accepted, tokens])
-        state.update((tokens, last_us))
-        if out:
-            yield pd.DataFrame(
-                out,
-                columns=["user_id", "event_id", "accepted", "tokens_after"],
-            )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=RATE_LIMIT_SCHEMA,
-        stateStructType=_RATE_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-EWMA_SCHEMA = (
-    "key string, event_id bigint, value double, ewma double, "
-    "zscore double, anomaly boolean"
-)
-_EWMA_STATE_SCHEMA = "mean double, var double, n bigint"
-
-
-def ewma_anomaly_monitor(
-    events: DataFrame,
-    key_col: str = "event_type",
-    alpha: float = 0.3,
-    z_threshold: float = 3.0,
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Per-key exponentially-weighted mean/variance with an online
-    z-score per event — the streaming twin of the batch anomaly
-    queries (events_anomaly_zscore / _mad) for when "is this value
-    weird" must be answered AT ARRIVAL, not in tomorrow's batch.
-
-    Each event is scored against the state BEFORE it updates the
-    state (an outlier must not vouch for itself); the first event of
-    a key has no baseline and scores NULL/non-anomalous. EWMA update:
-    mean' = mean + α·δ, var' = (1−α)·(var + α·δ²) (West 1979) — O(1)
-    state per key, sequential per key by construction (no SQL oracle
-    form; pytest replays the recurrence). Ordering contract as
-    last_touch_attribution.
-
-    Warm-up contract (deliberate zero prior): state starts at
-    (mean=0, var=0) rather than seeding from the first observation,
-    so the emitted ``ewma`` column approaches the series level over
-    ~1/α events (a stable series at 10.0 first emits mean 3.0 at
-    α=0.3) and the inflated early variance SUPPRESSES anomaly flags
-    during warm-up — the conservative choice for an alerting stream:
-    no pages until a baseline exists. Callers needing an unbiased
-    level estimate from event 1 should divide by the standard
-    (1−(1−α)^n) bias correction downstream; the recurrence here is
-    pinned by tests/test_streaming_drift.py.
-    """
-
-    def update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        mean, var, n = state.get if state.exists else (0.0, 0.0, 0)
-        out: list[list] = []
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        rows["_us"] = pd.to_datetime(rows[ts_col]).astype("int64") // 1000
-        rows = rows.sort_values(["_us", "event_id"], kind="mergesort")
-        for _, r in rows.iterrows():
-            v = float(r["value"])
-            if n == 0:
-                z, anom = None, False
-            else:
-                z = (v - mean) / (var**0.5) if var > 0 else None
-                anom = z is not None and abs(z) > z_threshold
-            delta = v - mean
-            mean = mean + alpha * delta
-            var = (1.0 - alpha) * (var + alpha * delta * delta)
-            n += 1
-            out.append([key[0], int(r["event_id"]), v, mean, z, anom])
-        state.update((mean, var, n))
-        if out:
-            yield pd.DataFrame(
-                out,
-                columns=["key", "event_id", "value", "ewma", "zscore", "anomaly"],
-            )
-
-    return events.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=EWMA_SCHEMA,
-        stateStructType=_EWMA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
     )

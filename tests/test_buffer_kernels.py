@@ -4,8 +4,7 @@ Round 12 traced the dedup_semantic_pairs sf10 bimodality to host-level
 fresh-anon-page fault service and fixed it with a chunked GEMM through
 ONE reused output buffer (extensions/similarity.py:328). Round 13
 generalizes that discipline to the remaining BLAS kernels
-(extensions/kmeans.py, extensions/pq.py, plans/eval_metrics.py hubness
-paths). Every rewrite keeps the original operand order — so outputs
+(extensions/pq.py, plans/eval_metrics.py hubness paths). Every rewrite keeps the original operand order — so outputs
 must be IDENTICAL, not merely close — and these tests force the two
 failure modes buffer reuse can introduce:
 
@@ -23,8 +22,6 @@ from __future__ import annotations
 
 import os
 import sys
-
-import pytest
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
@@ -45,60 +42,6 @@ class _arrow_batches:
 
     def __exit__(self, *exc):
         self.spark.conf.set(_BATCH_KEY, self.old)
-
-
-def test_kmeans_blas_ragged_batches_identical(spark):
-    """assign_clusters_blas through the reused (n, k) buffers must give
-    the same assignment and d2 for 7-row ragged batches (tail smaller
-    than the hoisted buffer -> slice discipline) as for one big batch,
-    and match the old fresh-alloc expression computed locally."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from emission_project_spark.catalog.tables import load_table
-    from emission_project_spark.extensions.kmeans import (
-        assign_clusters_blas,
-        lloyd_centroids,
-    )
-
-    emb = load_table(spark, _SF, "embeddings")
-    vecs = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    cents = lloyd_centroids(vecs, 10, 2)
-
-    def run():
-        # d2 on the assignment grid: GEMM row blocking may legally vary
-        # with the batch shape (same as the pre-r13 kernel), so bitwise
-        # equality is only guaranteed per fixed geometry
-        return {
-            r["vec_id"]: (r["cluster_id"], round(r["d2"], 9))
-            for r in assign_clusters_blas(vecs, cents).collect()
-        }
-
-    with _arrow_batches(spark, 7):
-        ragged = run()
-    big = run()
-    assert ragged == big
-
-    # old-kernel reference: the full fresh-alloc expression, one batch
-    rows = sorted(cents.collect(), key=lambda r: r["cid"])
-    cids = np.array([r["cid"] for r in rows], dtype=np.int64)
-    cmat = np.array([r["ce"] for r in rows], dtype=np.float64)
-    cnorm = (cmat * cmat).sum(axis=1)
-    data = sorted(vecs.collect(), key=lambda r: r["vec_id"])
-    x = np.array([r["e"] for r in data], dtype=np.float64)
-    d2 = np.maximum(
-        (x * x).sum(axis=1)[:, None] + cnorm[None, :] - 2.0 * (x @ cmat.T),
-        0.0,
-    )
-    idx = d2.argmin(axis=1)
-    for i, r in enumerate(data):
-        got_cid, got_d2 = big[r["vec_id"]]
-        assert got_cid == cids[idx[i]]
-        # GEMM row blocking may differ between batch shapes: compare on
-        # the assignment grid, not bitwise vs the single-batch reference
-        assert got_d2 == pytest.approx(d2[i, idx[i]], abs=1e-9)
 
 
 def test_pq_encode_ragged_batches_identical(spark):

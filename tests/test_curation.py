@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from emission_project_spark.extensions.curation import (
     length_percentiles,
-    length_percentiles_approx,
     profile_columns,
     stratified_sample_topk,
 )
@@ -62,12 +61,6 @@ def test_length_percentiles_exact(spark):
     assert row.n_docs == 4
     assert row.mean_val == 25.0
     assert row.p50 == 25.0  # interpolated median, matches quantile_cont
-
-
-def test_length_percentiles_approx_brackets_exact(spark):
-    docs = _docs(spark, [(i, "en", i) for i in range(101)])
-    row = length_percentiles_approx(docs, ["lang"], "n_chars", percentiles=(0.5,)).collect()[0]
-    assert 49 <= row.p50 <= 51
 
 
 def test_profile_columns_nulls_and_bounds(spark):

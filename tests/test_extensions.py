@@ -254,36 +254,6 @@ def test_ivf_kmeans_sampled_training_keeps_quality(spark):
     assert len(exact & got) / len(exact) >= 0.65  # usable; boundary-luck margin
 
 
-def test_blas_assignment_matches_expression_path(spark):
-    """assign_clusters_blas (batched matmul, the large-k path) must
-    produce the same cluster assignment as the oracle-checked
-    expression path for every vector, and d2 equal to the rounding
-    grid. Ulp-level float association differences must not flip an
-    argmin on real data."""
-    from pyspark.sql import functions as F
-    from emission_project_spark.catalog.tables import load_table
-    from emission_project_spark.extensions.kmeans import (
-        GRID,
-        assign_clusters,
-        assign_clusters_blas,
-        lloyd_centroids,
-    )
-
-    emb = load_table(spark, "/root/testdata/sf0.01", "embeddings")
-    vecs = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-    for k in (8, 20):
-        cents = lloyd_centroids(vecs, k, 2)
-        expr = {
-            r["vec_id"]: (r["cluster_id"], round(r["d2"], GRID))
-            for r in assign_clusters(vecs, cents).collect()
-        }
-        blas = {
-            r["vec_id"]: (r["cluster_id"], round(r["d2"], GRID))
-            for r in assign_clusters_blas(vecs, cents).collect()
-        }
-        assert expr == blas
-
-
 def test_minhash_band_expr_matches_exploded_signatures(spark):
     """The per-row band expression (streaming path, narrow map) must be
     bit-identical to the explode/groupBy signature pipeline for the
@@ -335,38 +305,6 @@ def test_training_sample_guards(spark):
     with pytest.warns(UserWarning, match="falling back to full-corpus"):
         cents = lloyd_centroids(vecs, k=4, iterations=2, train_frac=1e-6)
     assert cents.count() == 4  # seeded from the full corpus
-
-
-def test_blas_assignment_matches_expression_path_sf1(spark, tmp_path):
-    """The declared large-k path must agree with the expression path on
-    the 20k-embedding sf1 shard, not just the sf0.01 corpora — ulp-level
-    argmin flips get 10x the chances to appear here. The shard is built
-    here with tools/gen_scale.py's defaults (10 shards, seed 20260813),
-    the same bytes that script writes to .scale/sf1."""
-    from pyspark.sql import functions as F
-    from emission_project_spark.catalog.tables import load_table
-    from emission_project_spark.extensions.kmeans import (
-        GRID,
-        assign_clusters,
-        assign_clusters_blas,
-        lloyd_centroids,
-    )
-    from tools.gen_scale import scale_embeddings
-
-    sf1 = str(tmp_path)
-    scale_embeddings("/root/testdata/sf0.1", sf1, 10, 20260813)
-    emb = load_table(spark, sf1, "embeddings")
-    vecs = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-    cents = lloyd_centroids(vecs, 20, 2)
-    expr = {
-        r["vec_id"]: (r["cluster_id"], round(r["d2"], GRID))
-        for r in assign_clusters(vecs, cents).collect()
-    }
-    blas = {
-        r["vec_id"]: (r["cluster_id"], round(r["d2"], GRID))
-        for r in assign_clusters_blas(vecs, cents).collect()
-    }
-    assert expr == blas
 
 
 def test_contamination_overlap_planted(spark):
@@ -475,14 +413,12 @@ def test_incremental_exact_dedup_split(spark):
 
 
 def test_count_min_sketch_properties(spark):
-    """CMS invariants: estimate >= true count for every term; merging
-    shard sketches equals sketching the union."""
+    """CMS invariant: estimate >= true count for every term."""
     from pyspark.sql import functions as F
 
     from emission_project_spark.extensions.sketch import (
         count_min_build,
         count_min_estimate,
-        count_min_merge,
     )
 
     words = ["alpha"] * 50 + ["beta"] * 20 + ["gamma"] * 5 + ["delta"]
@@ -495,18 +431,6 @@ def test_count_min_sketch_properties(spark):
     }
     for t, true_n in truth.items():
         assert est[t] >= true_n  # CMS never undercounts
-
-    # shard-merge property
-    half1 = spark.createDataFrame([(w,) for w in words[:38]], "term string")
-    half2 = spark.createDataFrame([(w,) for w in words[38:]], "term string")
-    merged = count_min_merge(
-        count_min_build(half1, width=64), count_min_build(half2, width=64)
-    )
-    est_m = {
-        r.term: r.cms_estimate
-        for r in count_min_estimate(merged, terms.distinct(), width=64).collect()
-    }
-    assert est_m == est
 
 
 def test_bloom_filter_no_false_negatives(spark):
@@ -611,48 +535,3 @@ def test_substring_spans_planted(spark):
     # a tight cap drops the shared anchors and the report says how much
     rep2 = substring_cap_report(docs, k=6, max_gram_freq=1).collect()[0]
     assert rep2["n_dropped_occurrences"] > 0
-
-
-def test_count_min_inner_product_bounds_and_exactness(spark):
-    """AMS inner product: never underestimates the true join size /
-    F2; exact when the sketch is wide enough that no two keys collide
-    in any row; shard-merged sketches price the same join."""
-    from pyspark.sql import functions as F
-
-    from emission_project_spark.extensions.sketch import (
-        count_min_build,
-        count_min_inner_product,
-        count_min_merge,
-    )
-
-    r_words = ["a"] * 7 + ["b"] * 3 + ["c"] * 2
-    s_words = ["a"] * 2 + ["b"] * 5 + ["d"] * 4
-    true_join = 7 * 2 + 3 * 5  # sum_k f(k)*g(k) = 29
-    r = spark.createDataFrame([(w,) for w in r_words], "term string")
-    s = spark.createDataFrame([(w,) for w in s_words], "term string")
-
-    # narrow sketch: bound only
-    est_narrow = count_min_inner_product(
-        count_min_build(r, width=2), count_min_build(s, width=2)
-    ).first().estimate
-    assert est_narrow >= true_join
-
-    # wide sketch: 4 keys in 4096 buckets across 4 independent rows —
-    # at least one collision-free row is overwhelmingly certain, and
-    # min-of-rows recovers the exact product through it
-    est_wide = count_min_inner_product(
-        count_min_build(r, width=4096), count_min_build(s, width=4096)
-    ).first().estimate
-    assert est_wide == true_join
-
-    # self-join (F2): sum f^2 = 49 + 9 + 4 = 62
-    sk_r = count_min_build(r, width=4096)
-    assert count_min_inner_product(sk_r, sk_r).first().estimate == 62
-
-    # sharded build prices identically
-    h1 = spark.createDataFrame([(w,) for w in r_words[:5]], "term string")
-    h2 = spark.createDataFrame([(w,) for w in r_words[5:]], "term string")
-    merged = count_min_merge(
-        count_min_build(h1, width=4096), count_min_build(h2, width=4096)
-    )
-    assert count_min_inner_product(merged, merged).first().estimate == 62

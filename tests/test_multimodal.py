@@ -11,15 +11,7 @@ from emission_project_spark.extensions.multimodal import (
     decode_image,
     extract_features,
     fake_image_decoder,
-    payload_meta,
 )
-
-
-def test_payload_meta(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents").limit(20)
-    meta = payload_meta(attach_payload(docs)).collect()
-    assert len(meta) == 20
-    assert all(r.n_bytes > 0 and len(r.content_md5) == 32 for r in meta)
 
 
 def test_extract_features_with_fake_decoder(spark, sf_dir):
@@ -110,7 +102,7 @@ def test_phash_neardup_finds_planted_pairs(spark):
     from emission_project_spark.extensions.multimodal import (
         gray8x8_fake,
         perceptual_hash,
-        phash_neardup_pairs,
+        phash_candidate_pairs,
     )
 
     import numpy as np
@@ -131,7 +123,9 @@ def test_phash_neardup_finds_planted_pairs(spark):
     hashes = perceptual_hash(media, gray8x8_fake)
     pairs = {
         (r["doc_a"], r["doc_b"]): r["hamming"]
-        for r in phash_neardup_pairs(hashes, bands=4, max_hamming=3).collect()
+        for r in phash_candidate_pairs(hashes, bands=4)
+        .filter("hamming <= 3")
+        .collect()
     }
     assert pairs.get((1, 2)) == 0
     assert (1, 3) in pairs and pairs[(1, 3)] <= 3
@@ -143,7 +137,7 @@ def test_phash_recall_guard_and_cap(spark):
     from emission_project_spark.extensions.multimodal import (
         gray8x8_fake,
         perceptual_hash,
-        phash_neardup_pairs,
+        phash_candidate_pairs,
     )
 
     media = spark.createDataFrame(
@@ -151,14 +145,11 @@ def test_phash_recall_guard_and_cap(spark):
         "doc_id long, payload binary",
     )
     hashes = perceptual_hash(media, gray8x8_fake)
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        phash_neardup_pairs(hashes, bands=4, max_hamming=4)
     # constant-grid payloads all hash to 0 -> one giant bucket; the cap
     # drops it entirely
     assert (
-        phash_neardup_pairs(hashes, bands=4, max_hamming=3, max_bucket=3)
+        phash_candidate_pairs(hashes, bands=4, max_bucket=3)
+        .filter("hamming <= 3")
         .count() == 0
     )
 
@@ -176,32 +167,3 @@ def test_phash_real_decoder_raises_without_pil(spark):
         pass
     with _pytest.raises(NotImplementedError):
         gray8x8_real(b"not-an-image")
-
-
-def test_audio_energy_segments_planted(spark):
-    """Loud/silent alternation segments exactly; all-silence yields no
-    rows; segment energies match a hand computation."""
-    from emission_project_spark.extensions.multimodal import (
-        audio_energy_segments,
-    )
-
-    frame = 4
-    loud = bytes([100, 156, 100, 156])   # int8: 100,-100 -> energy 10000
-    quiet = bytes([1, 255, 1, 255])      # int8: 1,-1 -> energy 1
-    rows = [
-        (1, loud + quiet + loud + loud),  # segs: [0,0], [2,3]
-        (2, quiet * 4),                   # silence: no segments
-        (3, loud * 3),                    # one long segment [0,2]
-    ]
-    media = spark.createDataFrame(rows, "doc_id long, payload binary")
-    out = audio_energy_segments(media, frame=frame, threshold=100.0)
-    got = {
-        (r["doc_id"], r["seg_start"], r["seg_end"]): (
-            r["n_frames"], r["mean_energy"]
-        )
-        for r in out.collect()
-    }
-    assert set(got) == {(1, 0, 0), (1, 2, 3), (3, 0, 2)}
-    assert got[(1, 0, 0)] == (1, 10000.0)
-    assert got[(1, 2, 3)] == (2, 10000.0)
-    assert got[(3, 0, 2)] == (3, 10000.0)

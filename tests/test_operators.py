@@ -235,42 +235,6 @@ def test_fk_violation_counts(spark):
     assert got == {"fk_a": 1, "fk_b": 4}
 
 
-def test_jsonl_corpus_roundtrip_and_quarantine(spark, tmp_path):
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    from emission_project_spark.sources.jsonl_corpus import (
-        read_jsonl_corpus,
-        write_jsonl_corpus,
-    )
-
-    src = tmp_path / "corpus"
-    src.mkdir()
-    (src / "part1.jsonl").write_text(
-        '{"doc_id": 1, "text": "hello world", "lang": "en"}\n'
-        '{"doc_id": 2, "text": "hola", "lang": "es"}\n'
-        "this line is not json\n"
-        '{"doc_id": 3, "text": "no lang field"}\n'
-    )
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("text", StringType()),
-            StructField("lang", StringType()),
-        ]
-    )
-    good, bad = read_jsonl_corpus(spark, str(src), schema)
-    rows = {r.doc_id: r for r in good.collect()}
-    assert set(rows) == {1, 2, 3}
-    assert rows[3].lang is None  # missing optional field parses, not quarantined
-    assert good.columns == ["doc_id", "text", "lang"]
-    assert [r.raw_line for r in bad.collect()] == ["this line is not json"]
-
-    out = tmp_path / "out"
-    write_jsonl_corpus(good, str(out), partitions=2)
-    back, bad2 = read_jsonl_corpus(spark, str(out), schema)
-    assert back.count() == 3 and bad2.count() == 0
-
-
 def test_warehouse_compact_and_stale_tmp(spark, tmp_path):
     from emission_project_spark.sources.warehouse import Warehouse
 
@@ -325,8 +289,14 @@ def test_contract_violations_planted(spark):
     semantics)."""
     from emission_project_spark.operators.contracts import (
         TableContract,
-        validate_contract,
+        contract_violations,
     )
+
+    def violations(df, contract):
+        return {
+            r.check_name: int(r.violations)
+            for r in contract_violations(df, contract).collect()
+        }
 
     rows = [
         # (id, status, price)
@@ -343,7 +313,7 @@ def test_contract_violations_planted(spark):
         accepted_values={"status": ["O", "F", "P"]},
         ranges={"price": (0, 1_000_000)},
     )
-    got = validate_contract(df, contract)
+    got = violations(df, contract)
     assert got == {
         "not_null:id": 1,
         "unique:id": 1,
@@ -353,7 +323,7 @@ def test_contract_violations_planted(spark):
 
     # empty table: every count is zero, not NULL
     empty = spark.createDataFrame([], "id bigint, status string, price double")
-    assert set(validate_contract(empty, contract).values()) == {0}
+    assert set(violations(empty, contract).values()) == {0}
 
 
 def test_warehouse_compact_range_clustered(spark, tmp_path):
@@ -572,25 +542,6 @@ def test_warehouse_snapshot_versioning(spark, tmp_path):
         wh.read_snapshot("missing")
 
 
-def test_observed_stage_counters_ride_the_action(spark):
-    """observe(): metrics come from the same action, no second scan;
-    counts match an independent recomputation."""
-    from emission_project_spark.operators.observe import observed_stage
-
-    df = spark.createDataFrame(
-        [(1, 10.0), (2, None), (3, 500.0), (4, -3.0)],
-        "id int, v double",
-    )
-    inst, obs = observed_stage(
-        df, not_null=["v"], ranges={"v": (0, 100)}, name="probe"
-    )
-    assert inst.count() == 4          # the action that feeds the metrics
-    got = obs.get
-    assert got["n_rows"] == 4
-    assert got["null_v"] == 1
-    assert got["oor_v"] == 2          # 500 and -3; NULL not counted
-
-
 def test_warehouse_file_stats_census(spark, tmp_path):
     from emission_project_spark.sources.warehouse import Warehouse
 
@@ -602,31 +553,3 @@ def test_warehouse_file_stats_census(spark, tmp_path):
     assert st["n_files"] == 8
     assert st["total_bytes"] > 0
     assert st["min_bytes"] <= st["avg_bytes"] <= st["max_bytes"]
-
-
-def test_v2_parquet_aggregate_pushdown(spark):
-    """Opt-in V2 session: a filterless count answers from footer stats
-    (PushedAggregation in the plan) and matches the V1 answer; the NTZ
-    events table stays readable under V2. Both knobs are dynamic SQL
-    confs, so a cloned session (shared SparkContext, isolated conf)
-    carries them without touching the suite's session."""
-    from pyspark.sql import functions as F
-
-    from emission_project_spark.session import v2_parquet_conf
-
-    spark2 = spark.newSession()
-    for k, v in v2_parquet_conf().items():
-        spark2.conf.set(k, v)
-    df = spark2.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-    agg = df.agg(F.count(F.lit(1)).alias("n"))
-    plan = agg._jdf.queryExecution().explainString(
-        spark2._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
-    assert "PushedAggregation" in plan
-    assert agg.first()["n"] == df.count()
-    ev = spark2.read.parquet("/root/testdata/sf0.001/events.parquet")
-    assert ev.count() > 0
-    # and the suite's session is untouched (still V1 for parquet)
-    assert "parquet" in spark.conf.get("spark.sql.sources.useV1SourceList")

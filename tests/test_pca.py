@@ -1,22 +1,13 @@
-"""Distributed PCA (extensions/pca.py) pinned against numpy on the
-sf0.001 embeddings — the eigendecomposition has no SQL-oracle form, so
-the correctness gate here is exact-math agreement with a single-node
-reference implementation, plus partitioning-invariance (the property
-that makes the distributed decomposition trustworthy)."""
+"""PCA's stage-1 covariance block (the registered
+``embedding_covariance_block``) pinned against numpy on the sf0.001
+embeddings."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
 
-from emission_project_spark.extensions.pca import (
-    PCAModel,
-    fit_pca,
-    project_pca,
-)
-
 SF = "/root/testdata/sf0.001"
-DIM = 64
 
 
 @pytest.fixture(scope="module")
@@ -30,92 +21,10 @@ def local_matrix(emb):
     return np.stack([np.array(r["embedding"], dtype=np.float64) for r in rows])
 
 
-@pytest.fixture(scope="module")
-def model(emb) -> PCAModel:
-    return fit_pca(emb, "embedding", dim=DIM, k=8)
-
-
-def _numpy_pca(x: np.ndarray, k: int):
-    mean = x.mean(axis=0)
-    cov = np.cov(x, rowvar=False, ddof=0)
-    eigvals, eigvecs = np.linalg.eigh(cov)
-    order = np.argsort(eigvals)[::-1][:k]
-    comps = eigvecs[:, order].T
-    for row in comps:
-        if row[np.argmax(np.abs(row))] < 0:
-            row *= -1.0
-    return mean, comps, eigvals[order]
-
-
-def test_matches_numpy_reference(model, local_matrix):
-    mean, comps, eigvals = _numpy_pca(local_matrix, 8)
-    np.testing.assert_allclose(model.mean, mean, atol=1e-9)
-    np.testing.assert_allclose(model.explained_variance, eigvals, atol=1e-9)
-    np.testing.assert_allclose(model.components, comps, atol=1e-7)
-
-
-def test_components_orthonormal(model):
-    gram = model.components @ model.components.T
-    np.testing.assert_allclose(gram, np.eye(8), atol=1e-9)
-
-
-def test_variance_ratios_sorted_and_bounded(model):
-    r = model.explained_variance_ratio
-    assert np.all(np.diff(r) <= 1e-12)          # descending
-    assert 0 < r.sum() <= 1 + 1e-9
-
-
-def test_partitioning_invariance(emb, model):
-    """Partial-moment merge must not depend on how rows are split."""
-    other = fit_pca(emb.repartition(7), "embedding", dim=DIM, k=8)
-    np.testing.assert_allclose(other.mean, model.mean, atol=1e-9)
-    np.testing.assert_allclose(
-        other.components, model.components, atol=1e-7
-    )
-
-
-def test_projection_matches_local(emb, model, local_matrix):
-    out = project_pca(emb, model, "embedding", out_col="pca")
-    got = {
-        r["vec_id"]: np.array(r["pca"])
-        for r in out.select("vec_id", "pca").collect()
-    }
-    ids = [r["vec_id"] for r in emb.select("vec_id").collect()]
-    expected = (local_matrix - model.mean) @ model.components.T
-    for i, vid in enumerate(ids):
-        np.testing.assert_allclose(got[vid], expected[i], atol=1e-9)
-    # projection keeps schema + appends array<double> of length k
-    assert out.schema["pca"].dataType.simpleString() == "array<double>"
-
-
-def test_reconstruction_error_decreases_with_k(emb, local_matrix):
-    errs = []
-    for k in (2, 8, 32):
-        m = fit_pca(emb, "embedding", dim=DIM, k=k)
-        proj = (local_matrix - m.mean) @ m.components.T
-        recon = proj @ m.components + m.mean
-        errs.append(float(((local_matrix - recon) ** 2).mean()))
-    assert errs[0] > errs[1] > errs[2]
-
-
-def test_input_validation(emb):
-    with pytest.raises(ValueError):
-        fit_pca(emb, "embedding", dim=DIM, k=0)
-    with pytest.raises(ValueError):
-        fit_pca(emb, "embedding", dim=DIM, k=DIM + 1)
-    with pytest.raises(Exception):
-        # declared dim mismatch surfaces from the executor
-        fit_pca(emb, "embedding", dim=32, k=4)
-    with pytest.raises(ValueError):
-        fit_pca(emb.filter("vec_id < 0"), "embedding", dim=DIM, k=2)
-
-
 def test_covariance_block_query_bridges_to_fit_pca(spark, local_matrix):
     """The oracle-checked embedding_covariance_block query (PCA stage 1
     in SQL-expressible form: the 8×8 leading cross-moment block) must
-    equal the covariance fit_pca's BLAS moment pass computes for the
-    same dimensions — the bridge that lets the driver's green oracle
-    row stand in for the full-width numpy path."""
+    equal the numpy population covariance of the same dimensions."""
     import __spark_entry__ as entrymod
 
     out = entrymod.queries()["embedding_covariance_block"](spark, SF).collect()

@@ -1,0 +1,139 @@
+"""Every top-level definition in the package is reached from a product root.
+
+The roots are the registered queries (functions decorated with
+``@register``), the CLI (``__main__.py``), ``bench.py``,
+``__spark_entry__.py``, ``perfbench/`` and ``tools/``, plus every
+module-level statement of the package that is not an import or a
+definition (it runs at import time). The sweep is name-level: a
+top-level function or class is reached when a reached body names it, as
+a ``Name`` or as an ``Attribute``, in any module. Strings and docstrings
+name nothing. That over-approximates reachability, so whatever the sweep
+calls unreached really has no caller on a product path.
+
+The unreached set must equal ``ALLOWED``: a unit that no product path
+runs is kept only as the reference a test compares a product path
+against. Dead code that comes back fails the test, and so does an
+allowlisted unit that gets wired in and should leave the list.
+
+Pure AST, no Spark session. Run alone with
+``python -m pytest tests/test_reachability.py -q``.
+"""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parent.parent
+PACKAGE = ROOT / "emission_project_spark"
+ROOT_FILES = [ROOT / "bench.py", ROOT / "__spark_entry__.py", PACKAGE / "__main__.py"]
+ROOT_DIRS = [ROOT / "perfbench", ROOT / "tools"]
+
+_PQ_TWIN = "tests/test_pq.py::test_ivfpq_expr_twin_matches_numpy_path"
+
+# unit -> the test that uses it as the reference for a product path
+ALLOWED: dict[str, str] = {
+    **{
+        f"extensions/pq.py:{name}": _PQ_TWIN
+        for name in (
+            "PQModel",
+            "IVFPQModel",
+            "fit_pq",
+            "pq_encode",
+            "pq_decode",
+            "pq_topk",
+            "fit_ivfpq",
+            "ivfpq_encode",
+            "ivfpq_topk",
+            "_residuals",
+            "_centroid_df",
+        )
+    },
+    "plans/cohort_stats.py:_poisson_weight": (
+        "tests/test_cohort_stats.py::test_poisson_lut_pins_all_three_ladders"
+    ),
+    "operators/joins.py:semi_join": (
+        "tests/test_properties.py::test_anti_join_complements_semi"
+    ),
+}
+
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+_IMPORTS = (ast.Import, ast.ImportFrom)
+
+
+def _names(nodes, aliases: dict[str, set[str]]) -> set[str]:
+    """Every identifier the nodes refer to: ``Name`` ids, ``Attribute``
+    attrs, and the source name of an ``import x as y``, whether the import
+    sits in the nodes or at module level (``aliases``)."""
+    out: set[str] = set()
+    for node in nodes:
+        for sub in ast.walk(node):
+            if isinstance(sub, ast.Name):
+                out.add(sub.id)
+            elif isinstance(sub, ast.Attribute):
+                out.add(sub.attr)
+            elif isinstance(sub, ast.alias) and sub.asname:
+                out.add(sub.name)
+    return out.union(*(aliases.get(n, ()) for n in out))
+
+
+def _import_time(node: ast.AST) -> list[ast.AST]:
+    """The parts of a top-level definition that run when its module loads."""
+    if isinstance(node, ast.ClassDef):
+        return [*node.decorator_list, *node.bases, *node.keywords]
+    args = node.args
+    return [*node.decorator_list, *args.defaults, *(d for d in args.kw_defaults if d)]
+
+
+def _is_query(node: ast.AST) -> bool:
+    for deco in node.decorator_list:
+        target = deco.func if isinstance(deco, ast.Call) else deco
+        if isinstance(target, ast.Name) and target.id == "register":
+            return True
+    return False
+
+
+def unreached() -> set[str]:
+    """``"<path under the package>:<name>"`` of every unreached definition."""
+    defs: dict[str, list[tuple[str, ast.AST]]] = {}
+    roots: list[ast.AST] = []
+    aliases: dict[str, set[str]] = {}
+    for path in sorted(PACKAGE.rglob("*.py")):
+        if path in ROOT_FILES:
+            continue
+        tree = ast.parse(path.read_text(), str(path))
+        unit = path.relative_to(PACKAGE).as_posix()
+        for node in tree.body:
+            if isinstance(node, _DEFS):
+                roots.extend(_import_time(node))
+                if _is_query(node):
+                    roots.append(node)
+                else:
+                    defs.setdefault(node.name, []).append((unit, node))
+            elif isinstance(node, _IMPORTS):
+                for a in node.names:
+                    if a.asname:
+                        aliases.setdefault(a.asname, set()).add(a.name)
+            else:
+                roots.append(node)
+    root_paths = ROOT_FILES + [p for d in ROOT_DIRS for p in sorted(d.rglob("*.py"))]
+    roots.extend(ast.parse(p.read_text(), str(p)) for p in root_paths)
+
+    reached: set[str] = set()
+    frontier = _names(roots, aliases) & defs.keys()
+    while frontier:
+        reached |= frontier
+        bodies = [node for name in frontier for _, node in defs[name]]
+        frontier = (_names(bodies, aliases) & defs.keys()) - reached
+    return {
+        f"{unit}:{name}"
+        for name, units in defs.items()
+        if name not in reached
+        for unit, _ in units
+    }
+
+
+def test_unreached_definitions_are_the_test_references():
+    dead = unreached()
+    assert sorted(dead - ALLOWED.keys()) == [], "no product path reaches these"
+    assert sorted(ALLOWED.keys() - dead) == [], "now reached: drop from ALLOWED"

@@ -1,72 +1,17 @@
-"""Streaming twin tests: consume-once file stream with engine-side
-archival, and windowed/session aggregations."""
+"""Dual-mode operator tests: the operators whose batch form the
+registered queries run (session and distinct-user windows, the near-dup
+bucket, the interval join), on batch frames and on micro-batch streams."""
 
 from __future__ import annotations
 
 import os
-import time
 
 from pyspark.sql import functions as F
 
-from emission_project_spark.streaming.file_stream import (
-    run_available_now,
-    session_windows,
-    stream_feed,
-    windowed_counts,
-)
-from emission_project_spark.catalog.schemas import DRIVERS_FEED
-
-
-def test_stream_feed_available_now_consumes_and_archives(spark, tmp_path):
-    incoming = tmp_path / "incoming"
-    incoming.mkdir()
-    (incoming / "batch1.csv").write_text("name,first_name,city\nDoe,John,Oulu\nSmith,Anna,Turku\n")
-
-    stream = stream_feed(
-        spark, str(incoming), DRIVERS_FEED, archive_dir=str(tmp_path / "archived")
-    )
-    q = run_available_now(stream, str(tmp_path / "sink"), str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
-
-    out = spark.read.parquet(str(tmp_path / "sink"))
-    assert out.count() == 2
-
-    # second drain with a new file: only the new rows land (exactly-once)
-    (incoming / "batch2.csv").write_text("name,first_name,city\nNew,Guy,Vaasa\n")
-    stream2 = stream_feed(
-        spark, str(incoming), DRIVERS_FEED, archive_dir=str(tmp_path / "archived")
-    )
-    q2 = run_available_now(stream2, str(tmp_path / "sink"), str(tmp_path / "ckpt"))
-    q2.awaitTermination(120)
-    assert spark.read.parquet(str(tmp_path / "sink")).count() == 3
-
-    # engine-side archival of consumed source files (async; poll briefly)
-    deadline = time.time() + 30
-    while time.time() < deadline and (incoming / "batch1.csv").exists():
-        time.sleep(1)
-    assert not (incoming / "batch1.csv").exists()
-    archived = [
-        f for _, _, fs in os.walk(tmp_path / "archived") for f in fs
-    ]
-    assert "batch1.csv" in archived
-
-
-def test_windowed_counts_streaming_with_watermark(spark, tmp_path):
-    events = spark.createDataFrame(
-        [
-            ("2024-01-01 00:10:00", "click", 1.0),
-            ("2024-01-01 00:50:00", "click", 2.0),
-            ("2024-01-01 01:10:00", "view", 5.0),
-        ],
-        "ts_s string, event_type string, value double",
-    ).select(F.to_timestamp("ts_s").alias("ts"), "event_type", "value")
-    out = windowed_counts(events).collect()
-    got = {(str(r.window_start), r.event_type): (r.n_events, r.total_value) for r in out}
-    assert got[("2024-01-01 00:00:00", "click")] == (2, 3.0)
-    assert got[("2024-01-01 01:00:00", "view")] == (1, 5.0)
-
 
 def test_session_windows_gap_split(spark):
+    from emission_project_spark.streaming.stateful import session_window_totals
+
     events = spark.createDataFrame(
         [
             ("2024-01-01 00:00:00", 1, 1.0),
@@ -76,118 +21,12 @@ def test_session_windows_gap_split(spark):
         ],
         "ts_s string, user_id int, value double",
     ).select(F.to_timestamp("ts_s").alias("ts"), "user_id", "value")
-    out = session_windows(events, watermark=None).collect()
+    out = session_window_totals(events).collect()
     by_user = {}
     for r in out:
         by_user.setdefault(r.user_id, []).append((str(r.session_start), r.n_events))
     assert sorted(by_user[1]) == [("2024-01-01 00:00:00", 2), ("2024-01-01 01:00:00", 1)]
     assert by_user[2] == [("2024-01-01 00:00:00", 1)]
-
-
-def test_stateful_running_totals_across_microbatches(spark, tmp_path):
-    """applyInPandasWithState carries per-key state across micro-batches:
-    with maxFilesPerTrigger=1 the two files become two batches, and the
-    second emitted row for user 1 must include the first batch's rows."""
-    from emission_project_spark.streaming.stateful import running_user_totals
-
-    incoming = tmp_path / "incoming"
-    incoming.mkdir()
-    (incoming / "a.csv").write_text("user_id,value\n1,10.0\n1,5.0\n2,1.0\n")
-    (incoming / "b.csv").write_text("user_id,value\n1,2.0\n")
-
-    stream = (
-        spark.readStream.format("csv")
-        .schema("user_id bigint, value double")
-        .option("header", "true")
-        .option("maxFilesPerTrigger", "1")
-        .load(str(incoming))
-    )
-    q = (
-        running_user_totals(stream)
-        .writeStream.format("memory")
-        .queryName("running_totals")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    rows = spark.sql("SELECT * FROM running_totals").collect()
-    per_user = {}
-    for r in rows:
-        per_user.setdefault(r.user_id, []).append((r.n_events, r.total_value))
-    # user 1 ends at 3 events / 17.0 total, cumulative across batches
-    assert max(per_user[1]) == (3, 17.0)
-    assert (2, 15.0) in per_user[1]  # first batch emitted the partial state
-    assert per_user[2] == [(1, 1.0)]
-
-
-def test_streaming_dedup_exact_across_batches(spark, tmp_path):
-    """dropDuplicates state persists across micro-batches: a document
-    re-delivered in a later file is suppressed; content fingerprinting
-    dedups re-delivery under a different doc_id."""
-    from emission_project_spark.streaming.dedup import content_keyed, dedup_stream
-
-    incoming = tmp_path / "incoming"
-    incoming.mkdir()
-    (incoming / "a.csv").write_text("doc_id,text\n1,hello world\n2,other text\n")
-    (incoming / "b.csv").write_text("doc_id,text\n3,Hello   WORLD!\n4,fresh content\n")
-
-    stream = (
-        spark.readStream.format("csv")
-        .schema("doc_id bigint, text string")
-        .option("header", "true")
-        .option("maxFilesPerTrigger", "1")
-        .load(str(incoming))
-    )
-    q = (
-        dedup_stream(content_keyed(stream), ["fingerprint"])
-        .writeStream.format("memory")
-        .queryName("dedup_stream_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    kept = sorted(r.doc_id for r in spark.sql("SELECT * FROM dedup_stream_out").collect())
-    # doc 3 is doc 1 re-delivered (same canonical fingerprint) → suppressed
-    assert kept == [1, 2, 4]
-
-
-def test_streaming_dedup_within_watermark(spark, tmp_path):
-    """dropDuplicatesWithinWatermark keeps state only inside the
-    lateness horizon: a near-in-time duplicate is suppressed, and the
-    operator appears with an eviction watermark in the plan."""
-    from emission_project_spark.streaming.dedup import dedup_stream_within_watermark
-
-    incoming = tmp_path / "incoming"
-    incoming.mkdir()
-    (incoming / "a.csv").write_text(
-        "doc_id,ts,text\n"
-        "1,2024-01-01 00:00:00,alpha\n"
-        "1,2024-01-01 00:00:30,alpha again\n"  # dup within horizon
-        "2,2024-01-01 00:05:00,beta\n"
-    )
-    stream = (
-        spark.readStream.format("csv")
-        .schema("doc_id bigint, ts timestamp, text string")
-        .option("header", "true")
-        .load(str(incoming))
-    )
-    q = (
-        dedup_stream_within_watermark(stream, ["doc_id"], "ts", "2 minutes")
-        .writeStream.format("memory")
-        .queryName("dedup_wm_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt2"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("SELECT doc_id, text FROM dedup_wm_out").collect()
-    assert sorted((r.doc_id, r.text) for r in rows) == [(1, "alpha"), (2, "beta")]
 
 
 def test_stream_stream_interval_join(spark, tmp_path):
@@ -336,7 +175,7 @@ def test_streaming_neardup_filter(spark, tmp_path):
     micro-batch is suppressed by bucket state from the first batch;
     shingle-less docs take the unique fallback bucket and always
     survive."""
-    from emission_project_spark.streaming.dedup import dedup_stream, minhash_keyed
+    from emission_project_spark.streaming.dedup import minhash_keyed
 
     incoming = tmp_path / "incoming"
     incoming.mkdir()
@@ -363,7 +202,7 @@ def test_streaming_neardup_filter(spark, tmp_path):
         .load(str(incoming))
     )
     q = (
-        dedup_stream(minhash_keyed(stream), ["bucket"])
+        minhash_keyed(stream).dropDuplicates(["bucket"])
         .writeStream.format("memory")
         .queryName("neardup_out")
         .outputMode("append")
@@ -489,443 +328,3 @@ def test_interval_join_rejects_unknown_how(spark):
     )
     with pytest.raises(ValueError, match="left_outer"):
         interval_join_streams(df, df, key="user_id", left_ts="ts", right_ts="ts", how="full")
-
-
-def test_foreachbatch_upsert_sink(spark, tmp_path):
-    """Streaming micro-batches MERGE into the parquet warehouse: a key
-    re-delivered in a later batch overwrites its row (upsert), fresh
-    keys append, and the final table has one row per key."""
-    import os
-
-    from emission_project_spark.sources.warehouse import Warehouse
-    from emission_project_spark.streaming.sink import upsert_sink
-
-    incoming = tmp_path / "incoming"
-    incoming.mkdir()
-    (incoming / "b1.csv").write_text(
-        "user_id,balance\n1,10.0\n2,20.0\n"
-    )
-    (incoming / "b2.csv").write_text(
-        "user_id,balance\n2,99.0\n3,30.0\n"   # key 2 re-delivered → overwrite
-    )
-    os.utime(incoming / "b1.csv", (1000000000, 1000000000))
-    os.utime(incoming / "b2.csv", (1000000100, 1000000100))
-
-    stream = (
-        spark.readStream.format("csv")
-        .schema("user_id bigint, balance double")
-        .option("header", "true")
-        .option("maxFilesPerTrigger", "1")   # two micro-batches
-        .load(str(incoming))
-    )
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    q = upsert_sink(stream, wh, "balances", ["user_id"], str(tmp_path / "ck"))
-    q.awaitTermination(120)
-
-    rows = {r.user_id: r.balance for r in wh.read("balances").collect()}
-    assert rows == {1: 10.0, 2: 99.0, 3: 30.0}
-
-
-def test_streaming_stateful_topk(spark, tmp_path):
-    """Per-key top-k state merges across micro-batches: batch 2's
-    mid-range value displaces nothing it shouldn't, a new high enters,
-    and the k-bound holds (state never grows past k per key)."""
-    import os
-
-    from emission_project_spark.streaming.stateful import topk_per_key
-
-    incoming = tmp_path / "incoming"
-    incoming.mkdir()
-    (incoming / "a.csv").write_text(
-        "user_id,event_id,value\n"
-        "1,10,5.0\n1,11,9.0\n1,12,7.0\n1,13,1.0\n"   # top3 after b1: 9,7,5
-    )
-    (incoming / "b.csv").write_text(
-        "user_id,event_id,value\n"
-        "1,14,8.0\n1,15,0.5\n"                        # 8 enters, 5 drops
-    )
-    os.utime(incoming / "a.csv", (1000000000, 1000000000))
-    os.utime(incoming / "b.csv", (1000000100, 1000000100))
-
-    stream = (
-        spark.readStream.format("csv")
-        .schema("user_id bigint, event_id bigint, value double")
-        .option("header", "true")
-        .option("maxFilesPerTrigger", "1")
-        .load(str(incoming))
-    )
-    q = (
-        topk_per_key(stream, k=3)
-        .writeStream.format("memory")
-        .queryName("topk_out")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    emitted = {
-        (r.rank, r.event_id, r.value)
-        for r in spark.sql("SELECT rank, event_id, value FROM topk_out").collect()
-    }
-    # batch 1 emitted (9,7,5); batch 2 re-emitted the merged (9,8,7)
-    assert {(1, 11, 9.0), (2, 12, 7.0), (3, 10, 5.0)} <= emitted   # batch-1 state
-    assert {(1, 11, 9.0), (2, 14, 8.0), (3, 12, 7.0)} <= emitted   # merged state
-    # never-top-k events are never emitted; the k-bound holds
-    assert not any(e in (13, 15) for _, e, _v in emitted)
-    assert len(emitted) == 5
-
-
-def test_streaming_inactivity_monitor(spark, tmp_path):
-    """EventTimeTimeout state expiry: user 1's state times out (and the
-    expired=true row emits) once batch 2's far-future event from user 9
-    drives the watermark past user 1's last event + gap. User 9's own
-    state stays live (no expiry row)."""
-    import os
-
-    from emission_project_spark.streaming.stateful import inactivity_monitor
-
-    incoming = tmp_path / "incoming"
-    incoming.mkdir()
-    (incoming / "a.csv").write_text(
-        "user_id,ts\n"
-        "1,2024-01-01 10:00:00\n"
-        "1,2024-01-01 10:10:00\n"          # last activity 10:10, expiry at 10:40
-    )
-    (incoming / "b.csv").write_text(
-        "user_id,ts\n"
-        "9,2024-01-01 12:00:00\n"          # watermark -> 11:50 >> 10:40
-    )
-    os.utime(incoming / "a.csv", (1000000000, 1000000000))
-    os.utime(incoming / "b.csv", (1000000100, 1000000100))
-
-    stream = (
-        spark.readStream.format("csv")
-        .schema("user_id bigint, ts timestamp")
-        .option("header", "true")
-        .option("maxFilesPerTrigger", "1")
-        .load(str(incoming))
-    )
-    q = (
-        inactivity_monitor(stream, gap_seconds=1800, lateness="5 minutes")
-        .writeStream.format("memory")
-        .queryName("inact_out")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    rows = {
-        (r.user_id, str(r.last_ts), r.n_events, r.expired)
-        for r in spark.sql("SELECT * FROM inact_out").collect()
-    }
-    assert (1, "2024-01-01 10:10:00", 2, False) in rows     # live emission
-    assert (1, "2024-01-01 10:10:00", 2, True) in rows      # watermark-driven expiry
-    assert (9, "2024-01-01 12:00:00", 1, False) in rows     # still live
-    assert not any(u == 9 and e for u, _t, _n, e in rows)   # user 9 never expires
-
-
-def test_stream_static_enrichment_picks_up_dim_updates(spark, tmp_path):
-    """Stream-static left join: unmatched stream rows keep NULLs; a dim
-    rewrite between availableNow drains is picked up (the static side
-    is re-planned per run — how a batch-maintained dimension feeds a
-    live enrichment)."""
-    import json
-
-    from emission_project_spark.streaming.enrich import enrich_stream
-
-    dim_dir = tmp_path / "dim"
-    spark.createDataFrame(
-        [(1, "alpha"), (2, "beta")], "k int, label string"
-    ).write.mode("overwrite").parquet(str(dim_dir))
-
-    incoming = tmp_path / "in"
-    incoming.mkdir()
-    (incoming / "a.jsonl").write_text(
-        "\n".join(json.dumps(r) for r in [{"id": 10, "k": 1}, {"id": 11, "k": 3}])
-    )
-
-    stream = (
-        spark.readStream.format("json")
-        .schema("id int, k int")
-        .load(str(incoming))
-    )
-    out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    q = (
-        enrich_stream(stream, spark.read.parquet(str(dim_dir)), "k")
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {r["id"]: r["label"] for r in spark.read.parquet(out_dir).collect()}
-    assert got == {10: "alpha", 11: None}  # orphan FK kept, NULL label
-
-    # dim rewritten (k=3 appears, k=1 relabeled) + a new stream file:
-    # the next drain enriches with the NEW dim rows
-    spark.createDataFrame(
-        [(1, "alpha2"), (3, "gamma")], "k int, label string"
-    ).write.mode("overwrite").parquet(str(dim_dir))
-    (incoming / "b.jsonl").write_text(
-        "\n".join(json.dumps(r) for r in [{"id": 12, "k": 1}, {"id": 13, "k": 3}])
-    )
-    q2 = (
-        enrich_stream(stream, spark.read.parquet(str(dim_dir)), "k")
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination(120)
-    got = {r["id"]: r["label"] for r in spark.read.parquet(out_dir).collect()}
-    assert got == {10: "alpha", 11: None, 12: "alpha2", 13: "gamma"}
-
-
-def test_stream_static_enrichment_inner_drops_orphans(spark, tmp_path):
-    import json
-
-    from emission_project_spark.streaming.enrich import enrich_stream
-
-    dim = spark.createDataFrame([(1, "alpha")], "k int, label string")
-    incoming = tmp_path / "in"
-    incoming.mkdir()
-    (incoming / "a.jsonl").write_text(
-        "\n".join(json.dumps(r) for r in [{"id": 1, "k": 1}, {"id": 2, "k": 9}])
-    )
-    stream = (
-        spark.readStream.format("json")
-        .schema("id int, k int")
-        .load(str(incoming))
-    )
-    q = (
-        enrich_stream(stream, dim, "k", how="inner")
-        .writeStream.format("parquet")
-        .option("path", str(tmp_path / "out"))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.read.parquet(str(tmp_path / "out")).collect()
-    assert [r["id"] for r in rows] == [1]
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        enrich_stream(stream, dim, "k", how="full")
-
-
-def test_streaming_last_touch_attribution(spark, tmp_path):
-    """Last-touch state carries ACROSS micro-batches (batch-2 purchase
-    credits batch-1 touch), same-timestamp touches resolve to the
-    higher event_id, touches after a purchase don't credit it
-    retroactively, and the per-channel aggregate of the streamed
-    emissions equals the oracle-checked batch twin on identical data."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from emission_project_spark.streaming.stateful import last_touch_attribution
-
-    incoming = tmp_path / "incoming"
-    incoming.mkdir()
-    # written intentionally out of time order inside each file: the
-    # operator must sort by (ts, event_id) before walking the timeline
-    (incoming / "a.csv").write_text(
-        "event_id,ts,user_id,event_type,value\n"
-        "3,2024-03-01 10:10:00,1,purchase,10.0\n"
-        "1,2024-03-01 10:00:00,1,click,0.0\n"
-        "2,2024-03-01 10:00:00,1,view,0.0\n"      # same ts as click: id 2 wins
-        "4,2024-03-01 10:00:00,2,purchase,5.0\n"  # no prior touch: direct
-    )
-    (incoming / "b.csv").write_text(
-        "event_id,ts,user_id,event_type,value\n"
-        "5,2024-03-01 10:20:00,1,purchase,20.0\n"  # credits batch-1 'view'
-        "6,2024-03-01 10:30:00,1,signup,0.0\n"
-        "7,2024-03-01 10:40:00,1,purchase,30.0\n"  # credits 'signup'
-        "8,2024-03-01 10:50:00,2,click,0.0\n"
-        "9,2024-03-01 11:00:00,2,purchase,40.0\n"  # credits 'click'
-    )
-    os.utime(incoming / "a.csv", (1000000000, 1000000000))
-    os.utime(incoming / "b.csv", (1000000100, 1000000100))
-
-    stream = (
-        spark.readStream.format("csv")
-        .schema("event_id bigint, ts timestamp, user_id bigint,"
-                " event_type string, value double")
-        .option("header", "true")
-        .option("maxFilesPerTrigger", "1")
-        .load(str(incoming))
-    )
-    q = (
-        last_touch_attribution(stream)
-        .writeStream.format("memory")
-        .queryName("attr_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ck_attr"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        r.purchase_id: (r.channel, r.value)
-        for r in spark.sql(
-            "SELECT purchase_id, channel, value FROM attr_out"
-        ).collect()
-    }
-    assert got == {
-        3: ("view", 10.0),     # same-ts tie: view (id 2) beats click (id 1)
-        4: ("direct", 5.0),
-        5: ("view", 20.0),     # state carried across micro-batches
-        7: ("signup", 30.0),
-        9: ("click", 40.0),
-    }
-
-    # batch-twin consistency: the registered oracle-checked query over
-    # the same rows equals the per-channel aggregate of the emissions
-    import datetime as _dt
-
-    import __spark_entry__ as entrymod
-
-    rows = [
-        (3, "2024-03-01 10:10:00", 1, "purchase", 10.0),
-        (1, "2024-03-01 10:00:00", 1, "click", 0.0),
-        (2, "2024-03-01 10:00:00", 1, "view", 0.0),
-        (4, "2024-03-01 10:00:00", 2, "purchase", 5.0),
-        (5, "2024-03-01 10:20:00", 1, "purchase", 20.0),
-        (6, "2024-03-01 10:30:00", 1, "signup", 0.0),
-        (7, "2024-03-01 10:40:00", 1, "purchase", 30.0),
-        (8, "2024-03-01 10:50:00", 2, "click", 0.0),
-        (9, "2024-03-01 11:00:00", 2, "purchase", 40.0),
-    ]
-    d = tmp_path / "twin"
-    d.mkdir()
-    pq.write_table(
-        pa.table(
-            {
-                "event_id": pa.array([r[0] for r in rows], type=pa.int64()),
-                "ts": pa.array(
-                    [_dt.datetime.fromisoformat(r[1]) for r in rows],
-                    type=pa.timestamp("us"),
-                ),
-                "user_id": pa.array([r[2] for r in rows], type=pa.int64()),
-                "event_type": pa.array([r[3] for r in rows], type=pa.string()),
-                "value": pa.array([r[4] for r in rows], type=pa.float64()),
-            }
-        ),
-        str(d / "events.parquet"),
-    )
-    twin = {
-        r.channel: (r.n_purchases, r.attributed_value)
-        for r in entrymod.queries()["events_attribution_last_touch"](
-            spark, str(d)
-        ).collect()
-    }
-    from collections import Counter, defaultdict
-
-    agg_n = Counter(ch for ch, _ in got.values())
-    agg_v = defaultdict(float)
-    for ch, v in got.values():
-        agg_v[ch] += v
-    assert twin == {ch: (agg_n[ch], round(agg_v[ch], 4)) for ch in agg_n}
-
-
-def test_rate_limit_token_bucket_across_batches(spark, tmp_path):
-    """Bucket capacity 2, refill 1/s: user 1 fires 3 events at t=0
-    (third rejected), then one at t=+1.5s in a SECOND micro-batch —
-    the state carried 0 tokens, refilled 1.5, so it is accepted and
-    leaves 0.5. Hand-replayed recurrence, cross-batch state proven by
-    maxFilesPerTrigger=1."""
-    from emission_project_spark.streaming.stateful import rate_limit_token_bucket
-
-    incoming = tmp_path / "incoming"
-    incoming.mkdir()
-    (incoming / "a.csv").write_text(
-        "ts,event_id,user_id\n"
-        "2024-01-01 00:00:00.000,1,1\n"
-        "2024-01-01 00:00:00.100,2,1\n"
-        "2024-01-01 00:00:00.200,3,1\n"
-    )
-    (incoming / "b.csv").write_text(
-        "ts,event_id,user_id\n2024-01-01 00:00:01.700,4,1\n"
-    )
-    stream = (
-        spark.readStream.format("csv")
-        .schema("ts timestamp, event_id bigint, user_id bigint")
-        .option("header", "true")
-        .option("maxFilesPerTrigger", "1")
-        .load(str(incoming))
-    )
-    q = (
-        rate_limit_token_bucket(stream, capacity=2.0, refill_per_sec=1.0)
-        .writeStream.format("memory")
-        .queryName("rate_limit_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = {
-        r.event_id: r for r in spark.sql("SELECT * FROM rate_limit_out").collect()
-    }
-    # t=0: full bucket 2.0 -> accept, 1.0 left
-    assert rows[1].accepted and abs(rows[1].tokens_after - 1.0) < 1e-9
-    # e2 at +0.1s: 1.0 + 0.1 refill = 1.1 -> accept -> 0.1
-    assert rows[2].accepted and abs(rows[2].tokens_after - 0.1) < 1e-9
-    # e3 at +0.2s: 0.1 + 0.1 refill = 0.2 < 1 -> REJECTED
-    assert not rows[3].accepted
-    # e4 in batch 2 at +1.5s after e3: 0.2 + 1.5 = 1.7 -> accept -> 0.7
-    assert rows[4].accepted
-    assert abs(rows[4].tokens_after - 0.7) < 1e-9
-
-
-def test_ewma_anomaly_monitor_scores_before_update(spark, tmp_path):
-    """A stable series then a spike: the spike is scored against the
-    PRE-spike baseline (anomaly), and the first event has no baseline
-    (NULL z, not anomalous). Cross-batch state via two files."""
-    from emission_project_spark.streaming.stateful import ewma_anomaly_monitor
-
-    incoming = tmp_path / "incoming"
-    incoming.mkdir()
-    (incoming / "a.csv").write_text(
-        "ts,event_id,event_type,value\n"
-        "2024-01-01 00:00:00,1,click,10.0\n"
-        "2024-01-01 00:00:01,2,click,11.0\n"
-        "2024-01-01 00:00:02,3,click,10.0\n"
-        "2024-01-01 00:00:03,4,click,11.0\n"
-    )
-    (incoming / "b.csv").write_text(
-        "ts,event_id,event_type,value\n2024-01-01 00:00:04,5,click,1000.0\n"
-    )
-    stream = (
-        spark.readStream.format("csv")
-        .schema("ts timestamp, event_id bigint, event_type string, value double")
-        .option("header", "true")
-        .option("maxFilesPerTrigger", "1")
-        .load(str(incoming))
-    )
-    q = (
-        ewma_anomaly_monitor(stream, alpha=0.3, z_threshold=3.0)
-        .writeStream.format("memory")
-        .queryName("ewma_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = {r.event_id: r for r in spark.sql("SELECT * FROM ewma_out").collect()}
-    assert rows[1].zscore is None and not rows[1].anomaly
-    assert not rows[2].anomaly and not rows[3].anomaly and not rows[4].anomaly
-    # the spike arrives in a LATER batch and is judged by carried state
-    assert rows[5].anomaly and rows[5].zscore > 3.0
-    # hand-replay of the EWMA recurrence (alpha=0.3) for event 2:
-    # after e1: mean=3.0+... mean1 = 0 + .3*10 = 3.0? NO: first event
-    # initializes via the same update from (0,0): mean = 0.3*10 = 3.0
-    assert abs(rows[2].ewma - (3.0 + 0.3 * (11.0 - 3.0))) < 1e-9
