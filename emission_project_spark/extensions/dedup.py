@@ -122,7 +122,6 @@ def ngram_jaccard_pairs(
     k: int = DEFAULT_SHINGLE,
     threshold: float = 0.8,
     max_doc_freq: int | None = 64,
-    broadcast_sizes: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs by exact shingle-set Jaccard ≥ threshold.
 
@@ -156,14 +155,10 @@ def ngram_jaccard_pairs(
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("size_b"))
     # sizes is one row per DOCUMENT: ~16 B/doc, so the broadcast holds
     # into the hundreds of millions of docs and skips re-shuffling the
-    # pair relation twice (measured 2x at the 10x corpus). Past that —
-    # broadcast_sizes=False — the attach falls back to shuffle joins
-    # keyed on the pair ids (AQE still localizes them when small).
-    if broadcast_sizes:
-        sa, sb = F.broadcast(sa), F.broadcast(sb)
+    # pair relation twice (measured 2x at the 10x corpus)
     return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        inter.join(F.broadcast(sa), "doc_a")
+        .join(F.broadcast(sb), "doc_b")
         .withColumn(
             "jaccard",
             F.round(
@@ -225,7 +220,6 @@ def containment_pairs(
     k: int = DEFAULT_SHINGLE,
     threshold: float = 0.8,
     max_doc_freq: int | None = 64,
-    broadcast_sizes: bool = True,
 ) -> DataFrame:
     """Asymmetric shingle-set CONTAINMENT near-dup pairs: the smaller
     shingle set's coverage by the larger, C = |A∩B| / min(|A|,|B|).
@@ -260,13 +254,10 @@ def containment_pairs(
     small_is_a = (F.col("size_a") < F.col("size_b")) | (
         (F.col("size_a") == F.col("size_b")) & (F.col("doc_a") < F.col("doc_b"))
     )
-    # same size-attach trade as ngram_jaccard_pairs: ~16 B/doc
-    # broadcast by default, shuffle-join fallback past ~1e8 docs
-    if broadcast_sizes:
-        sa, sb = F.broadcast(sa), F.broadcast(sb)
+    # same ~16 B/doc size-attach broadcast as ngram_jaccard_pairs
     return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        inter.join(F.broadcast(sa), "doc_a")
+        .join(F.broadcast(sb), "doc_b")
         .withColumn(
             "containment",
             F.round(F.col("n_common") / F.least("size_a", "size_b"), 6),

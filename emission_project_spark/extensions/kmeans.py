@@ -22,7 +22,7 @@ choices:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 GRID = 6  # decimal rounding grid for recomputed centroids

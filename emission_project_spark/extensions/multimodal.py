@@ -118,7 +118,6 @@ def resize_images(
     target_w: int,
     target_h: int,
     decoder: Callable[[bytes], tuple[int, int, int]] = decode_image,
-    partitions: int | None = None,
 ) -> DataFrame:
     """Aspect-preserving fit-within-box resize over binary payloads.
 
@@ -128,8 +127,6 @@ def resize_images(
     resample is stubbed — ``resized_md5`` digests the original payload
     as a stand-in for the re-encoded image bytes.
     """
-    if partitions:
-        media = media.repartition(partitions)
     _pickle_by_value()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -158,7 +155,6 @@ def sample_frames(
     media: DataFrame,
     every_n: int = 4,
     decoder: Callable[[bytes], tuple[int, int, int]] = decode_image,
-    partitions: int | None = None,
 ) -> DataFrame:
     """Every-Nth-frame sampling over video payloads — one output row per
     sampled frame (a fan-out map, so mapInPandas not a scalar UDF).
@@ -168,8 +164,6 @@ def sample_frames(
     batch-streaming plumbing are real; the decoded frame bytes are
     stubbed as md5(payload ‖ ':' ‖ frame_idx).
     """
-    if partitions:
-        media = media.repartition(partitions)
     _pickle_by_value()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -38,6 +38,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from emission_project_spark.functions.ranks import topk_per_query
 from emission_project_spark.functions.vectors import row_matrix
 
 
@@ -593,13 +594,8 @@ def ivfpq_topk_expr(
         "vec_id",
         F.round(_sq_dist(F.col("qr"), F.col("rr")), 6).alias("ad2"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("ad2").asc(), F.col("vec_id").asc()
-    )
-    return (
-        out.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "ad2")
+    return topk_per_query(out, F.col("ad2").asc(), k).select(
+        "query_id", "rank", "vec_id", "ad2"
     )
 
 
@@ -632,8 +628,6 @@ def ivfpq_rerank_topk_expr(
     ≤shortlist rows per query, never a second full-precision corpus
     scan.
     """
-    from pyspark.sql import Window
-
     from emission_project_spark.extensions.kmeans import _sq_dist
 
     short = ivfpq_topk_expr(
@@ -663,11 +657,6 @@ def ivfpq_rerank_topk_expr(
             F.round(_sq_dist(F.col("qe"), F.col("e")), 6).alias("ed2"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("ed2").asc(), F.col("vec_id").asc()
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "ed2")
+    return topk_per_query(exact, F.col("ed2").asc(), k).select(
+        "query_id", "rank", "vec_id", "ed2"
     )

@@ -23,6 +23,7 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from emission_project_spark.functions.ranks import topk_per_query
 from emission_project_spark.functions.vectors import cosine_similarity
 
 ROUND = 6
@@ -52,13 +53,8 @@ def _scored(vectors: DataFrame, query: DataFrame) -> DataFrame:
 def brute_force_topk(vectors: DataFrame, query: DataFrame, k: int = 10) -> DataFrame:
     """Exact top-k by cosine for each query row (excludes self-match)."""
     scored = _scored(vectors, query).filter(F.col("vec_id") != F.col("query_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "cosine_sim")
+    return topk_per_query(scored, F.col("cosine_sim").desc(), k).select(
+        "query_id", "rank", "vec_id", "cosine_sim"
     )
 
 
@@ -93,13 +89,8 @@ def hard_negative_topk(vectors: DataFrame, query: DataFrame, k: int = 8) -> Data
             F.round(cosine_similarity("_emb", "_q_emb"), ROUND).alias("cosine_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "neg_label", "cosine_sim")
+    return topk_per_query(scored, F.col("cosine_sim").desc(), k).select(
+        "query_id", "rank", "vec_id", "neg_label", "cosine_sim"
     )
 
 
@@ -151,13 +142,8 @@ def ivf_topk(
         "vec_id",
         F.round(cosine_similarity("embedding", "_q_emb"), ROUND).alias("cosine_sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "cosine_sim")
+    return topk_per_query(scored, F.col("cosine_sim").desc(), k).select(
+        "query_id", "rank", "vec_id", "cosine_sim"
     )
 
 
@@ -224,13 +210,8 @@ def ivf_topk_kmeans(
         "vec_id",
         F.round(cosine_similarity("e", "_q_e"), ROUND).alias("cosine_sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "cosine_sim")
+    return topk_per_query(scored, F.col("cosine_sim").desc(), k).select(
+        "query_id", "rank", "vec_id", "cosine_sim"
     )
 
 

@@ -41,6 +41,7 @@ __all__ = [
     "row_position",
     "ntile_from_position",
     "shared_bounds",
+    "topk_per_query",
 ]
 
 
@@ -269,6 +270,18 @@ def global_row_number(
         ranged.join(F.broadcast(offs), "__pid")
         .withColumn(out_col, (F.col("__off") + F.col("__idx") + 1).cast("long"))
         .drop("__pid", "__idx", "__off")
+    )
+
+
+def topk_per_query(scored: DataFrame, order: Column, k: int) -> DataFrame:
+    """The ``k`` best rows per ``query_id`` of a scored candidate
+    relation: ``rank`` (bigint) is ``row_number()`` over ``order``, ties
+    broken by ``vec_id`` ascending, so Spark and the DuckDB oracles rank
+    identically. The filter on the window rank plans as a
+    WindowGroupLimit, so the partial top-k runs before the shuffle."""
+    w = Window.partitionBy("query_id").orderBy(order, F.col("vec_id").asc())
+    return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(
+        F.col("rank") <= k
     )
 
 

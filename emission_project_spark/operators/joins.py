@@ -104,7 +104,6 @@ def join_dim_role(
     fact_key: str,
     dim_key: str,
     take: Mapping[str, str],
-    broadcast_dim: bool = True,
 ) -> DataFrame:
     """Role-playing dimension join (reference J9/J10: the same city/
     country dim joined twice as start_* and target_*,
@@ -112,12 +111,10 @@ def join_dim_role(
 
     Attaches ``take`` = {dim_col: new_name} from ``dim`` matching
     ``fact.fact_key == dim.dim_key``; the dim is aliased so repeated
-    joins against the same dim never collide, and broadcast by default
-    (dims are small relative to the fact — SURVEY.md §2.3 note).
+    joins against the same dim never collide, and broadcast (dims are
+    small relative to the fact — SURVEY.md §2.3 note).
     """
-    d = dim.alias("_role_dim")
-    if broadcast_dim:
-        d = F.broadcast(d)
+    d = F.broadcast(dim.alias("_role_dim"))
     out = fact.join(d, fact[fact_key] == F.col(f"_role_dim.{dim_key}"), "left")
     out = out.select(
         *[fact[c] for c in fact.columns],

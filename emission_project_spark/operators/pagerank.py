@@ -23,11 +23,6 @@ and a re-aggregation on the destination key. Scale notes, audited via
   previous iteration's dst-key aggregate — same hash, same key) plus
   the dst-key aggregate shuffle: ONE edge-sized exchange per
   iteration, the synchronous-PR minimum;
-- lineage grows with the iteration count under pure persist, so every
-  ``truncate_every`` iterations the rank vector takes one
-  ``localCheckpoint`` — a safety valve for long runs (the default 16
-  never fires at the product's 5 iterations) that costs one rank
-  re-exchange on the following round;
 - no driver-side data movement: the loop is driver-side only in its
   CONTROL FLOW (a fixed iteration count needs no convergence collect).
 
@@ -64,7 +59,6 @@ def pagerank(
     iterations: int = 5,
     damping: float = 0.85,
     assume_full_in_edges: bool = False,
-    truncate_every: int = 16,
 ) -> DataFrame:
     """Rank nodes of a directed edge list; returns (node, degree, rank).
 
@@ -80,8 +74,6 @@ def pagerank(
     """
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
-    if truncate_every < 1:
-        raise ValueError("truncate_every must be >= 1")
     from pyspark.sql import Window
 
     # ONE pass builds the iteration relation: hash-partition on the
@@ -104,7 +96,7 @@ def pagerank(
     if not assume_full_in_edges:
         nodes = nodes.persist()  # read every iteration by the floor join
     ranks = nodes.select("node", F.lit(1.0).alias("rank"))
-    for i in range(1, iterations + 1):
+    for _ in range(iterations):
         agg = (
             e.join(ranks, e["_src"] == ranks["node"])
             .select("_dst", (F.col("rank") / F.col("_deg")).alias("_contrib"))
@@ -124,8 +116,5 @@ def pagerank(
                 "node",
                 F.coalesce(F.col("_r"), F.lit(1.0 - damping)).alias("rank"),
             )
-        if i % truncate_every == 0 and i < iterations:
-            # long-run lineage safety valve (see module docstring)
-            ranks = ranks.localCheckpoint(eager=False)
     node_deg = deg.select(F.col("_src").alias("node"), F.col("_deg").alias("degree"))
     return ranks.join(node_deg, "node")

@@ -27,18 +27,17 @@ def range_join(
     right_ts: str,
     lower_s: float,
     upper_s: float,
-    bucket_s: float | None = None,
 ) -> DataFrame:
     """All (left, right) pairs with ``r.ts - l.ts`` in [lower_s, upper_s].
 
     Returns left columns + right columns (caller should pre-select /
     alias to avoid collisions) + ``delta_us`` (µs, exact integer).
-    ``bucket_s`` defaults to the window width — one-to-two replicas per
-    left row.
+    The bucket width is the window width — one-to-two replicas per left
+    row.
     """
     if upper_s < lower_s:
         raise ValueError("upper_s must be >= lower_s")
-    width_us = int((bucket_s or max(upper_s - lower_s, 1e-6)) * 1_000_000)
+    width_us = int(max(upper_s - lower_s, 1e-6) * 1_000_000)
     lower_us, upper_us = int(lower_s * 1_000_000), int(upper_s * 1_000_000)
 
     l_us = F.unix_micros(F.col(left_ts))

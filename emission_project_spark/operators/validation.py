@@ -69,41 +69,3 @@ def validate_fks(child: DataFrame, fks: list[FkSpec]) -> dict[str, int]:
     """Eager convenience wrapper: run :func:`fk_violation_counts` and
     return ``{fk_name: violations}`` (one small collect of len(fks) rows)."""
     return {r.fk_name: int(r.violations) for r in fk_violation_counts(child, fks).collect()}
-
-
-def profile_columns(
-    df: DataFrame, cols: list[str] | None = None, exact: bool = True
-) -> DataFrame:
-    """Column-level profile in ONE scan: (col_name, n_rows, n_null,
-    n_distinct) per column — the data-quality census that feeds
-    contract design (TableContract) and join-key selection
-    (key_skew_profile).
-
-    ``exact=True`` uses count(DISTINCT) — Spark compiles multiple
-    distincts into one Expand-based aggregate (rows × #cols
-    intermediate), which is the oracle-checkable configuration.
-    ``exact=False`` swaps in approx_count_distinct (HLL++, one
-    non-expanded pass) — the 100 TB configuration, where a ±2%
-    cardinality answers the same planning questions at a fraction of
-    the shuffle.
-    """
-    names = cols if cols is not None else df.columns
-    distinct_fn = F.countDistinct if exact else F.approx_count_distinct
-    aggs = [F.count(F.lit(1)).alias("_n")]
-    for c in names:
-        aggs.append(
-            F.sum(F.isnull(c).cast("bigint")).alias(f"_null_{c}")
-        )
-        aggs.append(distinct_fn(c).alias(f"_dist_{c}"))
-    one = df.agg(*aggs)
-    stack_args = []
-    for c in names:
-        stack_args.append(F.lit(c))
-        stack_args.append(F.col(f"_null_{c}"))
-        stack_args.append(F.col(f"_dist_{c}"))
-    return one.select(
-        F.col("_n").alias("n_rows"),
-        F.stack(
-            F.lit(len(names)), *stack_args
-        ).alias("col_name", "n_null", "n_distinct"),
-    ).select("col_name", "n_rows", "n_null", "n_distinct")

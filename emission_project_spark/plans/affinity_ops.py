@@ -865,9 +865,7 @@ def text_vocab_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # collect; at 100 TB this is a single shuffle on user_id and a sorted
 # stream per user. Ordering ties broken by event_id so both engines
 # walk identical timelines.
-@register(
-    "events_attribution_last_touch",
-    oracle="""
+LAST_TOUCH_SQL = """
     WITH tl AS (
         SELECT event_type, value,
                last_value(CASE WHEN event_type IN ('click','view','signup')
@@ -882,8 +880,10 @@ def text_vocab_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(sum(value), 4) AS attributed_value
     FROM tl WHERE event_type = 'purchase'
     GROUP BY 1
-    """,
-)
+"""
+
+
+@register("events_attribution_last_touch", oracle=LAST_TOUCH_SQL)
 def events_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     w = (

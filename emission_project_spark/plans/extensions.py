@@ -34,9 +34,7 @@ from emission_project_spark.functions.text import (
     LANG_MARKERS,
     char_count,
     lang_scores,
-    punct_ratio,
     quality_score,
-    stopword_ratio,
     fingerprint,
     token_count,
 )
@@ -49,6 +47,7 @@ from emission_project_spark.extensions.multimodal import (
 )
 from emission_project_spark.functions.vectors import l2_norm
 from emission_project_spark.plans.registry import register
+from emission_project_spark.plans.relational import events_sessionize
 
 # DuckDB needs the 'g' flag for global regexp_replace (Spark is always global)
 _FP_SQL = "md5(regexp_replace(lower(text), '\\W', '', 'g'))"
@@ -1743,9 +1742,9 @@ def curation_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- Whole-history per-user (count, sum): what a stateful stream
-# keeping per-user running totals converges to over a bounded input is
-# exactly this grouped aggregate.
+# --- Whole-history per-user totals: event count and value sum per
+# user_id over the events table, one grouped aggregate (map-side
+# partial, one shuffle on user_id).
 @register(
     "stream_user_totals_batch",
     oracle="""
@@ -1837,18 +1836,14 @@ def stream_interval_join_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- Batch twin of native session windows (streaming/stateful.py
-# session_window_totals): F.session_window merges per-key events whose
-# gaps stay under 30 minutes into [min ts, max ts + gap) sessions. The
-# SAME function runs streaming (watermarked state-store sessions,
-# proven by tests/test_streaming.py::test_streaming_session_windows);
-# this row proves the merge semantics against gaps-and-islands SQL: an
-# event merges into the prior session up to AND INCLUDING ts + gap
-# (Spark merges when the new event's start <= the open session's end —
-# closed boundary, pinned by
+# --- `stream_sessionize_batch` is `events_sessionize`
+# (plans/relational.py) under a second name, checked against a second
+# reference formulation: gaps-and-islands SQL with the break written as
+# `ts > lag(ts) + gap`. session_window merges an event into the prior
+# session up to AND INCLUDING ts + gap (closed boundary, pinned by
 # test_session_window_gap_boundary_semantics), so a new session starts
 # only strictly past it.
-@register(
+register(
     "stream_sessionize_batch",
     oracle="""
     WITH m AS (
@@ -1873,14 +1868,7 @@ def stream_interval_join_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM s
     GROUP BY user_id, sid
     """,
-)
-def stream_sessionize_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from emission_project_spark.streaming.stateful import session_window_totals
-
-    e = load_table(spark, sf_dir, "events")
-    return session_window_totals(
-        e.select("user_id", "ts", "value"), key="user_id", ts_col="ts", gap="30 minutes"
-    )
+)(events_sessionize)
 
 
 # --- Batch twin of the streaming windowed distinct-user count
@@ -3169,11 +3157,10 @@ def curation_train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-# --- Top-k values per user: over a bounded input a streaming
-# O(k)-per-key heap converges to exactly the rank query below (value
-# desc, event_id asc total order — tie-deterministic). The batch plan
-# is the WindowGroupLimit shape: partial top-k runs map-side before
-# the shuffle.
+# --- Top-3 values per user: each user's three highest-value events
+# ranked by (value desc, event_id asc), a total order, so ties rank
+# the same on both engines. The plan is the WindowGroupLimit shape:
+# partial top-k runs map-side before the shuffle.
 @register(
     "stream_topk_values_batch",
     oracle="""

@@ -21,7 +21,7 @@ from emission_project_spark.operators.joins import (
     join_dim_role,
     join_nullsafe,
 )
-from emission_project_spark.operators.keys import add_surrogate_key, date_id_expr
+from emission_project_spark.operators.keys import date_id_expr
 from emission_project_spark.plans.registry import register
 
 
@@ -372,11 +372,12 @@ def role_playing_nation_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- §4.3.1: dense ordered surrogate keys (SERIAL semantics). The
-# registered form runs the DISTRIBUTED id assigner (range-partitioned
-# local row_numbers + a partition-count-sized offset prefix — the
-# 100 TB path; operators/keys.py:45) — identical output to the
-# single-window add_surrogate_key for unique sort keys, which s_name
-# is; the equivalence is pinned in tests/test_operators.py.
+# registered form runs the DISTRIBUTED dense row number
+# (functions/ranks.py::global_row_number: sampled range partitions, one
+# materialized layout, a partition-count-sized offset prefix — the
+# 100 TB path) — identical output to the single-window
+# add_surrogate_key for unique sort keys, which s_name is; the
+# equivalence is pinned in tests/test_operators.py.
 @register(
     "surrogate_keys_dense",
     oracle="""
@@ -386,12 +387,12 @@ def role_playing_nation_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def surrogate_keys_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from emission_project_spark.operators.keys import (
-        add_surrogate_key_distributed,
-    )
+    from emission_project_spark.functions.ranks import global_row_number
 
     s = load_table(spark, sf_dir, "supplier").select("s_name")
-    return add_surrogate_key_distributed(s, "supplier_sk", order_by=["s_name"])
+    return global_row_number(
+        s, [F.col("s_name").asc_nulls_last()], out_col="supplier_sk"
+    ).select("supplier_sk", "s_name")
 
 
 # --- J11/S5: incremental insert — batch minus already-loaded state
@@ -2317,11 +2318,11 @@ def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- Column-census profile (operators/validation.py::profile_columns):
-# null count + exact distinct cardinality for every orders column in
-# ONE scan (Spark's multi-distinct Expand aggregate; the operator's
-# exact=False flag swaps HLL++ for the 100 TB configuration). The
-# oracle restates it as one UNION ALL branch per column.
+# --- Column-census profile (extensions/curation.py::profile_columns,
+# projected to its row count, null count and exact distinct
+# cardinality): every orders column in ONE scan (Spark's multi-distinct
+# Expand aggregate). The oracle restates it as one UNION ALL branch per
+# column.
 @register(
     "profile_orders_columns",
     oracle="""
@@ -2357,10 +2358,15 @@ def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def profile_orders_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from emission_project_spark.operators.validation import profile_columns
+    from emission_project_spark.extensions.curation import profile_columns
 
     o = load_table(spark, sf_dir, "orders")
-    return profile_columns(o)
+    return profile_columns(o).select(
+        F.col("column_name").alias("col_name"),
+        "n_rows",
+        F.col("n_nulls").alias("n_null"),
+        "n_distinct",
+    )
 
 
 # --- SCD Type-2 dimension maintenance (operators/scd.py): the

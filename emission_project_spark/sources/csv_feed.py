@@ -56,11 +56,11 @@ def read_feed(
     return df, files
 
 
-def archive_consumed(files: list[str], archive_dir: str, now: datetime | None = None) -> list[str]:
+def archive_consumed(files: list[str], archive_dir: str) -> list[str]:
     """Move consumed files to the archive dir with the reference's
     timestamp suffix. Call AFTER the downstream write commits."""
     os.makedirs(archive_dir, exist_ok=True)
-    ts = (now or datetime.now(timezone.utc)).strftime(ARCHIVE_TS_FMT)
+    ts = datetime.now(timezone.utc).strftime(ARCHIVE_TS_FMT)
     moved = []
     for path in files:
         stem, ext = os.path.splitext(os.path.basename(path))

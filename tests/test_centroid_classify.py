@@ -7,7 +7,6 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow.parquet as pq
-from pyspark.sql import functions as F
 
 from emission_project_spark.extensions.similarity import centroid_classify
 

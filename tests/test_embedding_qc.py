@@ -4,12 +4,10 @@ consistency contract of dedup_canonical_survivors."""
 
 from __future__ import annotations
 
-import math
 import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-import pytest
 
 from emission_project_spark.plans.extensions import (
     dedup_canonical_survivors,

@@ -3,17 +3,13 @@
 
 from __future__ import annotations
 
-from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from emission_project_spark.functions.ranks import global_row_number
 from emission_project_spark.operators.dedup import dedup_subset, union_distinct
 from emission_project_spark.operators.incremental import incremental_insert, upsert
 from emission_project_spark.operators.joins import anti_join, join_nullsafe
-from emission_project_spark.operators.keys import (
-    add_surrogate_key,
-    add_surrogate_key_distributed,
-    date_id_expr,
-)
+from emission_project_spark.operators.keys import add_surrogate_key, date_id_expr
 
 
 def test_nullsafe_join_matches_null_keys(spark):
@@ -59,7 +55,7 @@ def test_union_distinct(spark):
 def test_surrogate_keys_dense_and_distributed_agree(spark):
     df = spark.createDataFrame([(c,) for c in "fcadbe"], "name string")
     exact = add_surrogate_key(df, "id", order_by=["name"])
-    dist = add_surrogate_key_distributed(df, "id", order_by=["name"], num_partitions=3)
+    dist = global_row_number(df, ["name"], out_col="id", num_partitions=3)
     expected = [(i + 1, c) for i, c in enumerate("abcdef")]
     assert [(r.id, r.name) for r in exact.orderBy("id").collect()] == expected
     assert [(r.id, r.name) for r in dist.orderBy("id").collect()] == expected

@@ -12,17 +12,14 @@ from __future__ import annotations
 import math
 
 import pandas as pd
-import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from emission_project_spark.functions.ranks import global_row_number
 from emission_project_spark.operators.components import connected_components
 from emission_project_spark.operators.dedup import dedup_subset
 from emission_project_spark.operators.joins import anti_join, join_nullsafe
-from emission_project_spark.operators.keys import (
-    add_surrogate_key,
-    add_surrogate_key_distributed,
-)
+from emission_project_spark.operators.keys import add_surrogate_key
 
 SETTINGS = dict(
     max_examples=8,
@@ -112,7 +109,7 @@ def test_surrogate_keys_dense_and_order_stable(spark, vals):
     exact = {(r.v, r.sk) for r in add_surrogate_key(df, "sk", ["v"]).collect()}
     dist = {
         (r.v, r.sk)
-        for r in add_surrogate_key_distributed(df, "sk", ["v"], num_partitions=3).collect()
+        for r in global_row_number(df, ["v"], out_col="sk", num_partitions=3).collect()
     }
     expected = {(v, i + 1) for i, v in enumerate(sorted(vals))}
     assert exact == expected  # dense 1..N in sort order

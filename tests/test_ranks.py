@@ -260,3 +260,25 @@ def test_global_row_number_matches_window(spark):
             ).collect()
         }
         assert got == want
+
+
+def test_global_row_number_when_range_partitioner_samples(spark):
+    """200k rows into 8 range partitions: the range partitioner draws
+    about 100 sample keys per output partition, far fewer than the
+    input, so its boundaries come from a sample, not the whole key set.
+    The ids must still be exactly 1..N, unique, and in key order —
+    surrogate_keys_dense relies on this at scale."""
+    from emission_project_spark.functions.ranks import global_row_number
+
+    n = 200_000
+    # 7919 is prime and does not divide n: k is a permutation of 0..n-1
+    df = spark.range(n).select(((F.col("id") * 7919) % n).alias("k"))
+    ranked = global_row_number(df, [F.col("k")], num_partitions=8)
+    got = ranked.agg(
+        F.count(F.lit(1)).alias("rows"),
+        F.countDistinct("rk").alias("ids"),
+        F.min("rk").alias("lo"),
+        F.max("rk").alias("hi"),
+        F.sum((F.col("rk") != F.col("k") + 1).cast("long")).alias("out_of_order"),
+    ).first()
+    assert got.asDict() == {"rows": n, "ids": n, "lo": 1, "hi": n, "out_of_order": 0}

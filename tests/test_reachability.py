@@ -15,6 +15,11 @@ runs is kept only as the reference a test compares a product path
 against. Dead code that comes back fails the test, and so does an
 allowlisted unit that gets wired in and should leave the list.
 
+A second sweep holds imports to the same rule: every module-level
+import in the package, ``tests/``, ``tools/``, ``bench.py`` and
+``__spark_entry__.py`` binds a name its module uses (``__init__.py``
+files are exempt: their imports are re-exports).
+
 Pure AST, no Spark session. Run alone with
 ``python -m pytest tests/test_reachability.py -q``.
 """
@@ -28,6 +33,7 @@ ROOT = Path(__file__).resolve().parent.parent
 PACKAGE = ROOT / "emission_project_spark"
 ROOT_FILES = [ROOT / "bench.py", ROOT / "__spark_entry__.py", PACKAGE / "__main__.py"]
 ROOT_DIRS = [ROOT / "perfbench", ROOT / "tools"]
+IMPORT_SCOPE = [PACKAGE, ROOT / "tests", ROOT / "tools", ROOT / "bench.py", ROOT / "__spark_entry__.py"]
 
 _PQ_TWIN = "tests/test_pq.py::test_ivfpq_expr_twin_matches_numpy_path"
 
@@ -137,3 +143,27 @@ def test_unreached_definitions_are_the_test_references():
     dead = unreached()
     assert sorted(dead - ALLOWED.keys()) == [], "no product path reaches these"
     assert sorted(ALLOWED.keys() - dead) == [], "now reached: drop from ALLOWED"
+
+
+def unused_imports() -> list[str]:
+    """``"<path>:<line> <name>"`` of every module-level import whose
+    bound name its module never reads as a ``Name``."""
+    paths = [q for p in IMPORT_SCOPE for q in ([p] if p.is_file() else sorted(p.rglob("*.py")))]
+    out = []
+    for path in paths:
+        if path.name == "__init__.py":
+            continue
+        tree = ast.parse(path.read_text(), str(path))
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        for node in tree.body:
+            if not isinstance(node, _IMPORTS) or getattr(node, "module", None) == "__future__":
+                continue
+            for a in node.names:
+                bound = a.asname or a.name.split(".")[0]
+                if bound not in used:
+                    out.append(f"{path.relative_to(ROOT).as_posix()}:{node.lineno} {bound}")
+    return out
+
+
+def test_module_level_imports_are_used():
+    assert unused_imports() == []

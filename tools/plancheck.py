@@ -127,7 +127,7 @@ GLOBAL_WINDOW_OK: dict[str, str] = {
     "events_rfm_segments": "bucket prefix ×3",
     "text_heaps_law": "bucket prefix + 10-row curve walk",
     "text_zipf_slope": "bucket prefix (full-vocab rank, ranks.py)",
-    "surrogate_keys_dense": "partition-size prefix (keys.py distributed)",
+    "surrogate_keys_dense": "partition-size prefix (ranks.py global_row_number)",
     # --- value-grain cell tables / fixed grids (the KS/MWU shape) ----
     "stats_ks_two_sample": "cell table (distinct event values)",
     "stats_mannwhitney_u": "cell table (distinct event values)",
