@@ -461,9 +461,10 @@ def ivfpq_topk_expr(
     Scale shape mirrors the numpy path: each Lloyd round broadcasts
     k·dim doubles; codeword assignment broadcasts the m·k_codes·dsub
     codebook union (KBs); the residual relation is checkpointed once
-    (the inverted-list relation a deployment would persist anyway) and
-    the m subspace quantizers train in ONE combined chain over the
-    exploded (vec_id, sub, e) relation — one scan and one
+    (the exploded subspace relation and the per-round codebooks are
+    not: at sf0.1 materializing them read and shuffled no less and was
+    not faster), and the m subspace quantizers train in ONE combined
+    chain over the exploded (vec_id, sub, e) relation — one scan and one
     (vec_id, sub)-keyed exchange per Lloyd round for ALL subspaces,
     not m separate passes (the per-subspace math is independent, so
     the combined chain computes exactly what m chains would); the
@@ -496,8 +497,10 @@ def ivfpq_topk_expr(
             F.col("cluster_id").alias("cell"),
             F.zip_with("e", "_cell_ce", lambda x, c: x - c).alias("r"),
         )
-        # corpus-scale (dim doubles per row): serialized + spillable,
-        # the operators/pagerank.py edge-checkpoint discipline
+        # Materialized, spillable (dim doubles per row): with the
+        # subspace relation and the codebooks below inline, inlining
+        # this too makes similarity_ivfpq_topk rescan the embeddings
+        # (sf0.1: 10,000 → 12,000 parquet rows).
         .localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
     )
 
@@ -514,7 +517,6 @@ def ivfpq_topk_expr(
     subs = (
         res.select("vec_id", "cell", F.explode(sub_structs).alias("c"))
         .select("vec_id", "cell", F.col("c.sub").alias("sub"), F.col("c.e").alias("e"))
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
     )
 
     # Combined per-subspace Lloyd: seeds are the k_codes smallest
@@ -545,7 +547,7 @@ def ivfpq_topk_expr(
                 F.array_sort(F.collect_list(F.struct("pos", "mv"))),
                 lambda st: st["mv"],
             ).alias("ce")
-        ).localCheckpoint(eager=False)
+        )
 
     scored = subs.join(F.broadcast(books), "sub").withColumn(
         "d2", _sq_dist(F.col("e"), F.col("ce"))

@@ -46,8 +46,8 @@ __all__ = [
 
 
 def shared_bounds(df: DataFrame, exprs: dict[str, Column]) -> DataFrame:
-    """ONE bounds pass for several rank calls over the same relation
-    (round 14): per bucket expression ``name`` the 1-row result carries
+    """ONE bounds pass for several rank calls over the same relation:
+    per bucket expression ``name`` the 1-row result carries
     ``__lo_<name>`` / ``__hi_<name>`` — exactly the finite [min, max]
     ``_with_bucket`` would compute for that expression by itself (same
     cast, same NaN skip). A caller running k ``row_position`` /

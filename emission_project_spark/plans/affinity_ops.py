@@ -193,11 +193,6 @@ _PAIRS_SQL = """
     """,
 )
 def graph_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # the edge list feeds FIVE consumers (deg ×2 union branches, the
-    # orientation join, wedge closure, the census agg) — checkpoint it
-    # once so the basket build isn't replayed per consumer (the same
-    # fix that took graph_pagerank_parts 19→5.7 s), spillable at
-    # edge scale (operators/pagerank.py precedent)
     # int_ids: the bytes through EVERY shuffle here — the pair build,
     # the orientation joins and above all the wedge-mass closure joins
     # (8.3G ids at sf10, SCALING.md round 10) — halve when part keys
@@ -223,15 +218,21 @@ def graph_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         if n_edges > TRIANGLE_REPART_EDGE_THRESHOLD
         else None
     )
+    # Materialized, spillable: the edge list feeds five consumers (deg
+    # ×2 union branches, the orientation join, wedge closure, the
+    # census agg); inline, the basket build replays (sf0.1: 1.2M → 1.8M
+    # parquet rows, 40.1 → 58.3 MB shuffle written).
     pairs = _pairs_from_baskets(baskets, agg_partitions=pair_parts).localCheckpoint(
         eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK
     )
+    # Materialized: inline, the node degrees shuffle less (40.1 → 27.6
+    # MB) but the query runs slower (sf0.1 median 7.3 → 9.3 s).
     deg = (
         pairs.select(F.col("pa").alias("node"))
         .unionAll(pairs.select(F.col("pb")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("dg"))
-        .localCheckpoint(eager=False)  # node-sized; read by 3 consumers
+        .localCheckpoint(eager=False)
     )
     # total order for orientation: (degree, id) — ties broken by id so
     # the orientation is a strict total order, never a 2-cycle
@@ -251,7 +252,9 @@ def graph_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("e")
         )
         .select("e.src", "e.dst")
-        # read twice (adjacency build + wedge closure)
+        # Materialized, spillable: read by the adjacency build and the
+        # wedge closure; inline, the query runs slower (sf0.1 median
+        # 6.7 → 9.5 s) though it shuffles less (40.1 → 30.8 MB).
         .localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
     )
     # EDGE-ITERATOR triangle count over the orientation: a triangle
@@ -271,11 +274,7 @@ def graph_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     adj_src = oriented
     if n_edges > TRIANGLE_REPART_EDGE_THRESHOLD:
         adj_src = oriented.repartition(target_partitions(spark, n_edges, 1_500_000), "src")
-    adj = (
-        adj_src.groupBy("src")
-        .agg(F.sort_array(F.collect_list("dst")).alias("ns"))
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
-    )
+    adj = adj_src.groupBy("src").agg(F.sort_array(F.collect_list("dst")).alias("ns"))
     adj_u = adj.select(F.col("src").alias("u"), F.col("ns").alias("nu"))
     adj_v = adj.select(F.col("src").alias("v"), F.col("ns").alias("nv"))
     # The closure joins attach O(outdeg) arrays to every edge row, so
@@ -392,8 +391,9 @@ def graph_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def graph_adamic_adar_top(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # 3 consumers (edge union ×2 + the adjacency anti-join): build the
-    # basket pairs once, spillable at edge scale
+    # Materialized, spillable: the pairs feed the edge union ×2 and the
+    # adjacency anti-join; inline, the query writes more shuffle
+    # (sf0.1: 16.17 → 16.21 MB) and runs slower (median 2.5 → 3.5 s).
     pairs = _copurchase_pairs(spark, sf_dir, min_support=2).localCheckpoint(
         eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK
     )
@@ -489,6 +489,9 @@ def _kcore_round_sql(r: int, k: int) -> str:
 def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = 2
     pairs = _copurchase_pairs(spark, sf_dir, min_support=2)
+    # Materialized, spillable: every peel round reads the edges;
+    # inline, each round replays the basket build (sf0.1: 0.6M → 4.2M
+    # parquet rows, 16.2 → 112.6 MB shuffle written, median 3.0 → 15.3 s).
     edges = (
         pairs.select(F.col("pa").alias("s"), F.col("pb").alias("d"))
         .unionAll(pairs.select(F.col("pb"), F.col("pa")))
@@ -496,6 +499,8 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     alive = edges.select(F.col("s").alias("n")).distinct()
     for _ in range(6):
+        # Materialized per round: inline, the six-round survivor chain
+        # runs slower (sf0.1 median 2.8 → 5.2 s).
         alive = (
             edges.join(alive.withColumnRenamed("n", "s"), "s")
             .join(alive.withColumnRenamed("n", "d"), "d")
@@ -503,7 +508,7 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("dg"))
             .filter(F.col("dg") >= k)
             .select(F.col("s").alias("n"))
-            .localCheckpoint(eager=False)  # node-sized survivor set
+            .localCheckpoint(eager=False)
         )
     return (
         edges.join(alive.withColumnRenamed("n", "s"), "s")
@@ -594,20 +599,21 @@ def _shingles5(docs: DataFrame) -> DataFrame:
 def dedup_jaccard_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tau = 0.5
     docs = load_table(spark, sf_dir, "documents")
-    # the exploded shingle table is corpus-sized and read twice (df
-    # ranking + per-doc set build); the ranked per-doc arrays are read
-    # three times (prefix explode + both verification sides) — build
-    # each once, spillable
+    # Materialized: the corpus-sized shingle table feeds the df ranking
+    # and the per-doc set build; inline, the shingling runs twice
+    # (sf0.1: 5,000 → 10,000 parquet rows, 21.8 → 28.4 MB shuffle
+    # written). The ranked per-doc arrays below feed three consumers
+    # too, but exchange reuse builds them once.
     sh = _shingles5(docs).localCheckpoint(
         eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK
     )
     # global rarity order: (df asc, shingle asc) → dense integer rank.
     # vocab-sized shuffle, not corpus-sized.
-    # r14: ranks.global_row_number instead of a partition-less
-    # row_number window — 5-gram shingles are near-unique, so the
-    # vocabulary is ~corpus-sized and the global window sorted 20.6M
-    # rows in ONE task (70 s, 40 % of the sf10 wall, eventlog on
-    # record; a serial wall at any scale). The range-partitioned rank
+    # ranks.global_row_number, not a partition-less row_number window:
+    # 5-gram shingles are near-unique, so the vocabulary is
+    # ~corpus-sized and a global window sorts it in ONE task (20.6M
+    # rows, 70 s, 40 % of the sf10 wall, measured from the event log;
+    # a serial wall at any scale). The range-partitioned rank
     # is the same total order, bit-identical ranks, no distribution
     # assumption (df is hapax-skewed, so width_bucket-style bucketing
     # on df would put ~the whole vocabulary in one bucket).
@@ -622,7 +628,6 @@ def dedup_jaccard_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.sort_array(F.collect_list("rk")).alias("rks"))
         .withColumn("n", F.size("rks"))
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
     )
     # prefix = the n - ceil(τ·n) + 1 rarest shingles, WITH each one's
     # 1-based position in the doc's rank-sorted array (posexplode on a
@@ -746,7 +751,9 @@ def text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     toked = docs.select(tokens(F.lower(F.col("text"))).alias("toks"))
     uni = toked.select(F.explode("toks").alias("tok"))
     # two corpus passes total (unigram + bigram count); both scalar
-    # totals fold from the VOCAB-sized count tables, not the corpus
+    # totals fold from the VOCAB-sized count tables, not the corpus.
+    # Both count tables are materialized: inline, each rescans the
+    # documents (sf0.1: 10,000 → 15,000 parquet rows apiece).
     uc = uni.groupBy("tok").agg(F.count(F.lit(1)).alias("c")).localCheckpoint(
         eager=False
     )

@@ -59,14 +59,9 @@ def stats_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     from emission_project_spark.functions.ranks import row_position
 
     o = load_table(spark, sf_dir, "orders")
-    # r13 opt: row_position reads its input 3× (bounds, offsets, main)
-    # — checkpoint the customer-sized aggregate so the orders scan +
-    # groupBy run once
-    rev = (
-        o.groupBy("o_custkey")
-        .agg(F.sum("o_totalprice").alias("x"))
-        .localCheckpoint(eager=False)
-    )
+    # row_position reads rev 3× (bounds, offsets, main); exchange reuse
+    # runs the orders scan and groupBy once
+    rev = o.groupBy("o_custkey").agg(F.sum("o_totalprice").alias("x"))
     ranked = row_position(
         rev, [F.col("x").asc(), F.col("o_custkey").asc()], F.col("x")
     ).select("x", "i")
@@ -80,6 +75,30 @@ def stats_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("gini"),
     )
+
+
+def _segment_priority_cells(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """The segment × priority contingency cells ``(seg, pri, n)`` and
+    the marginals folded from them: per segment ``(seg, ns)``, per
+    priority ``(pri, np)`` and the 1-row grand total ``(t)``."""
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    # Materialized: inline, the consumers rescan orders and customer
+    # and rerun the join (sf0.1 parquet rows read: 165,000 → 630,000
+    # for mutual information, → 330,000 for Cramér's V and χ²).
+    cells = (
+        o.join(c, o["o_custkey"] == c["c_custkey"])
+        .groupBy(
+            F.col("c_mktsegment").alias("seg"), F.col("o_orderpriority").alias("pri")
+        )
+        .agg(F.count(F.lit(1)).alias("n"))
+        .localCheckpoint(eager=False)
+    )
+    ms = cells.groupBy("seg").agg(F.sum("n").alias("ns"))
+    mp = cells.groupBy("pri").agg(F.sum("n").alias("np"))
+    return cells, ms, mp, cells.agg(F.sum("n").alias("t"))
 
 
 # --- Mutual information (nats) between customer market segment and
@@ -113,19 +132,7 @@ def stats_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stats_mutual_info_priority_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    cells = (
-        o.join(c, o["o_custkey"] == c["c_custkey"])
-        .groupBy(
-            F.col("c_mktsegment").alias("seg"), F.col("o_orderpriority").alias("pri")
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=False)  # 25 rows; read by 4 consumers
-    )
-    tot = cells.agg(F.sum("n").alias("t"))
-    ms = cells.groupBy("seg").agg(F.sum("n").alias("ns"))
-    mp = cells.groupBy("pri").agg(F.sum("n").alias("np"))
+    cells, ms, mp, tot = _segment_priority_cells(spark, sf_dir)
     joined = (
         cells.join(F.broadcast(ms), "seg")
         .join(F.broadcast(mp), "pri")
@@ -198,11 +205,9 @@ def events_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             "freq",
             "mon",
         )
-        # r13 opt: u feeds FOUR consumers (the three row_position
-        # rank relations + the n_tot probe) — without a checkpoint
-        # each one re-scanned events and re-ran the per-user aggregate
-        # (86 exchanges in the static plan). One lazy checkpoint of
-        # the user-sized 4-column relation computes it once.
+        # Materialized: u feeds four consumers (the three row_position
+        # rank relations + the n_tot probe); inline, each rescans
+        # events (sf0.1: 200,000 → 800,000 parquet rows).
         .localCheckpoint(eager=False)
     )
     from emission_project_spark.functions.ranks import (
@@ -211,10 +216,9 @@ def events_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         shared_bounds,
     )
 
-    # r14 opt: the three rank calls each ran their own [min, max]
-    # bounds aggregate over u — three scans computing what ONE pass
-    # can (ranks.shared_bounds): one scan, one 1-row broadcast sliced
-    # per metric, identical bucket bounds → bit-identical ranks.
+    # One [min, max] bounds pass over u serves all three rank calls
+    # (ranks.shared_bounds): one scan, one 1-row broadcast sliced per
+    # metric, identical bucket bounds → bit-identical ranks.
     bnds = shared_bounds(
         u,
         {"r": F.col("rec_days"), "f": -F.col("freq"), "m": -F.col("mon")},
@@ -343,9 +347,12 @@ def events_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("t"),
         F.when(F.col("conv_ts").isNull(), 0).otherwise(1).alias("ev"),
     )
+    # Materialized: byday is read twice (total + pass); inline, the
+    # query writes more shuffle (sf0.1: 18,205 → 18,625 bytes) and
+    # runs slower (median 0.58 → 0.66 s over 8 runs).
     byday = dur.groupBy("t").agg(
         F.sum("ev").alias("d"), F.count(F.lit(1)).alias("c")
-    ).localCheckpoint(eager=False)  # day-sized; read twice (total + pass)
+    ).localCheckpoint(eager=False)
     tot = byday.agg(F.sum("c").alias("n"))
     w_prev = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, -1)
     w_cur = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, 0)
@@ -692,19 +699,7 @@ def events_path_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stats_cramers_v_priority_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    cells = (
-        o.join(c, o["o_custkey"] == c["c_custkey"])
-        .groupBy(
-            F.col("c_mktsegment").alias("seg"), F.col("o_orderpriority").alias("pri")
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=False)  # 25 rows; read by 4 consumers
-    )
-    tot = cells.agg(F.sum("n").alias("t"))
-    ms = cells.groupBy("seg").agg(F.sum("n").alias("ns"))
-    mp = cells.groupBy("pri").agg(F.sum("n").alias("np"))
+    cells, ms, mp, tot = _segment_priority_cells(spark, sf_dir)
     # full r×c grid so structurally-zero cells contribute (0−e)²/e
     grid = (
         ms.crossJoin(F.broadcast(mp))

@@ -139,10 +139,12 @@ def privacy_l_diversity_customers(spark: SparkSession, sf_dir: str) -> DataFrame
 
 # --- Pearson chi-squared test of independence on the (segment,
 # priority) contingency table. The fact join aggregates straight down
-# to ≤ 25 cells; expected counts and the statistic come from window
-# totals over that 25-row frame. Emits the classic triple
-# (n, dof, chi2) — compare chi2 against the χ² critical value for dof
-# downstream; no p-value so the oracle stays closed-form.
+# to ≤ 25 cells (cohort_stats._segment_priority_cells, shared with
+# mutual information and Cramér's V); expected counts and the
+# statistic come from the marginals folded from those cells. Emits
+# the classic triple (n, dof, chi2) — compare chi2 against the χ²
+# critical value for dof downstream; no p-value so the oracle stays
+# closed-form.
 @register(
     "stats_chi2_segment_priority",
     oracle="""
@@ -175,35 +177,24 @@ def privacy_l_diversity_customers(spark: SparkSession, sf_dir: str) -> DataFrame
     """,
 )
 def stats_chi2_segment_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    obs = (
-        o.join(c, o["o_custkey"] == c["c_custkey"])
-        .groupBy(
-            F.col("c_mktsegment").alias("segment"),
-            F.col("o_orderpriority").alias("priority"),
-        )
-        .agg(F.count(F.lit(1)).cast("double").alias("o"))
-    )
-    obs = obs.localCheckpoint(eager=False)  # ≤ r×c rows; 4 consumers
-    ms = obs.groupBy("segment").agg(F.sum("o").alias("row_tot"))
-    mp = obs.groupBy("priority").agg(F.sum("o").alias("col_tot"))
-    tot = obs.agg(F.sum("o").alias("n"))
+    from emission_project_spark.plans.cohort_stats import _segment_priority_cells
+
+    obs, ms, mp, tot = _segment_priority_cells(spark, sf_dir)
     # full r×c grid so structurally-zero cells contribute (0−e)²/e
     grid = (
         ms.crossJoin(F.broadcast(mp))
-        .join(F.broadcast(obs), ["segment", "priority"], "left")
-        .withColumn("o", F.coalesce("o", F.lit(0.0)))
+        .join(F.broadcast(obs), ["seg", "pri"], "left")
+        .withColumn("n", F.coalesce("n", F.lit(0)))
         .crossJoin(F.broadcast(tot))
     )
-    e = F.col("row_tot") * F.col("col_tot") / F.col("n")
+    e = F.col("ns").cast("double") * F.col("np") / F.col("t")
     return grid.agg(
-        F.max("n").cast("bigint").alias("n"),
+        F.max("t").cast("bigint").alias("n"),
         (
-            (F.count_distinct(F.col("segment")) - 1)
-            * (F.count_distinct(F.col("priority")) - 1)
+            (F.count_distinct(F.col("seg")) - 1)
+            * (F.count_distinct(F.col("pri")) - 1)
         ).cast("bigint").alias("dof"),
-        F.round(F.sum(F.pow(F.col("o") - e, F.lit(2)) / e), 4).alias("chi2"),
+        F.round(F.sum(F.pow(F.col("n") - e, F.lit(2)) / e), 4).alias("chi2"),
     )
 
 

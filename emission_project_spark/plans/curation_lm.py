@@ -78,16 +78,13 @@ def curation_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     from emission_project_spark.functions.text import tokens
 
     docs = load_table(spark, sf_dir, "documents")
-    # r13 opt: v feeds TWO consumers (the tot scalar and the broadcast
-    # score join) — unchecked, the join arm re-ran the whole
-    # tokenize + vocab aggregate. Checkpoint the vocab-sized v (narrow
-    # aggregate — the kind worth materializing; a checkpoint of the
-    # full token arrays was measured a loss on the bm25 twin, so the
-    # tokenizer deliberately runs once per t consumer instead).
     t = docs.select(
         "doc_id", "lang", F.explode(tokens(F.lower(F.col("text")))).alias("term")
     )
     is_t = F.col("lang") == "en"
+    # Materialized: v feeds the totals and the broadcast score join;
+    # inline, the second rescans and re-tokenizes (sf0.1: 10,000 →
+    # 15,000 parquet rows).
     v = t.groupBy("term").agg(
         F.sum(F.when(is_t, 1).otherwise(0)).alias("ct"),
         F.sum(F.when(is_t, 0).otherwise(1)).alias("cr"),
@@ -172,12 +169,11 @@ def text_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from emission_project_spark.functions.text import tokens
 
     docs = load_table(spark, sf_dir, "documents")
-    # the tokenized corpus feeds FIVE consumers (unigram counts ×2
-    # broadcast sides, the 1-row total, the bigram count build and the
-    # bigram probe stream) — without a checkpoint each one re-scans
-    # the parquet and re-runs the regex tokenizer (the executed plan
-    # showed 5 scans / 0 reused exchanges; the KN query's one-pass
-    # discipline applied here), spillable at corpus scale.
+    # Materialized, spillable: the tokenized corpus feeds five
+    # consumers (unigram counts ×2 broadcast sides, the 1-row total,
+    # the bigram count build and the bigram probe stream); inline, each
+    # rescans and re-tokenizes (sf0.1: 5,000 → 20,000 parquet rows,
+    # 1.0 → 3.5 MB shuffle written).
     # Spread BEFORE the tokenizer: a documents scan with fewer populated
     # partitions than cores (one parquet row group; the
     # unsplittable-input hazard) would tokenize the whole corpus into
@@ -187,10 +183,8 @@ def text_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", tokens(F.lower(F.col("text"))).alias("toks")
     ).localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
     t = d.select("doc_id", F.explode("toks").alias("term"))
-    # vocab-sized, read by both broadcast joins — build once
-    u = t.groupBy("term").agg(F.count(F.lit(1)).alias("cu")).localCheckpoint(
-        eager=False
-    )
+    # vocab-sized, read by both broadcast joins: exchange reuse builds it once
+    u = t.groupBy("term").agg(F.count(F.lit(1)).alias("cu"))
     tot = t.agg(F.count(F.lit(1)).alias("n"))
     bg = (
         d.filter(F.size("toks") >= 2)
@@ -215,9 +209,9 @@ def text_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("c12"))
         .filter(F.col("c12") >= MIN_BIGRAM_COUNT)
     )
-    # r13 opt audit (guide §3.1), examined and LEFT ALONE: the static
-    # sf10 plan shows this join as SortMergeJoin (the post-aggregate
-    # size ESTIMATE exceeds the broadcast threshold), but the count
+    # No join hint here: the static sf10 plan shows this join as
+    # SortMergeJoin (the post-aggregate size ESTIMATE exceeds the
+    # broadcast threshold), but the count
     # table's runtime size after the cutoff is vocab-bounded (1.6 MB at
     # sf10, measured) and AQE's runtime-stats broadcast conversion
     # repairs the plan at execution. A SHUFFLE_HASH hint here would
@@ -418,38 +412,8 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def curation_dsir_ess(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from emission_project_spark.functions.text import tokens
-
-    docs = load_table(spark, sf_dir, "documents")
-    # r13 opt: v feeds tot + the broadcast join, and the doc scores
-    # feed the max probe + the weight pass — unchecked, the static
-    # plan re-tokenized the corpus for every branch. Checkpoint the
-    # NARROW shared relations only (vocab-sized v, doc-sized scores);
-    # a full token-array checkpoint was measured a loss on the bm25
-    # twin, so the tokenizer deliberately runs once per t consumer.
-    t = docs.select(
-        "doc_id", "lang", F.explode(tokens(F.lower(F.col("text")))).alias("term")
-    )
-    is_t = F.col("lang") == "en"
-    v = t.groupBy("term").agg(
-        F.sum(F.when(is_t, 1).otherwise(0)).alias("ct"),
-        F.sum(F.when(is_t, 0).otherwise(1)).alias("cr"),
-    ).localCheckpoint(eager=False)
-    tot = v.agg(
-        F.sum("ct").cast("bigint").alias("tt"),
-        F.sum("cr").cast("bigint").alias("tr"),
-        F.count(F.lit(1)).alias("nv"),
-    )
-    lam = F.log((F.col("ct") + 1.0) / (F.col("tt") + F.col("nv"))) - F.log(
-        (F.col("cr") + 1.0) / (F.col("tr") + F.col("nv"))
-    )
-    scores = (
-        t.join(F.broadcast(v), "term")
-        .crossJoin(F.broadcast(tot))
-        .groupBy("doc_id")
-        .agg(F.round(F.sum(lam), 4).alias("s"))
-        .localCheckpoint(eager=False)
-    )
+    # the max probe and the weight pass share the scores by exchange reuse
+    scores = curation_dsir_weights(spark, sf_dir).select(F.col("dsir_score").alias("s"))
     m = scores.agg(F.max("s").alias("ms"))
     w = scores.crossJoin(F.broadcast(m)).select(
         F.exp((F.col("s") - F.col("ms")) / F.lit(5.0)).alias("w")

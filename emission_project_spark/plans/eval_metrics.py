@@ -31,7 +31,7 @@ import math
 import sys
 
 from pyspark import cloudpickle
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from emission_project_spark.catalog.tables import load_table
@@ -121,15 +121,13 @@ def _scored_both(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side pass scores both the full vector and its matryoshka
     prefix; no shuffle until the per-query top-k windows."""
     emb = load_table(spark, sf_dir, "embeddings")
-    # r13 opt (guide §1.2 "per-task work"): the norms and the truncated
-    # slice are per-ROW invariants — computing them inside the pair
-    # expression re-ran two l2 folds and two array slices per (vector,
+    # The norms and the truncated slice are per-ROW invariants,
+    # computed below the cross join once per row, not per (vector,
     # query) PAIR (interpreted higher-order functions, the hot term of
-    # this plan). Hoisting them below the cross join evaluates each
-    # once per row; the pair expression keeps the identical sequential
-    # dot fold and the identical n = ||a||·||b|| product, so every
-    # double is bit-equal to the old cosine_similarity() form (norm
-    # product, division, round — same ops, same order).
+    # this plan). The pair expression keeps the sequential dot fold and
+    # the n = ||a||·||b|| product, so every double equals the
+    # cosine_similarity() form (norm product, division, round — same
+    # ops, same order).
     q = emb.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("_q"),
@@ -182,7 +180,7 @@ def _scored_both(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def similarity_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
-    scored = _scored_both(spark, sf_dir).localCheckpoint(eager=False)
+    scored = _scored_both(spark, sf_dir)
     gt = topk_per_query(scored, F.col("full_sim").desc(), _K)
     ap = topk_per_query(scored, F.col("trunc_sim").desc(), _K).select(
         F.col("query_id").alias("aq"), F.col("vec_id").alias("av")
@@ -227,7 +225,7 @@ def similarity_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def similarity_ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
-    scored = _scored_both(spark, sf_dir).localCheckpoint(eager=False)
+    scored = _scored_both(spark, sf_dir)
     gain = (F.col("full_sim") + 1.0) / 2.0 / F.log2(1.0 + F.col("rank"))
     dcg = (
         topk_per_query(scored, F.col("trunc_sim").desc(), _K)
@@ -285,6 +283,30 @@ def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _rank_sum(ev: DataFrame, positive: Column) -> DataFrame:
+    """1-row ``(np, nn, rpos)``: the positive and negative counts and
+    the sum of the positives' mid-ranks by ``value`` (ties share the
+    mid-rank rmin + (ties−1)/2)."""
+    from emission_project_spark.functions.ranks import cell_minrank
+
+    y = F.when(positive, 1).otherwise(0)
+    # Materialized: cell_minrank reads the cells 3× (bounds, offsets,
+    # main relation); inline, each read rescans events (sf0.1: 100,000
+    # → 300,000 parquet rows read).
+    cells = ev.groupBy("value").agg(
+        F.count(F.lit(1)).alias("ties"), F.sum(y).alias("pos")
+    ).localCheckpoint(eager=False)
+    r = cell_minrank(cells, "value", "ties", out_col="rmin")
+    # every positive in a cell carries the same mid-rank
+    return r.agg(
+        F.sum("pos").alias("np"),
+        F.sum(F.col("ties") - F.col("pos")).alias("nn"),
+        F.sum(
+            F.col("pos") * (F.col("rmin") + (F.col("ties") - 1) / 2.0)
+        ).alias("rpos"),
+    )
+
+
 # --- ROC-AUC via the rank-sum (Mann-Whitney) identity:
 # AUC = (Σ avg-ranks of positives − n⁺(n⁺+1)/2) / (n⁺·n⁻), mid-ranks
 # for ties — the standard exact AUC without an O(n²) pair join.
@@ -318,26 +340,8 @@ def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stats_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from emission_project_spark.functions.ranks import cell_minrank
-
     ev = load_table(spark, sf_dir, "events")
-    y = F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-    # r13 opt: cell_minrank consumes its histogram 3× (bounds probe,
-    # offsets, main relation) — checkpoint the distinct-value-sized
-    # cells so the events scan + aggregate run once, not three times
-    cells = ev.groupBy("value").agg(
-        F.count(F.lit(1)).alias("ties"), F.sum(y).alias("pos")
-    ).localCheckpoint(eager=False)
-    r = cell_minrank(cells, "value", "ties", out_col="rmin")
-    # rank-sum over positives folds from the cells: every positive in a
-    # cell carries the same mid-rank rmin + (ties−1)/2
-    a = r.agg(
-        F.sum("pos").alias("np"),
-        F.sum(F.col("ties") - F.col("pos")).alias("nn"),
-        F.sum(
-            F.col("pos") * (F.col("rmin") + (F.col("ties") - 1) / 2.0)
-        ).alias("rpos"),
-    )
+    a = _rank_sum(ev, F.col("event_type") == "purchase")
     return a.select(
         F.col("np").cast("long").alias("n_pos"),
         F.col("nn").cast("long").alias("n_neg"),
@@ -527,7 +531,6 @@ def stats_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
         s.select("truth", pred.alias("pred"))
         .groupBy("truth", "pred")
         .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=False)  # ≤25 cells, read by 3 consumers
     )
     tot = cells.agg(
         F.sum("n").alias("nn"),
@@ -675,9 +678,10 @@ def stats_jensen_shannon(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stats_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
-    # r13 opt: rev feeds row_position (which reads it 3×: bounds,
-    # offsets, main) plus the n_tot probe — checkpoint the
-    # customer-sized aggregate so the join + groupBy run once
+    # Materialized: rev feeds row_position (which reads it 3×: bounds,
+    # offsets, main) plus the n_tot probe; inline, the query reads and
+    # shuffles more (sf0.1: 165,000 → 180,000 parquet rows, 0.44 →
+    # 0.51 MB shuffle written).
     rev = (
         cust.join(
             orders, cust["c_custkey"] == orders["o_custkey"], "left"
@@ -744,11 +748,7 @@ def stats_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stats_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    rev = (
-        orders.groupBy("o_custkey")
-        .agg(F.sum("o_totalprice").alias("x"))
-        .localCheckpoint(eager=False)  # user-sized; read by 3 consumers
-    )
+    rev = orders.groupBy("o_custkey").agg(F.sum("o_totalprice").alias("x"))
     pos = rev.filter(F.col("x") > 0)
     t = pos.agg(F.count(F.lit(1)).alias("n"), F.sum("x").alias("sx"))
     ex = rev.filter(F.col("x") <= 0).agg(
@@ -930,7 +930,9 @@ def text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
             "bucket",
             F.size(tokens(F.lower(F.col("text")))).alias("n_toks"),
         )
-        .localCheckpoint(eager=False)  # doc-sized; read by 2 consumers
+        # Materialized: read by 2 consumers; inline, the second rescans
+        # the documents (sf0.1: 30,000 → 35,000 parquet rows).
+        .localCheckpoint(eager=False)
     )
     firsts = (
         docs.select(
@@ -960,7 +962,10 @@ def text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("vocab_cum"),
         )
-        .localCheckpoint(eager=False)  # 10 rows; read by the fit + output
+        # Materialized: the 10-row curve is read by the fit and the
+        # output; inline, the query writes more shuffle (sf0.1: 30,004 →
+        # 30,401 bytes).
+        .localCheckpoint(eager=False)
     )
     lx, ly = F.log("n_tokens_cum"), F.log("vocab_cum")
     # positive checkpoints only (Spark ln(0)=NULL vs DuckDB -inf — the
@@ -1196,6 +1201,8 @@ def stats_permutation_pvalue(spark: SparkSession, sf_dir: str) -> DataFrame:
         gb = F.shiftright(F.col("ch"), j).bitwiseAND(F.lit(1))
         aggs.append(F.sum(gb.cast("long")).alias(f"c{j}"))
         aggs.append(F.sum(F.col("vc") * gb).alias(f"s{j}"))
+    # Materialized: inline, the 199 replicate readouts rescan events
+    # (sf0.1: 100,000 → 200,000 parquet rows).
     byk = kd.groupBy("k").agg(*aggs).localCheckpoint(eager=False)
 
     def dollars(cents: F.Column) -> F.Column:
@@ -1330,7 +1337,9 @@ def events_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     hourly = (
         ev.groupBy(F.date_trunc("hour", F.col("ts")).alias("h"))
         .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=False)  # hour-sized; read by 3 consumers
+        # Materialized: hour-sized, read by 3 consumers; inline, each
+        # rescans events (sf0.1: 100,000 → 300,000 parquet rows).
+        .localCheckpoint(eager=False)
     )
     a = hourly.select(F.col("h").alias("ha"), F.col("n").alias("na"))
     b = hourly.select(F.col("h").alias("hb"), F.col("n").alias("nb"))
@@ -1423,7 +1432,6 @@ def embedding_centroid_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("label", (F.col("pos") + 1).alias("dim"), F.col("col").alias("x"))
         .groupBy("label", "dim")
         .agg(F.round(F.avg("x"), 6).alias("mu"))
-        .localCheckpoint(eager=False)  # labels×dims; joined to itself
     )
     a = dims.select(
         F.col("label").alias("label_a"), "dim", F.col("mu").alias("mua")
@@ -1570,7 +1578,9 @@ def text_kneser_ney_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("b")
     ).select("b.w1", "b.w2")
     c12 = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c"))
-    c12 = c12.localCheckpoint(eager=False)  # feeds 3 count relations
+    # Materialized: c12 feeds 3 count relations; inline, each rescans
+    # and re-tokenizes (sf0.1: 5,000 → 20,000 parquet rows).
+    c12 = c12.localCheckpoint(eager=False)
     c1 = c12.groupBy("w1").agg(
         F.sum("c").alias("n"), F.count(F.lit(1)).alias("fwd")
     ).withColumnRenamed("w1", "cw1")
@@ -1683,7 +1693,6 @@ def _cell_knn_hubness(vecs: DataFrame, cells: DataFrame) -> DataFrame:
         .join(knn, knn["dst"] == F.col("vec_id"), "left")
         .groupBy("vec_id")
         .agg(F.count("src").cast("long").alias("d"))
-        .localCheckpoint(eager=False)  # vector-sized; moments + histogram
     )
     return _degree_hubness_readout(indeg)
 
@@ -2044,6 +2053,8 @@ def privacy_t_closeness_customers(spark: SparkSession, sf_dir: str) -> DataFrame
         F.count(F.lit(1)).alias("ns")
     )
     tot = glob.agg(F.sum("ns").alias("n"))
+    # Materialized: inline, the cells' consumers rescan customer
+    # (sf0.1: 45,000 → 60,000 parquet rows).
     cells = c.groupBy(
         "c_nationkey",
         F.floor(F.col("c_acctbal") / 1000).cast("bigint").alias("bal_bucket"),
@@ -2204,22 +2215,45 @@ def stats_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_dau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _dau_mau(spark, sf_dir).select(
+        "day", "dau", "mau", "stickiness"
+    )
+
+
+def _dau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per active day: ``day``, ``dau``, the exact trailing-30-day
+    ``mau``, ``stickiness`` and ``hll_within_tol``, whether the HLL
+    estimate of that MAU lands within the tolerance band."""
     ev = load_table(spark, sf_dir, "events")
+    # Materialized: the user-day relation is read 3× (dau, the day
+    # grid, the range join); inline, each read rescans events (sf0.1:
+    # 100,000 → 200,000 parquet rows read).
     ud = (
         ev.select(F.to_date("ts").alias("d"), "user_id")
         .distinct()
-        .localCheckpoint(eager=False)  # user-day grain; read 3×
+        .localCheckpoint(eager=False)
     )
     dau = ud.groupBy("d").agg(F.count(F.lit(1)).alias("dau"))
     grid = ud.select(F.col("d").alias("gd")).distinct()
+    # dedupe (day, user) BEFORE aggregating: a mixed
+    # countDistinct + approx_count_distinct aggregate plans an Expand
+    # over the ×30 range-join output (measured 7× slower); on the
+    # deduped relation both counts are plain folds — count(*) IS the
+    # exact distinct, and HLL registers over a set equal the registers
+    # over the multiset, so the estimate is unchanged
     mau = (
         grid.join(
             ud,
             (F.col("d") >= F.date_sub(F.col("gd"), 29))
             & (F.col("d") <= F.col("gd")),
         )
+        .select("gd", "user_id")
+        .distinct()
         .groupBy("gd")
-        .agg(F.countDistinct("user_id").alias("mau"))
+        .agg(
+            F.count(F.lit(1)).alias("mau"),
+            F.approx_count_distinct("user_id", 0.01).alias("_hll"),
+        )
     )
     return dau.join(mau, dau["d"] == mau["gd"]).select(
         F.col("d").alias("day"),
@@ -2228,6 +2262,10 @@ def events_dau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("dau").cast("double") / F.col("mau"), 6).alias(
             "stickiness"
         ),
+        (
+            F.abs(F.col("_hll") - F.col("mau"))
+            <= F.greatest(F.ceil(F.col("mau") * F.lit(0.03)), F.lit(3))
+        ).alias("hll_within_tol"),
     )
 
 
@@ -2271,46 +2309,7 @@ def events_dau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_dau_mau_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    ud = (
-        ev.select(F.to_date("ts").alias("d"), "user_id")
-        .distinct()
-        .localCheckpoint(eager=False)  # user-day grain; read 3×
-    )
-    dau = ud.groupBy("d").agg(F.count(F.lit(1)).alias("dau"))
-    grid = ud.select(F.col("d").alias("gd")).distinct()
-    # dedupe (day, user) BEFORE aggregating: a mixed
-    # countDistinct + approx_count_distinct aggregate plans an Expand
-    # over the ×30 range-join output (measured 7× slower); on the
-    # deduped relation both counts are plain folds — count(*) IS the
-    # exact distinct, and HLL registers over a set equal the registers
-    # over the multiset, so the estimate is unchanged
-    mau = (
-        grid.join(
-            ud,
-            (F.col("d") >= F.date_sub(F.col("gd"), 29))
-            & (F.col("d") <= F.col("gd")),
-        )
-        .select("gd", "user_id")
-        .distinct()
-        .groupBy("gd")
-        .agg(
-            F.count(F.lit(1)).alias("mau"),
-            F.approx_count_distinct("user_id", 0.01).alias("_hll"),
-        )
-    )
-    return dau.join(mau, dau["d"] == mau["gd"]).select(
-        F.col("d").alias("day"),
-        F.col("dau").cast("long").alias("dau"),
-        F.col("mau").cast("long").alias("mau"),
-        F.round(F.col("dau").cast("double") / F.col("mau"), 6).alias(
-            "stickiness"
-        ),
-        (
-            F.abs(F.col("_hll") - F.col("mau"))
-            <= F.greatest(F.ceil(F.col("mau") * F.lit(0.03)), F.lit(3))
-        ).alias("hll_within_tol"),
-    )
+    return _dau_mau(spark, sf_dir)
 
 
 # --- neighborhood-Jaccard link prediction on the STRONG co-purchase
@@ -2362,15 +2361,16 @@ def graph_neighbor_jaccard_top(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from emission_project_spark.plans.affinity_ops import _copurchase_pairs
 
+    # Materialized, spillable: inline, the pairs' consumers replay the
+    # basket build (sf0.1: 0.6M → 1.2M parquet rows, 16.2 → 32.2 MB
+    # shuffle written).
     pairs = _copurchase_pairs(spark, sf_dir, min_support=2).localCheckpoint(
         eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK
     )
     edges = pairs.select(F.col("pa").alias("s"), F.col("pb").alias("d")).unionAll(
         pairs.select(F.col("pb"), F.col("pa"))
     )
-    deg = edges.groupBy("s").agg(F.count(F.lit(1)).alias("dg")).localCheckpoint(
-        eager=False
-    )
+    deg = edges.groupBy("s").agg(F.count(F.lit(1)).alias("dg"))
     adj = (
         edges.join(deg, "s")
         .filter((F.col("dg") >= 2) & (F.col("dg") <= 64))
@@ -2551,32 +2551,18 @@ def stats_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("click", "view")
     )
-    from emission_project_spark.functions.ranks import cell_minrank
-
-    y = F.when(F.col("event_type") == "click", 1).otherwise(0)
-    # r13 opt: checkpoint the cells — cell_minrank reads them 3×
-    cells = ev.groupBy("value").agg(
-        F.count(F.lit(1)).alias("ties"), F.sum(y).alias("pos")
-    ).localCheckpoint(eager=False)
-    r = cell_minrank(cells, "value", "ties", out_col="rmin")
-    a = r.agg(
-        F.sum("pos").alias("nc"),
-        F.sum(F.col("ties") - F.col("pos")).alias("nv"),
-        F.sum(
-            F.col("pos") * (F.col("rmin") + (F.col("ties") - 1) / 2.0)
-        ).alias("rc"),
-    )
+    a = _rank_sum(ev, F.col("event_type") == "click")
     delta = (
         2.0
         * F.try_divide(
-            F.col("rc") - F.col("nc") * (F.col("nc") + 1) / 2.0,
-            F.col("nc") * F.col("nv"),
+            F.col("rpos") - F.col("np") * (F.col("np") + 1) / 2.0,
+            F.col("np") * F.col("nn"),
         )
         - 1.0
     )
     return a.select(
-        F.col("nc").cast("long").alias("n_click"),
-        F.col("nv").cast("long").alias("n_view"),
+        F.col("np").cast("long").alias("n_click"),
+        F.col("nn").cast("long").alias("n_view"),
         F.round(delta, 6).alias("cliffs_delta"),
         F.when(F.abs(delta) < 0.147, "negligible")
         .when(F.abs(delta) < 0.33, "small")

@@ -3409,15 +3409,11 @@ def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = ["spark", "join", "window"]
     k1, b = 1.2, 0.75
     docs = load_table(spark, sf_dir, "documents")
-    # r13 opt: the tokenized corpus feeds FOUR consumers (tf and df_t
-    # through t, dl, the scalar stats) — each one re-scanned the
-    # parquet and re-ran the regex tokenizer (4 scans in the measured
-    # plan). The shared relation is checkpointed AFTER projecting to
-    # its NARROW per-doc form — token count + the query-term hits only
-    # (a handful of matches per doc), never the full token arrays: a
-    # first cut that materialized the whole tokenized corpus measured
-    # SLOWER than the 4 rescans it saved (the lsh_quality lesson —
-    # checkpoint narrow aggregates, not wide intermediates).
+    # Materialized, spillable, in its NARROW per-doc form (token count
+    # + the query-term hits only, never the full token arrays): it
+    # feeds four consumers (tf and df_t through t, dl, the scalar
+    # stats). Inline reads as many parquet rows (sf0.1: 20,000) but
+    # runs slower (median 0.76 → 1.02 s over 8 runs).
     toks = tokens(F.lower(F.col("text")))
     terms_arr = F.array(*[F.lit(x) for x in terms])
     d = docs.select(

@@ -123,7 +123,9 @@ def text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("plen"),
         )
         .filter(F.col("plen") <= 4)
-        # corpus-sized, read twice (word stats + phrase scoring)
+        # Materialized: read twice (word stats + phrase scoring);
+        # inline, the second rescans and re-tokenizes (sf0.1: 5,000 →
+        # 10,000 parquet rows, 3.4 → 6.6 MB shuffle written).
         .localCheckpoint(eager=False)
     )
     words = phrases.select(

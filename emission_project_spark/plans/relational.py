@@ -2614,14 +2614,9 @@ def text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(r"regexp_extract_all(lower(text), '[a-z0-9]+', 0)")
         ).alias("tok")
     )
-    # r13 opt: row_position reads its input 3× (bounds, offsets, main)
-    # — checkpoint the vocab-sized frequency table so the token
-    # explode + groupBy run once, not three times
-    freq = (
-        toks.groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("f"))
-        .localCheckpoint(eager=False)
-    )
+    # row_position reads freq 3× (bounds, offsets, main); exchange
+    # reuse runs the token explode and groupBy once
+    freq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("f"))
     # full-vocab rank via distributed bucketed prefix sums (bucket on
     # −f: monotone along the (f desc, tok) ordering) — the regression
     # needs EVERY rank, so top-k can't prune here, but the sort no

@@ -70,3 +70,17 @@ def test_pagerank_iterations_are_exchange_free_on_the_edge_side(spark):
     )
     # and the edge relation IS served from cache
     assert "InMemoryTableScan" in final
+
+
+def test_theil_index_reuses_the_revenue_exchange(spark, sf_dir):
+    """The per-customer revenue aggregate feeds three consumers (the
+    (n, Σx) totals, the excluded count and the entropy sum) without
+    being materialized: exchange reuse must run the orders scan and its
+    aggregate exchange once, so the final plan carries ReusedExchange."""
+    from emission_project_spark.plans.eval_metrics import stats_theil_index
+
+    df = stats_theil_index(spark, sf_dir)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    assert "ReusedExchange" in plan, plan[:3000]

@@ -5,7 +5,8 @@ per directory, so both run at the session width: every core writes its
 share of the partition values, and a many-directory tree is listed in
 at most one task per core. The event-log analyzer reports each top
 stage's task count and wall beside its task time, which is how a
-one-task serial stage shows apart from a many-task one.
+one-task serial stage shows apart from a many-task one, and per job
+group the parquet rows read and the shuffle bytes written.
 """
 
 from __future__ import annotations
@@ -119,3 +120,57 @@ def test_eventlog_analyze_reports_stage_shape(tmp_path):
         "1": {"tasks": 64, "task_s": 7.7, "wall_s": 2.0},
     }
     assert list(out["stages"]) == ["0", "1"]  # heaviest task time first
+
+
+def _stage_submitted(stage: int, group: str, rdds: list[str]) -> dict:
+    return {
+        "Event": "SparkListenerStageSubmitted",
+        "Stage Info": {"Stage ID": stage, "RDD Info": [{"Name": n} for n in rdds]},
+        "Properties": {"spark.jobGroup.id": group},
+    }
+
+
+def _io_task(stage: int, records: int, written: int) -> dict:
+    return {
+        "Event": "SparkListenerTaskEnd",
+        "Stage ID": stage,
+        "Task Info": {"Launch Time": 0, "Finish Time": 0},
+        "Task Metrics": {
+            "Input Metrics": {"Records Read": records},
+            "Shuffle Write Metrics": {"Shuffle Bytes Written": written},
+        },
+    }
+
+
+def test_eventlog_analyze_reports_io_per_job_group(tmp_path):
+    """Group "a" scans 100 parquet rows in one stage and reads 7 rows of
+    a checkpoint in another; group "b" scans twice. Input records split
+    by whether the stage's RDD chain holds a FileScanRDD, and shuffle
+    bytes sum over every stage of the group."""
+    spec = importlib.util.spec_from_file_location("eventlog_run", TOOL)
+    eventlog_run = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(eventlog_run)
+
+    scan = ["MapPartitionsRDD", "FileScanRDD"]
+    events = [
+        _stage_submitted(0, "a", scan),
+        _io_task(0, 60, 1_000),
+        _io_task(0, 40, 500),
+        _stage_submitted(1, "a", ["MapPartitionsRDD", "ShuffledRowRDD"]),
+        _io_task(1, 7, 0),
+        _stage_submitted(2, "b", scan),
+        _io_task(2, 100, 2_000),
+        _stage_submitted(3, "b", scan),
+        _io_task(3, 100, 0),
+        _task_end(4, 0, 1),  # a stage outside any job group
+    ]
+    log = tmp_path / "app-2"
+    log.write_text("\n".join(json.dumps(e) for e in events) + "\n")
+
+    assert eventlog_run.analyze(str(log))["job_groups"] == {
+        "a": {"scan_records": 100, "other_records": 7, "shuffle_write_bytes": 1_500},
+        "b": {"scan_records": 200, "other_records": 0, "shuffle_write_bytes": 2_000},
+    }
+    ungrouped = tmp_path / "app-3"
+    ungrouped.write_text(json.dumps(_task_end(0, 0, 1)) + "\n")
+    assert "job_groups" not in eventlog_run.analyze(str(ungrouped))

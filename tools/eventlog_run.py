@@ -14,7 +14,13 @@ decisions with `--analyze` instead of guessing from wall-clock.
         per-run roll-up: wall, task count/time/GC, shuffle bytes,
         spill, AQE re-plans, and the top stages by task time, each with
         its task count and wall (submission to completion) — one JSON
-        line per log, aligned for eyeball diffing.
+        line per log, aligned for eyeball diffing. When the log's jobs
+        carry job groups (``SparkContext.setJobGroup``), ``job_groups``
+        also holds, per group: input records of stages whose RDD chain
+        holds a ``FileScanRDD`` (parquet rows read), other input records
+        (cached or checkpointed blocks read back) and shuffle bytes
+        written. Two runs of one query, each in its own group, then
+        show whether a plan change reads or shuffles more.
 """
 
 from __future__ import annotations
@@ -80,6 +86,8 @@ def analyze(path: str) -> dict:
         "stages": {},
     }
     spans: dict[str, tuple[int, int]] = {}  # stage id -> (submitted, completed) ms
+    stage_group: dict[str, tuple[str, bool]] = {}  # stage id -> (job group, scans a file)
+    stage_io: dict[str, list[int]] = {}  # stage id -> [input records, shuffle bytes written]
     t_start = t_end = None
     with open(path) as fh:
         for line in fh:
@@ -94,6 +102,14 @@ def analyze(path: str) -> dict:
                 t_end = ev.get("Timestamp")
             elif kind.endswith("AdaptiveExecutionUpdate"):
                 out["aqe_updates"] += 1
+            elif kind == "SparkListenerStageSubmitted":
+                si = ev.get("Stage Info") or {}
+                group = (ev.get("Properties") or {}).get("spark.jobGroup.id")
+                if group is not None:
+                    scans = any(
+                        r.get("Name") == "FileScanRDD" for r in si.get("RDD Info", [])
+                    )
+                    stage_group[str(si.get("Stage ID"))] = (group, scans)
             elif kind == "SparkListenerStageCompleted":
                 si = ev.get("Stage Info") or {}
                 sub, done = si.get("Submission Time"), si.get("Completion Time")
@@ -116,6 +132,9 @@ def analyze(path: str) -> dict:
                     sr.get("Remote Bytes Read", 0) + sr.get("Local Bytes Read", 0)
                 ) / 1e6
                 out["shuffle_write_mb"] += sw.get("Shuffle Bytes Written", 0) / 1e6
+                io = stage_io.setdefault(str(ev.get("Stage ID")), [0, 0])
+                io[0] += (m.get("Input Metrics") or {}).get("Records Read", 0)
+                io[1] += sw.get("Shuffle Bytes Written", 0)
                 out["mem_spill_mb"] += m.get("Memory Bytes Spilled", 0) / 1e6
                 out["disk_spill_mb"] += m.get("Disk Bytes Spilled", 0) / 1e6
                 # Pandas-UDF accumulables: the r12 mode hunt lived here
@@ -155,6 +174,16 @@ def analyze(path: str) -> dict:
         }
         for sid, st in top
     }
+    groups: dict[str, dict[str, int]] = {}
+    for sid, (group, scans) in stage_group.items():
+        g = groups.setdefault(
+            group, {"scan_records": 0, "other_records": 0, "shuffle_write_bytes": 0}
+        )
+        records, written = stage_io.get(sid, (0, 0))
+        g["scan_records" if scans else "other_records"] += records
+        g["shuffle_write_bytes"] += written
+    if groups:
+        out["job_groups"] = groups
     return out
 
 

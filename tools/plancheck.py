@@ -9,7 +9,10 @@ its subtree's shuffle stages at the call, so queries that checkpoint
 while building (e.g. ``embedding_kmeans_lloyd``) run part of their work
 here, as do builds that collect a driver-side value or write warehouse
 files. Each build runs in its own job group, and ``build_jobs=`` counts
-the jobs it launched.
+the jobs it launched. That count is not repeatable where AQE adapts a
+build: ``graph_kcore_peel`` reads 25–27 at sf0.01 on unchanged code, so
+compare ``build_jobs=`` between two commits as min/max over several
+runs per side, never as one reading each.
 
 Flags:
 
@@ -74,6 +77,8 @@ SCALAR_CROSS_OK = {
     "text_pmi_collocations",            # 1-row token total × 1-row bigram total
     "stats_benford_first_digit",        # 1-row grand-total scalar
     "similarity_range_search",          # query set × corpus, the radius baseline
+    "similarity_recall_at_k",           # sampled query set × corpus, the exact ground truth
+    "similarity_ndcg_at_k",             # sampled query set × corpus, the exact ground truth
     "events_rfm_segments",              # 1-row corpus-clock scalar
     "events_kaplan_meier",              # 1-row corpus-clock + 1-row risk total
     "stats_mutual_info_priority_segment",  # 1-row contingency grand total
@@ -128,6 +133,7 @@ GLOBAL_WINDOW_OK: dict[str, str] = {
     "text_heaps_law": "bucket prefix + 10-row curve walk",
     "text_zipf_slope": "bucket prefix (full-vocab rank, ranks.py)",
     "surrogate_keys_dense": "partition-size prefix (ranks.py global_row_number)",
+    "dedup_jaccard_prefix_join": "partition-size prefix (ranks.py global_row_number)",
     # --- value-grain cell tables / fixed grids (the KS/MWU shape) ----
     "stats_ks_two_sample": "cell table (distinct event values)",
     "stats_mannwhitney_u": "cell table (distinct event values)",
