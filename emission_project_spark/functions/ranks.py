@@ -1,275 +1,215 @@
 """Distributed exact ranking without a data-sized single-partition sort.
 
-The classic ``rank() OVER (ORDER BY value)`` funnels the whole relation
-through ONE task — fine at sf0.1, a serial wall at 100 TB (the round-8
-verdict's only remaining plan-shape defect class). This module is the
-scale path the KS/MWU cell-table queries (plans/drift_stats.py:91,171)
-already hinted at, generalized:
+``row_number() OVER (ORDER BY k)`` funnels the whole relation through
+ONE task — fine at sf0.1, a serial wall at 100 TB. :func:`global_position`
+computes the same positions in parallel as a two-level prefix sum:
 
-    min-rank(v) = 1 + Σ_{u < v} cnt(u)
+1. a sample of the composite order key, sorted by Spark, yields n − 1
+   quantile rows (n = ``target_partitions``, at most ``MAX_BUCKETS``):
+   range boundaries that a scalar subquery draws once on the driver and
+   inlines as a constant;
+2. each row's bucket is a balanced CASE tree of null-safe
+   lexicographic comparisons against those boundaries (O(log n) per
+   row);
+3. per-bucket totals → a ≤ n-row relation whose running prefix is the
+   ONLY partition-less window;
+4. within each bucket a running ``row_number`` (or weighted sum) —
+   parallel across buckets, each task sorts ~1/n of the data.
 
-computed as a two-level prefix sum:
-
-1. range-bucket the values with ``width_bucket`` over the global
-   [min, max] (one 1-row bounds aggregate, broadcast);
-2. per-bucket totals → a ≤ ``n_buckets``+3-row relation whose running
-   prefix is the ONLY partition-less window, bounded by construction;
-3. within-bucket running counts via ``Window.partitionBy(bucket)`` —
-   parallel across buckets, each task sorts ~1/n_buckets of the data.
-
-Rank correctness does NOT depend on bucket balance (skewed buckets are
-a latency, never a wrongness), and ties are safe by construction: a
-bucket is a deterministic function of the value, so tied values always
-share a bucket and fold into one cell / adjacent window rows.
+The bucket is a pure function of the key, monotone along the order, so
+positions are exact whatever boundaries the sample drew: the boundaries
+balance the work and never decide a position, and nothing needs a
+materialized layout. The sample is itself a pure function of the data,
+and the subquery reads the relation through the exchanges the ranking
+already runs, so it adds no scan of a shuffled input. Ties share a bucket, and NULL, NaN, ASC and DESC
+keys land where Spark's sort puts them. Boundaries are drawn from the
+whole composite key, so a lead column where most rows tie (a hapax
+document frequency) still splits evenly on its tie-break.
 
 Used by the exact-rank statistics family (Spearman, ROC-AUC, Cliff's
-delta, Gini, Lorenz, RFM, Heaps) — each keeps its audited oracle SQL
-(DuckDB runs the textbook global window; tiny data) while the Spark
-plan carries no data-sized single-partition WindowExec.
+delta, Gini, Lorenz, RFM, Heaps, Zipf), the dense surrogate keys and the
+jaccard shingle rarity rank — each keeps its audited oracle SQL (DuckDB
+runs the textbook global window) while the Spark plan carries no
+data-sized single-partition WindowExec.
 """
 
 from __future__ import annotations
 
+import functools
+
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from emission_project_spark.catalog.tables import target_partitions
 
 __all__ = [
-    "cell_minrank",
-    "global_row_number",
-    "row_position",
+    "global_position",
     "ntile_from_position",
-    "shared_bounds",
     "topk_per_query",
 ]
 
-
-def shared_bounds(df: DataFrame, exprs: dict[str, Column]) -> DataFrame:
-    """ONE bounds pass for several rank calls over the same relation:
-    per bucket expression ``name`` the 1-row result carries
-    ``__lo_<name>`` / ``__hi_<name>`` — exactly the finite [min, max]
-    ``_with_bucket`` would compute for that expression by itself (same
-    cast, same NaN skip). A caller running k ``row_position`` /
-    ``cell_minrank`` calls on one input (events_rfm_segments: three
-    orderings of the per-user RFM aggregate) folds k bounds scans into
-    one and passes the shared relation via ``bounds=``/``bounds_key=``.
-
-    The 1-row result is lazily ``localCheckpoint``-ed — the narrowest
-    relation in the codebase — because nothing weaker holds the fusion
-    together: each call slices its own ``__lo_<k>``/``__hi_<k>`` pair,
-    and column pruning would otherwise push that slice INTO the shared
-    aggregate, splitting it back into k per-metric scans (measured on
-    the first cut of this change: the "shared" plan re-pruned into
-    three distinct bounds aggregates, byte-for-byte the before shape).
-
-    Results are bit-identical to per-call bounds: min/max over the same
-    rows with the same NULL/NaN handling."""
-    aggs = []
-    for name, e in exprs.items():
-        b = e.cast("double")
-        fin = F.when(~F.isnan(b), b)  # NULL passes through as NULL
-        aggs.append(F.min(fin).alias(f"__lo_{name}"))
-        aggs.append(F.max(fin).alias(f"__hi_{name}"))
-    return df.agg(*aggs).localCheckpoint(eager=False)
+# Sampled key rows per call: ≥ 30 per bucket, ≥ 250 at a width of 8.
+SAMPLE_ROWS = 2_000
+# Buckets per rank: the session width, capped. The CASE tree holds one
+# comparison per boundary, and at Spark's default width of 200 its
+# parse, planning and code generation cost seconds per call on inputs of
+# any size (sf0.01 text_zipf_slope 5.7 → 15.5 s in a default session);
+# 64 buckets still give every core of a 64-way host its own bucket.
+MAX_BUCKETS = 64
 
 
-def _with_bucket(
-    df: DataFrame,
-    bucket_on: Column,
-    n_buckets: int,
-    bounds: DataFrame | None = None,
-    bounds_key: str | None = None,
+def _sort_spec(c: Column | str) -> tuple[Column, bool, bool]:
+    """``(key, descending, nulls_first)`` of one ``orderBy`` column;
+    a bare column sorts ascending with NULLs first, as in Spark."""
+    c = F.col(c) if isinstance(c, str) else c
+    node = c._jc.node()
+    if node.getClass().getSimpleName() != "SortOrder":
+        return c, False, True
+    key = type(c)(SparkContext._jvm.org.apache.spark.sql.Column(node.child()))
+    desc = node.sortDirection().getClass().getSimpleName() == "Descending$"
+    nulls_first = node.nullOrdering().getClass().getSimpleName() == "NullsFirst$"
+    return key, desc, nulls_first
+
+
+def _murmur3_int(v: int) -> int:
+    """Spark's ``hash()`` of one int column (Murmur3_x86_32.hashInt,
+    seed 42)."""
+    m = 0xFFFFFFFF
+
+    def rotl(x: int, r: int) -> int:
+        return ((x << r) | (x >> (32 - r))) & m
+
+    k = rotl((v * 0xCC9E2D51) & m, 15) * 0x1B873593 & m
+    h = (rotl(42 ^ k, 13) * 5 + 0xE6546B64) & m
+    h ^= 4
+    h = ((h ^ (h >> 16)) * 0x85EBCA6B) & m
+    h = ((h ^ (h >> 13)) * 0xC2B2AE35) & m
+    h ^= h >> 16
+    return h - (1 << 32) if h >> 31 else h
+
+
+@functools.cache
+def _bucket_labels(n: int, width: int) -> list[int]:
+    """``n`` increasing ints that Spark hash-partitions into ``n``
+    different partitions of ``width`` (≥ n). The window exchange
+    hash-partitions the bucket column, and the ids 0..n−1 collide (at
+    n = 4, three of them share one partition, so one task sorts three
+    quarters of the data); these labels give each bucket its own task
+    and keep the bucket order."""
+    labels, used, v = [], set(), 0
+    while len(labels) < n:
+        if _murmur3_int(v) % width not in used:
+            used.add(_murmur3_int(v) % width)
+            labels.append(v)
+        v += 1
+    return labels
+
+
+def _before(a: str, b: str, desc: bool, nulls_first: bool) -> str:
+    """SQL: ``a`` sorts strictly before ``b`` (never NULL). Spark's ``<``
+    and ``>`` order NaN above every double, as its sort does."""
+    nulls = f"{a} IS NULL AND {b} IS NOT NULL" if nulls_first else f"{a} IS NOT NULL AND {b} IS NULL"
+    return f"({nulls} OR coalesce({a} {'>' if desc else '<'} {b}, false))"
+
+
+def _with_range_bucket(
+    df: DataFrame, order_cols: list[Column | str], n: int, width: int
 ) -> DataFrame:
-    """Attach ``__b`` ∈ [0, n_buckets+2]: the width_bucket range bucket
-    of ``bucket_on`` over its global [min, max] (values equal to max
-    land in bucket n_buckets+1 — just one more bucket id). The bounds
-    are a 1-row broadcast scalar; a constant column degenerates to one
-    bucket, which is exactly the single-sort baseline.
+    """``df`` plus ``__b``, the label of one of ``n`` buckets (each in
+    its own partition of the ``width``-way window exchange), monotone
+    along ``order_cols``: bucket j holds the keys after boundary j−1
+    and at or before boundary j, a balanced CASE tree over the ``n − 1``
+    quantile rows of a key sample.
 
-    NULL/NaN parity with the window sort these helpers replace (the
-    round-9 advice): ``width_bucket`` yields NULL for both, which would
-    silently DROP those rows at the bucket equi-join. Instead NULL
-    values land in bucket 0 (Spark's ASC sort puts NULLs FIRST) and NaN
-    in bucket n_buckets+2 (Spark orders NaN GREATER than any double),
-    so a rank()/row_number() caller sees the same global order the
-    single-partition window would have produced. The [min, max] bounds
-    skip NaN explicitly — Spark's max() would otherwise return NaN and
-    poison every finite bucket.
+    The sample is the ``SAMPLE_ROWS`` rows first in (hash, key) order,
+    sorted by ``order_cols`` — a pure function of the data, so the
+    boundaries are too. It runs as a scalar subquery: Spark evaluates
+    it once on the driver and inlines its value into every row's
+    bucket expression, and the subquery reuses ``df``'s exchanges
+    with the ranking (it keeps every column, so column pruning cannot
+    split the shared subtree). The expressions are SQL text, so the
+    tree costs one parse, not a py4j call per node."""
+    if n == 1:
+        return df.withColumn("__b", F.lit(0))
+    specs = [_sort_spec(c) for c in order_cols]
+    keyed = df.select("*", *[k.alias(f"__k{i}") for i, (k, _, _) in enumerate(specs)])
+    keys = [(f"__k{i}", d, nf) for i, (_, d, nf) in enumerate(specs)]
+    names = [c for c, _, _ in keys]
 
-    ``bounds``/``bounds_key``: a precomputed :func:`shared_bounds`
-    relation — the per-call bounds aggregate is skipped and the shared
-    1-row broadcast is sliced to this expression's ``__lo``/``__hi``
-    instead (identical values, one scan for k calls)."""
-    b = bucket_on.cast("double")
-    if bounds is not None:
-        bounds = bounds.select(
-            F.col(f"__lo_{bounds_key}").alias("__lo"),
-            F.col(f"__hi_{bounds_key}").alias("__hi"),
-        )
-    else:
-        finite = F.when(~F.isnan(b), b)  # NULL passes through as NULL
-        bounds = df.select(
-            F.min(finite).alias("__lo"), F.max(finite).alias("__hi")
-        )
-    return (
-        df.crossJoin(F.broadcast(bounds))
-        .withColumn(
-            "__b",
-            F.when(b.isNull(), F.lit(0))
-            .when(F.isnan(b), F.lit(n_buckets + 2))
-            .when(
-                F.col("__hi") > F.col("__lo"),
-                F.width_bucket(b, F.col("__lo"), F.col("__hi"), F.lit(n_buckets)),
-            )
-            .otherwise(F.lit(1)),
-        )
-        .drop("__lo", "__hi")
-    )
+    def cmp(left: str, right: str) -> str:
+        return "CASE " + " ".join(
+            f"WHEN {_before(f'{left}.{c}', f'{right}.{c}', d, nf)} THEN -1 "
+            f"WHEN {_before(f'{right}.{c}', f'{left}.{c}', d, nf)} THEN 1"
+            for c, d, nf in keys
+        ) + " ELSE 0 END"
 
+    def at_or_before(j: int) -> str:
+        out = "true"
+        for c, d, nf in reversed(keys):
+            v = f"get(__bounds, {j}).{c}"
+            out = f"({_before(c, v, d, nf)} OR ({c} <=> {v} AND {out}))"
+        return out
 
-def _bucket_offsets(bucketed: DataFrame, cnt: Column) -> DataFrame:
-    """(bucket → rows-before-bucket) from per-bucket totals: the only
-    partition-less window, over ≤ n_buckets+3 rows by construction
-    (buckets 0 and n_buckets+2 are the NULL/NaN pens)."""
-    bt = bucketed.groupBy("__b").agg(F.sum(cnt).alias("__bt"))
-    woff = Window.orderBy("__b").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    return bt.select(
-        "__b",
-        F.coalesce(F.sum("__bt").over(woff), F.lit(0)).alias("__off"),
-    )
+    labels = _bucket_labels(n, width)
 
+    def tree(lo: int, hi: int) -> str:
+        if lo == hi:
+            return str(labels[lo])
+        mid = (lo + hi + 1) // 2
+        return f"CASE WHEN {at_or_before(mid - 1)} THEN {tree(lo, mid - 1)} ELSE {tree(mid, hi)} END"
 
-def cell_minrank(
-    cells: DataFrame,
-    value_col: str,
-    cnt_col: str,
-    out_col: str = "minrank",
-    n_buckets: int = 64,
-) -> DataFrame:
-    """Exact ``rank() OVER (ORDER BY value)`` min-rank for a histogram
-    cell table (one row per distinct value, with its count). Returns
-    the input columns plus ``out_col`` (long). All heavy windows are
-    bucket-partitioned; the global prefix runs over the ≤n_buckets+3-row
-    bucket-total relation only."""
-    cnt = F.col(cnt_col).cast("long")
-    bucketed = _with_bucket(cells, F.col(value_col), n_buckets)
-    offs = _bucket_offsets(bucketed, cnt)
-    win = Window.partitionBy("__b").orderBy(value_col).rowsBetween(
-        Window.unboundedPreceding, 0
+    row = ", ".join("`" + c.replace("`", "``") + "`" for c in keyed.columns)
+    pick = ", ".join(f"get(o, CAST(j * size(o) DIV {n} AS INT)).{c} AS {c}" for c in names)
+    bounds = (
+        keyed.orderBy(F.xxhash64(*names), *names)
+        .limit(SAMPLE_ROWS)
+        .select(F.expr(f"struct({row})").alias("s"))
+        .agg(F.expr(f"array_sort(collect_list(s), (l, r) -> {cmp('l', 'r')})").alias("o"))
+        .select(F.expr(f"transform(sequence(1, {n - 1}), j -> struct({pick}))"))
+        .scalar()
     )
     return (
-        bucketed.join(F.broadcast(offs), "__b")
-        .withColumn(
-            out_col,
-            (F.col("__off") + F.sum(cnt).over(win) - cnt + 1).cast("long"),
-        )
-        .drop("__b", "__off")
+        keyed.withColumn("__bounds", bounds)
+        .withColumn("__b", F.expr(tree(0, n - 1)))
+        .drop("__bounds", *names)
     )
 
 
-def row_position(
+def global_position(
     df: DataFrame,
     order_cols: list[Column | str],
-    bucket_on: Column,
     out_col: str = "i",
-    n_buckets: int = 64,
-    bounds: DataFrame | None = None,
-    bounds_key: str | None = None,
+    weight: str | None = None,
 ) -> DataFrame:
-    """Exact ``row_number() OVER (ORDER BY order_cols)`` when the
-    composite ordering key is UNIQUE per row (the caller's contract —
-    e.g. a tie-broken (metric, primary-key) pair). ``bucket_on`` must
-    be a numeric expression monotone non-decreasing along the ordering
-    (the first order column, or its negation for a descending sort).
-    Same two-level prefix-sum machinery as cell_minrank with cnt ≡ 1.
+    """``df`` plus ``out_col`` (long): 1 + the summed ``weight`` of every
+    row sorted before this one by ``order_cols``.
 
-    NULL contract (ADVICE r10): the NULL pen is bucket 0 — NULLS
-    FIRST, which matches Spark's default for ASCENDING window sorts
-    only. A DESCENDING caller (negated ``bucket_on``) whose order key
-    can be NULL would diverge from Spark's ``col DESC`` semantics
-    (NULLs LAST there) — every current descending caller orders by a
-    non-null aggregate, and new descending callers must either keep
-    the key non-null or pre-filter NULLs and append them explicitly.
-
-    ``bounds``/``bounds_key`` forward to :func:`_with_bucket` — pass a
-    :func:`shared_bounds` relation to fold k calls' bounds scans into
-    one (bit-identical bucketing)."""
-    bucketed = _with_bucket(df, bucket_on, n_buckets, bounds, bounds_key)
-    offs = _bucket_offsets(bucketed, F.lit(1))
-    win = Window.partitionBy("__b").orderBy(*order_cols)
-    return (
-        bucketed.join(F.broadcast(offs), "__b")
-        .withColumn(
-            out_col,
-            (F.col("__off") + F.row_number().over(win)).cast("long"),
-        )
-        .drop("__b", "__off")
+    Without ``weight`` that is ``row_number() OVER (ORDER BY
+    order_cols)``, exact for a composite key that is unique per row
+    (ties would be broken arbitrarily, as the window does). With
+    ``weight`` naming a count column of a histogram cell table (one row
+    per distinct value) it is ``rank() OVER (ORDER BY value)``, the
+    cell's min-rank."""
+    width = target_partitions(df.sparkSession)
+    bucketed = _with_range_bucket(df, order_cols, min(width, MAX_BUCKETS), width)
+    w = F.lit(1) if weight is None else F.col(weight).cast("long")
+    totals = bucketed.groupBy("__b").agg(F.sum(w).alias("__bt"))
+    woff = Window.orderBy("__b").rowsBetween(Window.unboundedPreceding, -1)
+    offs = totals.select(
+        "__b", F.coalesce(F.sum("__bt").over(woff), F.lit(0)).alias("__off")
     )
-
-
-def global_row_number(
-    df: DataFrame,
-    order_cols: list[Column | str],
-    out_col: str = "rk",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Exact ``row_number() OVER (ORDER BY order_cols)`` for a UNIQUE
-    composite key, with NO distribution assumptions on the key — the
-    companion to :func:`row_position` for orderings
-    ``width_bucket`` cannot bucket evenly (string tie-breaks, or a
-    numeric lead column so skewed that one bucket holds the relation:
-    a document-frequency rank where most of the vocabulary is hapax
-    puts ~everything in the df=1 bucket and the "distributed" rank
-    degenerates to one task — measured 70 s single-task for 20.6M
-    shingles at sf10 on the plain global window this replaces).
-
-    Mechanism: ``repartitionByRange(order_cols)`` (sampled, therefore
-    distribution-ADAPTIVE range buckets) → ``sortWithinPartitions`` →
-    ``monotonically_increasing_id`` whose upper bits are the partition
-    id and lower bits the within-partition row index → per-partition
-    row counts → running offsets (a window over ≤num_partitions rows)
-    → rank = offset(partition) + index + 1.
-
-    The sampled range boundaries are NOT deterministic across runs —
-    which is exactly why the ranked relation is lazily
-    ``localCheckpoint``-ed here: offsets and indices are derived from
-    ONE materialized layout, so they cannot disagree, and the returned
-    rank is the exact row_number over the total order whatever
-    boundaries the sampler drew. (Two un-materialized consumers of a
-    range exchange re-sample independently and CAN disagree — the
-    failure mode that rules out a lazy-only formulation.)
-
-    NULL ordering follows Spark sort semantics (NULLS FIRST for ASC,
-    LAST for DESC) — the same order the global window would produce."""
-    n_parts = num_partitions or target_partitions(df.sparkSession)
-    ranged = (
-        df.repartitionByRange(n_parts, *order_cols)
-        .sortWithinPartitions(*order_cols)
-        .withColumn("__mid", F.monotonically_increasing_id())
-        .withColumn("__pid", F.shiftright("__mid", 33).cast("int"))
-        .withColumn(
-            "__idx",
-            F.col("__mid").bitwiseAND(F.lit((1 << 33) - 1)).cast("long"),
-        )
-        .drop("__mid")
-        .localCheckpoint(eager=False)
-    )
-    woff = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = (
-        ranged.groupBy("__pid")
-        .agg(F.count(F.lit(1)).alias("__pc"))
-        .select(
-            "__pid",
-            F.coalesce(F.sum("__pc").over(woff), F.lit(0)).alias("__off"),
-        )
+    within = Window.partitionBy("__b").orderBy(*order_cols)
+    run = (
+        F.row_number().over(within)
+        if weight is None
+        else F.sum(w).over(within.rowsBetween(Window.unboundedPreceding, 0)) - w + 1
     )
     return (
-        ranged.join(F.broadcast(offs), "__pid")
-        .withColumn(out_col, (F.col("__off") + F.col("__idx") + 1).cast("long"))
-        .drop("__pid", "__idx", "__off")
+        bucketed.withColumn("__run", run)
+        .join(F.broadcast(offs), "__b")
+        .withColumn(out_col, (F.col("__off") + F.col("__run")).cast("long"))
+        .drop("__b", "__off", "__run")
     )
 
 
@@ -289,8 +229,9 @@ def ntile_from_position(i: Column, n: Column, buckets: int) -> Column:
     """``ntile(buckets)`` recovered from a 1-based position ``i`` out
     of ``n`` rows — the standard SQL tiling both Spark and DuckDB
     implement: the first ``n % buckets`` tiles carry ``n/buckets + 1``
-    rows, the rest ``n/buckets``. Lets a distributed row_position
-    replace a single-partition ntile window bit-for-bit."""
+    rows, the rest ``n/buckets``. Lets a distributed
+    :func:`global_position` replace a single-partition ntile window
+    bit-for-bit."""
     q = F.floor(n / buckets)
     r = n % buckets
     big = r * (q + 1)  # rows living in the (q+1)-sized leading tiles

@@ -106,8 +106,8 @@ def apply_cdc(
     re-inserts the surviving upserts. Shuffles on the key throughout;
     replaying the same batch is a no-op (same last ops ⇒ same result),
     the at-least-once delivery contract. This is the general form of
-    ``upsert`` (a CDC batch with only 'u' ops) and of
-    ``Warehouse.delete_keys`` (only 'd' ops).
+    ``upsert`` (a CDC batch with only 'u' ops) and of a keyed delete
+    (only 'd' ops).
     """
     from pyspark.sql import Window
     from pyspark.sql import functions as F

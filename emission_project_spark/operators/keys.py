@@ -9,7 +9,7 @@ assigned in insertion order, where insertion order is the post-
 funnels through one partition, which is acceptable for *dimension*
 tables (small by definition) — the only place the reference uses
 SERIAL. For a fact-sized relation, the distributed dense row number is
-``functions/ranks.py::global_row_number``.
+``functions/ranks.py::global_position``.
 
 ``monotonically_increasing_id`` is deliberately not used: non-dense and
 partition-layout-dependent, so oracle comparisons on id values fail.

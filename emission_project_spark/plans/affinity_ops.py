@@ -609,19 +609,19 @@ def dedup_jaccard_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # global rarity order: (df asc, shingle asc) → dense integer rank.
     # vocab-sized shuffle, not corpus-sized.
-    # ranks.global_row_number, not a partition-less row_number window:
+    # ranks.global_position, not a partition-less row_number window:
     # 5-gram shingles are near-unique, so the vocabulary is
     # ~corpus-sized and a global window sorts it in ONE task (20.6M
     # rows, 70 s, 40 % of the sf10 wall, measured from the event log;
-    # a serial wall at any scale). The range-partitioned rank
-    # is the same total order, bit-identical ranks, no distribution
-    # assumption (df is hapax-skewed, so width_bucket-style bucketing
-    # on df would put ~the whole vocabulary in one bucket).
-    from emission_project_spark.functions.ranks import global_row_number
+    # a serial wall at any scale). The range-bucketed rank is the same
+    # total order, bit-identical ranks; its boundaries split the
+    # hapax-skewed df = 1 block on the shingle tie-break.
+    from emission_project_spark.functions.ranks import global_position
 
-    df_rank = global_row_number(
+    df_rank = global_position(
         sh.groupBy("sh").agg(F.count(F.lit(1)).alias("df")),
         [F.col("df").asc(), F.col("sh").asc()],
+        out_col="rk",
     ).select("sh", "rk")
     ranked = (
         sh.join(df_rank, "sh")
@@ -632,7 +632,7 @@ def dedup_jaccard_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # prefix = the n - ceil(τ·n) + 1 rarest shingles, WITH each one's
     # 1-based position in the doc's rank-sorted array (posexplode on a
     # leading slice preserves positions). The position feeds the
-    # PPJoin+ positional filter below (r13 verdict task #1).
+    # PPJoin+ positional filter below.
     prefix_len = (F.col("n") - F.ceil(F.lit(tau) * F.col("n")) + 1).cast("int")
     pfx = ranked.select(
         "doc_id",
@@ -661,8 +661,8 @@ def dedup_jaccard_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # token row survives; only pairs that can no longer reach τ die.
     # They die BEFORE the distinct exchange and the array-attached
     # verification joins — which is where the sf10 cost lives
-    # (within-bucket candidate generation held n^1.03 at 175-203 s
-    # through r12/r13).
+    # (within-bucket candidate generation scaled as n^1.03 at
+    # 175-203 s without it).
     ubound = (
         F.least(F.col("pa") - 1, F.col("pb") - 1)
         + 1
@@ -681,12 +681,10 @@ def dedup_jaccard_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     # verify candidates exactly: one array_intersect per pair.
-    # r13 join-strategy experiment, REVERTED: SHUFFLE_HASH hints on
-    # cand/sets_b (6 SMJ → 4 SHJ at sf10) measured byte-identical
-    # shuffle AND spill on eventlogged arms (3651.5 MB / 4026.5 MB
-    # both) with wall ×0.95 against (plans/r13/ab/sf10_shj.log) — the
-    # sort the hint removes is not where this plan's cost lives, so
-    # the hint only pinned the planner. Left unhinted.
+    # Left unhinted: SHUFFLE_HASH hints on cand/sets_b (6 SMJ → 4 SHJ
+    # at sf10) measured byte-identical shuffle AND spill (3651.5 MB /
+    # 4026.5 MB both) with wall ×0.95 (plans/r13/ab/sf10_shj.log) —
+    # the sort the hint removes is not where this plan's cost lives.
     sets_a = ranked.select(F.col("doc_id").alias("doc_a"), F.col("rks").alias("ra"), F.col("n").alias("na"))
     sets_b = ranked.select(F.col("doc_id").alias("doc_b"), F.col("rks").alias("rb"), F.col("n").alias("nb"))
     verified = (

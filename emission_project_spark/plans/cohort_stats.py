@@ -32,11 +32,10 @@ from emission_project_spark.plans.registry import register
 # schema's natural unit). Formula on ascending-sorted revenue x_1..x_n:
 # G = 2·Σ i·x_i / (n·Σx) − (n+1)/n. Σ i·x_i within a tie block is x·Σi
 # regardless of which tied row takes which i, so ties cannot flip the
-# value — which means any exact row_number works. Round-9 rewrite:
-# the position comes from functions/ranks.row_position (two-level
-# bucketed prefix sums over (x, custkey)) — the former data-sized
-# single-partition sort is now ~1/n_buckets per task, exact at any
-# scale with no binning needed. The oracle keeps the textbook
+# value — which means any exact row_number works. The position comes
+# from functions/ranks.global_position (two-level bucketed prefix sums
+# over (x, custkey)): each task sorts ~1/n of the customers, exact at
+# any scale with no binning needed. The oracle keeps the textbook
 # global-window form (DuckDB, tiny data).
 @register(
     "stats_gini_concentration",
@@ -56,14 +55,12 @@ from emission_project_spark.plans.registry import register
     """,
 )
 def stats_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from emission_project_spark.functions.ranks import row_position
+    from emission_project_spark.functions.ranks import global_position
 
     o = load_table(spark, sf_dir, "orders")
-    # row_position reads rev 3× (bounds, offsets, main); exchange reuse
-    # runs the orders scan and groupBy once
     rev = o.groupBy("o_custkey").agg(F.sum("o_totalprice").alias("x"))
-    ranked = row_position(
-        rev, [F.col("x").asc(), F.col("o_custkey").asc()], F.col("x")
+    ranked = global_position(
+        rev, [F.col("x").asc(), F.col("o_custkey").asc()]
     ).select("x", "i")
     n = F.count(F.lit(1))
     return ranked.agg(
@@ -154,20 +151,15 @@ def stats_mutual_info_priority_segment(spark: SparkSession, sf_dir: str) -> Data
 # monetary (Σ value), each cut into ntile(4) with quartile 1 = best
 # and a (metric, user_id) tie-break so both engines bucket the same
 # users into the same quartiles. Output is the segment histogram
-# (≤64 rows) — the thing a lifecycle team actually reads. Round-9
-# rewrite: each quartile is ntile(4) recovered from a DISTRIBUTED row
-# position (functions/ranks.row_position + ntile_from_position; the
-# descending metrics bucket on the negated value so the range bucket
-# stays monotone along the ordering) — three bucketed rank passes over
-# the USER-sized table, no single-partition window anywhere. The
-# passes run INDEPENDENTLY on narrow (user_id, metric) projections and
-# join on user_id: the first form CHAINED them (pass 2 ranked pass 1's
-# output), which made every pass's global-bounds aggregate recompute
-# its predecessors' full window chains — measured 2.5× slower at both
-# sf0.1 and sf1 than the independent+join shape, and the sorts carried
-# an ever-wider row. The shared `u` subtree compiles to one exchange
-# via reuse (the basket_lift precedent pinned in
-# tests/test_exchange_reuse.py).
+# (≤64 rows) — the thing a lifecycle team actually reads. Each
+# quartile is ntile(4) recovered from a DISTRIBUTED row position
+# (functions/ranks.global_position + ntile_from_position) — three
+# bucketed rank passes over the USER-sized table, no single-partition
+# window anywhere. The passes run INDEPENDENTLY on narrow (user_id,
+# metric) projections and join on user_id: chaining them (pass 2
+# ranking pass 1's output) measured 2.5× slower at both sf0.1 and sf1,
+# because each pass recomputed its predecessors' window chains and the
+# sorts carried an ever-wider row.
 @register(
     "events_rfm_segments",
     oracle="""
@@ -205,47 +197,30 @@ def events_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             "freq",
             "mon",
         )
-        # Materialized: u feeds four consumers (the three row_position
-        # rank relations + the n_tot probe); inline, each rescans
-        # events (sf0.1: 200,000 → 800,000 parquet rows).
+        # Materialized: u feeds the three rank calls (each samples it
+        # and ranks it) and the n_tot probe; inline, they rescan events
+        # (sf0.1: 200,000 → 600,000 parquet rows).
         .localCheckpoint(eager=False)
     )
     from emission_project_spark.functions.ranks import (
+        global_position,
         ntile_from_position,
-        row_position,
-        shared_bounds,
     )
 
-    # One [min, max] bounds pass over u serves all three rank calls
-    # (ranks.shared_bounds): one scan, one 1-row broadcast sliced per
-    # metric, identical bucket bounds → bit-identical ranks.
-    bnds = shared_bounds(
-        u,
-        {"r": F.col("rec_days"), "f": -F.col("freq"), "m": -F.col("mon")},
-    )
-    pr = row_position(
+    pr = global_position(
         u.select("user_id", "rec_days"),
         [F.col("rec_days").asc(), F.col("user_id").asc()],
-        F.col("rec_days"),
         out_col="ir",
-        bounds=bnds,
-        bounds_key="r",
     ).select("user_id", "ir")
-    pf = row_position(
+    pf = global_position(
         u.select("user_id", "freq"),
         [F.col("freq").desc(), F.col("user_id").asc()],
-        -F.col("freq"),
         out_col="if_",
-        bounds=bnds,
-        bounds_key="f",
     ).select("user_id", "if_")
-    pm = row_position(
+    pm = global_position(
         u.select("user_id", "mon"),
         [F.col("mon").desc(), F.col("user_id").asc()],
-        -F.col("mon"),
         out_col="im",
-        bounds=bnds,
-        bounds_key="m",
     ).select("user_id", "im")
     ranked = pr.join(pf, "user_id").join(pm, "user_id")
     n_tot = u.agg(F.count(F.lit(1)).alias("n_tot"))

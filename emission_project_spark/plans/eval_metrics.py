@@ -287,16 +287,16 @@ def _rank_sum(ev: DataFrame, positive: Column) -> DataFrame:
     """1-row ``(np, nn, rpos)``: the positive and negative counts and
     the sum of the positives' mid-ranks by ``value`` (ties share the
     mid-rank rmin + (ties−1)/2)."""
-    from emission_project_spark.functions.ranks import cell_minrank
+    from emission_project_spark.functions.ranks import global_position
 
     y = F.when(positive, 1).otherwise(0)
-    # Materialized: cell_minrank reads the cells 3× (bounds, offsets,
-    # main relation); inline, each read rescans events (sf0.1: 100,000
-    # → 300,000 parquet rows read).
+    # Materialized: global_position reads the cells twice (the
+    # boundary sample, the ranked relation); inline, each read rescans
+    # events (sf0.1: 100,000 → 200,000 parquet rows).
     cells = ev.groupBy("value").agg(
         F.count(F.lit(1)).alias("ties"), F.sum(y).alias("pos")
     ).localCheckpoint(eager=False)
-    r = cell_minrank(cells, "value", "ties", out_col="rmin")
+    r = global_position(cells, ["value"], out_col="rmin", weight="ties")
     # every positive in a cell carries the same mid-rank
     return r.agg(
         F.sum("pos").alias("np"),
@@ -314,12 +314,12 @@ def _rank_sum(ev: DataFrame, positive: Column) -> DataFrame:
 # purchase?"). avg-rank = min-rank + (ties−1)/2 sits on the 0.5 grid,
 # so the positive-rank sum is exact in doubles and the AUC is pure
 # integer arithmetic until the final division. Ranks come from the
-# distinct-value cell table via functions/ranks.cell_minrank (two-level
-# bucketed prefix sums — NO data-sized single-partition window; the
-# round-8 rewrite of the exact-rank family), and the rank-sum folds
-# from the cells directly — the fact table is touched exactly once,
-# by the groupBy(value) histogram. The oracle keeps the textbook
-# global-window form (DuckDB, tiny data).
+# distinct-value cell table via functions/ranks.global_position
+# weighted by the tie counts (two-level bucketed prefix sums — NO
+# data-sized single-partition window), and the rank-sum folds from the
+# cells directly — the fact table is touched once, by the
+# groupBy(value) histogram. The oracle keeps the textbook global-window
+# form (DuckDB, tiny data).
 @register(
     "stats_roc_auc",
     oracle="""
@@ -362,14 +362,13 @@ def stats_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 2·minrank + ties − 1) and every moment folds as decimal(38,0) /
 # HUGEINT, so both engines divide the SAME exact integers — zero
 # float-order hazard even at sf1 where Σ(2r)² overflows a bigint.
-# Round-9 rewrite of the round-8 global-window plan: each column's
-# min-rank comes from its distinct-value histogram via
-# functions/ranks.cell_minrank (bucketed prefix sums — the serial
-# rank wall this query used to carry is gone), and the cross moment
+# Each column's min-rank comes from its distinct-value histogram via
+# functions/ranks.global_position weighted by the counts (bucketed
+# prefix sums — no serial rank wall), and the cross moment
 # Σ rx·ry folds over the PRE-AGGREGATED (quantity, price) pair table
 # joined to the two rank maps on their keys — ordinary shuffle joins
-# that scale out, never a single-task sort. SF1_HEAVY re-measures
-# this query every round to confirm the wall stays gone.
+# that scale out, never a single-task sort. The sf1 heavy set times
+# this query to confirm the wall stays gone.
 @register(
     "stats_spearman_corr",
     oracle="""
@@ -400,25 +399,24 @@ def stats_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stats_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from emission_project_spark.functions.ranks import cell_minrank
+    from emission_project_spark.functions.ranks import global_position
 
     li = load_table(spark, sf_dir, "lineitem")
 
-    # r13 experiment, REVERTED: deriving both per-column histograms
-    # from a lazily-checkpointed pair histogram ("one fact scan, not
-    # three") measured SLOWER at both SFs (sf0.1 1.92→3.08 s in a
-    # 0.2%-steal window, benchdiff norm ×1.79; sf1 fresh-JVM A/B old
-    # 11.96 vs new 13.50 s, ranges disjoint — plans/r13/ab/batch2.log).
-    # Mechanism: l_extendedprice is near-unique, so the (quantity,
-    # price) pair table is FACT-sized — the checkpoint materializes a
-    # fact-sized relation, while the "three scans" it saves are cheap
-    # 2-column columnar reads feeding tiny aggregates. The narrow-
-    # aggregates-only checkpoint rule applies; the 3-scan form stands.
+    # Each histogram scans lineitem itself. Deriving both from a
+    # lazily-checkpointed pair histogram ("one fact scan, not three")
+    # measured SLOWER at both SFs (sf0.1 1.92→3.08 s; sf1 fresh-JVM A/B
+    # 11.96 vs 13.50 s, ranges disjoint — plans/r13/ab/batch2.log):
+    # l_extendedprice is near-unique, so the (quantity, price) pair
+    # table is FACT-sized, while the scans it saves are cheap 2-column
+    # columnar reads feeding tiny aggregates.
     def rank_map(col: str, out: str) -> DataFrame:
         """value → doubled average rank (exact integer), from the
         column's distinct-value histogram."""
         cells = li.groupBy(col).agg(F.count(F.lit(1)).alias("cnt"))
-        return cell_minrank(cells, col, "cnt").select(
+        return global_position(
+            cells, [col], out_col="minrank", weight="cnt"
+        ).select(
             col,
             (2 * F.col("minrank") + F.col("cnt") - 1)
             .cast("decimal(18,0)")
@@ -646,10 +644,10 @@ def stats_jensen_shannon(spark: SparkSession, sf_dir: str) -> DataFrame:
 # INCLUDED at revenue 0 (left join) — excluding them understates
 # concentration, the classic Lorenz mistake. Decile boundaries
 # tie-broken by (revenue, custkey); the decile is ntile(10) recovered
-# from a DISTRIBUTED row position (functions/ranks.row_position +
+# from a DISTRIBUTED row position (functions/ranks.global_position +
 # ntile_from_position — bit-identical tiling, no user-sized
-# single-partition window; round-9 rewrite). The surviving global
-# window runs over the 10-row decile table only.
+# single-partition window). The surviving global window runs over the
+# 10-row decile table only.
 @register(
     "stats_lorenz_deciles",
     oracle="""
@@ -678,10 +676,10 @@ def stats_jensen_shannon(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stats_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
-    # Materialized: rev feeds row_position (which reads it 3×: bounds,
-    # offsets, main) plus the n_tot probe; inline, the query reads and
-    # shuffles more (sf0.1: 165,000 → 180,000 parquet rows, 0.44 →
-    # 0.51 MB shuffle written).
+    # Materialized: rev feeds global_position (which reads it twice:
+    # the boundary sample, the ranked relation) plus the n_tot probe;
+    # inline, the query reads and shuffles more (sf0.1: 165,000 →
+    # 180,000 parquet rows, 0.39 → 0.47 MB shuffle written).
     rev = (
         cust.join(
             orders, cust["c_custkey"] == orders["o_custkey"], "left"
@@ -691,13 +689,11 @@ def stats_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=False)
     )
     from emission_project_spark.functions.ranks import (
+        global_position,
         ntile_from_position,
-        row_position,
     )
 
-    pos = row_position(
-        rev, [F.col("x").asc(), F.col("c_custkey").asc()], F.col("x")
-    )
+    pos = global_position(rev, [F.col("x").asc(), F.col("c_custkey").asc()])
     n_tot = rev.agg(F.count(F.lit(1)).alias("n_tot"))
     d = pos.crossJoin(F.broadcast(n_tot)).select(
         "x",
@@ -905,8 +901,8 @@ def text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     from emission_project_spark.functions.text import tokens
 
     from emission_project_spark.functions.ranks import (
+        global_position,
         ntile_from_position,
-        row_position,
     )
 
     docs = load_table(spark, sf_dir, "documents")
@@ -914,10 +910,8 @@ def text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (bucketed prefix sums) — no corpus-sized single-partition window.
     # The rank machinery sees ONLY the 8-byte doc_id column; the text
     # column joins back afterwards so document bodies never ride the
-    # bucket-assignment broadcast join
-    pos = row_position(
-        docs.select("doc_id"), [F.col("doc_id").asc()], F.col("doc_id")
-    )
+    # bucket exchange
+    pos = global_position(docs.select("doc_id"), [F.col("doc_id").asc()])
     n_tot = docs.agg(F.count(F.lit(1)).alias("n_tot"))
     tiles = pos.crossJoin(F.broadcast(n_tot)).select(
         F.col("doc_id").alias("td"),
@@ -2516,7 +2510,7 @@ def events_bot_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 # mid-rank identity as stats_roc_auc (never the O(n²) dominance
 # join); |δ| banded into the standard Romano et al. magnitude labels.
 # Pure integer-grid arithmetic until the final ratio. Ranks via the
-# same cell_minrank bucketed prefix sums as stats_roc_auc — one
+# same weighted global_position prefix sums as stats_roc_auc — one
 # groupBy(value) histogram pass over the fact, no data-sized
 # single-partition window anywhere in the plan.
 @register(

@@ -3412,8 +3412,9 @@ def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Materialized, spillable, in its NARROW per-doc form (token count
     # + the query-term hits only, never the full token arrays): it
     # feeds four consumers (tf and df_t through t, dl, the scalar
-    # stats). Inline reads as many parquet rows (sf0.1: 20,000) but
-    # runs slower (median 0.76 → 1.02 s over 8 runs).
+    # stats), which read it back from the block cache. Inline, each
+    # rescans the documents (sf0.1: 5,000 → 20,000 parquet rows;
+    # median 0.85 → 0.86 s over 8 alternating runs).
     toks = tokens(F.lower(F.col("text")))
     terms_arr = F.array(*[F.lit(x) for x in terms])
     d = docs.select(

@@ -373,11 +373,10 @@ def role_playing_nation_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- §4.3.1: dense ordered surrogate keys (SERIAL semantics). The
 # registered form runs the DISTRIBUTED dense row number
-# (functions/ranks.py::global_row_number: sampled range partitions, one
-# materialized layout, a partition-count-sized offset prefix — the
-# 100 TB path) — identical output to the single-window
-# add_surrogate_key for unique sort keys, which s_name is; the
-# equivalence is pinned in tests/test_operators.py.
+# (functions/ranks.py::global_position: sampled range boundaries, a
+# partition-count-sized offset prefix — the 100 TB path) — identical
+# output to the single-window add_surrogate_key for unique sort keys,
+# which s_name is; the equivalence is pinned in tests/test_operators.py.
 @register(
     "surrogate_keys_dense",
     oracle="""
@@ -387,10 +386,10 @@ def role_playing_nation_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def surrogate_keys_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from emission_project_spark.functions.ranks import global_row_number
+    from emission_project_spark.functions.ranks import global_position
 
     s = load_table(spark, sf_dir, "supplier").select("s_name")
-    return global_row_number(
+    return global_position(
         s, [F.col("s_name").asc_nulls_last()], out_col="supplier_sk"
     ).select("supplier_sk", "s_name")
 
@@ -2606,7 +2605,7 @@ def stats_regression_price_on_qty(spark: SparkSession, sf_dir: str) -> DataFrame
     """,
 )
 def text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from emission_project_spark.functions.ranks import row_position
+    from emission_project_spark.functions.ranks import global_position
 
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
@@ -2614,15 +2613,13 @@ def text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(r"regexp_extract_all(lower(text), '[a-z0-9]+', 0)")
         ).alias("tok")
     )
-    # row_position reads freq 3× (bounds, offsets, main); exchange
-    # reuse runs the token explode and groupBy once
     freq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("f"))
-    # full-vocab rank via distributed bucketed prefix sums (bucket on
-    # −f: monotone along the (f desc, tok) ordering) — the regression
-    # needs EVERY rank, so top-k can't prune here, but the sort no
-    # longer funnels the vocabulary through one task
-    ranked = row_position(
-        freq, [F.col("f").desc(), F.col("tok").asc()], -F.col("f"), out_col="r"
+    # full-vocab rank via distributed bucketed prefix sums — the
+    # regression needs EVERY rank, so top-k can't prune here, but the
+    # sort never funnels the vocabulary through one task; the range
+    # boundaries split the hapax-heavy f = 1 tail on tok
+    ranked = global_position(
+        freq, [F.col("f").desc(), F.col("tok").asc()], out_col="r"
     ).select("f", "r")
     lf = F.log10(F.col("f").cast("double"))
     lr = F.log10(F.col("r").cast("double"))

@@ -115,33 +115,6 @@ class Warehouse:
             self.overwrite_atomic(legacy, table, partition_by=partition_by)
         _write(_colocated(df, partition_by), self.path(table), "append", partition_by)
 
-    def save_bucketed(
-        self,
-        df: DataFrame,
-        table: str,
-        bucket_by: list[str],
-        n_buckets: int = 32,
-        sort_by: list[str] | None = None,
-    ) -> None:
-        """Hash-bucketed (optionally sorted) catalog table.
-
-        Both sides of a recurring big-big join bucketed by the join key
-        with the same bucket count read back ALREADY co-partitioned:
-        the join plans with no Exchange on either side (and no sort,
-        if ``sort_by`` matches) — the 100 TB answer to the reference's
-        repeated fact↔dim key resolutions. Bucket metadata lives in the
-        session catalog, so read back via ``read_bucketed``.
-        """
-        w = df.write.mode("overwrite").format("parquet").bucketBy(n_buckets, *bucket_by)
-        if sort_by:
-            w = w.sortBy(*sort_by)
-        w.option("path", self.path(table)).saveAsTable(table)
-
-    def read_bucketed(self, table: str) -> DataFrame:
-        """Catalog read that preserves bucketing metadata (a plain
-        ``spark.read.parquet`` of the same path would forget it)."""
-        return self.spark.table(table)
-
     def compact(
         self,
         table: str,
@@ -194,17 +167,6 @@ class Warehouse:
             count += sum(1 for f in files if f.endswith(".parquet"))
         return count
 
-    def drop_stale_tmp(self) -> list[str]:
-        """Remove leftover ``.__tmp_*`` / ``.__old_*`` directories from
-        crashed atomic swaps. Safe anytime: a live swap's dirs exist
-        only within ``overwrite_atomic``'s call window."""
-        removed = []
-        for name in os.listdir(self.root):
-            if ".__tmp_" in name or ".__old_" in name:
-                shutil.rmtree(os.path.join(self.root, name))
-                removed.append(name)
-        return removed
-
     def overwrite_atomic(
         self, df: DataFrame, table: str, partition_by: list[str] | None = None
     ) -> None:
@@ -226,31 +188,6 @@ class Warehouse:
         os.rename(tmp, final)
         if os.path.exists(old):
             shutil.rmtree(old)
-
-    def delete_keys(
-        self, table: str, keys: DataFrame, key_cols: list[str]
-    ) -> int:
-        """Keyed hard delete (the right-to-be-forgotten path): drop
-        every row whose ``key_cols`` tuple appears in ``keys``, via
-        anti-join + atomic swap — the DELETE half of the reference's
-        upsert (upsert_query.text:6-7) standing alone.
-
-        Returns the number of rows removed. The anti-join shuffles on
-        the key (or broadcasts the deletion set — the common case: a
-        deletion request batch is tiny next to the table); the swap
-        keeps concurrent readers consistent and a crash leaves the old
-        table intact. On a transactional format this is DELETE WHERE
-        EXISTS; pure parquet pays one table rewrite, which is why
-        deletion requests batch daily, not per-request."""
-        from emission_project_spark.operators.joins import anti_join
-
-        current = self.read(table)
-        dele = keys.select(*key_cols).distinct()
-        kept = anti_join(current, dele, key_cols)
-        removed = current.count() - kept.count()
-        if removed:
-            self.overwrite_atomic(kept, table)
-        return removed
 
     def read_merged_schema(self, table: str) -> DataFrame:
         """Schema-evolution-tolerant scan: parquet footers are merged

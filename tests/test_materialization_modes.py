@@ -4,9 +4,7 @@ Every query that reaches a surviving ``localCheckpoint`` site (the
 allowlist in ``tests/test_materialization_sites.py``) returns the same
 canonical rows (``tools/compare.py``'s canonicalizer) when
 ``localCheckpoint`` is the identity, so each site is an execution
-choice, never a semantic one. The two ``functions/ranks.py`` sites are
-left materialized: there the materialized range layout is what makes
-the ranks exact.
+choice, never a semantic one.
 
 Each query is listed once, under one site it reaches, and the test
 first checks that it does reach that site.
@@ -39,8 +37,6 @@ def _load(name: str, path: Path):
 _compare = _load("compare_mod_modes", _REPO / "tools" / "compare.py")
 _sites = _load("materialization_sites", _REPO / "tests" / "test_materialization_sites.py")
 ALLOWED, PACKAGE = _sites.ALLOWED, _sites.PACKAGE
-
-RANKS = "functions/ranks.py"
 
 # surviving site -> the queries that reach it (sf0.001)
 QUERIES_BY_SITE: dict[str, tuple[str, ...]] = {
@@ -105,7 +101,7 @@ def _site(frame) -> str:
 
 
 def test_every_surviving_site_has_its_queries():
-    assert set(QUERIES_BY_SITE) == {s for s in ALLOWED if not s.startswith(RANKS)}
+    assert set(QUERIES_BY_SITE) == set(ALLOWED)
 
 
 @pytest.mark.parametrize(
@@ -124,8 +120,6 @@ def test_results_do_not_change_when_checkpoints_inline(
         return checkpoint(self, *args, **kwargs)
 
     def inline(self, *args, **kwargs):
-        if _site(sys._getframe(1)).startswith(RANKS):
-            return checkpoint(self, *args, **kwargs)
         return self
 
     def canonical(df):

@@ -3,9 +3,10 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
-from emission_project_spark.functions.ranks import global_row_number
+from emission_project_spark.functions.ranks import global_position
 from emission_project_spark.operators.dedup import dedup_subset, union_distinct
 from emission_project_spark.operators.incremental import incremental_insert, upsert
 from emission_project_spark.operators.joins import anti_join, join_nullsafe
@@ -52,13 +53,19 @@ def test_union_distinct(spark):
     assert sorted(r.x for r in union_distinct(a, b).collect()) == [1, 2, 3]
 
 
-def test_surrogate_keys_dense_and_distributed_agree(spark):
+@pytest.mark.parametrize("width", [1, 3, 8])
+def test_surrogate_keys_dense_and_distributed_agree(spark, width):
     df = spark.createDataFrame([(c,) for c in "fcadbe"], "name string")
     exact = add_surrogate_key(df, "id", order_by=["name"])
-    dist = global_row_number(df, ["name"], out_col="id", num_partitions=3)
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(width))
+    try:
+        dist = global_position(df, ["name"], out_col="id").collect()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
     expected = [(i + 1, c) for i, c in enumerate("abcdef")]
     assert [(r.id, r.name) for r in exact.orderBy("id").collect()] == expected
-    assert [(r.id, r.name) for r in dist.orderBy("id").collect()] == expected
+    assert sorted((r.id, r.name) for r in dist) == expected
 
 
 def test_surrogate_key_start_offset(spark):
@@ -153,31 +160,6 @@ def test_salted_aggregate_matches_plain_groupby(spark):
     assert got == {"a": (3, 6.0, 1.0, 3.0, 2.0), "b": (1, 10.0, 10.0, 10.0, 10.0)}
 
 
-def test_bucketed_tables_join_without_shuffle(spark, tmp_path):
-    """Two tables bucketed on the join key with equal bucket counts must
-    join with NO Exchange in the physical plan (co-located join)."""
-    from emission_project_spark.sources.warehouse import Warehouse
-
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    facts = spark.range(0, 1000).selectExpr("id AS k", "id * 2 AS v")
-    dims = spark.range(0, 100).selectExpr("id AS k", "CAST(id AS STRING) AS name")
-    wh.save_bucketed(facts, "bt_facts", ["k"], n_buckets=4, sort_by=["k"])
-    wh.save_bucketed(dims, "bt_dims", ["k"], n_buckets=4, sort_by=["k"])
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # force a big-big (sort-merge) join — the case bucketing serves;
-        # tiny tables would otherwise broadcast and sidestep the test
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = wh.read_bucketed("bt_facts").join(wh.read_bucketed("bt_dims"), "k")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange hashpartitioning" not in plan  # no shuffle on either side
-        assert joined.count() == 100
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS bt_facts")
-        spark.sql("DROP TABLE IF EXISTS bt_dims")
-
-
 def test_range_join_window_semantics(spark):
     from pyspark.sql import functions as F
     from emission_project_spark.operators.range_join import range_join
@@ -231,7 +213,7 @@ def test_fk_violation_counts(spark):
     assert got == {"fk_a": 1, "fk_b": 4}
 
 
-def test_warehouse_compact_and_stale_tmp(spark, tmp_path):
+def test_warehouse_compact(spark, tmp_path):
     from emission_project_spark.sources.warehouse import Warehouse
 
     wh = Warehouse(spark, str(tmp_path / "wh"))
@@ -270,13 +252,6 @@ def test_warehouse_compact_and_stale_tmp(spark, tmp_path):
     parts = sorted(d for d in _os.listdir(tmp_path / "wh" / "tp") if d.startswith("p="))
     assert parts == ["p=0", "p=1", "p=2"]
     assert wh.read("tp").count() == 3000 and n >= 3
-
-    # stale swap debris is removed, live tables untouched
-    (_os.makedirs(tmp_path / "wh" / "t.__tmp_dead"))
-    (_os.makedirs(tmp_path / "wh" / "t.__old_dead"))
-    removed = wh.drop_stale_tmp()
-    assert sorted(removed) == ["t.__old_dead", "t.__tmp_dead"]
-    assert wh.exists("t") and wh.exists("tp")
 
 
 def test_contract_violations_planted(spark):

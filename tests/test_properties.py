@@ -15,7 +15,7 @@ import pandas as pd
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from emission_project_spark.functions.ranks import global_row_number
+from emission_project_spark.functions.ranks import global_position
 from emission_project_spark.operators.components import connected_components
 from emission_project_spark.operators.dedup import dedup_subset
 from emission_project_spark.operators.joins import anti_join, join_nullsafe
@@ -103,14 +103,19 @@ sk_rows = st.lists(st.integers(0, 10_000), min_size=1, max_size=20, unique=True)
 
 
 @settings(**SETTINGS)
-@given(vals=sk_rows)
-def test_surrogate_keys_dense_and_order_stable(spark, vals):
+@given(vals=sk_rows, width=st.sampled_from([1, 3, 8]))
+def test_surrogate_keys_dense_and_order_stable(spark, vals, width):
     df = spark.createDataFrame([(v,) for v in vals], "v bigint")
     exact = {(r.v, r.sk) for r in add_surrogate_key(df, "sk", ["v"]).collect()}
-    dist = {
-        (r.v, r.sk)
-        for r in global_row_number(df, ["v"], out_col="sk", num_partitions=3).collect()
-    }
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(width))
+    try:
+        dist = {
+            (r.v, r.sk)
+            for r in global_position(df, ["v"], out_col="sk").collect()
+        }
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
     expected = {(v, i + 1) for i, v in enumerate(sorted(vals))}
     assert exact == expected  # dense 1..N in sort order
     assert dist == expected  # partition-offset path identical

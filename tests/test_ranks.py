@@ -1,5 +1,7 @@
 """functions/ranks.py — distributed exact rank vs the single-partition
-window ground truth (the thing it replaces at scale)."""
+window ground truth (the thing it replaces at scale). Every comparison
+runs at several session widths: the bucket count is
+``spark.sql.shuffle.partitions``."""
 
 from __future__ import annotations
 
@@ -10,10 +12,22 @@ from pyspark.sql import Row, Window
 from pyspark.sql import functions as F
 
 from emission_project_spark.functions.ranks import (
-    cell_minrank,
+    _bucket_labels,
+    _with_range_bucket,
+    global_position,
     ntile_from_position,
-    row_position,
 )
+
+WIDTHS = [1, 3, 8]
+
+
+@pytest.fixture(params=WIDTHS)
+def width(spark, request):
+    """The session width (bucket count) for one test, restored after."""
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(request.param))
+    yield request.param
+    spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def _cells(spark, values):
@@ -25,14 +39,24 @@ def _cells(spark, values):
     )
 
 
-@pytest.mark.parametrize("n_buckets", [1, 3, 64])
-def test_cell_minrank_matches_global_window(spark, n_buckets):
+def _positions(df, order, key="k", out="i"):
+    return {r[key]: r[out] for r in global_position(df, order, out_col=out).collect()}
+
+
+def _window(df, order, key="k"):
+    return {
+        r[key]: r["i"]
+        for r in df.select(key, F.row_number().over(Window.orderBy(*order)).alias("i")).collect()
+    }
+
+
+def test_weighted_position_matches_global_rank(spark, width):
     rng = random.Random(7)
     values = [rng.choice([1.0, 2.5, 2.5, 3.0, 7.5, 9.0, 9.0, 42.0]) for _ in range(200)]
     cells = _cells(spark, values)
     got = {
         r["value"]: r["minrank"]
-        for r in cell_minrank(cells, "value", "cnt", n_buckets=n_buckets).collect()
+        for r in global_position(cells, ["value"], out_col="minrank", weight="cnt").collect()
     }
     # ground truth: rank() over the exploded rows == 1 + Σ_{u<v} cnt(u)
     rows = spark.createDataFrame([Row(value=float(v)) for v in values])
@@ -47,45 +71,33 @@ def test_cell_minrank_matches_global_window(spark, n_buckets):
     assert got == truth
 
 
-def test_cell_minrank_constant_column(spark):
+def test_weighted_position_constant_column(spark, width):
     cells = _cells(spark, [5.0] * 30)
-    [r] = cell_minrank(cells, "value", "cnt").collect()
+    [r] = global_position(cells, ["value"], out_col="minrank", weight="cnt").collect()
     assert r["minrank"] == 1 and r["cnt"] == 30
 
 
-@pytest.mark.parametrize("n,n_buckets", [(1, 64), (7, 64), (500, 8)])
-def test_row_position_unique_keys(spark, n, n_buckets):
+@pytest.mark.parametrize("n", [1, 7, 500])
+def test_position_unique_keys(spark, width, n):
     rng = random.Random(13)
     rows = [Row(k=i, x=rng.choice([1.0, 2.0, 3.0, 9.0])) for i in range(n)]
     df = spark.createDataFrame(rows)
-    got = row_position(
-        df, [F.col("x").asc(), F.col("k").asc()], F.col("x"), n_buckets=n_buckets
-    )
-    truth = df.select(
-        "k", F.row_number().over(Window.orderBy("x", "k")).alias("i")
-    )
-    g = {r["k"]: r["i"] for r in got.collect()}
-    t = {r["k"]: r["i"] for r in truth.collect()}
-    assert g == t
+    order = [F.col("x").asc(), F.col("k").asc()]
+    assert _positions(df, order) == _window(df, order)
 
 
-def test_row_position_descending(spark):
+def test_position_descending(spark, width):
     rng = random.Random(29)
     rows = [Row(k=i, x=float(rng.randint(0, 5))) for i in range(100)]
     df = spark.createDataFrame(rows)
-    got = row_position(
-        df,
-        [F.col("x").desc(), F.col("k").asc()],
-        -F.col("x"),  # bucket key must be monotone along the ordering
-        n_buckets=4,
-    )
-    truth = df.select(
-        "k",
-        F.row_number().over(Window.orderBy(F.col("x").desc(), F.col("k"))).alias("i"),
-    )
-    assert {r["k"]: r["i"] for r in got.collect()} == {
-        r["k"]: r["i"] for r in truth.collect()
-    }
+    order = [F.col("x").desc(), F.col("k").asc()]
+    assert _positions(df, order) == _window(df, order)
+
+
+def test_position_empty_and_one_row(spark, width):
+    df = spark.createDataFrame([Row(k=1, x=2.0)], "k int, x double")
+    assert global_position(df.limit(0), ["x", "k"]).collect() == []
+    assert _positions(df, ["x", "k"]) == {1: 1}
 
 
 @pytest.mark.parametrize("n,buckets", [(10, 4), (37, 10), (100, 4), (4, 4)])
@@ -105,12 +117,10 @@ def test_ntile_formula_matches_window_ntile(spark, n, buckets):
     }
 
 
-@pytest.mark.parametrize("n_buckets", [1, 4, 64])
-def test_cell_minrank_null_and_nan(spark, n_buckets):
-    """Round-9 advice: NULL/NaN bucket keys must not be DROPPED at the
-    bucket equi-join — they pen into buckets 0 / n_buckets+2 and rank
-    exactly where the single-partition window would put them (Spark
-    ASC: NULLs FIRST, NaN greater than any double)."""
+def test_weighted_position_null_and_nan(spark, width):
+    """NULL and NaN values are ranked, never dropped, exactly where the
+    single-partition window puts them (Spark ASC: NULLs FIRST, NaN
+    greater than any double)."""
     vals = [None, None, float("nan"), 1.0, 1.0, 2.0, 5.0, 5.0, 5.0, 9.0]
     cells = spark.createDataFrame(
         [Row(value=v, cnt=i + 1) for i, v in enumerate(vals[:3])]
@@ -119,8 +129,8 @@ def test_cell_minrank_null_and_nan(spark, n_buckets):
     ).groupBy("value").agg(F.sum("cnt").alias("cnt"))
     got = {
         (str(r["value"])): r["minrank"]
-        for r in cell_minrank(
-            cells, "value", "cnt", n_buckets=n_buckets
+        for r in global_position(
+            cells, ["value"], out_col="minrank", weight="cnt"
         ).collect()
     }
     truth = {
@@ -145,27 +155,25 @@ def test_cell_minrank_null_and_nan(spark, n_buckets):
         expect[str(r["value"])] = run
         run += r["cnt"]
     assert got == expect
-    assert set(got) == set(truth)  # no row lost to a NULL bucket key
+    assert set(got) == set(truth)  # no row lost
 
 
-def test_row_position_null_and_nan(spark):
-    """row_position keeps NULL/NaN ordering-key rows and matches the
-    global row_number() window (unique tie-break key k)."""
+def test_position_null_and_nan(spark, width):
+    """NULL/NaN ordering-key rows keep their place in the global
+    row_number() window, ascending and descending (unique tie-break k)."""
     rows = [
         Row(k=0, x=None), Row(k=1, x=float("nan")), Row(k=2, x=1.0),
         Row(k=3, x=None), Row(k=4, x=7.0), Row(k=5, x=float("nan")),
-        Row(k=6, x=3.0),
+        Row(k=6, x=3.0), Row(k=7, x=-0.0), Row(k=8, x=0.0),
     ]
     df = spark.createDataFrame(rows, "k int, x double")
-    got = row_position(
-        df, [F.col("x").asc(), F.col("k").asc()], F.col("x"), n_buckets=4
-    )
-    truth = df.select(
-        "k", F.row_number().over(Window.orderBy("x", "k")).alias("i")
-    )
-    assert {r["k"]: r["i"] for r in got.collect()} == {
-        r["k"]: r["i"] for r in truth.collect()
-    }
+    for order in (
+        [F.col("x").asc(), F.col("k").asc()],
+        [F.col("x").desc(), F.col("k").asc()],
+        [F.col("x").asc_nulls_last(), F.col("k").desc()],
+        [F.col("x").desc_nulls_first(), F.col("k").asc()],
+    ):
+        assert _positions(df, order) == _window(df, order), order
 
 
 def test_no_datasized_global_window_in_plan(spark):
@@ -176,65 +184,24 @@ def test_no_datasized_global_window_in_plan(spark):
         (F.col("id") % 97).cast("double").alias("value")
     )
     cells = df.groupBy("value").agg(F.count("*").alias("cnt"))
-    plan = cell_minrank(
-        cells, "value", "cnt"
+    plan = global_position(
+        cells, ["value"], weight="cnt"
     )._jdf.queryExecution().executedPlan().toString()
     import re
 
-    for m in re.finditer(r"Window \[([^\]]*)\], \[([^\]]*)\](?:, \[([^\]]*)\])?", plan):
+    windows = list(re.finditer(r"Window \[([^\]]*)\], \[([^\]]*)\](?:, \[([^\]]*)\])?", plan))
+    assert windows
+    for m in windows:
         groups = [g for g in m.groups() if g is not None]
         if len(groups) == 2:  # spec = [exprs], [order] → partition-less
             assert "__bt" in m.group(0) or "__b" in m.group(0)
 
 
-def test_shared_bounds_matches_per_call_bounds(spark):
-    """r14: a shared_bounds relation must produce bit-identical
-    positions to per-call bounds for every metric it fuses — ascending,
-    descending (negated bucket expr), and a NaN-carrying column (the
-    finite-[min,max] rule must survive the fusion)."""
-    from emission_project_spark.functions.ranks import shared_bounds
-
-    rng = random.Random(21)
-    rows = [
-        Row(
-            k=i,
-            a=rng.choice([1.0, 2.0, 3.0, 9.0]),
-            b=float(rng.randrange(100)),
-            c=float("nan") if i % 7 == 0 else float(i % 13),
-        )
-        for i in range(200)
-    ]
-    df = spark.createDataFrame(rows)
-    bnds = shared_bounds(
-        df, {"a": F.col("a"), "b": -F.col("b"), "c": F.col("c")}
-    )
-    cases = [
-        ("a", [F.col("a").asc(), F.col("k").asc()], F.col("a")),
-        ("b", [F.col("b").desc(), F.col("k").asc()], -F.col("b")),
-        ("c", [F.col("c").asc(), F.col("k").asc()], F.col("c")),
-    ]
-    for key, order, bucket in cases:
-        base = {
-            r["k"]: r["i"]
-            for r in row_position(df, order, bucket, n_buckets=8).collect()
-        }
-        fused = {
-            r["k"]: r["i"]
-            for r in row_position(
-                df, order, bucket, n_buckets=8, bounds=bnds, bounds_key=key
-            ).collect()
-        }
-        assert fused == base, f"metric {key} diverged under shared bounds"
-
-
-def test_global_row_number_matches_window(spark):
-    """r14: global_row_number must equal row_number() over the global
-    window for a unique composite key — including string tie-breaks,
-    a hapax-skewed lead column (the distribution width_bucket-style
-    bucketing cannot split), NULLs in the lead column (NULLS FIRST for
-    ASC, like the window), and descending lead columns."""
-    from emission_project_spark.functions.ranks import global_row_number
-
+def test_position_matches_window_on_mixed_keys(spark, width):
+    """Exact against row_number() over the global window for unique
+    composite keys: string tie-breaks, a hapax-skewed lead column, NULLs
+    in the lead column (NULLS FIRST for ASC, LAST for DESC, like the
+    window), and descending lead columns."""
     rng = random.Random(99)
     rows = [
         Row(
@@ -244,36 +211,58 @@ def test_global_row_number_matches_window(spark):
         for i in range(500)
     ]
     df = spark.createDataFrame(rows)
-    for order, nparts in (
-        ([F.col("f").asc(), F.col("s").asc()], 7),
-        ([F.col("f").desc(), F.col("s").asc()], 3),
-        ([F.col("s").asc()], 1),
+    for order in (
+        [F.col("f").asc(), F.col("s").asc()],
+        [F.col("f").desc(), F.col("s").asc()],
+        [F.col("s").asc()],
+        [F.col("s").desc_nulls_first()],
     ):
-        got = {
-            r["s"]: r["rk"]
-            for r in global_row_number(df, order, num_partitions=nparts).collect()
-        }
-        want = {
-            r["s"]: r["rk"]
-            for r in df.select(
-                "s", F.row_number().over(Window.orderBy(*order)).alias("rk")
-            ).collect()
-        }
-        assert got == want
+        assert _positions(df, order, key="s") == _window(df, order, key="s"), order
 
 
-def test_global_row_number_when_range_partitioner_samples(spark):
-    """200k rows into 8 range partitions: the range partitioner draws
-    about 100 sample keys per output partition, far fewer than the
-    input, so its boundaries come from a sample, not the whole key set.
-    The ids must still be exactly 1..N, unique, and in key order —
-    surrogate_keys_dense relies on this at scale."""
-    from emission_project_spark.functions.ranks import global_row_number
+@pytest.mark.parametrize("lead_desc", [True, False], ids=["zipf", "jaccard"])
+def test_skewed_lead_is_exact_and_balanced(spark, lead_desc):
+    """95 % of the rows share the lead value (a hapax-dominated document
+    frequency, ranked as text_zipf_slope and dedup_jaccard_prefix_join
+    rank it). The positions are exact, and the sampled boundaries split
+    the tied block on its tie-break: no bucket holds more than 2× its
+    even share. A bucket drawn on the lead value alone puts the whole
+    block in one bucket."""
+    n, width = 20_000, 8
+    order = [F.col("f").desc() if lead_desc else F.col("f").asc(), F.col("t").asc()]
+    df = spark.range(n).select(
+        F.when(F.col("id") % 20 == 0, F.col("id") % 7 + 2).otherwise(1).alias("f"),
+        F.format_string("t%05d", (F.col("id") * 7919) % n).alias("t"),
+    )
+    assert _positions(df, order, key="t") == _window(df, order, key="t")
+    sizes = [r["count"] for r in _with_range_bucket(df, order, width, width).groupBy("__b").count().collect()]
+    assert sum(sizes) == n and max(sizes) <= 2 * n / width, sizes
 
+
+def test_bucket_labels_get_their_own_partition(spark):
+    """The window exchange hash-partitions the bucket label: the n
+    labels must land on n different partitions of the exchange width,
+    in increasing order."""
+    for n, width in ((2, 2), (3, 3), (4, 4), (8, 8), (64, 200)):
+        labels = _bucket_labels(n, width)
+        parts = [
+            r["p"]
+            for r in spark.createDataFrame([(v,) for v in labels], "v int")
+            .select(F.expr(f"pmod(hash(v), {width})").alias("p"))
+            .collect()
+        ]
+        assert labels == sorted(labels) and len(set(parts)) == n
+
+
+def test_position_when_the_sample_is_smaller_than_the_input(spark):
+    """200k rows, more than the key sample holds, so the boundaries come
+    from a sample, not the whole key set. The ids must still be exactly
+    1..N, unique, and in key order — surrogate_keys_dense relies on this
+    at scale."""
     n = 200_000
     # 7919 is prime and does not divide n: k is a permutation of 0..n-1
     df = spark.range(n).select(((F.col("id") * 7919) % n).alias("k"))
-    ranked = global_row_number(df, [F.col("k")], num_partitions=8)
+    ranked = global_position(df, [F.col("k")], out_col="rk")
     got = ranked.agg(
         F.count(F.lit(1)).alias("rows"),
         F.countDistinct("rk").alias("ids"),

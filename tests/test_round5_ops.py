@@ -304,22 +304,6 @@ class TestDeterminismClaims:
 
 
 class TestWarehouseOps:
-    def test_delete_keys_and_atomic_survivors(self, spark, tmp_path):
-        from emission_project_spark.sources.warehouse import Warehouse
-
-        wh = Warehouse(spark, str(tmp_path / "wh"))
-        df = spark.createDataFrame(
-            [(1, "a"), (2, "b"), (3, "c"), (2, "b2")], "user_id bigint, v string"
-        )
-        wh.append(df, "t")
-        dele = spark.createDataFrame([(2,), (9,)], "user_id bigint")
-        removed = wh.delete_keys("t", dele, ["user_id"])
-        assert removed == 2                       # both rows of key 2; key 9 absent
-        left = {(r.user_id, r.v) for r in wh.read("t").collect()}
-        assert left == {(1, "a"), (3, "c")}
-        # no-op delete doesn't rewrite (returns 0)
-        assert wh.delete_keys("t", dele, ["user_id"]) == 0
-
     def test_read_merged_schema_after_evolution(self, spark, tmp_path):
         from emission_project_spark.sources.warehouse import Warehouse
 

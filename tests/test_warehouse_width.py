@@ -122,19 +122,23 @@ def test_eventlog_analyze_reports_stage_shape(tmp_path):
     assert list(out["stages"]) == ["0", "1"]  # heaviest task time first
 
 
-def _stage_submitted(stage: int, group: str, rdds: list[str]) -> dict:
+def _stage_submitted(stage: int, group: str) -> dict:
     return {
         "Event": "SparkListenerStageSubmitted",
-        "Stage Info": {"Stage ID": stage, "RDD Info": [{"Name": n} for n in rdds]},
+        "Stage Info": {"Stage ID": stage, "RDD Info": [{"Name": "FileScanRDD"}]},
         "Properties": {"spark.jobGroup.id": group},
     }
 
 
-def _io_task(stage: int, records: int, written: int) -> dict:
+def _io_task(stage: int, records: int, written: int, scanned: int = 0) -> dict:
     return {
         "Event": "SparkListenerTaskEnd",
         "Stage ID": stage,
-        "Task Info": {"Launch Time": 0, "Finish Time": 0},
+        "Task Info": {
+            "Launch Time": 0,
+            "Finish Time": 0,
+            "Accumulables": [{"ID": 7, "Name": "number of output rows", "Update": scanned}],
+        },
         "Task Metrics": {
             "Input Metrics": {"Records Read": records},
             "Shuffle Write Metrics": {"Shuffle Bytes Written": written},
@@ -144,23 +148,32 @@ def _io_task(stage: int, records: int, written: int) -> dict:
 
 def test_eventlog_analyze_reports_io_per_job_group(tmp_path):
     """Group "a" scans 100 parquet rows in one stage and reads 7 rows of
-    a checkpoint in another; group "b" scans twice. Input records split
-    by whether the stage's RDD chain holds a FileScanRDD, and shuffle
-    bytes sum over every stage of the group."""
+    a checkpoint in another; group "b" scans 100 rows once and reads
+    them back from the cache in a second stage whose RDD chain still
+    lists the file scan. Parquet rows come from the scan node's output
+    row metric, the rest of the input records are read-backs, and
+    shuffle bytes sum over every stage of the group."""
     spec = importlib.util.spec_from_file_location("eventlog_run", TOOL)
     eventlog_run = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(eventlog_run)
 
-    scan = ["MapPartitionsRDD", "FileScanRDD"]
+    scan_node = {
+        "nodeName": "Scan parquet ",
+        "metrics": [{"name": "number of output rows", "accumulatorId": 7}],
+    }
     events = [
-        _stage_submitted(0, "a", scan),
-        _io_task(0, 60, 1_000),
-        _io_task(0, 40, 500),
-        _stage_submitted(1, "a", ["MapPartitionsRDD", "ShuffledRowRDD"]),
+        {
+            "Event": "org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart",
+            "sparkPlanInfo": {"nodeName": "Project", "metrics": [], "children": [scan_node]},
+        },
+        _stage_submitted(0, "a"),
+        _io_task(0, 60, 1_000, scanned=60),
+        _io_task(0, 40, 500, scanned=40),
+        _stage_submitted(1, "a"),
         _io_task(1, 7, 0),
-        _stage_submitted(2, "b", scan),
-        _io_task(2, 100, 2_000),
-        _stage_submitted(3, "b", scan),
+        _stage_submitted(2, "b"),
+        _io_task(2, 100, 2_000, scanned=100),
+        _stage_submitted(3, "b"),
         _io_task(3, 100, 0),
         _task_end(4, 0, 1),  # a stage outside any job group
     ]
@@ -169,7 +182,7 @@ def test_eventlog_analyze_reports_io_per_job_group(tmp_path):
 
     assert eventlog_run.analyze(str(log))["job_groups"] == {
         "a": {"scan_records": 100, "other_records": 7, "shuffle_write_bytes": 1_500},
-        "b": {"scan_records": 200, "other_records": 0, "shuffle_write_bytes": 2_000},
+        "b": {"scan_records": 100, "other_records": 100, "shuffle_write_bytes": 2_000},
     }
     ungrouped = tmp_path / "app-3"
     ungrouped.write_text(json.dumps(_task_end(0, 0, 1)) + "\n")

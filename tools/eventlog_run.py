@@ -16,11 +16,14 @@ decisions with `--analyze` instead of guessing from wall-clock.
         its task count and wall (submission to completion) — one JSON
         line per log, aligned for eyeball diffing. When the log's jobs
         carry job groups (``SparkContext.setJobGroup``), ``job_groups``
-        also holds, per group: input records of stages whose RDD chain
-        holds a ``FileScanRDD`` (parquet rows read), other input records
-        (cached or checkpointed blocks read back) and shuffle bytes
-        written. Two runs of one query, each in its own group, then
-        show whether a plan change reads or shuffles more.
+        also holds, per group: parquet rows read (the "number of output
+        rows" metric of the plans' ``Scan parquet`` nodes), other input
+        records (cached or checkpointed blocks read back) and shuffle
+        bytes written. Two runs of one query, each in its own group,
+        then show whether a plan change reads or shuffles more. A stage
+        that reads a lazily checkpointed relation still lists the
+        ``FileScanRDD`` under it, so its input records cannot tell a
+        parquet read from a cached one; the scan metric can.
 """
 
 from __future__ import annotations
@@ -86,8 +89,9 @@ def analyze(path: str) -> dict:
         "stages": {},
     }
     spans: dict[str, tuple[int, int]] = {}  # stage id -> (submitted, completed) ms
-    stage_group: dict[str, tuple[str, bool]] = {}  # stage id -> (job group, scans a file)
-    stage_io: dict[str, list[int]] = {}  # stage id -> [input records, shuffle bytes written]
+    stage_group: dict[str, str] = {}  # stage id -> job group
+    scan_rows: set[int] = set()  # accumulator ids: rows out of a parquet scan
+    stage_io: dict[str, list[int]] = {}  # stage id -> [input records, parquet rows, shuffle bytes]
     t_start = t_end = None
     with open(path) as fh:
         for line in fh:
@@ -100,16 +104,25 @@ def analyze(path: str) -> dict:
                 t_start = ev.get("Timestamp")
             elif kind == "SparkListenerApplicationEnd":
                 t_end = ev.get("Timestamp")
-            elif kind.endswith("AdaptiveExecutionUpdate"):
-                out["aqe_updates"] += 1
+            elif kind.endswith("AdaptiveExecutionUpdate") or kind.endswith(
+                "SQLExecutionStart"
+            ):
+                out["aqe_updates"] += kind.endswith("AdaptiveExecutionUpdate")
+                nodes = [ev.get("sparkPlanInfo") or {}]
+                while nodes:
+                    node = nodes.pop()
+                    nodes.extend(node.get("children", []))
+                    if node.get("nodeName", "").startswith("Scan parquet"):
+                        scan_rows.update(
+                            m["accumulatorId"]
+                            for m in node.get("metrics", [])
+                            if m.get("name") == "number of output rows"
+                        )
             elif kind == "SparkListenerStageSubmitted":
                 si = ev.get("Stage Info") or {}
                 group = (ev.get("Properties") or {}).get("spark.jobGroup.id")
                 if group is not None:
-                    scans = any(
-                        r.get("Name") == "FileScanRDD" for r in si.get("RDD Info", [])
-                    )
-                    stage_group[str(si.get("Stage ID"))] = (group, scans)
+                    stage_group[str(si.get("Stage ID"))] = group
             elif kind == "SparkListenerStageCompleted":
                 si = ev.get("Stage Info") or {}
                 sub, done = si.get("Submission Time"), si.get("Completion Time")
@@ -132,9 +145,14 @@ def analyze(path: str) -> dict:
                     sr.get("Remote Bytes Read", 0) + sr.get("Local Bytes Read", 0)
                 ) / 1e6
                 out["shuffle_write_mb"] += sw.get("Shuffle Bytes Written", 0) / 1e6
-                io = stage_io.setdefault(str(ev.get("Stage ID")), [0, 0])
+                io = stage_io.setdefault(str(ev.get("Stage ID")), [0, 0, 0])
                 io[0] += (m.get("Input Metrics") or {}).get("Records Read", 0)
-                io[1] += sw.get("Shuffle Bytes Written", 0)
+                io[1] += sum(
+                    int(acc.get("Update", 0))
+                    for acc in info.get("Accumulables", [])
+                    if acc.get("ID") in scan_rows
+                )
+                io[2] += sw.get("Shuffle Bytes Written", 0)
                 out["mem_spill_mb"] += m.get("Memory Bytes Spilled", 0) / 1e6
                 out["disk_spill_mb"] += m.get("Disk Bytes Spilled", 0) / 1e6
                 # Pandas-UDF accumulables: the r12 mode hunt lived here
@@ -175,12 +193,13 @@ def analyze(path: str) -> dict:
         for sid, st in top
     }
     groups: dict[str, dict[str, int]] = {}
-    for sid, (group, scans) in stage_group.items():
+    for sid, group in stage_group.items():
         g = groups.setdefault(
             group, {"scan_records": 0, "other_records": 0, "shuffle_write_bytes": 0}
         )
-        records, written = stage_io.get(sid, (0, 0))
-        g["scan_records" if scans else "other_records"] += records
+        records, scanned, written = stage_io.get(sid, (0, 0, 0))
+        g["scan_records"] += scanned
+        g["other_records"] += max(records - scanned, 0)
         g["shuffle_write_bytes"] += written
     if groups:
         out["job_groups"] = groups

@@ -79,7 +79,7 @@ SCALAR_CROSS_OK = {
     "similarity_range_search",          # query set × corpus, the radius baseline
     "similarity_recall_at_k",           # sampled query set × corpus, the exact ground truth
     "similarity_ndcg_at_k",             # sampled query set × corpus, the exact ground truth
-    "events_rfm_segments",              # 1-row corpus-clock scalar
+    "events_rfm_segments",              # 1-row corpus-clock scalar + 1-row user count
     "events_kaplan_meier",              # 1-row corpus-clock + 1-row risk total
     "stats_mutual_info_priority_segment",  # 1-row contingency grand total
     "stats_poisson_bootstrap_ci",       # 1-row point estimate × 1-row CI agg
@@ -101,12 +101,6 @@ SCALAR_CROSS_OK = {
     "events_dau_mau_hll",               # same day-grid range join, HLL register-merge MAU
     "privacy_t_closeness_customers",    # 1-row global-count scalar (the sibling gates' shape)
     "embedding_hubness_ivf",            # 1-row sqrt(n) centroid-count scalar
-    "text_zipf_slope",                  # 1-row rank-bucket bounds scalar (functions/ranks)
-    "stats_roc_auc",                    # 1-row rank-bucket bounds scalar (functions/ranks)
-    "stats_cliffs_delta",               # 1-row rank-bucket bounds scalar (functions/ranks)
-    "stats_spearman_corr",              # 1-row rank-bucket bounds scalar ×2 (functions/ranks)
-    "stats_gini_concentration",         # 1-row rank-bucket bounds scalar (functions/ranks)
-    "events_rfm_segments",              # 1-row rank-bucket bounds ×3 + 1-row user count (functions/ranks)
 }
 
 # Queries whose physical plan may carry a PARTITION-LESS Window — the
@@ -117,13 +111,13 @@ SCALAR_CROSS_OK = {
 # House patterns:
 #   cell table   — a groupBy(value-grain) aggregate output (KS/MWU
 #                  shape: distinct VALUES, not rows)
-#   bucket prefix— the ≤n_buckets+3-row bucket-total walk inside
+#   bucket prefix— the ≤target_partitions-row (at most 64) bucket-total walk inside
 #                  functions/ranks.py (the exact-rank family)
 #   time grain   — hour/day-grain aggregate (bounded by the calendar)
 #   report grain — ≤dozens of rows by construction (deciles, digits,
 #                  lang pairs, k centroids, quantile grids)
 GLOBAL_WINDOW_OK: dict[str, str] = {
-    # --- functions/ranks bucket-prefix (≤n_buckets+3-row totals) -----
+    # --- functions/ranks bucket-prefix (≤target_partitions-row totals)
     "stats_roc_auc": "bucket prefix",
     "stats_cliffs_delta": "bucket prefix",
     "stats_spearman_corr": "bucket prefix ×2",
@@ -132,8 +126,8 @@ GLOBAL_WINDOW_OK: dict[str, str] = {
     "events_rfm_segments": "bucket prefix ×3",
     "text_heaps_law": "bucket prefix + 10-row curve walk",
     "text_zipf_slope": "bucket prefix (full-vocab rank, ranks.py)",
-    "surrogate_keys_dense": "partition-size prefix (ranks.py global_row_number)",
-    "dedup_jaccard_prefix_join": "partition-size prefix (ranks.py global_row_number)",
+    "surrogate_keys_dense": "bucket prefix (dense keys, ranks.py)",
+    "dedup_jaccard_prefix_join": "bucket prefix (shingle rarity rank, ranks.py)",
     # --- value-grain cell tables / fixed grids (the KS/MWU shape) ----
     "stats_ks_two_sample": "cell table (distinct event values)",
     "stats_mannwhitney_u": "cell table (distinct event values)",
