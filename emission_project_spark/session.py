@@ -19,17 +19,95 @@ one you would also set on a 1000-executor cluster:
 - parquet nanos-as-long: the driver testdata's ``events`` table is
   written with TIMESTAMP(NANOS) which vanilla Spark refuses to read;
   we read it as long and convert (catalog/tables.py).
+- local files set their permissions in-process: without libhadoop,
+  Hadoop's ``RawLocalFileSystem.setPermission`` forks a ``chmod`` per
+  file and directory a write creates, which was most of a partitioned
+  append's wall (a 669-file append on 4 cores: 4.6 s → 1.9 s warm).
+  ``jvm/PosixLocalFileSystem.java`` keeps Hadoop's checksummed
+  ``LocalFileSystem`` and only replaces that call. A ``local[N]`` session that starts its JVM compiles it once per
+  source and Hadoop jar with the host's ``javac`` (JDK 17 or later)
+  into ``jvm/build/`` and puts it on the driver classpath as
+  ``fs.file.impl``. With no ``javac`` (or a failed compile) the session
+  keeps Hadoop's class and logs one line saying so; a JVM that is
+  already running keeps whatever class it has.
 """
 
 from __future__ import annotations
 
+import glob
+import hashlib
+import logging
 import os
 import re
+import shutil
+import subprocess
+import tempfile
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # the cores this process may run on; SPARK_GRAFT_CPUS overrides
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
+
+LOCAL_FS_CLASS = "emission_project_spark.PosixLocalFileSystem"
+_JVM_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm")
+_log = logging.getLogger(__name__)
+
+
+def _local_fs_classes() -> str | None:
+    """The class directory of ``jvm/PosixLocalFileSystem.java``, compiled
+    on first use (``jvm/build/<hash of source and Hadoop jar>``, made
+    by an atomic rename so concurrent sessions never see half a
+    build), or None when it cannot be built here."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    src = os.path.join(_JVM_DIR, "PosixLocalFileSystem.java")
+    jars = sorted(glob.glob(os.path.join(_find_spark_home(), "jars", "hadoop-client-api-*.jar")))
+    java_home = os.environ.get("JAVA_HOME")
+    javac = os.path.join(java_home, "bin", "javac") if java_home else shutil.which("javac")
+    if not jars or not javac or not os.access(javac, os.X_OK):
+        _log.warning("no javac or Hadoop jar: local files keep Hadoop's forked chmod")
+        return None
+    with open(src, "rb") as fh:
+        digest = hashlib.sha256(fh.read() + os.path.basename(jars[-1]).encode()).hexdigest()[:16]
+    out = os.path.join(_JVM_DIR, "build", digest)
+    if os.path.isdir(out):
+        return out
+    try:
+        os.makedirs(os.path.dirname(out), exist_ok=True)
+        tmp = tempfile.mkdtemp(prefix=".tmp-", dir=os.path.dirname(out))
+        try:
+            os.chmod(tmp, 0o755)
+            subprocess.run(
+                [javac, "--release", "17", "-cp", jars[-1], "-d", tmp, src],
+                check=True, capture_output=True, timeout=300,
+            )
+            os.rename(tmp, out)
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+    except (OSError, subprocess.SubprocessError) as e:
+        if os.path.isdir(out):  # a concurrent session renamed its build first
+            return out
+        _log.warning("javac failed (%s): local files keep Hadoop's forked chmod", e)
+        return None
+    return out
+
+
+def _local_fs_conf(master: str) -> dict[str, str]:
+    """Conf that makes ``file://`` the in-process-permission filesystem,
+    for a ``local[N]`` session (executors share the driver's classpath)
+    whose JVM will have the class directory on its classpath."""
+    if not master.startswith("local"):
+        return {}
+    classes = _local_fs_classes()
+    if classes is None:
+        return {}
+    jvm = SparkContext._jvm
+    if jvm is not None:
+        cp = jvm.java.lang.System.getProperty("java.class.path").split(os.pathsep)
+        if classes not in map(os.path.normpath, cp):
+            return {}
+    return {"spark.driver.extraClassPath": classes, "spark.hadoop.fs.file.impl": LOCAL_FS_CLASS}
 
 
 def get_spark(
@@ -70,11 +148,18 @@ def get_spark(
     # codec, AQE thresholds) over these local[N] defaults — and how
     # tools/benchdiff.py --ab-run runs config A/Bs through its
     # existing --env-old/--env-new plumbing.
-    conf = dict(extra_conf or {})
+    local_fs = _local_fs_conf(master)
+    conf = dict(local_fs)
+    conf.update(extra_conf or {})
     for kv in os.environ.get("SPARK_GRAFT_EXTRA_CONF", "").split(";"):
         if "=" in kv:
             k, v = kv.split("=", 1)
             conf[k.strip()] = v
+    # a caller's driver classpath extends the class directory's, so the
+    # filesystem class stays loadable
+    cp = "spark.driver.extraClassPath"
+    if local_fs and conf[cp] != local_fs[cp]:
+        conf[cp] = os.pathsep.join([local_fs[cp], conf[cp]])
     # Checked here, before the session exists: a non-integer value
     # starts a session on which reading the conf back does not return.
     parts = conf.get("spark.sql.shuffle.partitions")

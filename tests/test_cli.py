@@ -39,5 +39,12 @@ def test_cli_pipeline_tick(tmp_path, capsys):
     )
     assert rc == 0
     out = capsys.readouterr().out
-    # dims + fact all inserted something on a fresh warehouse
-    assert "drivers: +2" in out and "car_driver_log: +3" in out
+    # dims + fact all inserted something on a fresh warehouse, listed
+    # in tick order whichever load finished first
+    assert out.splitlines() == [
+        "drivers: +2",
+        "cars: +3",
+        "country: +3",
+        "city: +3",
+        "car_driver_log: +3",
+    ]
