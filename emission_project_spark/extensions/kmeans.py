@@ -1,28 +1,37 @@
-"""Fixed-iteration Lloyd k-means over an embedding column.
+"""Deterministic Lloyd k-means: the package's one nearest-centroid kernel.
 
-Embedding-space clustering is the backbone of corpus curation
-(semantic dedup buckets, topic balancing, IVF cell assignment — the
-coarse quantizer of ``extensions/similarity.ivf_topk`` is exactly one
-assignment step of this loop). The reference has no vector surface at
-all; this follows the standard Lloyd iteration with engine-friendly
-choices:
+Every quantizer runs on these functions: ``kmeans_lloyd``, the IVF
+coarse quantizer and its query probe (``similarity.ivf_topk_kmeans``,
+``pq.ivfpq_topk_expr``), the product-quantizer codebooks, SemDeDup's
+clusters and the nearest-centroid classifier
+(``similarity.centroid_classify``).
 
-- **Deterministic**: centroids seeded from fixed vector ids, distance
-  ties broken by centroid id, centroid means rounded to a fixed grid —
-  so a fixed iteration count is exactly reproducible and
-  oracle-checkable in SQL (no RNG, no convergence wobble).
-- **Scale shape**: each iteration = one broadcast of k centroids (k·dim
-  doubles — tiny) against the full vector table (no shuffle for
-  assignment), then one position-exploded partial/final average
-  (shuffle keyed by (cluster, position), k·dim groups). At 100 TB the
-  vector table never moves; only k·dim·8 bytes circulate per round.
-- **JVM-side math**: distances via ``zip_with`` + ``aggregate`` fold —
-  whole-stage codegen, no Python in the loop.
+Frames: vectors carry ``(vec_id, e)``, centroids ``(cid, ce)``. A
+column the vector and centroid frames share is a group key: a vector
+is assigned only among its own group's centroids, and each group
+trains its own centroids, so the m subspaces of a product quantizer are
+one Lloyd run over m groups. Other vector columns ride through the
+assignment.
+
+Invariants:
+
+- **Deterministic**: seeds are each group's ``k`` smallest vec_ids,
+  distance ties go to the lower cid, recomputed means are rounded to
+  ``GRID``. A fixed iteration count is reproducible and its DuckDB
+  oracle replays it row for row.
+- **Scale shape**: an assignment broadcasts the centroids (k·dim
+  doubles per group) and reduces each vector's candidates map-side, so
+  the vector table moves once, one row per vector; a recompute is one
+  (group, cluster, position) partial/final average. Only k·dim·8 bytes
+  per group circulate per round.
+- **JVM-side math**: distances are the left-to-right ``zip_with`` +
+  ``aggregate`` fold of ``_sq_dist`` — whole-stage codegen, no Python,
+  and the oracle reproduces it bitwise.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 GRID = 6  # decimal rounding grid for recomputed centroids
@@ -39,127 +48,88 @@ def _sq_dist(a, b):
 
 
 def assign_clusters(vecs: DataFrame, centroids: DataFrame) -> DataFrame:
-    """Nearest-centroid assignment: broadcast the k centroids, pick the
-    minimum squared L2 distance (tie → min centroid id). Adds
-    ``cluster_id`` and ``d2`` to ``vecs`` (columns ``vec_id``, ``e``).
+    """Nearest-centroid assignment: broadcast the centroids, pick the
+    minimum squared L2 distance (tie → min centroid id). Returns
+    ``vecs``' columns plus ``cluster_id`` and ``d2``, one row per
+    (vec_id, group).
 
     The argmin is a ``min_by`` aggregation, NOT a
     ``row_number().over(partitionBy(vec_id))`` window: the broadcast
-    cross join co-locates all k candidate rows of a vector in its home
+    join co-locates all k candidate rows of a vector in its home
     partition, so the partial (map-side) aggregate collapses k rows to
     one BEFORE the exchange — the shuffle carries O(n) best-so-far rows
     instead of O(n·k) exploded rows with both embedding arrays, which
     at k=80/n=200k is the difference between a ~0.2 GB and a ~16 GB
     shuffle. ``min_by`` over a ``struct(d2, cid)`` ordering key
-    reproduces the window's (d2 asc, cid asc) tie-break exactly, so
-    results — and the SQL oracles — are unchanged."""
-    scored = vecs.crossJoin(F.broadcast(centroids)).withColumn(
-        "d2", _sq_dist(F.col("e"), F.col("ce"))
-    )
-    best = scored.groupBy("vec_id").agg(
+    reproduces the window's (d2 asc, cid asc) tie-break exactly."""
+    keys = [c for c in centroids.columns if c in vecs.columns]
+    carried = [c for c in vecs.columns if c not in ("vec_id", *keys)]
+    cents = F.broadcast(centroids)
+    pairs = vecs.join(cents, keys) if keys else vecs.crossJoin(cents)
+    scored = pairs.withColumn("d2", _sq_dist(F.col("e"), F.col("ce")))
+    best = scored.groupBy("vec_id", *keys).agg(
         F.min_by(F.struct("cid", "d2"), F.struct("d2", "cid")).alias("_best"),
-        F.first("e").alias("e"),
+        *[F.first(c).alias(c) for c in carried],
     )
     return best.select(
-        "vec_id", "e", F.col("_best.cid").alias("cluster_id"), F.col("_best.d2").alias("d2")
+        "vec_id",
+        *keys,
+        *carried,
+        F.col("_best.cid").alias("cluster_id"),
+        F.col("_best.d2").alias("d2"),
     )
 
 
 def recompute_centroids(assigned: DataFrame) -> DataFrame:
-    """Per-cluster element-wise mean, rounded to the grid. Position
-    explosion → (cluster, pos) average (map-side partials) → array
-    rebuilt in position order via sorted struct collection."""
+    """Per-(group, cluster) element-wise mean, rounded to the grid:
+    ``(*group, cid, ce)``. The group keys are ``assigned``'s columns
+    other than ``vec_id``, ``e``, ``cluster_id`` and ``d2``. Position
+    explosion → (group, cluster, pos) average (map-side partials) →
+    array rebuilt in position order via sorted struct collection."""
+    keys = [c for c in assigned.columns if c not in ("vec_id", "e", "cluster_id", "d2")]
     by_pos = assigned.select(
-        F.col("cluster_id").alias("cid"), F.posexplode("e").alias("pos", "val")
+        *keys, F.col("cluster_id").alias("cid"), F.posexplode("e").alias("pos", "val")
     )
-    means = by_pos.groupBy("cid", "pos").agg(F.round(F.avg("val"), GRID).alias("m"))
-    return means.groupBy("cid").agg(
+    means = by_pos.groupBy(*keys, "cid", "pos").agg(F.round(F.avg("val"), GRID).alias("m"))
+    return means.groupBy(*keys, "cid").agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("pos", "m"))), lambda s: s["m"]
         ).alias("ce")
     )
 
 
-def training_sample(vecs: DataFrame, train_frac: float) -> DataFrame:
-    """Deterministic hash-threshold subsample for quantizer training.
-
-    At 100 TB you never train the coarse quantizer on the full corpus —
-    FAISS-style practice is a bounded sample; clustering quality
-    saturates long before the full pass pays off. A hash threshold
-    (``md5(vec_id) mod 10^6 < frac·10^6``) picks the sample in a single
-    scan with no global sort and no RNG: deterministic, partition-local,
-    and mirrorable in oracle SQL with the same md5 arithmetic used by
-    the sketch/dedup operators."""
-    bound = int(train_frac * 1_000_000)
-    if bound <= 0:
-        raise ValueError(
-            f"train_frac={train_frac} yields an empty hash sample "
-            "(bound=0 on the 10^6 grid); use train_frac >= 1e-6, or None "
-            "for full-corpus training"
-        )
-    bucket = F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 15), 16, 10)
-    return vecs.filter(bucket.cast("bigint") % 1_000_000 < bound)
-
-
-def lloyd_centroids(
-    vecs: DataFrame,
-    k: int = 8,
-    iterations: int = 2,
-    train_frac: float | None = None,
-) -> DataFrame:
-    """The centroid set ``(cid, ce)`` the final Lloyd assignment uses:
-    seeded from the vectors with the ``k`` smallest ids, then
-    ``iterations - 1`` recompute/assign rounds. ``vecs`` must carry
-    ``(vec_id, e)``. This is the trained coarse quantizer — reused by
-    ``similarity.ivf_topk_kmeans`` as its cell dictionary.
-
-    ``train_frac`` bounds the training set to a deterministic hash
-    sample (see ``training_sample``) — the 100 TB configuration, where
-    recompute/assign rounds touch a constant-size sample and only the
-    final assignment scans the corpus. Default ``None`` trains exactly
-    on the full set (the oracle-checked configuration)."""
-    if train_frac is not None:
-        sample = training_sample(vecs, train_frac)
-        # A tiny corpus × small frac can sample fewer than k vectors,
-        # which would silently seed an under-sized quantizer (degenerate
-        # cells downstream). One bounded action (count of at most k
-        # sampled rows) on the deployment path only — the oracle-checked
-        # configuration never sets train_frac, so registered-query plan
-        # construction stays action-free for tools/plancheck.
-        if sample.limit(k).count() < k:
-            import warnings
-
-            warnings.warn(
-                f"train_frac={train_frac} sampled <= k={k} vectors; "
-                "falling back to full-corpus training",
-                stacklevel=2,
-            )
-        else:
-            vecs = sample
-    # seed = the k smallest ids (matching the documented contract even
-    # when ids are sparse or non-zero-based; a filter(id < k) would
-    # silently under-seed such inputs)
-    centroids = (
-        vecs.orderBy("vec_id")
-        .limit(k)
-        .select(F.col("vec_id").alias("cid"), F.col("e").alias("ce"))
-    )
+def lloyd_centroids(vecs: DataFrame, k: int = 8, iterations: int = 2) -> DataFrame:
+    """The centroid set ``(*group, cid, ce)`` the final Lloyd assignment
+    uses: seeded from each group's ``k`` smallest vec_ids, then
+    ``iterations - 1`` assign/recompute rounds. ``vecs`` carries
+    ``(vec_id, e)`` and, when grouped, only its group keys besides."""
+    keys = [c for c in vecs.columns if c not in ("vec_id", "e")]
+    if keys:
+        w = Window.partitionBy(*keys).orderBy("vec_id")
+        seeds = vecs.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") <= k)
+    else:
+        seeds = vecs.orderBy("vec_id").limit(k)
+    centroids = seeds.select(*keys, F.col("vec_id").alias("cid"), F.col("e").alias("ce"))
     for _ in range(iterations - 1):
         centroids = recompute_centroids(assign_clusters(vecs, centroids))
-    # The trained quantizer fans into MULTIPLE plan subtrees in every
-    # caller (corpus assignment + query-cell ranking in ivf_topk_kmeans;
-    # left/right branches of the blocked pair union in
-    # semantic_neardup_pairs) — without a checkpoint each subtree
-    # re-runs the whole Lloyd chain (per-iteration full-table assign +
-    # recompute). Truncate lineage once: the table is k rows of k·dim
-    # doubles, so materializing it is free. eager=False defers only the
-    # checkpoint's own job: under AQE (the session default) the call
-    # still runs the subtree's shuffle stages, so building a plan that
-    # reaches this line launches jobs (and tools/plancheck runs them):
-    # in a traced perfbench query_headline pass, embedding_kmeans_lloyd,
-    # similarity_ivf_kmeans_topk and dedup_semantic_pairs each launch 4
-    # build-time jobs beyond their table loads.
-    return centroids.localCheckpoint(eager=False)
+    return centroids
+
+
+def probe_cells(queries: DataFrame, centroids: DataFrame, n_probe: int) -> DataFrame:
+    """The IVF probe list: each query's ``n_probe`` nearest centroids by
+    squared L2, ties to the lower cid. ``queries`` carries
+    ``(query_id, _q_e)``; returns ``(query_id, _q_e, cid, ce)``, one row
+    per probed cell. Queries are a handful of rows, so the per-query
+    window sorts at most k rows each."""
+    scored = queries.crossJoin(F.broadcast(centroids)).select(
+        "query_id", "_q_e", "cid", "ce", _sq_dist(F.col("_q_e"), F.col("ce")).alias("_qd2")
+    )
+    w = Window.partitionBy("query_id").orderBy(F.col("_qd2").asc(), F.col("cid").asc())
+    return (
+        scored.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= n_probe)
+        .select("query_id", "_q_e", "cid", "ce")
+    )
 
 
 def kmeans_lloyd(

@@ -4,27 +4,32 @@ Completes the memory-reduction ladder int8 (functions/vectors.py, 4×)
 → PQ (this module, 32× at m=8 bytes per 64-float vector): the standard
 IVF-PQ composition (Jégou et al., "Product Quantization for Nearest
 Neighbor Search", TPAMI 2011; the FAISS IndexIVFPQ layout) that makes
-a 100 TB float32 corpus scannable from executor memory. Reference
-analog: none — training-data-pipeline extension surface.
+a 100 TB float32 corpus scannable from executor memory.
 
-Decomposition, Spark-first:
+Two implementations of the same quantity:
 
-- **fit**: the embedding is split into ``m`` contiguous subvectors;
+- ``ivfpq_topk_expr`` / ``ivfpq_rerank_topk_expr`` — the registered,
+  oracle-checked queries: lazy JVM expressions on the Lloyd kernel of
+  extensions/kmeans.py, action-free to build.
+- ``fit_pq`` … ``ivfpq_topk`` — the numpy path (driver-side codebooks,
+  BLAS encode, per-batch ADC top-k). It trains and assigns cells with
+  the kernel's ``lloyd_centroids`` and ``assign_clusters`` and is
+  otherwise separate code: the reference tests/test_pq.py compares the
+  expression twin against.
+
+Invariants:
+
+- **fit**: the embedding is split into ``m`` contiguous subvectors and
   each subspace trains an independent k-codeword Lloyd quantizer
-  reusing extensions/kmeans.py (same seeding, same ``train_frac``
-  bounded-training path). Codebooks are m·k·(d/m) floats — KBs — and
-  live driver-side like the k-means centroids (kmeans.py:91 pattern).
-- **encode**: one ``mapInPandas`` pass; per Arrow batch, one BLAS
-  distance matrix per subspace → argmin codes. Output is (id, m codes)
-  — the 32×-smaller scan relation.
-- **ADC top-k**: per query, an (m × k) lookup table of exact squared
-  distances query-subvector ↔ codeword; a corpus item's approximate
-  distance is the sum of m table entries at its codes. The scan emits
-  only each batch's per-query top-k (np.argpartition), so the shuffle
-  carries O(batches · q · k) candidate rows, never the full q × n
-  score matrix. By construction ADC(q, codes) = ‖q − decode(codes)‖²
-  exactly — pinned by test_pq.py, which is the correctness anchor the
-  recall numbers then sit on.
+  (kmeans.py seeding: the k smallest ids, so a fit is deterministic for
+  a given corpus). Codebooks are m·k·(d/m) floats — KBs.
+- **encode**: argmin codeword per subspace, ties to the lowest code —
+  the kernel's (d2 asc, cid asc) rule.
+- **ADC top-k**: a corpus item's approximate distance to a query is the
+  sum of m (query-subvector ↔ codeword) table entries at its codes, and
+  ADC(q, codes) = ‖q − decode(codes)‖² exactly (pinned by test_pq.py).
+  Ranks break ties by ascending vec_id, so a per-batch pre-filter never
+  changes the global top-k.
 """
 
 from __future__ import annotations
@@ -62,7 +67,6 @@ def fit_pq(
     m: int = 8,
     k: int = 16,
     iterations: int = 3,
-    train_frac: float | None = None,
 ) -> PQModel:
     """Train per-subspace Lloyd codebooks (kmeans.py seeding: the k
     smallest ids seed, so fit is deterministic for a given corpus)."""
@@ -79,9 +83,7 @@ def fit_pq(
                 F.col(vec_col).cast("array<double>"), sub * dsub + 1, dsub
             ).alias("e"),
         )
-        cents = lloyd_centroids(
-            sub_vecs, k=k, iterations=iterations, train_frac=train_frac
-        ).collect()
+        cents = lloyd_centroids(sub_vecs, k=k, iterations=iterations).collect()
         if len(cents) < k:
             raise ValueError(
                 f"subspace {sub}: Lloyd returned {len(cents)} < k={k} codewords"
@@ -284,7 +286,6 @@ def fit_ivfpq(
     m: int = 8,
     k: int = 16,
     iterations: int = 3,
-    train_frac: float | None = None,
 ) -> IVFPQModel:
     from emission_project_spark.extensions.kmeans import lloyd_centroids
 
@@ -292,9 +293,7 @@ def fit_ivfpq(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).cast("array<double>").alias("e"),
     )
-    centroids = lloyd_centroids(
-        vecs, k=n_cells, iterations=iterations, train_frac=train_frac
-    )
+    centroids = lloyd_centroids(vecs, k=n_cells, iterations=iterations)
     rows = centroids.collect()
     # Mirror fit_pq's under-fill guard: Lloyd can drop an empty cell
     # during recompute, and an np.empty row silently poisons every
@@ -324,7 +323,6 @@ def fit_ivfpq(
         m=m,
         k=k,
         iterations=iterations,
-        train_frac=train_frac,
     )
     return IVFPQModel(coarse=coarse, pq=pq)
 
@@ -447,36 +445,33 @@ def ivfpq_topk_expr(
     → ``ivfpq_topk`` (same coarse Lloyd quantizer, same residual
     per-subspace Lloyd codebooks, same probe rule, and ADC(q, codes) =
     ‖(q − c_cell) − decode(codes)‖² by the ADC identity test_pq.py
-    pins) — but entirely as lazy JVM expressions: Lloyd chains from
-    extensions/kmeans.py, codeword assignment as a ``min_by`` argmin
-    over the unioned per-subspace codebooks, reconstruction as a
-    position-sorted flatten, and the ADC distance as the left-to-right
-    ``_sq_dist`` fold the DuckDB oracle reproduces bitwise. No driver
-    collect, no numpy — plan construction is action-free, so the
+    pins) — but entirely as lazy JVM expressions on the kmeans.py
+    kernel: Lloyd chains, the kernel's argmin for codewords,
+    reconstruction as a position-sorted flatten, and the ADC distance
+    as the left-to-right ``_sq_dist`` fold the DuckDB oracle reproduces
+    bitwise. No driver collect, no numpy, so the
     registered ``similarity_ivfpq_topk`` query keeps tools/plancheck
     compile-only while putting the PQ compression path on the driver's
     oracle ledger; tests/test_pq.py bridges this twin to the numpy path
     by equality on the same corpus.
 
     Scale shape mirrors the numpy path: each Lloyd round broadcasts
-    k·dim doubles; codeword assignment broadcasts the m·k_codes·dsub
-    codebook union (KBs); the residual relation is checkpointed once
-    (the exploded subspace relation and the per-round codebooks are
-    not: at sf0.1 materializing them read and shuffled no less and was
-    not faster), and the m subspace quantizers train in ONE combined
-    chain over the exploded (vec_id, sub, e) relation — one scan and one
+    k·dim doubles; the residual relation is checkpointed once (the
+    exploded subspace relation and the codebooks are not: at sf0.1
+    materializing them read and shuffled no less and was not faster);
+    the m subspace quantizers are ONE grouped ``lloyd_centroids`` run
+    over the exploded (vec_id, sub, e) relation — one scan and one
     (vec_id, sub)-keyed exchange per Lloyd round for ALL subspaces,
-    not m separate passes (the per-subspace math is independent, so
-    the combined chain computes exactly what m chains would); the
-    candidate scan is restricted to each query's ``n_probe`` cells by
-    the join key.
+    computing exactly what m separate runs would; codeword assignment
+    is one grouped ``assign_clusters`` against the m·k_codes·dsub
+    codebook union (KBs); the candidate scan is restricted to each
+    query's ``n_probe`` cells (``kmeans.probe_cells``) by the join key.
     """
-    from pyspark.sql import Window
-
     from emission_project_spark.extensions.kmeans import (
         _sq_dist,
         assign_clusters,
         lloyd_centroids,
+        probe_cells,
     )
 
     if dim % m:
@@ -485,7 +480,13 @@ def ivfpq_topk_expr(
     vecs = vectors.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
     )
-    coarse = lloyd_centroids(vecs, k=n_cells, iterations=iterations)
+    # Materialized: the coarse quantizer feeds the checkpointed
+    # residuals below and the query probe; inline, the probe reruns its
+    # Lloyd chain (sf0.1: 8,000 → 12,000 parquet rows, 3.5 → 4.4 MB
+    # shuffled).
+    coarse = lloyd_centroids(vecs, k=n_cells, iterations=iterations).localCheckpoint(
+        eager=False
+    )
     assigned = assign_clusters(vecs, coarse)
     ce_map = coarse.select(
         F.col("cid").alias("cluster_id"), F.col("ce").alias("_cell_ce")
@@ -497,10 +498,11 @@ def ivfpq_topk_expr(
             F.col("cluster_id").alias("cell"),
             F.zip_with("e", "_cell_ce", lambda x, c: x - c).alias("r"),
         )
-        # Materialized, spillable (dim doubles per row): with the
-        # subspace relation and the codebooks below inline, inlining
-        # this too makes similarity_ivfpq_topk rescan the embeddings
-        # (sf0.1: 10,000 → 12,000 parquet rows).
+        # Materialized, spillable (dim doubles per row): inline, the
+        # codebook rounds and the final assignment recompute the
+        # residuals. At sf0.1 that reads no more parquet rows (8,000)
+        # and shuffles less (3.5 → 1.7 MB), but similarity_ivfpq_topk
+        # is slower (median 4.03 → 4.37 s, 9 alternating runs).
         .localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
     )
 
@@ -518,53 +520,19 @@ def ivfpq_topk_expr(
         res.select("vec_id", "cell", F.explode(sub_structs).alias("c"))
         .select("vec_id", "cell", F.col("c.sub").alias("sub"), F.col("c.e").alias("e"))
     )
-
-    # Combined per-subspace Lloyd: seeds are the k_codes smallest
-    # vec_ids (identical per subspace — every vector carries all m
-    # slices, so this equals lloyd_centroids' per-sub orderBy/limit
-    # seeding); each round is one broadcast join + min_by argmin on
-    # (vec_id, sub) + one grid-rounded mean rebuild on (sub, cid).
-    seed_ids = vecs.orderBy("vec_id").limit(k_codes).select("vec_id")
-    books = subs.join(F.broadcast(seed_ids), "vec_id").select(
-        "sub", F.col("vec_id").alias("cid"), F.col("e").alias("ce")
+    # codebooks (sub, cid, ce): `sub` is the group key
+    books = lloyd_centroids(subs.drop("cell"), k=k_codes, iterations=iterations)
+    codeword = books.select(
+        "sub", F.col("cid").alias("cluster_id"), F.col("ce").alias("bce")
     )
-    for _ in range(iterations - 1):
-        scored_t = subs.join(F.broadcast(books), "sub").withColumn(
-            "d2", _sq_dist(F.col("e"), F.col("ce"))
-        )
-        best_t = scored_t.groupBy("vec_id", "sub").agg(
-            F.min_by(F.struct("cid"), F.struct("d2", "cid")).alias("_b"),
-            F.first("e").alias("e"),
-        )
-        by_pos = best_t.select(
-            "sub", F.col("_b.cid").alias("cid"), F.posexplode("e").alias("pos", "val")
-        )
-        means = by_pos.groupBy("sub", "cid", "pos").agg(
-            F.round(F.avg("val"), 6).alias("mv")
-        )
-        books = means.groupBy("sub", "cid").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "mv"))),
-                lambda st: st["mv"],
-            ).alias("ce")
-        )
-
-    scored = subs.join(F.broadcast(books), "sub").withColumn(
-        "d2", _sq_dist(F.col("e"), F.col("ce"))
-    )
-    best = scored.groupBy("vec_id", "sub").agg(
-        F.min_by(F.struct("cid", "ce"), F.struct("d2", "cid")).alias("_best"),
-        F.first("cell").alias("cell"),
+    best = assign_clusters(subs, books).join(
+        F.broadcast(codeword), ["sub", "cluster_id"]
     )
     recon = best.groupBy("vec_id").agg(
         F.first("cell").alias("cell"),
         F.flatten(
             F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(F.col("sub"), F.col("_best.ce").alias("bce"))
-                    )
-                ),
+                F.array_sort(F.collect_list(F.struct("sub", "bce"))),
                 lambda x: x["bce"],
             )
         ).alias("rr"),
@@ -572,23 +540,12 @@ def ivfpq_topk_expr(
 
     q = query.select(
         F.col("vec_id").alias("query_id"),
-        F.col("embedding").cast("array<double>").alias("qe"),
+        F.col("embedding").cast("array<double>").alias("_q_e"),
     )
-    qscored = q.crossJoin(F.broadcast(coarse)).select(
-        "query_id", "qe", "cid", "ce",
-        _sq_dist(F.col("qe"), F.col("ce")).alias("qd2"),
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("qd2").asc(), F.col("cid").asc()
-    )
-    qprobes = (
-        qscored.withColumn("_rn", F.row_number().over(wq))
-        .filter(F.col("_rn") <= n_probe)
-        .select(
-            "query_id",
-            F.col("cid").alias("qcell"),
-            F.zip_with("qe", "ce", lambda x, c: x - c).alias("qr"),
-        )
+    qprobes = probe_cells(q, coarse, n_probe).select(
+        "query_id",
+        F.col("cid").alias("qcell"),
+        F.zip_with("_q_e", "ce", lambda x, c: x - c).alias("qr"),
     )
     cand = recon.join(F.broadcast(qprobes), recon["cell"] == qprobes["qcell"])
     out = cand.select(

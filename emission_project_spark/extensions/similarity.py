@@ -1,26 +1,29 @@
 """Similarity search over embedding columns (``array<float>``).
 
-- ``brute_force_topk``: exact cosine top-k against a query vector.
-  JVM-side fold (functions/vectors.py) — the correctness baseline.
-- ``ivf_topk``: IVF-style approximate search — assign every vector to
-  its nearest of C deterministic centroid vectors, search only the
-  query's cell. At 100 TB the assignment is a broadcast map-side pass
-  and the search reads one cell (≈1/C of the data); recall is traded
-  via n_probe cells. Centroid choice here is deterministic (first C
-  vec_ids) so the oracle can replicate it; a production build would
-  k-means them (same plumbing).
-- ``all_pairs_topk``: per-vector k nearest neighbors via a blocked
-  cross join — the building block for embedding-based near-dup.
+- ``brute_force_topk``: exact cosine top-k against query vectors —
+  JVM-side fold (functions/vectors.py), the correctness baseline.
+- ``ivf_topk``: IVF search with the first C vec_ids as cells
+  (``assign_cells``, by cosine); ``ivf_topk_kmeans``: the same search
+  over Lloyd cells (extensions/kmeans.py, by L2) with ``n_probe``
+  cells per query. Assignment is a broadcast map-side pass; a search
+  reads ≈ n_probe/C of the corpus.
+- ``cosine_neardup_pairs`` / ``semantic_neardup_pairs``: exact pairs
+  above a cosine threshold on a blocked BLAS grid, over the whole
+  corpus or within each Lloyd cluster (SemDeDup); ``lsh_neardup_pairs``
+  is the subquadratic sibling.
+- ``centroid_classify``: nearest-label-centroid audit on the Lloyd
+  kernel; ``mmr_rerank``: diversified re-ranking of a top-k pool.
 
-Determinism: scores rounded before ranking; ties broken by vec_id, so
-Spark and the DuckDB oracle rank identically.
+Determinism: scores are rounded (``ROUND``) before ranking and ties go
+to the lower vec_id or centroid id, so Spark and the DuckDB oracles
+rank identically.
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from emission_project_spark.functions.ranks import topk_per_query
@@ -95,13 +98,21 @@ def hard_negative_topk(vectors: DataFrame, query: DataFrame, k: int = 8) -> Data
 
 
 def assign_cells(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
-    """IVF cell assignment: nearest centroid by cosine (ties → lowest
-    centroid id). Centroids broadcast; one map-side pass."""
+    """IVF cell assignment: the centroid of highest rounded cosine, ties
+    to the lower centroid id. A NULL score (zero-norm vector) never
+    beats a real one, and a vector whose scores are all NULL goes to the
+    lowest centroid id. Centroids broadcast; the argmax is a map-side
+    ``max_by`` aggregate, for the reasons ``kmeans.assign_clusters``
+    gives."""
     c = centroids.select(
         F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("_c_emb")
     )
-    # r14: spread — the per-vector centroid scoring is map-side on the
-    # scan (single-row-group hazard, see _scored); no-op when wide
+    # spread: the per-vector centroid scoring is map-side on the scan,
+    # and a single-row-group table scans as one task (see _scored);
+    # no-op when wide. similarity_ivf_topk at sf1 (one row group,
+    # benchdiff --ab-run, 4 fresh JVMs per side): 11.9 s median with it,
+    # 16.9 s without, every sample slower ("WASH" by benchdiff's pooled
+    # spread, but the ranges are disjoint).
     from emission_project_spark.catalog.tables import spread_input
 
     scored = spread_input(vectors.select("vec_id", "embedding")).crossJoin(F.broadcast(c)).select(
@@ -110,12 +121,13 @@ def assign_cells(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
         "centroid_id",
         F.round(cosine_similarity("embedding", "_c_emb"), ROUND).alias("_sim"),
     )
-    w = Window.partitionBy("vec_id").orderBy(F.col("_sim").desc(), F.col("centroid_id").asc())
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("vec_id", "embedding", "centroid_id")
+    # struct order: a NULL _sim sorts below every score; -centroid_id
+    # makes the larger key the lower id
+    best = scored.groupBy("vec_id").agg(
+        F.max_by("centroid_id", F.struct("_sim", -F.col("centroid_id"))).alias("centroid_id"),
+        F.first("embedding").alias("embedding"),
     )
+    return best.select("vec_id", "embedding", "centroid_id")
 
 
 def ivf_topk(
@@ -154,52 +166,38 @@ def ivf_topk_kmeans(
     k: int = 10,
     iterations: int = 2,
     n_probe: int = 1,
-    train_frac: float | None = None,
 ) -> DataFrame:
     """IVF top-k with a k-means coarse quantizer — the production
-    variant of ``ivf_topk`` (whose docstring promises exactly this
-    upgrade): cells come from fixed-iteration Lloyd centroids
-    (extensions/kmeans.py) instead of the first ``n_centroids`` raw
-    vectors, so cell populations track the data distribution and
-    per-cell candidate counts stay balanced.
+    variant of ``ivf_topk``: cells come from fixed-iteration Lloyd
+    centroids (extensions/kmeans.py) instead of the first
+    ``n_centroids`` raw vectors, so cell populations track the data
+    distribution and per-cell candidate counts stay balanced.
 
     ``n_probe`` searches the query's nearest ``n_probe`` cells
-    (L2-ranked, ties by centroid id) — the standard IVF recall knob.
-    Everything is deterministic (seeded quantizer, grid-rounded
-    means, tie-broken ranks), so the whole operator is SQL-expressible
-    and oracle-checked. Scale shape: quantizer = broadcast of
-    n_centroids·dim doubles; assignment is map-side; search reads
-    ≈ n_probe/n_centroids of the corpus. ``train_frac`` bounds
-    quantizer training to a deterministic hash sample
-    (kmeans.training_sample) — the 100 TB configuration, where Lloyd
-    rounds touch a constant-size sample and only the final assignment
-    scans the corpus; recall holds (tests/test_extensions.py).
+    (``kmeans.probe_cells``: L2-ranked, ties by centroid id) — the
+    standard IVF recall knob. Everything is deterministic (seeded
+    quantizer, grid-rounded means, tie-broken ranks), so the whole
+    operator is SQL-expressible and oracle-checked. Scale shape:
+    quantizer = broadcast of n_centroids·dim doubles; assignment is
+    map-side; search reads ≈ n_probe/n_centroids of the corpus.
     """
     from emission_project_spark.extensions.kmeans import (
-        _sq_dist,
         assign_clusters,
         lloyd_centroids,
+        probe_cells,
     )
 
     vecs = vectors.select(
         F.col("vec_id"), F.col("embedding").cast("array<double>").alias("e")
     )
-    centroids = lloyd_centroids(vecs, n_centroids, iterations, train_frac)
+    centroids = lloyd_centroids(vecs, n_centroids, iterations)
     assigned = assign_clusters(vecs, centroids).select("vec_id", "e", "cluster_id")
 
     q = query.select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").cast("array<double>").alias("_q_e"),
     )
-    qscored = q.crossJoin(F.broadcast(centroids)).select(
-        "query_id", "_q_e", "cid", _sq_dist(F.col("_q_e"), F.col("ce")).alias("_qd2")
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.col("_qd2").asc(), F.col("cid").asc())
-    qcells = (
-        qscored.withColumn("_rn", F.row_number().over(wq))
-        .filter(F.col("_rn") <= n_probe)
-        .select("query_id", "_q_e", "cid")
-    )
+    qcells = probe_cells(q, centroids, n_probe)
     cand = assigned.join(
         F.broadcast(qcells),
         (assigned["cluster_id"] == qcells["cid"])
@@ -352,7 +350,6 @@ def semantic_neardup_pairs(
     n_clusters: int = 8,
     iterations: int = 2,
     n_blocks: int = 4,
-    train_frac: float | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication: k-means-cluster the
     embedding space (deterministic Lloyd quantizer), then search for
@@ -368,9 +365,6 @@ def semantic_neardup_pairs(
 
     Returns (cluster_id, doc_a, doc_b, cosine_sim); deterministic and
     fully SQL-expressible (Lloyd rounds + within-cluster self-join).
-    ``train_frac`` bounds quantizer training to a deterministic hash
-    sample (kmeans.training_sample — the 100 TB configuration; default
-    full-corpus training is the oracle-checked path).
     """
     from emission_project_spark.extensions.kmeans import assign_clusters, lloyd_centroids
 
@@ -378,7 +372,7 @@ def semantic_neardup_pairs(
         F.col("vec_id"), F.col("embedding").cast("array<double>").alias("e")
     )
     assigned = assign_clusters(
-        vecs, lloyd_centroids(vecs, n_clusters, iterations, train_frac)
+        vecs, lloyd_centroids(vecs, n_clusters, iterations)
     ).select(
         "vec_id",
         F.col("e").alias("embedding"),
@@ -520,16 +514,15 @@ def centroid_classify(
     mislabeled or non-separable, and the confusion matrix localizes
     which pairs bleed.
 
-    100 TB shape: centroids are |labels| x dim doubles (reuses the
-    k-means grid-rounded elementwise-mean pass, one posexplode hash
-    aggregate), broadcast into the same min_by argmin as
-    :func:`~emission_project_spark.extensions.kmeans.assign_clusters`
+    100 TB shape: centroids are |labels| x dim doubles (the k-means
+    grid-rounded elementwise-mean pass, one posexplode hash aggregate),
+    broadcast into :func:`~emission_project_spark.extensions.kmeans.assign_clusters`
     — the shuffle carries O(n) best-so-far rows, never O(n*labels) —
     with the true label carried through the aggregate so no
     corpus-sized re-attach join is needed.
     """
     from emission_project_spark.extensions.kmeans import (
-        _sq_dist,
+        assign_clusters,
         recompute_centroids,
     )
 
@@ -541,17 +534,10 @@ def centroid_classify(
     cents = recompute_centroids(
         vecs.select(F.col("true_label").alias("cluster_id"), "e")
     )
-    scored = vecs.crossJoin(F.broadcast(cents)).withColumn(
-        "d2", _sq_dist(F.col("e"), F.col("ce"))
-    )
-    best = scored.groupBy("vec_id").agg(
-        F.min_by(F.struct("cid", "d2"), F.struct("d2", "cid")).alias("_best"),
-        F.first("true_label").alias("true_label"),
-    )
-    return best.select(
+    return assign_clusters(vecs, cents).select(
         "vec_id",
         "true_label",
-        F.col("_best.cid").cast("bigint").alias("predicted_label"),
+        F.col("cluster_id").cast("bigint").alias("predicted_label"),
     )
 
 

@@ -42,10 +42,6 @@ ALLOWED, PACKAGE = _sites.ALLOWED, _sites.PACKAGE
 QUERIES_BY_SITE: dict[str, tuple[str, ...]] = {
     "extensions/dedup.py:_shingle_overlap": (
         "dedup_lsh_quality", "dedup_ngram_jaccard", "dedup_shingle_containment"),
-    "extensions/kmeans.py:lloyd_centroids": (
-        "curation_cluster_quality_join", "dedup_semantic_pairs",
-        "embedding_cluster_quality", "embedding_kmeans_lloyd",
-        "similarity_ivf_kmeans_topk"),
     "extensions/pq.py:ivfpq_topk_expr": (
         "similarity_ivfpq_rerank_topk", "similarity_ivfpq_topk"),
     "operators/components.py:connected_components": (

@@ -30,11 +30,10 @@ ALLOWED: dict[str, tuple[int, str]] = {
     # the materialized relation is the mechanism
     "operators/components.py:connected_components": (
         3, "per-round lineage truncation in the convergence loop"),
-    "extensions/kmeans.py:lloyd_centroids": (
-        1, "reached by 3 headline queries; needs its own headline A/B"),
     # inline, the query reads more parquet rows or writes more shuffle
     "extensions/dedup.py:_shingle_overlap": (1, "shingling runs twice"),
-    "extensions/pq.py:ivfpq_topk_expr": (1, "residuals: embeddings rescanned"),
+    "extensions/pq.py:ivfpq_topk_expr": (
+        2, "coarse quantizer: embeddings rescanned; residuals: slower"),
     "plans/affinity_ops.py:dedup_jaccard_prefix_join": (1, "shingling runs twice"),
     "plans/affinity_ops.py:graph_adamic_adar_top": (1, "more shuffle, slower"),
     "plans/affinity_ops.py:graph_kcore_peel": (

@@ -6,7 +6,7 @@ loads launch no job (``load_table`` reads each schema from the parquet
 footer), but building is not execution-free: under AQE (the session
 default) a ``localCheckpoint`` — lazy ``eager=False`` included — runs
 its subtree's shuffle stages at the call, so queries that checkpoint
-while building (e.g. ``embedding_kmeans_lloyd``) run part of their work
+while building (e.g. ``similarity_ivfpq_topk``) run part of their work
 here, as do builds that collect a driver-side value or write warehouse
 files. Each build runs in its own job group, and ``build_jobs=`` counts
 the jobs it launched. That count is not repeatable where AQE adapts a
@@ -23,14 +23,22 @@ Flags:
   more than their operator semantics require;
 - parquet scans with no pushed filters in queries that filter.
 
-Prints one line per query: build jobs, shuffles, joins by strategy,
-flags. Exits nonzero if a disallowed cartesian appears. Usage:
+Prints one line per query: build jobs, a ``plan=`` fingerprint,
+shuffles, joins by strategy, flags. The fingerprint hashes the
+optimized logical plan with expression ids normalized, so a refactor
+can list exactly which plans it changed by diffing two runs. A
+checkpointed relation is a ``LogicalRDD`` leaf in that plan, so the
+hash does not see the subtree behind a ``localCheckpoint``; a plan
+with a nondeterministic literal (an unseeded ``rand``) hashes
+differently per build. Exits nonzero if a disallowed cartesian
+appears. Usage:
 
     python tools/plancheck.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import re
 import sys
@@ -188,6 +196,16 @@ def global_windows(plan: str) -> list[str]:
     return hits
 
 
+def plan_fingerprint(df) -> str:
+    """12 hex digits of the optimized logical plan's SHA-1, with every
+    expression id (``#123``) replaced by ``#`` and the process-wide
+    counter PySpark appends to lambda variable names (``x_6``) dropped,
+    so the hash does not depend on what the session built before."""
+    text = re.sub(r"#\d+", "#", df._jdf.queryExecution().optimizedPlan().toString())
+    text = re.sub(r"(lambda [A-Za-z]+)_\d+#", r"\1#", text)
+    return hashlib.sha1(text.encode()).hexdigest()[:12]
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
@@ -213,6 +231,7 @@ def main() -> None:
         try:
             df = fn(spark, sf_dir)
             plan = df._jdf.queryExecution().explainString(explain_mode)
+            fingerprint = plan_fingerprint(df)
         except Exception as exc:  # compile error is itself a finding
             failures.append(f"{name}: failed to plan: {exc}")
             print(f"✗ {name}: PLAN ERROR {exc}")
@@ -254,8 +273,8 @@ def main() -> None:
         flag_str = " ".join(flags)
         mark = "✗" if "CARTESIAN" in flags else "✓"
         print(
-            f"{mark} {name}: build_jobs={build_jobs} shuffles={shuffles} "
-            f"joins={join_str} {flag_str}"
+            f"{mark} {name}: build_jobs={build_jobs} plan={fingerprint} "
+            f"shuffles={shuffles} joins={join_str} {flag_str}"
         )
 
     spark.stop()
