@@ -8,6 +8,9 @@ choice, never a semantic one.
 
 Each query is listed once, under one site it reaches, and the test
 first checks that it does reach that site.
+
+The k-means Lloyd loop has no site: the queries built on it plan
+without launching a job and without calling ``localCheckpoint``.
 """
 
 from __future__ import annotations
@@ -75,6 +78,13 @@ QUERIES_BY_SITE: dict[str, tuple[str, ...]] = {
     "plans/keyword_ops.py:text_rake_keywords": ("text_rake_keywords",),
 }
 
+# queries built on extensions/kmeans.py::lloyd_centroids outside IVF-PQ
+LLOYD_QUERIES: tuple[str, ...] = (
+    "curation_cluster_quality_join", "dedup_semantic_pairs",
+    "embedding_cluster_quality", "embedding_kmeans_lloyd",
+    "similarity_ivf_kmeans_topk",
+)
+
 
 @functools.cache
 def _top_level_spans(path: str) -> list[tuple[int, int, str]]:
@@ -126,3 +136,26 @@ def test_results_do_not_change_when_checkpoints_inline(
     assert site in reached, f"{name} reaches {sorted(reached)}, not {site}"
     monkeypatch.setattr(ClassicDataFrame, "localCheckpoint", inline)
     assert canonical(fn(spark, sf_dir)) == materialized
+
+
+@pytest.mark.parametrize("name", LLOYD_QUERIES)
+def test_lloyd_queries_build_without_a_job(spark, sf_dir, monkeypatch, name):
+    fn = entrymod.queries()[name]
+    checkpoint = ClassicDataFrame.localCheckpoint
+    reached: set[str] = set()
+
+    def recording(self, *args, **kwargs):
+        reached.add(_site(sys._getframe(1)))
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(ClassicDataFrame, "localCheckpoint", recording)
+    sc = spark.sparkContext
+    group = f"test-lloyd-build-{name}"
+    sc.setJobGroup(group, name)
+    try:
+        df = fn(spark, sf_dir)
+        df._jdf.queryExecution().optimizedPlan()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert reached == set(), f"{name} reaches {sorted(reached)}"
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], name
