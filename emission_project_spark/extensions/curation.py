@@ -38,11 +38,11 @@ def hash_rate_sample(
     stratum_col: str,
     id_col: str,
     rates: dict[str, float],
-    default_rate: float = 0.0,
 ) -> DataFrame:
     """Per-stratum Bernoulli sampling at declared rates ("keep 50% of
-    en, 10% of fr"), deterministic via the content hash: a row is kept
-    iff uniform(md5(id)) < rate(stratum). Unlike ``df.sample`` the
+    en, 10% of fr"; a stratum with no rate keeps nothing),
+    deterministic via the content hash: a row is kept iff
+    uniform(md5(id)) < rate(stratum). Unlike ``df.sample`` the
     draw is independent of partitioning and engine, so the mixture is
     auditable and each doc's in/out decision is stable across runs —
     rerunning with a HIGHER rate strictly grows the sample (nested
@@ -56,7 +56,7 @@ def hash_rate_sample(
         )
         / float(16**7)
     )
-    rate = F.lit(float(default_rate))
+    rate = F.lit(0.0)
     for value, r in rates.items():
         rate = F.when(F.col(stratum_col) == value, F.lit(float(r))).otherwise(rate)
     return df.filter(u < rate)
@@ -153,9 +153,8 @@ def length_percentiles(
     df: DataFrame,
     strata: Sequence[str],
     value_col: str,
-    percentiles: Sequence[float] = (0.25, 0.5, 0.75, 0.95),
 ) -> DataFrame:
-    """Exact per-stratum percentiles of ``value_col`` plus count/mean.
+    """Exact per-stratum p25/p50/p75/p95 of ``value_col`` plus count/mean.
 
     Exact ``percentile`` is a sort-based aggregate — correct but
     memory-bound per group; it is the oracle-checkable form. At 100 TB
@@ -166,7 +165,7 @@ def length_percentiles(
         F.count(F.lit(1)).alias("n_docs"),
         F.round(F.avg(value_col), 6).alias("mean_val"),
     ]
-    for p in percentiles:
+    for p in (0.25, 0.5, 0.75, 0.95):
         aggs.append(
             F.round(F.expr(f"percentile({value_col}, {p})"), 6).alias(
                 f"p{int(p * 100)}"
@@ -224,12 +223,7 @@ def profile_columns(df: DataFrame, columns: Sequence[str] | None = None) -> Data
     )
 
 
-def tfidf_top_terms(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-) -> DataFrame:
+def tfidf_top_terms(docs: DataFrame, k: int = 3) -> DataFrame:
     """Top-k characteristic terms per document by TF-IDF
     (tf · ln(N/df)), ties broken by term — the classic corpus keyword
     extractor (used for topic balancing / near-dup triage in curation).
@@ -243,12 +237,12 @@ def tfidf_top_terms(
     from emission_project_spark.functions.text import tokens
 
     toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(tokens(F.lower(F.col(text_col)))).alias("term"),
+        F.col("doc_id").alias("doc_id"),
+        F.explode(tokens(F.lower(F.col("text")))).alias("term"),
     )
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    n_docs = docs.agg(F.countDistinct(id_col).alias("n_docs"))
+    n_docs = docs.agg(F.countDistinct("doc_id").alias("n_docs"))
     scored = (
         tf.join(df_, "term")
         .crossJoin(F.broadcast(n_docs))

@@ -19,7 +19,7 @@ Scale design notes (100 TB):
   rather than a self-join, so the signature pipeline runs ONCE; a
   pathological hot bucket (stop-shingle) is the standard LSH hazard —
   cap bucket size / document frequency before pairing at scale
-  (``max_bucket`` parameter)
+  (``MAX_DOC_FREQ``, ``WINNOW_MAX_BUCKET``)
 
 Hash discipline: md5 (hex string) is the shared deterministic hash —
 identical in Spark and DuckDB — so every signature is oracle-checkable.
@@ -38,6 +38,9 @@ from emission_project_spark.operators.dedup import dedup_subset
 DEFAULT_SHINGLE = 3
 DEFAULT_BANDS = 8
 SIMHASH_BITS = 32
+# document-frequency cap of the shingle inverted index: a shingle in
+# more docs than this is a stop-shingle and pairs nothing
+MAX_DOC_FREQ = 64
 
 # affine minhash family over one base hash — h_b = (A_b·h + B_b) mod P,
 # the standard construction (same as Spark ML's MinHashLSH); constants
@@ -56,7 +59,7 @@ BAND_B = (
 MINHASH_MOD = 2147483647
 
 
-def exact_duplicates(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_duplicates(docs: DataFrame) -> DataFrame:
     """Groups of exact (whitespace/punct-insensitive) duplicates:
     one row per fingerprint with the canonical (min) doc id and count.
 
@@ -64,17 +67,17 @@ def exact_duplicates(docs: DataFrame, text_col: str = "text", id_col: str = "doc
     repay a repartition shuffle — unlike the shingle-explosion
     operators."""
     return (
-        docs.select(F.col(id_col), fingerprint(text_col).alias("fingerprint"))
+        docs.select(F.col("doc_id"), fingerprint("text").alias("fingerprint"))
         .groupBy("fingerprint")
         .agg(
-            F.min(id_col).alias("canonical_doc_id"),
+            F.min("doc_id").alias("canonical_doc_id"),
             F.count(F.lit(1)).alias("n_docs"),
         )
     )
 
 
-def _shingle_array(text_col: str, k: int) -> Column:
-    """Word k-shingles of a document as an array column.
+def _shingle_array() -> Column:
+    """Word ``DEFAULT_SHINGLE``-shingles of a document as an array column.
 
     Implemented as a single regex pass: normalize separators to one
     space, then extract every overlapping k-token window with a
@@ -82,20 +85,16 @@ def _shingle_array(text_col: str, k: int) -> Column:
     transform/slice formulation — higher-order array lambdas run
     interpreted, outside whole-stage codegen, while regexp extraction
     stays codegen'd. Output is identical (verified elementwise)."""
-    norm = F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\W+", " "))
-    pattern = r"(?=\b(" + " ".join([r"\w+"] * k) + r"))"
+    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\W+", " "))
+    pattern = r"(?=\b(" + " ".join([r"\w+"] * DEFAULT_SHINGLE) + r"))"
     return F.regexp_extract_all(norm, F.lit(pattern), 1)
 
 
-def shingles(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = DEFAULT_SHINGLE
-) -> DataFrame:
-    """Distinct word k-shingles per document: (doc_id, shingle)."""
+def shingles(docs: DataFrame) -> DataFrame:
+    """Distinct word shingles per document: (doc_id, shingle)."""
     return (
         spread_input(docs)
-        .select(
-            F.col(id_col).alias("doc_id"), F.explode(_shingle_array(text_col, k)).alias("shingle")
-        )
+        .select(F.col("doc_id").alias("doc_id"), F.explode(_shingle_array()).alias("shingle"))
         .distinct()
     )
 
@@ -115,20 +114,20 @@ def _pairs_from_bucket(arr: Column) -> Column:
     )
 
 
-def _shingle_overlap(
-    docs: DataFrame, text_col: str, id_col: str, k: int, max_doc_freq: int | None
-) -> DataFrame:
-    """Every doc pair sharing a shingle kept by the ``max_doc_freq`` cap:
+def _shingle_overlap(docs: DataFrame) -> DataFrame:
+    """Every doc pair sharing a shingle kept by the ``MAX_DOC_FREQ`` cap:
     ``doc_a < doc_b``, ``n_common`` (shared kept shingles) and both
     docs' shingle-set sizes ``size_a``, ``size_b``."""
     # Materialized: the shingle postings feed the sizes and the
     # inverted index; inline, the shingling runs twice (sf0.1 shuffle
     # written: 19.4 → 24.8 MB in dedup_shingle_containment).
-    sh = shingles(docs, text_col, id_col, k).localCheckpoint(eager=False)
+    sh = shingles(docs).localCheckpoint(eager=False)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    buckets = sh.groupBy("shingle").agg(F.collect_list("doc_id").alias("ids"))
-    if max_doc_freq:
-        buckets = buckets.filter(F.size("ids") <= max_doc_freq)
+    buckets = (
+        sh.groupBy("shingle")
+        .agg(F.collect_list("doc_id").alias("ids"))
+        .filter(F.size("ids") <= MAX_DOC_FREQ)
+    )
     inter = (
         buckets.select(F.explode(_pairs_from_bucket(F.col("ids"))).alias("p"))
         .groupBy(F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b"))
@@ -142,23 +141,16 @@ def _shingle_overlap(
     return inter.join(F.broadcast(sa), "doc_a").join(F.broadcast(sb), "doc_b")
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = DEFAULT_SHINGLE,
-    threshold: float = 0.8,
-    max_doc_freq: int | None = 64,
-) -> DataFrame:
+def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
     """Near-duplicate pairs by exact shingle-set Jaccard ≥ threshold.
 
     Inverted index (shingle → sorted doc list) → in-bucket pair
     generation → per-pair intersection count → Jaccard against set
-    sizes. ``max_doc_freq`` drops shingles appearing in more than that
+    sizes. ``MAX_DOC_FREQ`` drops shingles appearing in more than that
     many docs — the document-frequency cap that bounds the quadratic
     bucket blow-up at scale (a boilerplate shingle shared by k docs
     would otherwise emit k²/2 pairs; a stop-shingle carries no
-    signal). ON BY DEFAULT — pass ``None`` only for small exact runs.
+    signal). The cap always applies.
 
     RETURN CONTRACT under the cap: reported ``jaccard`` is a LOWER
     BOUND for any pair sharing capped shingles (their intersection
@@ -166,10 +158,10 @@ def ngram_jaccard_pairs(
     stop-shingles is not returned at all. The truncation is
     measurable: :func:`shingle_cap_report` quantifies, for the same
     corpus and cap, how many shingles/postings/docs the cap touches —
-    run it when tuning ``max_doc_freq`` for a new corpus.
+    run it when tuning ``MAX_DOC_FREQ`` for a new corpus.
     """
     return (
-        _shingle_overlap(docs, text_col, id_col, k, max_doc_freq)
+        _shingle_overlap(docs)
         .withColumn(
             "jaccard",
             F.round(
@@ -181,14 +173,8 @@ def ngram_jaccard_pairs(
     )
 
 
-def shingle_cap_report(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = DEFAULT_SHINGLE,
-    max_doc_freq: int | None = 64,
-) -> DataFrame:
-    """Observability for the ``max_doc_freq`` recall cap: one summary
+def shingle_cap_report(docs: DataFrame, max_doc_freq: int = MAX_DOC_FREQ) -> DataFrame:
+    """Observability for the ``MAX_DOC_FREQ`` recall cap: one summary
     row quantifying exactly what :func:`ngram_jaccard_pairs` silently
     drops at the given cap — run it alongside (or before) a capped
     dedup pass to decide whether the cap is safe for the corpus.
@@ -204,8 +190,8 @@ def shingle_cap_report(
     shingle's doc frequency — the same shuffle key the index build
     uses), one global aggregate. No join, no second scan.
     """
-    cap = F.lit(max_doc_freq if max_doc_freq else (1 << 62))
-    sh = shingles(docs, text_col, id_col, k)
+    cap = F.lit(max_doc_freq)
+    sh = shingles(docs)
     with_freq = sh.withColumn(
         "c", F.count(F.lit(1)).over(Window.partitionBy("shingle"))
     )
@@ -224,14 +210,7 @@ def shingle_cap_report(
     )
 
 
-def containment_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = DEFAULT_SHINGLE,
-    threshold: float = 0.8,
-    max_doc_freq: int | None = 64,
-) -> DataFrame:
+def containment_pairs(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
     """Asymmetric shingle-set CONTAINMENT near-dup pairs: the smaller
     shingle set's coverage by the larger, C = |A∩B| / min(|A|,|B|).
 
@@ -244,7 +223,7 @@ def containment_pairs(
 
     Plan shape is identical to :func:`ngram_jaccard_pairs` (one
     inverted index, in-bucket pair generation, one intersection
-    aggregate — the quadratic mass bounded by ``max_doc_freq`` with
+    aggregate — the quadratic mass bounded by ``MAX_DOC_FREQ`` with
     the same lower-bound RETURN CONTRACT, measurable via
     :func:`shingle_cap_report`). Output orients each pair: ``src_doc``
     is the contained (smaller-set) side, ties broken by smaller id, so
@@ -254,7 +233,7 @@ def containment_pairs(
         (F.col("size_a") == F.col("size_b")) & (F.col("doc_a") < F.col("doc_b"))
     )
     return (
-        _shingle_overlap(docs, text_col, id_col, k, max_doc_freq)
+        _shingle_overlap(docs)
         .withColumn(
             "containment",
             F.round(F.col("n_common") / F.least("size_a", "size_b"), 6),
@@ -268,15 +247,8 @@ def containment_pairs(
     )
 
 
-def contamination_overlap(
-    docs: DataFrame,
-    benchmark: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = DEFAULT_SHINGLE,
-    min_shared: int = 8,
-) -> DataFrame:
-    """Benchmark decontamination: count word-``k``-gram overlap between
+def contamination_overlap(docs: DataFrame, benchmark: DataFrame, min_shared: int = 8) -> DataFrame:
+    """Benchmark decontamination: count word-shingle overlap between
     every corpus document and every benchmark document, keeping pairs
     sharing at least ``min_shared`` distinct shingles — the standard
     train/eval contamination check (eval questions verbatim inside a
@@ -288,8 +260,8 @@ def contamination_overlap(
     count aggregate keyed (doc, bench). The corpus is never shuffled by
     shingle. Returns ``(doc_id, bench_id, n_shared)``.
     """
-    doc_sh = shingles(docs, text_col, id_col, k)
-    bench_sh = shingles(benchmark, text_col, id_col, k).select(
+    doc_sh = shingles(docs)
+    bench_sh = shingles(benchmark).select(
         F.col("doc_id").alias("bench_id"), "shingle"
     )
     return (
@@ -301,11 +273,11 @@ def contamination_overlap(
     )
 
 
-def minhash_band_expr(text_col: str = "text", k: int = DEFAULT_SHINGLE, band: int = 0):
-    """Per-ROW minhash band signature as a pure Column expression:
+def minhash_band_expr():
+    """Per-ROW band-0 minhash signature as a pure Column expression:
     shingle array → md5 base int per element → affine band transform →
-    ``array_min``. Bit-identical to ``minhash_band_signatures`` for the
-    same band (same hash family over the same shingles; min over a
+    ``array_min``. Bit-identical to ``minhash_band_signatures`` for
+    band 0 (same hash family over the same shingles; min over a
     per-row array vs min over exploded rows).
 
     The trade vs the explode/groupBy formulation: the higher-order
@@ -314,45 +286,35 @@ def minhash_band_expr(text_col: str = "text", k: int = DEFAULT_SHINGLE, band: in
     aggregation state — which makes it legal on a streaming frame
     before a stateful op (chaining an aggregation into
     ``dropDuplicates`` is not) and free of exchange at any scale.
-    NULL when the document has fewer than ``k`` tokens (no shingles)."""
+    NULL when the document has fewer than ``DEFAULT_SHINGLE`` tokens
+    (no shingles)."""
     base = (
         lambda x: F.conv(F.substring(F.md5(x), 1, 7), 16, 10).cast("bigint")
     )
     hashed = F.transform(
-        _shingle_array(text_col, k),
-        lambda x: (base(x) * F.lit(BAND_A[band]) + F.lit(BAND_B[band]))
+        _shingle_array(),
+        lambda x: (base(x) * F.lit(BAND_A[0]) + F.lit(BAND_B[0]))
         % F.lit(MINHASH_MOD),
     )
     return F.array_min(hashed)
 
 
-def minhash_bucket(
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = DEFAULT_SHINGLE,
-    band: int = 0,
-):
+def minhash_bucket():
     """``minhash_band_expr`` with a per-document fallback for shingle-less
-    docs (fewer than ``k`` tokens): such a doc cannot be a near-dup of
+    docs (fewer than ``DEFAULT_SHINGLE`` tokens): such a doc cannot be a near-dup of
     anything, so it gets the unique negative bucket ``-(doc_id) - 1``
     (signatures are in [0, P) — no collision) instead of a NULL that
     would collapse every short doc into one dedup key."""
     return F.coalesce(
-        minhash_band_expr(text_col, k, band),
-        -F.col(id_col).cast("bigint") - F.lit(1),
+        minhash_band_expr(),
+        -F.col("doc_id").cast("bigint") - F.lit(1),
     )
 
 
-def minhash_band_signatures(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = DEFAULT_SHINGLE,
-    bands: int = DEFAULT_BANDS,
-) -> DataFrame:
+def minhash_band_signatures(docs: DataFrame) -> DataFrame:
     """Per-(doc, band) minhash signature: (doc_id, band, signature).
 
-    ONE md5 per shingle → 28-bit base integer → ``bands`` affine
+    ONE md5 per shingle → 28-bit base integer → ``DEFAULT_BANDS`` affine
     transforms (A_b·h + B_b mod P), min per band — the standard
     minhash family (Spark ML's MinHashLSH uses the same construction),
     ~8× less hashing than independent salted digests per band. The
@@ -363,44 +325,35 @@ def minhash_band_signatures(
     P[band match] = exact Jaccard.
     """
     exploded = spread_input(docs).select(
-        F.col(id_col).alias("doc_id"), F.explode(_shingle_array(text_col, k)).alias("shingle")
+        F.col("doc_id").alias("doc_id"), F.explode(_shingle_array()).alias("shingle")
     )
     base = F.conv(F.substring(F.md5("shingle"), 1, 7), 16, 10).cast("bigint")
     hashed = exploded.select(
         "doc_id",
         *[
             ((base * F.lit(BAND_A[b]) + F.lit(BAND_B[b])) % F.lit(MINHASH_MOD)).alias(f"_h{b}")
-            for b in range(bands)
+            for b in range(DEFAULT_BANDS)
         ],
     )
     agg = hashed.groupBy("doc_id").agg(
-        *[F.min(f"_h{b}").alias(f"_s{b}") for b in range(bands)]
+        *[F.min(f"_h{b}").alias(f"_s{b}") for b in range(DEFAULT_BANDS)]
     )
     return agg.select(
         "doc_id",
-        F.posexplode(F.array(*[F.col(f"_s{b}") for b in range(bands)])).alias(
+        F.posexplode(F.array(*[F.col(f"_s{b}") for b in range(DEFAULT_BANDS)])).alias(
             "band", "signature"
         ),
     )
 
 
-def minhash_lsh_candidates(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = DEFAULT_SHINGLE,
-    bands: int = DEFAULT_BANDS,
-    max_bucket: int | None = None,
-) -> DataFrame:
+def minhash_lsh_candidates(docs: DataFrame) -> DataFrame:
     """Candidate near-dup pairs: docs sharing ≥1 band signature, with
     the number of agreeing bands (bands_agree / bands estimates
     Jaccard). Bucketing replaces the quadratic all-pairs comparison;
     pair generation happens inside buckets (signature pipeline runs
-    once — no self-join). ``max_bucket`` caps pathological buckets."""
-    sig = minhash_band_signatures(docs, text_col, id_col, k, bands)
+    once — no self-join). Buckets are not capped."""
+    sig = minhash_band_signatures(docs)
     buckets = sig.groupBy("band", "signature").agg(F.collect_list("doc_id").alias("ids"))
-    if max_bucket:
-        buckets = buckets.filter(F.size("ids") <= max_bucket)
     return (
         buckets.select(F.explode(_pairs_from_bucket(F.col("ids"))).alias("p"))
         .groupBy(F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b"))
@@ -408,23 +361,18 @@ def minhash_lsh_candidates(
     )
 
 
-def simhash64(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bits: int = SIMHASH_BITS,
-) -> DataFrame:
+def simhash64(docs: DataFrame) -> DataFrame:
     """SimHash fingerprint from token hashes (Charikar '02).
 
     Per token: a 60-bit integer from 15 hex chars of md5; per bit, a
-    ±1 vote; fingerprint bit = sign of the vote sum. Votes are ``bits``
+    ±1 vote; fingerprint bit = sign of the vote sum. Votes are ``SIMHASH_BITS``
     parallel SUM columns over the token rows (no per-bit row explosion
     — 32× less aggregation input), then one expression reassembles the
     fingerprint. Token multiplicity intentionally weights votes.
     """
     toks = spread_input(docs).select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(tokens(F.lower(F.col(text_col)))).alias("tok"),
+        F.col("doc_id").alias("doc_id"),
+        F.explode(tokens(F.lower(F.col("text")))).alias("tok"),
     )
     hashed = toks.select(
         "doc_id", F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10).cast("bigint").alias("h")
@@ -433,12 +381,14 @@ def simhash64(
         "doc_id",
         *[
             (F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)) * 2 - 1).alias(f"_v{b}")
-            for b in range(bits)
+            for b in range(SIMHASH_BITS)
         ],
     )
-    agg = votes.groupBy("doc_id").agg(*[F.sum(f"_v{b}").alias(f"_s{b}") for b in range(bits)])
+    agg = votes.groupBy("doc_id").agg(
+        *[F.sum(f"_v{b}").alias(f"_s{b}") for b in range(SIMHASH_BITS)]
+    )
     simhash = None
-    for b in range(bits):
+    for b in range(SIMHASH_BITS):
         term = F.when(F.col(f"_s{b}") > 0, F.lit(1 << b).cast("bigint")).otherwise(
             F.lit(0).cast("bigint")
         )
@@ -448,16 +398,11 @@ def simhash64(
 
 WINNOW_K = 5   # char k-gram length
 WINNOW_W = 4   # winnowing window (grams per window)
+WINNOW_MAX_BUCKET = 64  # fingerprint buckets above this are stop-grams
 _POS_BITS = 20  # pos packs below the hash: docs up to ~1M grams
 
 
-def winnow_fingerprints(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = WINNOW_K,
-    window: int = WINNOW_W,
-) -> DataFrame:
+def winnow_fingerprints(docs: DataFrame) -> DataFrame:
     """Winnowing fingerprints (Schleimer/Wilkerson/Aiken '03, the MOSS
     local document fingerprinting): hash every char k-gram, slide a
     w-gram window, keep each window's minimum hash (rightmost on ties).
@@ -466,15 +411,13 @@ def winnow_fingerprints(
     for partial-overlap/plagiarism-style dedup (whole-doc md5 in
     ``text_fingerprint`` only catches full-document dupes).
 
-    Engine shape (r13 opt, guide §2.4 "remove shuffles outright"): the
-    whole selection is a per-DOCUMENT computation, so it runs as one
-    zero-shuffle higher-order-function map — pack every gram into an
-    orderable BIGINT inside an array, slide the w-window with
-    array_min over slices, array_distinct per doc, explode. The
-    previous shape (posexplode → hash-partition(doc_id) window MIN →
-    global distinct) exchanged AND sorted one ~28-byte row per CHAR of
-    corpus twice; this shape exchanges nothing (``spread_input`` only
-    repartitions the narrow doc rows for core balance). The
+    Engine shape: the whole selection is a per-DOCUMENT computation,
+    so it runs as one zero-shuffle higher-order-function map — pack
+    every gram into an orderable BIGINT inside an array, slide the
+    w-window with array_min over slices, array_distinct per doc,
+    explode. Nothing is exchanged or sorted per character of corpus
+    (``spread_input`` only repartitions the narrow doc rows for core
+    balance). The
     argmin-with-rightmost-tie-break is one integer MIN:
     ``gram_hash·2^20 + (2^20-1-pos)`` packs (hash asc, pos desc) into
     a single orderable BIGINT that both Spark and the DuckDB oracle
@@ -482,7 +425,8 @@ def winnow_fingerprints(
     sequence of ops as the windowed form, so the fingerprints are
     bit-identical.
     """
-    n_grams = F.length(text_col) - k + 1
+    k, window = WINNOW_K, WINNOW_W
+    n_grams = F.length("text") - k + 1
     # pos packs into _POS_BITS bits below the hash; a doc with >= 2^20
     # grams would wrap (negative pos complement corrupts the packed
     # argmin), so such docs are excluded rather than silently corrupted.
@@ -490,8 +434,8 @@ def winnow_fingerprints(
     # affected docs for the same corpus; chunk multi-MB documents
     # upstream (~1M chars, k+w-2 overlap) if they must be fingerprinted.
     base = spread_input(docs.filter((n_grams >= 1) & (n_grams < (1 << _POS_BITS)))).select(
-        F.col(id_col).alias("doc_id"),
-        F.col(text_col).alias("_text"),
+        F.col("doc_id").alias("doc_id"),
+        F.col("text").alias("_text"),
         n_grams.alias("_n"),
     )
     hi, mask = 1 << _POS_BITS, (1 << _POS_BITS) - 1
@@ -529,12 +473,7 @@ def winnow_fingerprints(
     )
 
 
-def winnow_oversized_report(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = WINNOW_K,
-) -> DataFrame:
+def winnow_oversized_report(docs: DataFrame) -> DataFrame:
     """Observability for :func:`winnow_fingerprints`' size guard: that
     operator excludes documents with ≥ 2^20 char k-grams (the packed
     argmin would wrap), so multi-MB documents silently fall out of the
@@ -546,7 +485,7 @@ def winnow_oversized_report(
     docs upstream (split at ~1M chars with k+w-2 overlap) before
     fingerprinting.
     """
-    n_grams = F.length(text_col) - k + 1
+    n_grams = F.length("text") - WINNOW_K + 1
     return docs.select(n_grams.alias("g")).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.coalesce(F.sum(F.when(F.col("g") < 1, 1).otherwise(0)), F.lit(0))
@@ -561,15 +500,7 @@ def winnow_oversized_report(
     )
 
 
-def winnow_overlap_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = WINNOW_K,
-    window: int = WINNOW_W,
-    min_shared: int = 2,
-    max_bucket: int | None = 64,
-) -> DataFrame:
+def winnow_overlap_pairs(docs: DataFrame, min_shared: int = 2) -> DataFrame:
     """Partial-overlap candidate pairs: documents sharing ≥ ``min_shared``
     winnowing fingerprints, with the shared count (overlap evidence).
 
@@ -577,16 +508,16 @@ def winnow_overlap_pairs(
     hashing misses and that minhash under-weights (Jaccard dilutes a
     short shared segment inside long documents). Same bucket-join shape
     as the LSH pipeline: group by fingerprint hash, pair within bucket,
-    count per pair — shuffle-on-key all the way; ``max_bucket`` drops
-    stop-gram buckets (boilerplate shared by everything) before the
-    quadratic pair step, the standard guard at corpus scale.
+    count per pair — shuffle-on-key all the way; ``WINNOW_MAX_BUCKET``
+    drops stop-gram buckets (boilerplate shared by everything) before
+    the quadratic pair step, the standard guard at corpus scale.
     """
-    fp = winnow_fingerprints(docs, text_col, id_col, k, window).select(
-        "doc_id", "gram_hash"
-    ).distinct()
-    buckets = fp.groupBy("gram_hash").agg(F.collect_list("doc_id").alias("ids"))
-    if max_bucket:
-        buckets = buckets.filter(F.size("ids") <= max_bucket)
+    fp = winnow_fingerprints(docs).select("doc_id", "gram_hash").distinct()
+    buckets = (
+        fp.groupBy("gram_hash")
+        .agg(F.collect_list("doc_id").alias("ids"))
+        .filter(F.size("ids") <= WINNOW_MAX_BUCKET)
+    )
     return (
         buckets.select(F.explode(_pairs_from_bucket(F.col("ids"))).alias("p"))
         .groupBy(F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b"))
@@ -602,10 +533,7 @@ def winnow_overlap_pairs(
 
 
 def incremental_exact_dedup(
-    batch: DataFrame,
-    state_fingerprints: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
+    batch: DataFrame, state_fingerprints: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
     """Split a batch into (fresh, duplicate) against a stored
     fingerprint state, then dedup fresh in-batch (first id wins).
@@ -616,22 +544,16 @@ def incremental_exact_dedup(
     anti/semi joins shuffled on the fingerprint; the batch is hashed
     once (cached upstream by the caller if both outputs are consumed).
     """
-    fp = batch.withColumn("fingerprint", fingerprint(F.col(text_col)))
+    fp = batch.withColumn("fingerprint", fingerprint(F.col("text")))
     state = state_fingerprints.select("fingerprint").distinct()
     dup = fp.join(state, "fingerprint", "left_semi")
     fresh = fp.join(state, "fingerprint", "left_anti")
-    fresh = dedup_subset(fresh, ["fingerprint"], tiebreaker=[id_col])
+    fresh = dedup_subset(fresh, ["fingerprint"], tiebreaker=["doc_id"])
     return fresh, dup
 
 
 def incremental_minhash_candidates(
-    batch: DataFrame,
-    state_signatures: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = DEFAULT_SHINGLE,
-    bands: int = DEFAULT_BANDS,
-    min_bands: int = 4,
+    batch: DataFrame, state_signatures: DataFrame, min_bands: int = 4
 ) -> DataFrame:
     """Near-dup candidates of a NEW batch against the stored corpus:
     (batch_doc_id, state_doc_id, bands_agree). Signatures are computed
@@ -642,7 +564,7 @@ def incremental_minhash_candidates(
     Join is keyed (band, signature): exactly the LSH bucket equality,
     shuffled on the composite key, never quadratic in either side.
     """
-    bsig = minhash_band_signatures(batch, text_col, id_col, k, bands).select(
+    bsig = minhash_band_signatures(batch).select(
         F.col("doc_id").alias("batch_doc_id"), "band", "signature"
     )
     ssig = state_signatures.select(
@@ -656,20 +578,20 @@ def incremental_minhash_candidates(
     )
 
 
+LEV_AFFIX_LEN = 16  # prefix / suffix block key length, in characters
+LEV_MAX_BLOCK = 256  # docs per block above which the block is dropped
+
+
 def levenshtein_block_pairs(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     block_cols: tuple[str, ...] = ("lang", "source"),
     len_bucket: int = 64,
     max_rel_dist: float = 0.25,
-    affix_len: int = 16,
-    max_block: int | None = 256,
 ) -> DataFrame:
     """Edit-distance near-duplicate pairs under multi-pass blocking:
     candidates share ``block_cols``, a character-length bucket
     (``floor(len/len_bucket)``), and — per pass — either the first or
-    the last ``affix_len`` characters; a pair survives when
+    the last ``LEV_AFFIX_LEN`` characters; a pair survives when
     ``levenshtein(a, b) <= max_rel_dist * max(len(a), len(b))``.
 
     Complements the token-set detectors (minhash/simhash/Jaccard are
@@ -689,37 +611,34 @@ def levenshtein_block_pairs(
     exactly the kind the token-set detectors catch instead. Precision
     is exact. Emits ``id_a < id_b, dist, rel_dist``.
 
-    ``max_block`` drops blocks larger than that many docs before
-    pairing — the same hot-bucket cap as ``max_doc_freq`` /
-    ``max_bucket`` in the shingle/LSH kit, bounding worst-case DP work
-    per block to max_block²/2. A corpus whose duplicate GROUPS are
-    genuinely huge (k near-identical copies ⇒ k²/2 true pairs — e.g.
+    ``LEV_MAX_BLOCK`` drops blocks larger than that many docs before
+    pairing — the same hot-bucket cap as ``MAX_DOC_FREQ`` /
+    ``WINNOW_MAX_BUCKET`` in the shingle kit, bounding worst-case DP
+    work per block to LEV_MAX_BLOCK²/2. A corpus whose duplicate GROUPS
+    are genuinely huge (k near-identical copies ⇒ k²/2 true pairs — e.g.
     boilerplate cliques) hits this cap by construction; the capped
-    blocks are observable the same way (count-by-key), and ``None``
-    uncaps for exact small runs.
+    blocks are observable the same way (count-by-key).
     """
     blocked = docs.select(
-        F.col(id_col),
-        F.col(text_col),
+        F.col("doc_id"),
+        F.col("text"),
         *[F.col(c) for c in block_cols],
-        F.floor(F.length(text_col) / F.lit(len_bucket)).cast("bigint").alias("_lbucket"),
-        F.expr(f"left({text_col}, {affix_len})").alias("_pre"),
-        F.expr(f"right({text_col}, {affix_len})").alias("_suf"),
+        F.floor(F.length("text") / F.lit(len_bucket)).cast("bigint").alias("_lbucket"),
+        F.expr(f"left(text, {LEV_AFFIX_LEN})").alias("_pre"),
+        F.expr(f"right(text, {LEV_AFFIX_LEN})").alias("_suf"),
     )
 
     def pass_pairs(affix: str) -> DataFrame:
         keys = [*block_cols, "_lbucket", affix]
-        rows = blocked
-        if max_block is not None:
-            w = Window.partitionBy(*keys)
-            rows = rows.withColumn("_bn", F.count(F.lit(1)).over(w)).filter(
-                F.col("_bn") <= max_block
-            )
+        w = Window.partitionBy(*keys)
+        rows = blocked.withColumn("_bn", F.count(F.lit(1)).over(w)).filter(
+            F.col("_bn") <= LEV_MAX_BLOCK
+        )
         a = rows.select(
-            *keys, F.col(id_col).alias("id_a"), F.col(text_col).alias("_ta")
+            *keys, F.col("doc_id").alias("id_a"), F.col("text").alias("_ta")
         )
         b = rows.select(
-            *keys, F.col(id_col).alias("id_b"), F.col(text_col).alias("_tb")
+            *keys, F.col("doc_id").alias("id_b"), F.col("text").alias("_tb")
         )
         return (
             a.join(b, keys)
@@ -785,15 +704,13 @@ def levenshtein_block_pairs(
 # (pair, diagonal) key — output-sized, never corpus-quadratic.
 
 
-def _positioned_kgrams(
-    docs: DataFrame, text_col: str, id_col: str, k: int
-) -> DataFrame:
+def _positioned_kgrams(docs: DataFrame, k: int) -> DataFrame:
     """(doc_id, pos, gram): the k-token window starting at each 1-based
     position. Docs shorter than k tokens contribute nothing (guarded —
     Spark sequence() counts DOWN when start > stop)."""
     toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        tokens(F.lower(F.col(text_col))).alias("toks"),
+        F.col("doc_id").alias("doc_id"),
+        tokens(F.lower(F.col("text"))).alias("toks"),
     ).filter(F.size("toks") >= k)
     cells = F.transform(
         F.sequence(F.lit(1), F.size("toks") - k + 1),
@@ -809,8 +726,6 @@ def _positioned_kgrams(
 
 def substring_span_pairs(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k: int = 6,
     min_span: int = 10,
     max_gram_freq: int = 50,
@@ -822,7 +737,7 @@ def substring_span_pairs(
     tokens; doc_a < doc_b. Exact for all spans >= k whose anchor grams
     survive the ``max_gram_freq`` occurrence cap.
     """
-    g = _positioned_kgrams(docs, text_col, id_col, k)
+    g = _positioned_kgrams(docs, k)
     kept = g.groupBy("gram").agg(F.count(F.lit(1)).alias("_n")).filter(
         F.col("_n") <= max_gram_freq
     )
@@ -853,8 +768,6 @@ def substring_span_pairs(
 
 def substring_cap_report(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k: int = 6,
     max_gram_freq: int = 50,
 ) -> DataFrame:
@@ -863,7 +776,7 @@ def substring_cap_report(
     (n_grams, n_dropped_gram_types, n_dropped_occurrences) — nonzero
     drops mean template/stopword runs were excluded from span
     anchoring; raise ``max_gram_freq`` to trade fanout for recall."""
-    g = _positioned_kgrams(docs, text_col, id_col, k)
+    g = _positioned_kgrams(docs, k)
     per = g.groupBy("gram").agg(F.count(F.lit(1)).alias("_n"))
     over = F.col("_n") > max_gram_freq
     return per.agg(

@@ -132,19 +132,13 @@ def probe_cells(queries: DataFrame, centroids: DataFrame, n_probe: int) -> DataF
     )
 
 
-def kmeans_lloyd(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 8,
-    iterations: int = 2,
-) -> DataFrame:
+def kmeans_lloyd(emb: DataFrame, k: int = 8, iterations: int = 2) -> DataFrame:
     """Run ``iterations`` Lloyd steps seeded from the vectors with the
     ``k`` smallest ids; return ``(vec_id, cluster_id, d2)`` of the
     final assignment (``d2`` rounded to the grid)."""
     vecs = emb.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).cast("array<double>").alias("e"),
+        F.col("vec_id").alias("vec_id"),
+        F.col("embedding").cast("array<double>").alias("e"),
     )
     assigned = assign_clusters(vecs, lloyd_centroids(vecs, k, iterations))
     return assigned.select(

@@ -1,7 +1,7 @@
 """Multimodal columns: image/video as opaque binary + metadata.
 
 The Spark-side plumbing is real — typed schema, Arrow-batched
-``mapInPandas`` feature extraction, partition-size control — and
+``mapInPandas`` feature extraction — and
 ``decode_image`` dispatches to PIL when it is importable executor-side
 (probed at call time). In containers without media libraries (such as
 this one) it raises ``NotImplementedError``, which the tolerant
@@ -11,9 +11,9 @@ with the same signature and batch shape a real (PIL/ffmpeg) decoder
 has.
 
 Scale design: payloads never pass through the driver; ``mapInPandas``
-streams Arrow batches executor-side, and ``repartition`` before the
-decode bounds per-task memory (a 100 MB video row can't be batched
-1000-wide — cap via ``spark.sql.execution.arrow.maxRecordsPerBatch``).
+streams Arrow batches executor-side (a 100 MB video row can't be
+batched 1000-wide — cap via
+``spark.sql.execution.arrow.maxRecordsPerBatch``).
 """
 
 from __future__ import annotations
@@ -29,14 +29,14 @@ FEATURE_SCHEMA = (
 )
 
 
-def attach_payload(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def attach_payload(docs: DataFrame) -> DataFrame:
     """Demo payload column: utf-8 bytes of the text stand in for a real
     media blob. Real ingestion would read binary files via
     ``spark.read.format('binaryFile')`` — identical downstream shape."""
     return docs.select(
         "doc_id",
         F.lit("image/fake").alias("media_type"),
-        F.encode(F.col(text_col), "UTF-8").alias("payload"),
+        F.encode(F.col("text"), "UTF-8").alias("payload"),
     )
 
 
@@ -81,11 +81,8 @@ def _pickle_by_value() -> None:
 def extract_features(
     media: DataFrame,
     decoder: Callable[[bytes], tuple[int, int, int]] = decode_image,
-    partitions: int | None = None,
 ) -> DataFrame:
     """Arrow-batched feature extraction over binary payloads."""
-    if partitions:
-        media = media.repartition(partitions)
     _pickle_by_value()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -123,14 +123,14 @@ def pq_encode(
     ksub = books[0].shape[0] if m else 0
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Reused-buffer discipline (round 13, similarity.py:328
-        # pattern): one hoisted (n, k_sub) distance buffer absorbs all
-        # m subspaces of every batch instead of m fresh GEMM outputs +
-        # m fresh scaled copies of x per batch — fresh-anon-page
-        # first-touch is the slow path on this host (SCALING.md round
-        # 12). −2·(x·Cᵀ) scales the GEMM output by an exact power of
-        # two, bit-identical to the old (−2·x)·Cᵀ fold (pinned by a
-        # ragged-batch test).
+        # Reused-buffer discipline (the pattern of
+        # similarity._blocked_cosine_pairs): one hoisted (n, k_sub)
+        # distance buffer absorbs all m subspaces of every batch
+        # instead of m fresh GEMM outputs + m fresh scaled copies of x
+        # per batch — first-touch of fresh anonymous pages is the slow
+        # path (SCALING.md). −2·(x·Cᵀ) scales the GEMM output by an
+        # exact power of two, so it is bit-identical to the (−2·x)·Cᵀ
+        # fold (pinned by a ragged-batch test).
         d2 = np.empty((0, ksub))
         for pdf in batches:
             if not len(pdf):
@@ -152,7 +152,7 @@ def pq_encode(
                 {"vec_id": pdf[id_col].to_numpy(), "codes": list(codes)}
             )
 
-    # r14: the encode GEMMs run map-side on the scan — spread so a
+    # the encode GEMMs run map-side on the scan — spread so a
     # single-row-group input doesn't serialize them (no-op when wide)
     from emission_project_spark.catalog.tables import spread_input
 

@@ -30,14 +30,23 @@ from emission_project_spark.functions.ranks import topk_per_query
 from emission_project_spark.functions.vectors import cosine_similarity
 
 ROUND = 6
+# blocks per side of the exact all-pairs grid (cosine_neardup_pairs)
+COSINE_BLOCKS = 8
+# left-block rows per GEMM in the block-pair kernel: bounds its
+# transient buffer to CHUNK_ROWS × |right block| doubles
+CHUNK_ROWS = 2048
+# members per LSH bucket above which the bucket is dropped
+LSH_MAX_BUCKET = 64
+# pool rows mmr_rerank may collect to the driver
+MMR_MAX_COLLECT = 10_000
 
 
 def _scored(vectors: DataFrame, query: DataFrame) -> DataFrame:
     """Cross-join vectors against (broadcast) query rows and score.
 
-    r14: spread_input before the map-side scoring pass — a single-row-
-    group corpus scan would run every cosine fold on one core (guide
-    §2.5); no-op when the scan is already wide."""
+    The scoring pass is map-side on the corpus scan, so ``spread_input``
+    goes first: a single-row-group scan would otherwise run every cosine
+    fold on one core. It is a no-op when the scan is already wide."""
     from emission_project_spark.catalog.tables import spread_input
 
     v = spread_input(vectors).select(
@@ -213,27 +222,23 @@ def ivf_topk_kmeans(
     )
 
 
-def cosine_neardup_pairs(
-    vectors: DataFrame,
-    threshold: float = 0.9,
-    n_blocks: int = 8,
-) -> DataFrame:
+def cosine_neardup_pairs(vectors: DataFrame, threshold: float = 0.9) -> DataFrame:
     """Exact embedding-cosine near-duplicate pairs (doc-level dedup by
     embedding): all (a < b) pairs with cosine ≥ threshold.
 
     Both sides blocked — no driver materialization anywhere. Vectors
-    hash into ``n_blocks`` blocks; every unordered block pair (i ≤ j)
+    hash into ``COSINE_BLOCKS`` blocks; every unordered block pair (i ≤ j)
     becomes one ``applyInPandas`` group holding block i as the left
     matrix and block j as the right, scored with a single BLAS matmul.
     Exact all-pairs is inherently O(n²) compute, but memory per task is
-    two blocks (n/n_blocks × d doubles) and shuffle is n_blocks× the
-    input — both tunable, neither driver-bound. Size ``n_blocks`` so a
-    block fits an executor core's memory (e.g. 1M×256d ≈ 2 GB total →
-    32 blocks ≈ 64 MB per side). The subquadratic sibling for corpus
-    scale is ``lsh_neardup_pairs``.
+    two blocks (n/COSINE_BLOCKS × d doubles) and shuffle is
+    COSINE_BLOCKS× the input — neither driver-bound. A block must fit
+    an executor core's memory (e.g. 1M×256d ≈ 2 GB total → 32 blocks ≈
+    64 MB per side). The subquadratic sibling for corpus scale is
+    ``lsh_neardup_pairs``.
     """
     return _blocked_cosine_pairs(
-        vectors.select("vec_id", "embedding"), threshold, n_blocks, group_cols=[]
+        vectors.select("vec_id", "embedding"), threshold, COSINE_BLOCKS, group_cols=[]
     )
 
 
@@ -242,7 +247,6 @@ def _blocked_cosine_pairs(
     threshold: float,
     n_blocks: int,
     group_cols: list[str],
-    chunk_rows: int = 2048,
 ) -> DataFrame:
     """Block-pair grid kernel shared by exact and cluster-scoped cosine
     pair search. ``src`` carries (vec_id, embedding, *group_cols); pairs
@@ -273,6 +277,7 @@ def _blocked_cosine_pairs(
         *base,
     )
     n_group = len(group_cols)
+    CH = CHUNK_ROWS  # read on the driver: the kernel ships this value
     out_prefix = [f"{c} bigint" for c in group_cols]
     schema = ", ".join(out_prefix + ["doc_a bigint", "doc_b bigint", "cosine_sim double"])
 
@@ -296,19 +301,15 @@ def _blocked_cosine_pairs(
         if empty:
             a = b = sims_out = []
         else:
-            # Chunked GEMM through ONE reused output buffer (round 12).
-            # The previous full `l_mat @ r_mat.T` materialized a fresh
-            # |L|×|R| float64 matrix per block-pair (1.25 GB at sf10
-            # geometry); on this host, FAULTING fresh anon memory is up
-            # to 150× slower than writing resident memory (measured
-            # 0.01-0.78 GB/s first-touch vs 1.5-1.7 GB/s rewrite —
-            # host-level page-fault service, SCALING.md round 12), so
-            # the allocation dominated the kernel: a 17-worker
-            # standalone repro ran 265 s/rep full vs 29.6 s/rep
-            # chunked with bit-identical outputs. Chunking also bounds
-            # transient memory to CH×|R|×8 B regardless of block size —
-            # the right shape at 100 TB anyway.
-            CH = chunk_rows
+            # Chunked GEMM through ONE reused output buffer: a full
+            # `l_mat @ r_mat.T` faults in a fresh |L|×|R| float64
+            # matrix per block-pair (1.25 GB at sf10 geometry), and
+            # faulting fresh anonymous memory can be 150× slower than
+            # rewriting resident memory (0.01-0.78 GB/s first-touch vs
+            # 1.5-1.7 GB/s rewrite, SCALING.md); a 17-worker standalone
+            # repro ran 265 s/rep full vs 29.6 s/rep chunked with
+            # bit-identical outputs. Transient memory is CH×|R|×8 B
+            # whatever the block size.
             buf = np.empty((min(CH, len(l_ids)), len(r_ids)))
             a_parts, b_parts, s_parts = [], [], []
             for s in range(0, len(l_ids), CH):
@@ -385,11 +386,9 @@ def semantic_neardup_pairs(
 
 def lsh_neardup_pairs(
     vectors: DataFrame,
+    dim: int,
     threshold: float = 0.9,
     n_planes: int = 16,
-    max_bucket: int | None = 64,
-    dim: int | None = None,
-    infer_dim: bool = False,
 ) -> DataFrame:
     """Approximate (subquadratic) embedding near-dup: random-hyperplane
     LSH — the 100 TB path where exact all-pairs can't run.
@@ -401,8 +400,8 @@ def lsh_neardup_pairs(
     bigger buckets → higher recall, more compute). Candidate
     generation is a hash-bucket group-by — same shape as minhash LSH.
 
-    ``max_bucket`` (ON BY DEFAULT) skips buckets holding more members
-    than the cap: with correlated embeddings one bucket can attract a
+    ``LSH_MAX_BUCKET`` skips buckets holding more members than the
+    cap: with correlated embeddings one bucket can attract a
     large corpus fraction, and an uncapped ``collect_list`` of full
     embedding structs is both a quadratic pair explosion and an
     executor OOM. A hot bucket means the planes don't separate that
@@ -410,23 +409,11 @@ def lsh_neardup_pairs(
     the cap: pairs whose only shared bucket is hot are silently absent
     (recall loss, never precision loss — survivors are exact-verified);
     the dropped mass is measurable by aggregating the same signature
-    expression to bucket sizes and filtering > max_bucket.
+    expression to bucket sizes and filtering > LSH_MAX_BUCKET.
 
-    Pass ``dim`` (the embedding dimensionality — a schema-level fact
-    the caller knows): plan construction is then action-free. Probing
-    the dimension from the first row launches a Spark job at PLAN-BUILD
-    time — fine interactively, wrong inside compile-only tooling or a
-    lazily-composed pipeline — so it is opt-in via ``infer_dim=True``
-    rather than a silent fallback.
+    ``dim`` is the embedding dimensionality, a schema-level fact the
+    caller knows, so building the plan launches no Spark job.
     """
-    if dim is None:
-        if not infer_dim:
-            raise ValueError(
-                "lsh_neardup_pairs needs the embedding dimensionality: pass "
-                "dim=<n> (keeps plan construction action-free), or opt into "
-                "a first-row probe job with infer_dim=True"
-            )
-        dim = len(vectors.select("embedding").first()[0])
     # deterministic ±1 plane matrix: sign of a hash bit per (plane, dim)
     planes = [
         [
@@ -451,17 +438,16 @@ def lsh_neardup_pairs(
         term = bit * F.lit(1 << p).cast("long")
         sig = term if sig is None else sig + term
     bucketed = vectors.select("vec_id", "embedding", sig.alias("bucket"))
-    if max_bucket:
-        # Drop hot buckets BEFORE collecting embedding structs — the
-        # count pass carries only (bucket) keys, so the cap is enforced
-        # without ever materializing an oversized members array.
-        kept = (
-            bucketed.groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") <= max_bucket)
-            .select("bucket")
-        )
-        bucketed = bucketed.join(kept, "bucket")
+    # Drop hot buckets BEFORE collecting embedding structs — the count
+    # pass carries only (bucket) keys, so the cap is enforced without
+    # ever materializing an oversized members array.
+    kept = (
+        bucketed.groupBy("bucket")
+        .agg(F.count(F.lit(1)).alias("_n"))
+        .filter(F.col("_n") <= LSH_MAX_BUCKET)
+        .select("bucket")
+    )
+    bucketed = bucketed.join(kept, "bucket")
     buckets = bucketed.groupBy("bucket").agg(
         F.collect_list(F.struct("vec_id", "embedding")).alias("members")
     )
@@ -497,12 +483,7 @@ def _md5_hex(s: str) -> str:
     return hashlib.md5(s.encode()).hexdigest()
 
 
-def centroid_classify(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-) -> DataFrame:
+def centroid_classify(emb: DataFrame) -> DataFrame:
     """Nearest-centroid (Rocchio) classification of the whole corpus:
     per-label mean vector, then every vector assigned to its nearest
     centroid by squared L2 (tie -> smaller label).
@@ -527,9 +508,9 @@ def centroid_classify(
     )
 
     vecs = emb.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(label_col).cast("bigint").alias("true_label"),
-        F.col(vec_col).cast("array<double>").alias("e"),
+        F.col("vec_id").alias("vec_id"),
+        F.col("label").cast("bigint").alias("true_label"),
+        F.col("embedding").cast("array<double>").alias("e"),
     )
     cents = recompute_centroids(
         vecs.select(F.col("true_label").alias("cluster_id"), "e")
@@ -547,7 +528,6 @@ def mmr_rerank(
     k: int = 10,
     pool: int = 30,
     lam: float = 0.7,
-    max_collect: int = 10_000,
 ) -> DataFrame:
     """Maximal Marginal Relevance re-ranking (Carbonell & Goldstein
     1998): from each query's cosine top-``pool`` shortlist, greedily
@@ -562,11 +542,11 @@ def mmr_rerank(
     which is collected like the k-means centroid sets — bounded by
     construction, never data-sized. The collect itself is a VALIDATED
     bound, not a convention: the pool relation is fetched through
-    ``limit(max_collect + 1)`` and the function raises if the limit is
-    hit, so a caller passing a corpus-sized query set gets a loud
+    ``limit(MMR_MAX_COLLECT + 1)`` and the function raises if the limit
+    is hit, so a caller passing a corpus-sized query set gets a loud
     error instead of a silent driver-sized collect. Driver memory is
-    bounded IN THE PLAN on both collects: ≤ ``max_collect`` pool rows
-    and ≤ ``max_collect·pool`` pairwise-sim rows (the sims relation is
+    bounded IN THE PLAN on both collects: ≤ ``MMR_MAX_COLLECT`` pool rows
+    and ≤ ``MMR_MAX_COLLECT·pool`` pairwise-sim rows (the sims relation is
     inherently ~pool× the pool). All relevance/similarity values
     are rounded (ROUND) BEFORE the greedy walk, so the selection
     sequence is reproducible across engines bit-for-bit; ties break to
@@ -599,12 +579,13 @@ def mmr_rerank(
     # centroid-collect precedent, never data-sized; limit() puts the
     # bound IN THE PLAN so an oversized query set can't reach the
     # driver before the guard fires
+    max_collect = MMR_MAX_COLLECT
     pool_rows = pool_df.limit(max_collect + 1).collect()
     if len(pool_rows) > max_collect:
         raise ValueError(
             f"mmr_rerank pool relation exceeds max_collect={max_collect} "
-            f"rows (n_queries × pool too large) — shrink the query set, "
-            f"lower pool={pool}, or raise max_collect explicitly"
+            f"rows (n_queries × pool too large) — shrink the query set "
+            f"or lower pool={pool}"
         )
     rels: dict = {}
     for r in pool_rows:
@@ -618,8 +599,8 @@ def mmr_rerank(
     if len(sims_rows) > sims_cap:
         raise ValueError(
             f"mmr_rerank pairwise-sims relation exceeds "
-            f"max_collect*pool={sims_cap} rows — shrink the query set, "
-            f"lower pool={pool}, or raise max_collect explicitly"
+            f"max_collect*pool={sims_cap} rows — shrink the query set "
+            f"or lower pool={pool}"
         )
     sims: dict = {}
     for r in sims_rows:

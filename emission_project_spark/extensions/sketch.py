@@ -34,19 +34,19 @@ def _bucket(depth_col, term_col, width: int):
     return h % width
 
 
-def count_min_build(
-    terms: DataFrame,
-    term_col: str = "term",
-    depth: int = DEFAULT_DEPTH,
-    width: int = DEFAULT_WIDTH,
-) -> DataFrame:
-    """Build the sketch: ``(depth, bucket, cnt)`` — one row per non-empty
-    cell. One pass over the term stream: each occurrence fans out to
-    ``depth`` (row, bucket) cells via a small explode, then a single
-    hash aggregate whose keyspace is ≤ depth·width (map-side combine
-    collapses everything before the shuffle)."""
-    d = F.explode(F.sequence(F.lit(0), F.lit(depth - 1))).alias("depth")
-    fanned = terms.select(F.col(term_col).alias("_t"), d)
+def _depths():
+    """One row per sketch row ``depth`` in [0, DEFAULT_DEPTH), exploded."""
+    return F.explode(F.sequence(F.lit(0), F.lit(DEFAULT_DEPTH - 1))).alias("depth")
+
+
+def count_min_build(terms: DataFrame, width: int = DEFAULT_WIDTH) -> DataFrame:
+    """Build the sketch over the ``term`` column: ``(depth, bucket,
+    cnt)`` — one row per non-empty cell. One pass over the term
+    stream: each occurrence fans out to ``DEFAULT_DEPTH`` (row, bucket)
+    cells via a small explode, then a single hash aggregate whose
+    keyspace is ≤ depth·width (map-side combine collapses everything
+    before the shuffle)."""
+    fanned = terms.select(F.col("term").alias("_t"), _depths())
     return (
         fanned.select("depth", _bucket(F.col("depth"), F.col("_t"), width).alias("bucket"))
         .groupBy("depth", "bucket")
@@ -54,25 +54,19 @@ def count_min_build(
     )
 
 
-def count_min_estimate(
-    sketch: DataFrame,
-    queries: DataFrame,
-    term_col: str = "term",
-    depth: int = DEFAULT_DEPTH,
-    width: int = DEFAULT_WIDTH,
-) -> DataFrame:
-    """Point-estimate each query term's frequency: min over the sketch
-    rows of the term's cell counters. The sketch (≤ depth·width rows)
-    broadcasts; estimation is a map-side join + one small aggregate."""
-    d = F.explode(F.sequence(F.lit(0), F.lit(depth - 1))).alias("depth")
-    probes = queries.select(F.col(term_col).alias(term_col), d).select(
-        term_col,
+def count_min_estimate(sketch: DataFrame, queries: DataFrame) -> DataFrame:
+    """Point-estimate each query ``term``'s frequency: min over the
+    sketch rows of the term's cell counters, for a sketch built at
+    ``DEFAULT_WIDTH``. The sketch (≤ depth·width rows) broadcasts;
+    estimation is a map-side join + one small aggregate."""
+    probes = queries.select(F.col("term").alias("term"), _depths()).select(
+        "term",
         "depth",
-        _bucket(F.col("depth"), F.col(term_col), width).alias("bucket"),
+        _bucket(F.col("depth"), F.col("term"), DEFAULT_WIDTH).alias("bucket"),
     )
     return (
         probes.join(F.broadcast(sketch), ["depth", "bucket"], "left")
-        .groupBy(term_col)
+        .groupBy("term")
         .agg(F.min(F.coalesce(F.col("cnt"), F.lit(0))).alias("cms_estimate"))
     )
 
@@ -85,28 +79,16 @@ def count_min_estimate(
 # negatives; false-positive rate falls as width grows.
 
 
-def bloom_build(
-    keys: DataFrame,
-    key_col: str = "key",
-    depth: int = DEFAULT_DEPTH,
-    width: int = DEFAULT_WIDTH,
-) -> DataFrame:
-    """Build the sparse filter ``(depth, bucket)`` over the key set."""
-    d = F.explode(F.sequence(F.lit(0), F.lit(depth - 1))).alias("depth")
+def bloom_build(keys: DataFrame) -> DataFrame:
+    """Build the sparse filter ``(depth, bucket)`` over the ``key`` set."""
     return (
-        keys.select(F.col(key_col).alias("_k"), d)
-        .select("depth", _bucket(F.col("depth"), F.col("_k"), width).alias("bucket"))
+        keys.select(F.col("key").alias("_k"), _depths())
+        .select("depth", _bucket(F.col("depth"), F.col("_k"), DEFAULT_WIDTH).alias("bucket"))
         .distinct()
     )
 
 
-def bloom_contains(
-    bloom: DataFrame,
-    queries: DataFrame,
-    key_col: str = "key",
-    depth: int = DEFAULT_DEPTH,
-    width: int = DEFAULT_WIDTH,
-) -> DataFrame:
+def bloom_contains(bloom: DataFrame, queries: DataFrame) -> DataFrame:
     """Probe: adds boolean ``possibly_present`` — true iff ALL depth bit
     positions of the key are set. Guaranteed true for every inserted
     key (no false negatives); may be true for absent keys at the
@@ -117,17 +99,16 @@ def bloom_contains(
     would otherwise contribute k rows per depth and a partial match
     (depth/k bits set) could masquerade as a full match in the
     all-bits count."""
-    d = F.explode(F.sequence(F.lit(0), F.lit(depth - 1))).alias("depth")
-    probes = queries.select(F.col(key_col)).distinct().select(F.col(key_col), d).select(
-        key_col,
+    probes = queries.select(F.col("key")).distinct().select(F.col("key"), _depths()).select(
+        "key",
         "depth",
-        _bucket(F.col("depth"), F.col(key_col), width).alias("bucket"),
+        _bucket(F.col("depth"), F.col("key"), DEFAULT_WIDTH).alias("bucket"),
     )
     hit = F.when(F.col("_hit").isNotNull(), 1).otherwise(0)
     return (
         probes.join(
             F.broadcast(bloom.withColumn("_hit", F.lit(1))), ["depth", "bucket"], "left"
         )
-        .groupBy(key_col)
-        .agg((F.sum(hit) == depth).alias("possibly_present"))
+        .groupBy("key")
+        .agg((F.sum(hit) == DEFAULT_DEPTH).alias("possibly_present"))
     )

@@ -31,18 +31,15 @@ def date_parts(c: Column | str) -> dict[str, Column]:
     }
 
 
-def date_dim(
-    spark: SparkSession,
-    start: str = "2010-01-01",
-    end: str = "2030-01-01",
-) -> DataFrame:
-    """Generated date dimension, 7,306 rows for the reference's range.
+def date_dim(spark: SparkSession) -> DataFrame:
+    """Generated date dimension over the reference's range, 2010-01-01
+    to 2030-01-01 inclusive: 7,306 rows.
 
     Spark-first: ``explode(sequence(...))`` — generated distributedly,
     no driver-side pandas ``date_range`` materialization.
     """
     base = spark.sql(
-        f"SELECT explode(sequence(to_date('{start}'), to_date('{end}'), "
+        "SELECT explode(sequence(to_date('2010-01-01'), to_date('2030-01-01'), "
         "interval 1 day)) AS date"
     )
     parts = date_parts("date")

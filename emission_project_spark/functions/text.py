@@ -47,10 +47,10 @@ def punct_ratio(c: Column | str) -> Column:
     return F.when(F.length(col) > 0, F.length(stripped) / F.length(col)).otherwise(F.lit(0.0))
 
 
-def stopword_ratio(c: Column | str, stopwords: tuple[str, ...] = LANG_MARKERS["en"]) -> Column:
-    """Fraction of tokens that are (lowercase) stopwords."""
+def stopword_ratio(c: Column | str) -> Column:
+    """Fraction of tokens that are (lowercase) English stopwords."""
     toks = tokens(F.lower(_c(c)))
-    hits = F.size(F.filter(toks, lambda t: t.isin(*stopwords)))
+    hits = F.size(F.filter(toks, lambda t: t.isin(*LANG_MARKERS["en"])))
     n = F.size(toks)
     return F.when(n > 0, hits / n).otherwise(F.lit(0.0))
 

@@ -31,17 +31,20 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# propagation rounds before giving up: a graph needs as many rounds as
+# its diameter
+MAX_ROUNDS = 25
+
 
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 25,
 ) -> DataFrame:
     """Label every node that appears in ``edges`` with the minimum node
     id of its connected component. Returns ``(id, component_id)``.
 
-    ``max_iter`` bounds the rounds (= graph diameter); propagation
+    ``MAX_ROUNDS`` bounds the rounds (= graph diameter); propagation
     stops early at fixpoint, detected by the sum-of-labels probe:
     labels only ever decrease, so ``sum(comp)`` strictly decreases
     until fixpoint (decimal(38,0) so the probe can't overflow at
@@ -50,7 +53,7 @@ def connected_components(
     aggregate is the action that materializes them — one Spark job per
     round, no separate convergence pass.
 
-    Raises ``RuntimeError`` if ``max_iter`` rounds pass without
+    Raises ``RuntimeError`` if ``MAX_ROUNDS`` rounds pass without
     reaching the fixpoint — partially-propagated labels are wrong
     labels, never returned silently.
     """
@@ -72,7 +75,7 @@ def connected_components(
     labels = labels.localCheckpoint(eager=False)
     prev_sum = labels.agg(probe).first()[0]
 
-    for _ in range(max_iter):
+    for _ in range(MAX_ROUNDS):
         nbr_labels = (
             sym.join(labels.withColumnRenamed("id", "nbr"), "nbr")
             .select("id", "comp")
@@ -89,8 +92,8 @@ def connected_components(
         prev_sum = new_sum
     else:
         raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds; "
-            "raise max_iter (graph diameter exceeds the bound)"
+            f"connected_components did not converge: the graph's diameter "
+            f"exceeds the {MAX_ROUNDS}-round bound"
         )
 
     return labels.select("id", F.col("comp").alias("component_id"))

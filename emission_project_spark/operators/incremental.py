@@ -91,11 +91,10 @@ def apply_cdc(
     changes: DataFrame,
     keys: Sequence[str],
     seq_col: str,
-    op_col: str = "op",
 ) -> DataFrame:
     """Apply a change-data-capture batch (the Debezium/binlog feed
     shape): ``changes`` carries the key columns, the data columns, an
-    ``op_col`` ∈ {'u' (upsert), 'd' (delete)}, and a ``seq_col`` total
+    ``op`` ∈ {'u' (upsert), 'd' (delete)}, and a ``seq_col`` total
     order (log offset / LSN). Per key, the LATEST change wins; a final
     'u' replaces the row, a final 'd' removes it; untouched keys pass
     through.
@@ -120,5 +119,5 @@ def apply_cdc(
     )
     touched = latest.select(*keys)
     kept = anti_join(existing, touched, keys)
-    upserts = latest.filter(F.col(op_col) == "u").drop(op_col, seq_col)
+    upserts = latest.filter(F.col("op") == "u").drop("op", seq_col)
     return kept.unionByName(upserts)

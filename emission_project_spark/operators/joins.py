@@ -6,8 +6,8 @@ merge; verified in SURVEY.md §4.4 on the real data), and anti-joins via
 the ``indicator=True`` + ``_merge == 'left_only'`` idiom
 (reference ``dags/emission-dag.py:83-84,105-109,131-132,153-154,205-208``).
 
-Spark-first mapping: a single parameterized null-safe equi-join built
-from ``<=>`` (``eqNullSafe``) predicates. Catalyst still recognizes
+Spark-first mapping: one null-safe equi-join condition built from
+``<=>`` (``eqNullSafe``) predicates. Catalyst still recognizes
 ``<=>`` conjunctions as hash-joinable equi-conditions, so these compile
 to broadcast-hash or shuffled-hash joins, not nested loops — at 100 TB
 the dim side broadcasts and the fact side never shuffles.
@@ -25,9 +25,8 @@ def _key_condition(
     left: DataFrame,
     right: DataFrame,
     on: Iterable[str] | Mapping[str, str],
-    null_safe: bool = True,
 ) -> Column:
-    """Build the conjunctive equi-join condition.
+    """Build the conjunctive null-safe equi-join condition.
 
     ``on`` is either a list of shared column names or a mapping
     ``{left_col: right_col}`` for disparate key names (the reference's
@@ -37,7 +36,7 @@ def _key_condition(
     pairs = list(on.items()) if isinstance(on, Mapping) else [(c, c) for c in on]
     cond = None
     for lc, rc in pairs:
-        piece = left[lc].eqNullSafe(right[rc]) if null_safe else (left[lc] == right[rc])
+        piece = left[lc].eqNullSafe(right[rc])
         cond = piece if cond is None else (cond & piece)
     if cond is None:
         raise ValueError("join requires at least one key column")
@@ -50,7 +49,6 @@ def join_nullsafe(
     on: Iterable[str] | Mapping[str, str],
     how: str = "left",
     broadcast_right: bool = False,
-    null_safe: bool = True,
 ) -> DataFrame:
     """Null-safe multi-key equi-join; drops the right-side key columns.
 
@@ -62,7 +60,7 @@ def join_nullsafe(
     """
     pairs = list(on.items()) if isinstance(on, Mapping) else [(c, c) for c in on]
     rhs = F.broadcast(right) if broadcast_right else right
-    cond = _key_condition(left, rhs, on, null_safe=null_safe)
+    cond = _key_condition(left, rhs, on)
     out = left.join(rhs, cond, how)
     for _, rc in pairs:
         out = out.drop(rhs[rc])
@@ -73,7 +71,6 @@ def anti_join(
     left: DataFrame,
     right: DataFrame,
     on: Iterable[str] | Mapping[str, str],
-    null_safe: bool = True,
 ) -> DataFrame:
     """Rows of ``left`` with no null-safe key match in ``right``.
 
@@ -83,19 +80,16 @@ def anti_join(
     direct, shuffle-minimal equivalent — no indicator columns, no
     ``_x/_y`` suffix wrangling.
     """
-    cond = _key_condition(left, right, on, null_safe=null_safe)
-    return left.join(right, cond, "left_anti")
+    return left.join(right, _key_condition(left, right, on), "left_anti")
 
 
 def semi_join(
     left: DataFrame,
     right: DataFrame,
     on: Iterable[str] | Mapping[str, str],
-    null_safe: bool = True,
 ) -> DataFrame:
-    """Rows of ``left`` with at least one key match in ``right``."""
-    cond = _key_condition(left, right, on, null_safe=null_safe)
-    return left.join(right, cond, "left_semi")
+    """Rows of ``left`` with at least one null-safe key match in ``right``."""
+    return left.join(right, _key_condition(left, right, on), "left_semi")
 
 
 def join_dim_role(

@@ -54,13 +54,12 @@ _EDGE_LEVEL = StorageLevel.MEMORY_AND_DISK
 
 def pagerank(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     iterations: int = 5,
     damping: float = 0.85,
     assume_full_in_edges: bool = False,
 ) -> DataFrame:
-    """Rank nodes of a directed edge list; returns (node, degree, rank).
+    """Rank nodes of a directed ``(src, dst)`` edge list; returns
+    (node, degree, rank).
 
     Uses the uniform-start formulation r0 = 1, r_{k+1}(v) = (1-d) +
     d·Σ_{(u,v)} r_k(u)/out_deg(u), whose fixed point sums to N (the
@@ -84,7 +83,7 @@ def pagerank(
     # second exchange — and leaves the partitions src-clustered, which
     # the cache preserves for the iterations' merge joins.
     e = (
-        edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst"))
+        edges.select(F.col("src").alias("_src"), F.col("dst").alias("_dst"))
         .repartition(F.col("_src"))
         .withColumn(
             "_deg", F.count(F.lit(1)).over(Window.partitionBy("_src"))

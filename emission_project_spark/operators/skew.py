@@ -8,7 +8,7 @@ reducers. Two standard remedies, both pure DataFrame compositions:
   [0, salts); the small side is exploded ``salts``× so every
   (key, salt) bucket still finds its match. The hot key's rows now
   spread over ``salts`` reducers. Result is row-identical to the
-  unsalted join (inner/left) — only the physical distribution changes.
+  unsalted inner join — only the physical distribution changes.
 - **salted aggregation**: two-phase group-by — partial aggregate on
   (key, salt), final merge on key. Spark's hash aggregate already does
   map-side partials for decomposable functions, which covers most
@@ -29,33 +29,24 @@ from collections.abc import Iterable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-DEFAULT_SALTS = 16
+SALTS = 16
 _SALT = "__salt"
 
 
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    on: Iterable[str],
-    how: str = "inner",
-    salts: int = DEFAULT_SALTS,
-    seed: int = 7,
-) -> DataFrame:
-    """Equi-join with the big side salted and the small side exploded.
+def salted_join(big: DataFrame, small: DataFrame, on: Iterable[str]) -> DataFrame:
+    """Inner equi-join with the big side salted and the small side
+    exploded.
 
-    ``on`` must be shared column names. ``how`` is 'inner' or 'left'
-    (the semantics-preserving cases: every big-side row keeps exactly
-    the matches it had). The salt is uniform random — correctness does
-    not depend on its value, only distribution does.
+    ``on`` must be shared column names. Every big-side row keeps
+    exactly the matches it had. The salt is uniform random (seeded) —
+    correctness does not depend on its value, only distribution does.
     """
-    if how not in ("inner", "left"):
-        raise ValueError("salted_join preserves semantics for how='inner'|'left' only")
     keys = list(on)
-    salted_big = big.withColumn(_SALT, (F.rand(seed) * salts).cast("int"))
+    salted_big = big.withColumn(_SALT, (F.rand(7) * SALTS).cast("int"))
     exploded_small = small.withColumn(
-        _SALT, F.explode(F.array(*[F.lit(i) for i in range(salts)]))
+        _SALT, F.explode(F.array(*[F.lit(i) for i in range(SALTS)]))
     )
-    out = salted_big.join(exploded_small, [*keys, _SALT], how)
+    out = salted_big.join(exploded_small, [*keys, _SALT], "inner")
     return out.drop(_SALT)
 
 
@@ -91,8 +82,6 @@ def salted_aggregate(
     df: DataFrame,
     keys: Iterable[str],
     aggs: dict[str, tuple[str, str]],
-    salts: int = DEFAULT_SALTS,
-    seed: int = 7,
 ) -> DataFrame:
     """Two-phase (salted) group-by for decomposable aggregates.
 
@@ -124,6 +113,6 @@ def salted_aggregate(
             )
         else:
             raise ValueError(f"non-decomposable aggregate: {fn}")
-    salted = df.withColumn(_SALT, (F.rand(seed) * salts).cast("int"))
+    salted = df.withColumn(_SALT, (F.rand(7) * SALTS).cast("int"))
     partial = salted.groupBy(*keys, _SALT).agg(*partial_exprs)
     return partial.groupBy(*keys).agg(*final_exprs)

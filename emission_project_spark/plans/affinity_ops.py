@@ -354,7 +354,7 @@ def graph_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # hub cap (deg ≤ 64) excludes promiscuous nodes from GENERATING
 # wedge pairs — the standard recall trade that keeps the fanout
 # Σ deg² bounded under skew, mirrored exactly in the oracle (same
-# pattern as dedup_ngram_jaccard's max_doc_freq cap). Scores are
+# pattern as dedup_ngram_jaccard's MAX_DOC_FREQ cap). Scores are
 # sums of 1/ln(integer): addition order differs between engines only
 # at ~1e-15, absorbed by the 1e-6 round.
 @register(
@@ -566,7 +566,7 @@ def _shingles5(docs: DataFrame) -> DataFrame:
 # WWW'08) over 5-gram shingle sets. This is the exact-and-COMPLETE
 # counterpart to the recall-lossy detectors already in the registry:
 # MinHash-LSH is probabilistic, and dedup_ngram_jaccard's inverted
-# index drops stop-shingles above max_doc_freq; prefix filtering
+# index drops stop-shingles above MAX_DOC_FREQ; prefix filtering
 # guarantees zero false negatives at any scale. The trick: order the
 # shingle universe by ascending document frequency (rarest first);
 # a doc with n shingles can match some partner at Jaccard ≥ τ only

@@ -78,6 +78,9 @@ _CELL_CHUNK = 2048
 # corpus passes. Module-level so a tiny-group test can pin the
 # multi-pass path against the oracle.
 _SHARD_GROUP = 64
+# _ivf_assign: centroids per slice (the ``cap``) for embedding_hubness_ivf;
+# module-level so a test can force several slices on a small corpus
+_MAX_CENTROIDS = 8192
 # cell_topk runs on Python workers, which need not have this package on
 # their path; by value, it also carries the _CELL_CHUNK set at plan build
 cloudpickle.register_pickle_by_value(sys.modules[__name__])
@@ -1796,7 +1799,7 @@ def _degree_hubness_readout(indeg: DataFrame) -> DataFrame:
 # --- full-corpus hubness over the IVF kNN source: every vector's 5-NN
 # is searched within its IVF cell only, with √n centroids (the flat-IVF
 # optimum: assignment n·√n + in-cell scoring n·√n ≈ n^1.5 total, vs the
-# sample-free n² graph). Above max_centroids the assignment argmax runs
+# sample-free n² graph). Above _MAX_CENTROIDS the assignment argmax runs
 # over several centroid slices (_ivf_assign, exact by construction),
 # and the cell-bucketed kNN is already the shape that scales out:
 # candidates co-locate by cell, no broadcast of a corpus-sized query
@@ -1872,9 +1875,7 @@ def _degree_hubness_readout(indeg: DataFrame) -> DataFrame:
     GROUP BY i.d, sk.skew
     """,
 )
-def embedding_hubness_ivf(
-    spark: SparkSession, sf_dir: str, max_centroids: int = 8192
-) -> DataFrame:
+def embedding_hubness_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Both phases are dense dot batches, so both run as Arrow kernels
     # (per-pair JVM HOF dots measured 878 s at sf10, ~all of it
     # expression interpretation): the assignment GEMM V@Cᵀ in
@@ -1897,7 +1898,7 @@ def embedding_hubness_ivf(
     # GEMM runs wide (×1.28 at sf10, OPTIMIZATION_r14.md §G). The count
     # and the centroid collect stay on the raw relation (no exchange
     # for a driver-side probe).
-    assigned = _ivf_assign(spread_input(emb), cents, max_centroids)
+    assigned = _ivf_assign(spread_input(emb), cents, _MAX_CENTROIDS)
     return _cell_knn_hubness(emb, assigned)
 
 

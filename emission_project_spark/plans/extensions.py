@@ -186,8 +186,8 @@ _SHINGLE_SQL = """
     oracle=f"""
     WITH {_SHINGLE_SQL},
     sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    -- document-frequency cap mirrors the operator's default
-    -- max_doc_freq=64 (stop-shingles generate no candidate pairs)
+    -- document-frequency cap mirrors the operator's
+    -- MAX_DOC_FREQ=64 (stop-shingles generate no candidate pairs)
     kept AS (
         SELECT shingle FROM sh GROUP BY shingle HAVING count(*) <= 64
     ),
@@ -214,7 +214,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # |A∩B| / min(|A|,|B|) — the sub-document-copy detector. A short doc
 # fully quoted inside a long one scores C=1.0 while Jaccard ~0, so
 # this surface catches truncation/quotation chains the symmetric
-# detectors miss. Same inverted-index plan (and the same max_doc_freq
+# detectors miss. Same inverted-index plan (and the same MAX_DOC_FREQ
 # recall cap + lower-bound contract) as dedup_ngram_jaccard; output
 # oriented src=contained side, ties to the smaller id.
 @register(
@@ -895,7 +895,7 @@ def dedup_semantic_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                sum(CASE WHEN dot >= 0 THEN (1::BIGINT << p) ELSE 0 END) AS bucket
         FROM comps GROUP BY vec_id
     ),
-    -- hot-bucket cap mirrors the operator's default max_bucket=64
+    -- hot-bucket cap mirrors the operator's LSH_MAX_BUCKET=64
     kept AS (
         SELECT bucket FROM buckets GROUP BY bucket HAVING count(*) <= 64
     ),
@@ -1926,11 +1926,11 @@ def stream_windowed_distinct_batch(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-# --- Observability for the max_doc_freq recall cap (ADVICE round 2:
+# --- Observability for the MAX_DOC_FREQ recall cap (ADVICE round 2:
 # capped paths must emit a signal, not truncate silently). One summary
 # row quantifying what a cap of 3 would drop from the shingle inverted
 # index — the cap here is intentionally LOW so the report path is
-# exercised with nonzero counts at test scale (the operator default
+# exercised with nonzero counts at test scale (the operators' cap
 # stays 64).
 @register(
     "dedup_bucket_cap_report",
@@ -2853,7 +2853,7 @@ def curation_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
                left(text, 16) AS pre, right(text, 16) AS suf
         FROM documents
     ),
-    -- the max_block=256 hot-block cap, per pass
+    -- the LEV_MAX_BLOCK=256 hot-block cap, per pass
     bp AS (
         SELECT * FROM (
             SELECT b.*, count(*) OVER (PARTITION BY lang, source, lb, pre) AS bn
@@ -3706,7 +3706,7 @@ def text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- LSH banding quality, measured: MinHash candidate pairs scored
 # against exact shingle-set Jaccard on the SAME inverted-index
-# universe (identical max_doc_freq cap on both sides, so the readout
+# universe (identical MAX_DOC_FREQ cap on both sides, so the readout
 # grades the BANDING approximation, not the cap). precision@0.5 =
 # candidates that are true near-dups; recall@0.5 = true near-dups the
 # bands surfaced. This is the number to check before trusting an LSH

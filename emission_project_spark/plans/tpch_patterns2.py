@@ -34,9 +34,9 @@ from emission_project_spark.catalog.tables import load_table
 from emission_project_spark.plans.registry import register
 
 
-def _rev_e4(price: str = "l_extendedprice", disc: str = "l_discount"):
+def _rev_e4():
     """Exact per-line revenue on the 1e-4 grid, as BIGINT."""
-    return F.round(F.col(price) * (1 - F.col(disc)) * 10000, 0).cast("bigint")
+    return F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10000, 0).cast("bigint")
 
 
 _REV_E4_SQL = "CAST(round(l.l_extendedprice * (1 - l.l_discount) * 10000) AS BIGINT)"

@@ -29,19 +29,19 @@ from pyspark.sql.types import StructType
 ARCHIVE_TS_FMT = "%d_%m_%Y_%H_%M_%S"  # reference suffix format
 
 
-def feed_files(incoming_dir: str, pattern: str = "*.csv") -> list[str]:
-    return sorted(glob.glob(os.path.join(incoming_dir, pattern)))
+def feed_files(incoming_dir: str) -> list[str]:
+    return sorted(glob.glob(os.path.join(incoming_dir, "*.csv")))
 
 
 def read_feed(
     spark: SparkSession,
     incoming_dir: str,
     schema: StructType,
-    header: bool = True,
     rename: dict[str, str] | None = None,
 ) -> tuple[DataFrame, list[str]]:
-    """Read all pending CSVs for a feed, or an empty schema-contract
-    DataFrame when none are pending. Returns (df, consumed_paths)."""
+    """Read all pending CSVs (each with a header row) for a feed, or an
+    empty schema-contract DataFrame when none are pending. Returns
+    (df, consumed_paths)."""
     files = feed_files(incoming_dir)
     if not files:
         out_schema = schema
@@ -50,7 +50,7 @@ def read_feed(
                 [f.__class__(rename.get(f.name, f.name), f.dataType, True) for f in schema.fields]
             )
         return spark.createDataFrame([], out_schema), []
-    df = spark.read.csv(files, header=header, schema=schema)
+    df = spark.read.csv(files, header=True, schema=schema)
     if rename:
         df = df.withColumnsRenamed(rename)
     return df, files

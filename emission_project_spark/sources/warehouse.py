@@ -120,7 +120,6 @@ class Warehouse:
         table: str,
         target_file_mb: float = 128,
         partition_by: list[str] | None = None,
-        schema: StructType | None = None,
         sort_by: list[str] | None = None,
     ) -> int:
         """Rewrite a table's many small files into ~``target_file_mb``
@@ -147,7 +146,7 @@ class Warehouse:
         for root, _dirs, files in os.walk(path):
             total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
         n_files = max(1, round(total / (target_file_mb * 1024 * 1024)))
-        df = self.read(table, schema)
+        df = self.read(table)
         if partition_by:
             df = _colocated(df, partition_by)
             if sort_by:
@@ -235,18 +234,14 @@ class Warehouse:
         except FileNotFoundError:
             return None
 
-    def snapshot_write(
-        self, df: DataFrame, table: str, partition_by: list[str] | None = None
-    ) -> int:
-        """Publish a new immutable version; returns its number."""
+    def snapshot_write(self, df: DataFrame, table: str) -> int:
+        """Publish a new immutable (unpartitioned) version; returns its
+        number."""
         vr = self._vroot(table)
         os.makedirs(vr, exist_ok=True)
         vs = self.snapshots(table)
         version = (vs[-1] + 1) if vs else 1
-        _write(
-            _colocated(df, partition_by), os.path.join(vr, f"v{version}"),
-            "overwrite", partition_by,
-        )
+        _write(df, os.path.join(vr, f"v{version}"), "overwrite", None)
         self._set_pointer(table, version)
         return version
 
@@ -256,18 +251,12 @@ class Warehouse:
             fh.write(str(version))
         os.replace(tmp, self._vptr(table))
 
-    def read_snapshot(self, table: str, version: int | None = None) -> DataFrame:
-        """Read the current (pointer) version, or time-travel to a
-        specific retained one."""
+    def read_snapshot(self, table: str) -> DataFrame:
+        """Read the current (pointer) version; ``rollback`` moves the
+        pointer to an older retained one."""
+        version = self.current_version(table)
         if version is None:
-            version = self.current_version(table)
-            if version is None:
-                raise FileNotFoundError(f"no snapshots for table {table}")
-        if version not in self.snapshots(table):
-            raise FileNotFoundError(
-                f"table {table} has no version {version} "
-                f"(retained: {self.snapshots(table)})"
-            )
+            raise FileNotFoundError(f"no snapshots for table {table}")
         return self.spark.read.parquet(
             os.path.join(self._vroot(table), f"v{version}")
         )

@@ -49,14 +49,8 @@ def dedup_batch_earliest(
     )
 
 
-def minhash_keyed(
-    stream: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    band: int = 0,
-    k: int = 3,
-) -> DataFrame:
-    """Add a NEAR-dup bucket as a dedup key: the per-row minhash band
+def minhash_keyed(stream: DataFrame) -> DataFrame:
+    """Add a NEAR-dup bucket as a dedup key: the per-row band-0 minhash
     signature (extensions/dedup.py ``minhash_bucket``) — near-identical
     texts agree on the band min and collapse to one key, so
     ``minhash_keyed(s).dropDuplicates(["bucket"])`` (or
@@ -69,11 +63,11 @@ def minhash_keyed(
     State per bucket is one entry, evicted by watermark in the
     within-watermark regime: the 100 TB/day crawl-ingest shape. A
     single band is the high-precision regime (P[bucket match] = exact
-    Jaccard); multi-band recall composes as parallel filters over
-    ``band=0..7``, reconciled in the batch pipeline (minhash_lsh)."""
+    Jaccard); multi-band recall is the batch pipeline's job
+    (minhash_lsh)."""
     from emission_project_spark.extensions.dedup import minhash_bucket
 
-    return stream.withColumn("bucket", minhash_bucket(text_col, id_col, k, band))
+    return stream.withColumn("bucket", minhash_bucket())
 
 
 def interval_join_streams(

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 N_BINS = 10
 BIN_WIDTH = 50.0  # events.value sits in [0, ~500): ten 50-wide bins
 PSI_ACTION = 0.2  # classic rule: PSI > 0.2 = significant shift, act
+LATENESS = "30 minutes"  # watermark delay on a streaming frame
 
 
 def value_bin(value_col: str | Column) -> Column:
@@ -41,17 +42,17 @@ def value_bin(value_col: str | Column) -> Column:
     )
 
 
-def reference_proportions(events: DataFrame, value_col: str = "value") -> list[float]:
-    """Freeze a smoothed reference distribution from a trusted static
-    corpus: (count_i + 0.5) / (N + 0.5·N_BINS) per bin (Laplace — a
-    bin empty in the reference still gets finite mass, so a live
-    window landing there scores a large-but-finite surprise).
+def reference_proportions(events: DataFrame) -> list[float]:
+    """Freeze a smoothed reference distribution of ``value`` from a
+    trusted static corpus: (count_i + 0.5) / (N + 0.5·N_BINS) per bin
+    (Laplace — a bin empty in the reference still gets finite mass, so
+    a live window landing there scores a large-but-finite surprise).
 
     One scan, one hash aggregate to ≤ N_BINS rows, one bounded
     collect — this runs ONCE at install time, never per window.
     """
     rows = (
-        events.groupBy(value_bin(value_col).alias("bin"))
+        events.groupBy(value_bin("value").alias("bin"))
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
     )
@@ -61,30 +62,24 @@ def reference_proportions(events: DataFrame, value_col: str = "value") -> list[f
     return [(counts.get(i, 0) + 0.5) / denom for i in range(N_BINS)]
 
 
-def windowed_psi(
-    events: DataFrame,
-    reference: list[float],
-    ts_col: str = "ts",
-    value_col: str = "value",
-    window: str = "1 hour",
-    watermark: str | None = None,
-    threshold: float = PSI_ACTION,
-) -> DataFrame:
-    """Score each tumbling event-time window against the frozen
+def windowed_psi(events: DataFrame, reference: list[float], window: str = "1 hour") -> DataFrame:
+    """Score each tumbling ``ts`` window of ``value`` against the frozen
     ``reference`` proportions: PSI = Σ_bins (p_i − r_i)·ln(p_i / r_i),
-    window-side p Laplace-smoothed like the reference.
+    window-side p Laplace-smoothed like the reference; a window acts
+    above ``PSI_ACTION``.
 
     The N_BINS per-bin counters are conditional sums inside ONE
     windowed aggregation — streaming-legal (a chained second
     aggregation over a (window, bin) table would not be), mergeable
     map-side, and O(N_BINS) state per open window. Everything after
-    the aggregate is stateless row arithmetic on ten columns.
+    the aggregate is stateless row arithmetic on ten columns. On a
+    streaming frame a ``LATENESS`` watermark bounds open-window state.
     """
     if len(reference) != N_BINS:
         raise ValueError(f"reference must have {N_BINS} proportions")
-    src = events.withWatermark(ts_col, watermark) if watermark else events
-    agg = src.withColumn("_bin", value_bin(value_col)).groupBy(
-        F.window(ts_col, window).alias("w")
+    src = events.withWatermark("ts", LATENESS) if events.isStreaming else events
+    agg = src.withColumn("_bin", value_bin("value")).groupBy(
+        F.window("ts", window).alias("w")
     ).agg(
         F.count(F.lit(1)).alias("n_events"),
         *[
@@ -104,5 +99,5 @@ def windowed_psi(
         F.col("w.end").alias("window_end"),
         "n_events",
         F.round(psi, 6).alias("psi"),
-        (psi > threshold).alias("drift_action"),
+        (psi > PSI_ACTION).alias("drift_action"),
     )

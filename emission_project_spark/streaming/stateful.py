@@ -13,16 +13,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+LATENESS = "10 minutes"  # watermark delay on a streaming frame
 
-def windowed_distinct_users(
-    events: DataFrame,
-    ts_col: str = "ts",
-    window: str = "1 hour",
-    lateness: str = "10 minutes",
-    rsd: float = 0.01,
-) -> DataFrame:
-    """Distinct users per (event_type, tumbling window) via the HLL++
-    sketch — the aggregate that makes distinct-count *streamable*.
+
+def windowed_distinct_users(events: DataFrame) -> DataFrame:
+    """Distinct users per (event_type, 1-hour tumbling ``ts`` window)
+    via the HLL++ sketch (rsd 0.01) — the aggregate that makes
+    distinct-count *streamable*.
 
     Exact ``count(DISTINCT)`` on a streaming frame is unsupported by
     design: incremental execution would have to hold every user id of
@@ -44,10 +41,10 @@ def windowed_distinct_users(
     """
     from pyspark.sql import functions as F
 
-    e = events.withWatermark(ts_col, lateness) if events.isStreaming else events
+    e = events.withWatermark("ts", LATENESS) if events.isStreaming else events
     return (
-        e.groupBy(F.window(F.col(ts_col), window).alias("w"), "event_type")
-        .agg(F.approx_count_distinct("user_id", rsd).alias("approx_users"))
+        e.groupBy(F.window(F.col("ts"), "1 hour").alias("w"), "event_type")
+        .agg(F.approx_count_distinct("user_id", 0.01).alias("approx_users"))
         .select(
             F.col("w.start").alias("window_start"),
             F.col("w.end").alias("window_end"),
@@ -62,7 +59,6 @@ def session_window_totals(
     key: str = "user_id",
     ts_col: str = "ts",
     gap: str = "30 minutes",
-    lateness: str = "10 minutes",
 ) -> DataFrame:
     """Per-key activity sessions via Spark's native merging session
     windows (``F.session_window``): events whose gaps stay under
@@ -80,7 +76,7 @@ def session_window_totals(
     """
     from pyspark.sql import functions as F
 
-    e = events.withWatermark(ts_col, lateness) if events.isStreaming else events
+    e = events.withWatermark(ts_col, LATENESS) if events.isStreaming else events
     return (
         e.groupBy(
             F.col(key), F.session_window(F.col(ts_col), gap).alias("session_window")

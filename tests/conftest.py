@@ -56,10 +56,10 @@ def negative_id_corpus(tmp_path_factory) -> str:
 
 @pytest.fixture(scope="session")
 def assert_hubness_ivf_oracle(spark):
-    """Check ``embedding_hubness_ivf(max_centroids=cap)`` against the
-    registered DuckDB oracle on one embeddings directory, for caps 1, 2
-    and the default. Slicing the centroids may change closure memory,
-    never the readout."""
+    """Check ``embedding_hubness_ivf`` with ``_MAX_CENTROIDS`` = cap
+    against the registered DuckDB oracle on one embeddings directory,
+    for caps 1, 2 and the default. Slicing the centroids may change
+    closure memory, never the readout."""
     import importlib.util
 
     import duckdb
@@ -82,13 +82,13 @@ def assert_hubness_ivf_oracle(spark):
             f"CREATE OR REPLACE VIEW embeddings AS"
             f" SELECT * FROM '{d}/embeddings.parquet'"
         )
-        for cap in (1, 2, None):
-            kw = {} if cap is None else {"max_centroids": cap}
-            r = compare.compare_query(
-                spark, con, "embedding_hubness_ivf",
-                lambda s, p: em.embedding_hubness_ivf(s, p, **kw),
-                oracle, d,
-            )
+        for cap in (1, 2, em._MAX_CENTROIDS):
+            with pytest.MonkeyPatch.context() as m:
+                m.setattr(em, "_MAX_CENTROIDS", cap)
+                r = compare.compare_query(
+                    spark, con, "embedding_hubness_ivf",
+                    em.embedding_hubness_ivf, oracle, d,
+                )
             assert "error" not in r, (d, cap, r)
             assert r.get("cols_match") and r.get("values_match"), (d, cap, r)
 

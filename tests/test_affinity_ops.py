@@ -388,12 +388,13 @@ def test_mmr_demotes_near_duplicate(spark, tmp_path_factory):
     assert r.get("cols_match") and r.get("values_match"), r
 
 
-def test_mmr_pool_collect_guard(spark, tmp_path_factory):
+def test_mmr_pool_collect_guard(spark, tmp_path_factory, monkeypatch):
     """mmr_rerank must raise (not silently collect) when the pool
     relation exceeds max_collect — a corpus-sized query set can't
     reach the driver; the limit is in the plan."""
     import pytest as _pytest
 
+    from emission_project_spark.extensions import similarity
     from emission_project_spark.extensions.similarity import mmr_rerank
 
     d = str(tmp_path_factory.mktemp("mmr_guard"))
@@ -410,10 +411,12 @@ def test_mmr_pool_collect_guard(spark, tmp_path_factory):
         os.path.join(d, "embeddings.parquet"),
     )
     emb = spark.read.parquet(os.path.join(d, "embeddings.parquet"))
+    monkeypatch.setattr(similarity, "MMR_MAX_COLLECT", 3)
     with _pytest.raises(ValueError, match="max_collect"):
-        mmr_rerank(emb, emb, k=2, pool=5, max_collect=3)
+        mmr_rerank(emb, emb, k=2, pool=5)
     # under the bound the same call succeeds
-    assert mmr_rerank(emb, emb, k=1, pool=2, max_collect=100).count() > 0
+    monkeypatch.setattr(similarity, "MMR_MAX_COLLECT", 100)
+    assert mmr_rerank(emb, emb, k=1, pool=2).count() > 0
 
 
 def test_rake_hand_computed_scores(spark, tmp_path_factory):

@@ -38,6 +38,18 @@ def test_components_converges_on_cycle(spark):
     assert out == {1: 1, 2: 1, 3: 1}
 
 
+def test_components_past_round_bound_raise(spark, monkeypatch):
+    # a 6-node path needs more than 2 rounds: the error names the bound
+    import pytest
+
+    from emission_project_spark.operators import components
+
+    monkeypatch.setattr(components, "MAX_ROUNDS", 2)
+    e = _edges(spark, [(i, i + 1) for i in range(1, 6)])
+    with pytest.raises(RuntimeError, match="diameter exceeds the 2-round bound"):
+        connected_components(e)
+
+
 def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id bigint, lang string, n_chars int")
 
@@ -57,7 +69,7 @@ def test_stratified_sample_is_deterministic_and_capped(spark):
 
 def test_length_percentiles_exact(spark):
     docs = _docs(spark, [(i, "en", v) for i, v in enumerate([10, 20, 30, 40])])
-    row = length_percentiles(docs, ["lang"], "n_chars", percentiles=(0.5,)).collect()[0]
+    row = length_percentiles(docs, ["lang"], "n_chars").collect()[0]
     assert row.n_docs == 4
     assert row.mean_val == 25.0
     assert row.p50 == 25.0  # interpolated median, matches quantile_cont

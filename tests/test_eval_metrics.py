@@ -516,7 +516,7 @@ def _hub_corpus(n, zero_ids=()):
 def test_hubness_ivf_every_cap_matches_oracle(
     spark, tmp_path_factory, negative_id_corpus, assert_hubness_ivf_oracle
 ):
-    """Forcing max_centroids below the centroid count cuts the centroids
+    """Forcing _MAX_CENTROIDS below the centroid count cuts the centroids
     into several slices, whose running (score, cid) fold must give the
     oracle's readout at every cap. Zero-norm corpus: centroid 0 and
     non-centroid vec 20 are zero-norm, so an all-NULL score row must

@@ -26,7 +26,7 @@ def _docs(spark, rows):
 
 def test_shingles_window(spark):
     docs = _docs(spark, [(1, "a b c d"), (2, "a b"), (3, "x x x x x")])
-    out = {(r.doc_id, r.shingle) for r in shingles(docs, k=3).collect()}
+    out = {(r.doc_id, r.shingle) for r in shingles(docs).collect()}
     assert out == {(1, "a b c"), (1, "b c d"), (3, "x x x")}  # doc 2 too short; doc 3 distinct
 
 
@@ -39,11 +39,11 @@ def test_exact_duplicates_groups_normalized_text(spark):
 
 def test_identical_docs_share_all_band_signatures(spark):
     docs = _docs(spark, [(1, "the quick brown fox jumps"), (2, "the quick brown fox jumps"), (3, "zz yy xx ww vv")])
-    sig = minhash_band_signatures(docs, bands=8)
+    sig = minhash_band_signatures(docs)
     s1 = {(r.band, r.signature) for r in sig.filter(F.col("doc_id") == 1).collect()}
     s2 = {(r.band, r.signature) for r in sig.filter(F.col("doc_id") == 2).collect()}
     assert s1 == s2 and len(s1) == 8
-    cand = minhash_lsh_candidates(docs, bands=8).collect()
+    cand = minhash_lsh_candidates(docs).collect()
     assert [(r.doc_a, r.doc_b, r.bands_agree) for r in cand] == [(1, 2, 8)]
 
 
@@ -56,14 +56,17 @@ def test_ngram_jaccard_exact_value(spark):
     assert abs(out[0].jaccard - 1 / 3) < 1e-6
 
 
-def test_max_doc_freq_drops_stop_shingles(spark):
+def test_max_doc_freq_drops_stop_shingles(spark, monkeypatch):
+    from emission_project_spark.extensions import dedup
+
     # "common common common" shingle appears in all 3 docs → capped away
     docs = _docs(
         spark,
         [(1, "common common common a"), (2, "common common common b"), (3, "common common common c")],
     )
     assert ngram_jaccard_pairs(docs, threshold=0.1).count() == 3
-    assert ngram_jaccard_pairs(docs, threshold=0.1, max_doc_freq=2).count() == 0
+    monkeypatch.setattr(dedup, "MAX_DOC_FREQ", 2)
+    assert ngram_jaccard_pairs(docs, threshold=0.1).count() == 0
 
 
 def test_shingle_queries_leave_no_cached_plan(spark, sf_dir):
@@ -121,16 +124,10 @@ def test_lsh_neardup_subset_of_exact(spark):
     rows += [(i, [rng.gauss(0, 1) for _ in range(16)]) for i in range(3, 20)]
     vecs = _vecs(spark, [(i, [float(x) for x in v]) for i, v in rows])
     exact = {(r.doc_a, r.doc_b) for r in cosine_neardup_pairs(vecs, threshold=0.9).collect()}
-    # infer_dim=True keeps the opt-in first-row probe path covered
-    approx = {(r.doc_a, r.doc_b) for r in lsh_neardup_pairs(vecs, threshold=0.9, n_planes=8, infer_dim=True).collect()}
+    approx = {(r.doc_a, r.doc_b) for r in lsh_neardup_pairs(vecs, dim=16, threshold=0.9, n_planes=8).collect()}
     assert (1, 2) in exact
     assert approx <= exact  # LSH verifies with exact cosine → no false positives
     assert (1, 2) in approx  # near-identical vectors agree on every sign bit
-    # plan-build contexts must state the dimensionality explicitly
-    import pytest
-
-    with pytest.raises(ValueError, match="infer_dim"):
-        lsh_neardup_pairs(vecs, threshold=0.9, n_planes=8)
 
 
 def test_winnow_shared_substring_shares_fingerprint(spark):
@@ -174,7 +171,7 @@ def test_winnow_overlap_pairs_finds_shared_segment(spark):
         [(1, "prefix one " + seg), (2, seg + " suffix two"), (3, "completely different text here")],
     )
     out = {(r.doc_a, r.doc_b): r.shared_fingerprints for r in winnow_overlap_pairs(
-        docs, min_shared=2, max_bucket=None).collect()}
+        docs, min_shared=2).collect()}
     assert (1, 2) in out and out[(1, 2)] >= 2
     assert not any(3 in pair for pair in out)
 
@@ -373,18 +370,20 @@ def test_contamination_overlap_planted(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_blocked_cosine_invariant_to_block_count(spark):
+def test_blocked_cosine_invariant_to_block_count(spark, monkeypatch):
     """The block-pair grid is an execution detail: results must be
-    identical for any n_blocks (including 1 = single self-block)."""
+    identical for any block count (including 1 = single self-block)."""
     from emission_project_spark.catalog.tables import load_table
+    from emission_project_spark.extensions import similarity
     from emission_project_spark.extensions.similarity import cosine_neardup_pairs
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
 
     def result(nb):
+        monkeypatch.setattr(similarity, "COSINE_BLOCKS", nb)
         return sorted(
             (r.doc_a, r.doc_b, r.cosine_sim)
-            for r in cosine_neardup_pairs(emb, threshold=0.35, n_blocks=nb).collect()
+            for r in cosine_neardup_pairs(emb, threshold=0.35).collect()
         )
 
     r1, r3, r8 = result(1), result(3), result(8)
@@ -392,13 +391,14 @@ def test_blocked_cosine_invariant_to_block_count(spark):
     assert len(r1) > 0
 
 
-def test_blocked_cosine_invariant_to_chunk_rows(spark):
-    """The chunked-GEMM loop (round 12: one reused output buffer, rows
-    processed CH at a time) is an execution detail too: results must be
+def test_blocked_cosine_invariant_to_chunk_rows(spark, monkeypatch):
+    """The chunked-GEMM loop (one reused output buffer, rows processed
+    CHUNK_ROWS at a time) is an execution detail too: results must be
     identical for any chunk size — including chunks that split a block
     mid-way and the CH >= |L| single-chunk case that is all the driver
     SFs ever exercise (blocks only exceed 2048 rows at sf10)."""
     from emission_project_spark.catalog.tables import load_table
+    from emission_project_spark.extensions import similarity
     from emission_project_spark.extensions.similarity import (
         _blocked_cosine_pairs,
     )
@@ -408,11 +408,11 @@ def test_blocked_cosine_invariant_to_chunk_rows(spark):
     )
 
     def result(ch):
+        monkeypatch.setattr(similarity, "CHUNK_ROWS", ch)
         return sorted(
             (r.doc_a, r.doc_b, r.cosine_sim)
             for r in _blocked_cosine_pairs(
                 emb, threshold=0.35, n_blocks=2, group_cols=[],
-                chunk_rows=ch,
             ).collect()
         )
 
@@ -454,10 +454,11 @@ def test_incremental_exact_dedup_split(spark):
     assert sorted(r.doc_id for r in fresh.collect()) == [11]  # min id survives
 
 
-def test_count_min_sketch_properties(spark):
+def test_count_min_sketch_properties(spark, monkeypatch):
     """CMS invariant: estimate >= true count for every term."""
     from pyspark.sql import functions as F
 
+    from emission_project_spark.extensions import sketch as sketch_mod
     from emission_project_spark.extensions.sketch import (
         count_min_build,
         count_min_estimate,
@@ -465,50 +466,55 @@ def test_count_min_sketch_properties(spark):
 
     words = ["alpha"] * 50 + ["beta"] * 20 + ["gamma"] * 5 + ["delta"]
     terms = spark.createDataFrame([(w,) for w in words], "term string")
-    sketch = count_min_build(terms, width=64)  # narrow → collisions likely
+    monkeypatch.setattr(sketch_mod, "DEFAULT_WIDTH", 64)  # narrow → collisions likely
+    sketch = count_min_build(terms, width=64)
     truth = {r.term: r.c for r in terms.groupBy("term").agg(F.count(F.lit(1)).alias("c")).collect()}
     est = {
         r.term: r.cms_estimate
-        for r in count_min_estimate(sketch, terms.distinct(), width=64).collect()
+        for r in count_min_estimate(sketch, terms.distinct()).collect()
     }
     for t, true_n in truth.items():
         assert est[t] >= true_n  # CMS never undercounts
 
 
-def test_bloom_filter_no_false_negatives(spark):
+def test_bloom_filter_no_false_negatives(spark, monkeypatch):
     from pyspark.sql import functions as F
 
+    from emission_project_spark.extensions import sketch as sketch_mod
     from emission_project_spark.extensions.sketch import bloom_build, bloom_contains
 
     inserted = spark.createDataFrame([(f"key{i}",) for i in range(200)], "key string")
     absent = spark.createDataFrame([(f"other{i}",) for i in range(200)], "key string")
-    bloom = bloom_build(inserted, width=4096)
-    got_in = bloom_contains(bloom, inserted, width=4096)
+    monkeypatch.setattr(sketch_mod, "DEFAULT_WIDTH", 4096)
+    bloom = bloom_build(inserted)
+    got_in = bloom_contains(bloom, inserted)
     assert got_in.filter(~F.col("possibly_present")).count() == 0  # no false negatives
-    fp = bloom_contains(bloom, absent, width=4096).filter(F.col("possibly_present")).count()
+    fp = bloom_contains(bloom, absent).filter(F.col("possibly_present")).count()
     assert fp < 40  # false positives exist but are bounded (measured ~0-5 at this width)
 
 
-def test_bloom_contains_duplicate_query_keys(spark):
+def test_bloom_contains_duplicate_query_keys(spark, monkeypatch):
     """Regression: a query key appearing k times must not turn a
     partial bit match into a spurious full match (k x partial hits
     summing to depth)."""
     from pyspark.sql import functions as F
 
+    from emission_project_spark.extensions import sketch as sketch_mod
     from emission_project_spark.extensions.sketch import bloom_build, bloom_contains
 
     inserted = spark.createDataFrame([("present",)], "key string")
-    bloom = bloom_build(inserted, width=8)  # tiny width → partial collisions
+    monkeypatch.setattr(sketch_mod, "DEFAULT_WIDTH", 8)  # tiny width → partial collisions
+    bloom = bloom_build(inserted)
     dup_absent = spark.createDataFrame([("absent",)] * 4, "key string")
-    out = bloom_contains(bloom, dup_absent, width=8).collect()
+    out = bloom_contains(bloom, dup_absent).collect()
     assert len(out) == 1  # deduped
     # whatever the verdict, it must equal the single-occurrence verdict
     single = bloom_contains(
-        bloom, spark.createDataFrame([("absent",)], "key string"), width=8
+        bloom, spark.createDataFrame([("absent",)], "key string")
     ).collect()[0].possibly_present
     assert out[0].possibly_present == single
     # and the inserted key is always present
-    got = bloom_contains(bloom, inserted, width=8).collect()[0]
+    got = bloom_contains(bloom, inserted).collect()[0]
     assert got.possibly_present
 
 

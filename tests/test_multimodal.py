@@ -16,7 +16,7 @@ from emission_project_spark.extensions.multimodal import (
 
 def test_extract_features_with_fake_decoder(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").limit(10)
-    feats = extract_features(attach_payload(docs), decoder=fake_image_decoder, partitions=2)
+    feats = extract_features(attach_payload(docs), decoder=fake_image_decoder)
     rows = feats.collect()
     assert len(rows) == 10
     assert all(r.ok and 1 <= r.width <= 640 and 1 <= r.n_frames <= 16 for r in rows)

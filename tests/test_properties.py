@@ -176,7 +176,7 @@ def test_winnow_shared_substring_shares_fingerprint(
     docs = spark.createDataFrame(
         [(1, doc_a), (2, doc_b)], "doc_id long, text string"
     )
-    fps = winnow_fingerprints(docs, k=5, window=4)
+    fps = winnow_fingerprints(docs)
     rows = fps.collect()
     h1 = {r.gram_hash for r in rows if r.doc_id == 1}
     h2 = {r.gram_hash for r in rows if r.doc_id == 2}
@@ -237,18 +237,20 @@ def _stop_shingle_corpus(spark, n_pairs=60):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_ngram_cap_bounds_stop_shingle_blowup_and_keeps_recall(spark):
+def test_ngram_cap_bounds_stop_shingle_blowup_and_keeps_recall(spark, monkeypatch):
+    from emission_project_spark.extensions import dedup
     from emission_project_spark.extensions.dedup import (
         ngram_jaccard_pairs,
         shingle_cap_report,
     )
 
     docs = _stop_shingle_corpus(spark, n_pairs=60)  # 120 docs
-    # uncapped: every boilerplate shingle buckets all 120 docs together
-    # → 120·119/2 = 7140 candidate pairs (the quadratic blow-up)
-    uncapped = ngram_jaccard_pairs(
-        docs, threshold=1e-9, max_doc_freq=None
-    ).count()
+    # a cap of 120 keeps every bucket: every boilerplate shingle buckets
+    # all 120 docs together → 120·119/2 = 7140 candidate pairs (the
+    # quadratic blow-up)
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "MAX_DOC_FREQ", 120)
+        uncapped = ngram_jaccard_pairs(docs, threshold=1e-9).count()
     assert uncapped == 120 * 119 // 2
     # capped (default 64 < 120): only pair-unique buckets generate
     # candidates → exactly the 60 planted pairs
@@ -269,9 +271,10 @@ def test_ngram_cap_bounds_stop_shingle_blowup_and_keeps_recall(spark):
     assert rep.n_postings_dropped == rep.n_capped * 120
 
 
-def test_embedding_lsh_cap_bounds_degenerate_bucket_and_keeps_recall(spark):
+def test_embedding_lsh_cap_bounds_degenerate_bucket_and_keeps_recall(spark, monkeypatch):
     import random
 
+    from emission_project_spark.extensions import similarity
     from emission_project_spark.extensions.similarity import lsh_neardup_pairs
 
     rng = random.Random(11)
@@ -296,9 +299,12 @@ def test_embedding_lsh_cap_bounds_degenerate_bucket_and_keeps_recall(spark):
         [(i, [float(x) for x in v]) for i, v in rows],
         "vec_id long, embedding array<float>",
     )
-    uncapped = lsh_neardup_pairs(vecs, threshold=0.99, n_planes=8, max_bucket=None, dim=16)
-    capped = lsh_neardup_pairs(vecs, threshold=0.99, n_planes=8, dim=16)  # default cap 64
-    got_uncapped = {(r.doc_a, r.doc_b) for r in uncapped.collect()}
+    # a cap of 100 keeps every bucket
+    with monkeypatch.context() as m:
+        m.setattr(similarity, "LSH_MAX_BUCKET", 100)
+        uncapped = lsh_neardup_pairs(vecs, threshold=0.99, n_planes=8, dim=16)
+        got_uncapped = {(r.doc_a, r.doc_b) for r in uncapped.collect()}
+    capped = lsh_neardup_pairs(vecs, threshold=0.99, n_planes=8, dim=16)  # cap 64
     got_capped = {(r.doc_a, r.doc_b) for r in capped.collect()}
     # the degenerate bucket (100 > 64) is dropped entirely; planted
     # pairs live in normal buckets and survive

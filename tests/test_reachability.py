@@ -23,6 +23,17 @@ import in the package, ``tests/``, ``tools/``, ``bench.py`` and
 ``__spark_entry__.py`` binds a name its module uses (``__init__.py``
 files are exempt: their imports are re-exports).
 
+A third sweep holds options to it: every parameter with a default, in
+any function or method of the package (nested ones included), must be
+set by some call in a product-rooted body — the roots above plus the
+bodies of reached definitions. A call sets a parameter by keyword, by
+position (``self``/``cls`` skipped for a method called by attribute),
+or through ``*args``/``**kwargs`` (which count as setting every
+parameter); a call of a class sets its ``__init__``. Calls match
+definitions by name, as in the first sweep. A default that only its
+default reaches is a constant; the unset set must equal
+``ALLOWED_DEFAULTS``, each entry with its reason.
+
 Pure AST, no Spark session. Run alone with
 ``python -m pytest tests/test_reachability.py -q``.
 """
@@ -72,7 +83,30 @@ ALLOWED: dict[str, str] = {
     },
 }
 
+_PQ_TWIN_DEFAULTS = {
+    "fit_pq": ("dim", "m", "k", "iterations", "id_col", "vec_col"),
+    "fit_ivfpq": ("dim", "n_cells", "m", "k", "iterations", "id_col", "vec_col"),
+    "pq_encode": ("id_col", "vec_col"),
+    "ivfpq_encode": ("id_col", "vec_col"),
+    "pq_topk": ("k",),
+    "ivfpq_topk": ("k", "n_probe"),
+}
+
+# "<path>:<function>(<param>)" -> why its default stays unset by product
+ALLOWED_DEFAULTS: dict[str, str] = {
+    "__main__.py:main(argv)": "the CLI entry: the console passes no argv, tests pass one",
+    **{
+        f"extensions/pq.py:{fn}({param})": f"numpy PQ twin, the reference of {_PQ_TWIN}"
+        for fn, params in _PQ_TWIN_DEFAULTS.items()
+        for param in params
+    },
+    "sources/warehouse.py:Warehouse.compact(partition_by)": (
+        "the only way to compact the partitioned fact (ROADMAP direction 9)"
+    ),
+}
+
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+_FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
 _IMPORTS = (ast.Import, ast.ImportFrom)
 
 
@@ -125,9 +159,9 @@ def _is_query(node: ast.AST) -> bool:
     return False
 
 
-def unreached() -> set[str]:
-    """``"<path under the package>:<name>"`` of every unreached definition
-    (``<class>.<method>`` for a method)."""
+def _graph():
+    """``(defs, roots, reached)``: every unit's ``(label, body)`` by
+    name, the product roots, and the names the sweep reaches from them."""
     defs: dict[str, list[tuple[str, list[ast.AST]]]] = {}
     roots: list[ast.AST] = []
     aliases: dict[str, set[str]] = {}
@@ -159,6 +193,13 @@ def unreached() -> set[str]:
         reached |= frontier
         bodies = [part for name in frontier for _, body in defs[name] for part in body]
         frontier = (_names(bodies, aliases) & defs.keys()) - reached
+    return defs, roots, reached
+
+
+def unreached() -> set[str]:
+    """``"<path under the package>:<name>"`` of every unreached definition
+    (``<class>.<method>`` for a method)."""
+    defs, _, reached = _graph()
     return {
         label for name, units in defs.items() if name not in reached for label, _ in units
     }
@@ -168,6 +209,68 @@ def test_unreached_definitions_are_the_test_references():
     dead = unreached()
     assert sorted(dead - ALLOWED.keys()) == [], "no product path reaches these"
     assert sorted(ALLOWED.keys() - dead) == [], "now reached: drop from ALLOWED"
+
+
+def _defaulted(node: ast.AST, unit: str, prefix: str = "", method: bool = False):
+    """``(name, label, position, param)`` of every parameter with a
+    default in the functions under ``node``; ``position`` is the index a
+    positional argument fills (None for keyword-only)."""
+    for child in ast.iter_child_nodes(node):
+        if isinstance(child, ast.ClassDef):
+            yield from _defaulted(child, unit, f"{prefix}{child.name}.", True)
+        elif isinstance(child, _FUNCS):
+            args = child.args
+            positional = args.posonlyargs + args.args
+            static = any(
+                isinstance(d, ast.Name) and d.id == "staticmethod" for d in child.decorator_list
+            )
+            skip = int(method and not static)
+            first = len(positional) - len(args.defaults)
+            label = f"{unit}:{prefix}{child.name}"
+            for i, a in enumerate(positional[first:], first):
+                yield child.name, f"{label}({a.arg})", i - skip, a.arg
+            for a, d in zip(args.kwonlyargs, args.kw_defaults):
+                if d is not None:
+                    yield child.name, f"{label}({a.arg})", None, a.arg
+            yield from _defaulted(child, unit, f"{prefix}{child.name}.")
+        else:
+            yield from _defaulted(child, unit, prefix, method)
+
+
+def unset_defaults() -> set[str]:
+    """``"<path under the package>:<function>(<param>)"`` of every
+    defaulted parameter that no product-rooted call sets."""
+    params: dict[str, list[tuple[str, int | None, str]]] = {}
+    for path in sorted(PACKAGE.rglob("*.py")):
+        unit = path.relative_to(PACKAGE).as_posix()
+        for name, label, pos, param in _defaulted(ast.parse(path.read_text(), str(path)), unit):
+            params.setdefault(name, []).append((label, pos, param))
+    defs, roots, reached = _graph()
+    product = [*roots, *(part for name in reached for _, body in defs[name] for part in body)]
+    unset = {label for entries in params.values() for label, _, _ in entries}
+    for node in product:
+        for call in ast.walk(node):
+            if not isinstance(call, ast.Call):
+                continue
+            func = call.func
+            name = getattr(func, "id", None) or getattr(func, "attr", None)
+            if name is None:
+                continue
+            targets = params.get(name, []) + (params.get("__init__", []) if name[0].isupper() else [])
+            spread = any(isinstance(a, ast.Starred) for a in call.args) or any(
+                k.arg is None for k in call.keywords
+            )
+            keywords = {k.arg for k in call.keywords}
+            for label, pos, param in targets:
+                if spread or param in keywords or (pos is not None and pos < len(call.args)):
+                    unset.discard(label)
+    return unset
+
+
+def test_every_default_has_a_product_caller():
+    unset = unset_defaults()
+    assert sorted(unset - ALLOWED_DEFAULTS.keys()) == [], "no product call sets these: make them constants"
+    assert sorted(ALLOWED_DEFAULTS.keys() - unset) == [], "now set by product: drop from ALLOWED_DEFAULTS"
 
 
 def unused_imports() -> list[str]:

@@ -102,7 +102,7 @@ def test_streaming_session_windows(spark, tmp_path):
         .load(str(incoming))
     )
     q = (
-        session_window_totals(stream, gap="30 minutes", lateness="10 minutes")
+        session_window_totals(stream, gap="30 minutes")
         .writeStream.format("memory")
         .queryName("session_out")
         .outputMode("append")
@@ -149,7 +149,7 @@ def test_streaming_windowed_distinct(spark, tmp_path):
         .load(str(incoming))
     )
     q = (
-        windowed_distinct_users(stream, lateness="10 minutes")
+        windowed_distinct_users(stream)
         .writeStream.format("memory")
         .queryName("wdist_out")
         .outputMode("append")

@@ -109,7 +109,7 @@ class TestWindowedPsiStreaming:
         )
         ref = [1.0 / N_BINS] * N_BINS
         q = (
-            windowed_psi(stream, ref, watermark="30 minutes")
+            windowed_psi(stream, ref)
             .writeStream.format("memory")
             .queryName("psi_drift")
             .outputMode("complete")
